@@ -1,11 +1,18 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cpus": ...}.
 
 Timing protocol: per query, build the plan and force full execution with a
 noop write (collect-to-nothing via ``df.write.format("noop")``), which
 executes the whole plan without driver materialization cost.
+
+This module is also the measurement library the tools import: one
+session config (``configure``, ``session``), one noop sink (``force``),
+one warm pass (``warm``), one per-query record (``time_query``:
+wall-clock split into Spark job time and driver gaps) and the octave
+scripts' main (``octave``). ``SPARK_GRAFT_QUERIES=a,b python
+bench.py`` is the per-query decomposition of a subset.
 """
 
 from __future__ import annotations
@@ -14,6 +21,8 @@ import json
 import os
 import sys
 import time
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def _sf_of(sf_dir: str) -> float | None:
@@ -36,7 +45,7 @@ def _derived_shuffle_width(sf_dir: str) -> int:
 
     An unparsable dir name estimates the SF from the input bytes
     (sf0.1 is ~175 MB/SF of parquet). A caller's explicit
-    SPARK_GRAFT_SHUFFLE always wins (main() only setdefaults)."""
+    SPARK_GRAFT_SHUFFLE always wins (configure() only setdefaults)."""
     import math
 
     sf = _sf_of(sf_dir)
@@ -53,33 +62,166 @@ def _derived_shuffle_width(sf_dir: str) -> int:
     return max(8, math.ceil(6.4 * sf))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+def _positive_int(name: str) -> int:
+    raw = os.environ[name]
+    if not raw.isdigit() or int(raw) < 1:
+        raise SystemExit(f"bench: {name} must be a positive integer, got {raw!r}")
+    return int(raw)
 
-    # Size the session for the bench data, not for a cluster: at sub-GB scale
-    # AQE's per-stage re-plan latency and 32-way reduce stages are pure
-    # overhead (measured: AQE off + 8 shuffle partitions is ~35% faster at
-    # sf0.1 with identical results). The session defaults stay scale-first;
-    # these env knobs override only for this local run and respect any values
-    # the caller already exported. The shuffle width is SF-derived, not a
-    # constant (see _derived_shuffle_width), and the resolved value is
-    # recorded in the output line.
+
+def configure(sf_dir: str) -> dict:
+    """Resolve the measurement session's knobs for ``sf_dir`` and return
+    them; every timing path (bench.py and each tool) calls this BEFORE
+    importing the engine, whose session module reads the env at import.
+
+    Size the session for the bench data, not for a cluster: at sub-GB
+    scale AQE's per-stage re-plan latency and 32-way reduce stages are
+    pure overhead (measured: AQE off + 8 shuffle partitions is ~35%
+    faster at sf0.1 with identical results). The shuffle width is
+    SF-derived (see _derived_shuffle_width). 60 plans warmed + timed in
+    one JVM GC-thrash the 1g session default; 6g measured ~7% faster
+    overall and ~25% on the iterative components query. The session
+    defaults stay scale-first; a value the caller already exported wins,
+    and is validated here so a bad export fails before the session starts
+    rather than after the timed run."""
     os.environ.setdefault("SPARK_GRAFT_AQE", "false")
     os.environ.setdefault(
         "SPARK_GRAFT_SHUFFLE", str(_derived_shuffle_width(sf_dir))
     )
-    # 60 plans warmed + timed in one JVM: the 1g default (tuned when the
-    # set was smaller) now GC-thrashes; 6g measured ~7% faster overall and
-    # ~25% on the iterative components query. Session default stays 1g.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")  # the session default
+    if HERE not in sys.path:
+        sys.path.insert(0, HERE)
+    return {
+        "sf_dir": sf_dir,
+        "sf": _sf_of(sf_dir),
+        "cpus": _positive_int("SPARK_GRAFT_CPUS"),
+        "aqe": os.environ["SPARK_GRAFT_AQE"],
+        "shuffle_partitions": _positive_int("SPARK_GRAFT_SHUFFLE"),
+        "driver_mem": os.environ["SPARK_GRAFT_DRIVER_MEM"],
+    }
 
+
+def force(df) -> float:
+    """Execute ``df`` into the noop sink; return the wall-clock seconds."""
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def session(app: str, sf_dir: str):
+    """``configure(sf_dir)``, then the engine's session; returns both."""
+    conf = configure(sf_dir)
     from hdfs_mapreduce_spark.session import get_spark
 
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("bench")
+    spark = get_spark(app)
     spark.sparkContext.setLogLevel("ERROR")
+    return spark, conf
+
+
+def warm(spark, fns, sf_dir: str) -> None:
+    """The warm pass, excluded from timings (standard bench practice;
+    matches how a long-lived cluster session behaves): each
+    ``fn(spark, warm_dir)`` once at the smallest SF (a returned DataFrame
+    is forced) — whole-stage codegen compiles and JITs each plan shape
+    (first execution of the heavier shapes measured 3-8s of one-time
+    compilation at any SF), and the first pandas/Arrow kernel forks the
+    Python workers."""
+    from pyspark.sql import DataFrame
+
+    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    for fn in fns:
+        try:
+            out = fn(spark, warm_dir)
+            if isinstance(out, DataFrame):
+                force(out)
+        except Exception as exc:
+            print(f"bench: warm {fn.__name__} FAILED: {exc}", file=sys.stderr)
+
+
+def _merged_seconds(spans: list[tuple[float, float]]) -> float:
+    """Total length of the union of [start, end] spans: concurrent jobs
+    (driver-pool writes) are not double-counted."""
+    total, reach = 0.0, float("-inf")
+    for start, end in sorted(spans):
+        if end > reach:
+            total += end - max(start, reach)
+            reach = end
+    return total
+
+
+def _job_spans(spark, first: int, stop: int) -> list[tuple[float, float]]:
+    """(submission, completion) epoch seconds of jobs ``first <= id <
+    stop`` from the JVM status store; a job evicted from the store or
+    still unfinished contributes no span."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)  # the store lags the bus
+    store = jsc.statusStore()
+    spans = []
+    for jid in range(first, stop):
+        try:
+            job = store.job(jid)
+        except Exception:
+            continue
+        sub, com = job.submissionTime(), job.completionTime()
+        if sub.isDefined() and com.isDefined():
+            spans.append(
+                (sub.get().getTime() / 1000.0, com.get().getTime() / 1000.0)
+            )
+    return spans
+
+
+def time_query(spark, fn, sf_dir: str, reps: int = 2) -> dict:
+    """Min-of-``reps`` wall-clock of build + noop-forced execution, plus
+    the fastest execution's Spark jobs: count, merged job seconds and the
+    driver gap (wall − job time: Catalyst analysis, codegen, streaming
+    offset/commit bookkeeping). Only that execution's job-id range is
+    read, and only after its timer stops, so the split costs the timed
+    region two py4j calls. Raises on a failed execution."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    best = None
+    for _ in range(reps):
+        first = int(dag.nextJobId())
+        t0 = time.perf_counter()
+        force(fn(spark, sf_dir))
+        t = time.perf_counter() - t0
+        stop = int(dag.nextJobId())
+        if best is None or t < best[0]:
+            best = (t, first, stop)
+    sec, first, stop = best
+    job_s = _merged_seconds(_job_spans(spark, first, stop))
+    return {
+        "sec": round(sec, 4),
+        "jobs": stop - first,
+        "job_s": round(job_s, 4),
+        "driver_gap_s": round(sec - job_s, 4),
+    }
+
+
+def octave(app: str, run) -> None:
+    """The main of every ``tools/octave_*.py``: ``python tools/octave_X.py
+    <sf_dir> [out_json]``. One session under ``configure(sf_dir)`` (export
+    SPARK_GRAFT_DRIVER_MEM=16g for an sf10 session), one ``warm`` pass of
+    ``run``, then ``run(spark, sf_dir)``; prints one JSON line of the
+    resolved config plus run's result, and writes it to out_json if given."""
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else None
+    spark, conf = session(app, sf_dir)
+    warm(spark, [run], sf_dir)
+    line = json.dumps({**conf, **run(spark, sf_dir)})
+    print(line)
+    if out_path:
+        with open(out_path, "w") as f:
+            f.write(line + "\n")
+    spark.stop()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, conf = session("bench", sf_dir)
+    import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
     # Optional subset (comma-separated names): scale smokes bench the
@@ -89,81 +231,37 @@ def main() -> None:
         names = [n.strip() for n in only.split(",") if n.strip()]
         queries = {n: queries[n] for n in names if n in queries}
 
-    # Warmup, excluded from timings (standard bench practice; matches how a
-    # long-lived cluster session behaves):
-    #  1. a one-row pandas_udf forks the Python workers + Arrow init (~1.5s);
-    #  2. every query once at the smallest SF — whole-stage codegen compiles
-    #     and JITs each plan shape (first execution of the heavier shapes
-    #     measured 3-8s of one-time compilation at any SF).
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        @F.pandas_udf("long")
-        def _warm(s: pd.Series) -> pd.Series:
-            return s
-
-        spark.range(32).repartition(32).select(_warm("id")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    except Exception:
-        pass
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for fn in queries.values():
-        try:
-            fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+    warm(spark, queries.values(), sf_dir)
 
     # Per-query time = min of 2 executions. This machine shows ±50% run-to-run
     # drift (same query, same config, back-to-back sessions measured 2.3s,
     # 5.6s, 3.1s) — min-of-N is the standard way to report the query's cost
     # rather than the scheduler's mood; N=2 keeps the bench under ~3 min.
-    try:
-        from hdfs_mapreduce_spark.plans.streaming_plans import PHASE_SEC
-    except Exception:
-        PHASE_SEC = {}
-    timings: dict[str, float] = {}
+    records: dict[str, dict] = {}
     for name, fn in queries.items():
-        best = None
-        for i in range(2):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                t = time.perf_counter() - t0
-                best = t if best is None else min(best, t)
-                if name in PHASE_SEC:  # instrumented online-dedup queries
-                    print(
-                        f"bench: {name} exec{i} {round(t, 2)}s phases="
-                        f"{json.dumps(PHASE_SEC[name])}",
-                        file=sys.stderr,
-                    )
-            except Exception as exc:  # record failures, don't abort the run
-                best = -1.0
-                print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                break
-        timings[name] = round(best, 4)
+        try:
+            records[name] = time_query(spark, fn, sf_dir)
+            print(f"bench: {name} {json.dumps(records[name])}", file=sys.stderr)
+        except Exception as exc:  # record failures, don't abort the run
+            records[name] = {"sec": -1.0}
+            print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
+    timings = {name: r["sec"] for name, r in records.items()}
 
-    sf = _sf_of(sf_dir)
     total = round(sum(t for t in timings.values() if t >= 0), 4)
     # Key order is deliberate: the driver's wrapper records only the TAIL
     # of long stdout, so the aggregate numbers lead (tiny, always legible
     # in full JSON), the oracle per-query section sits in the middle (the
     # clippable zone), and the Spark per-query section — the one a next
     # round needs for regression deltas — is LAST so it survives
-    # truncation. BENCH_LOCAL.json carries the identical complete line.
+    # truncation. BENCH_LOCAL.json carries the complete payload.
     out = {
         "metric": "declared-query wall-clock vs duckdb oracle",
         "value": total,
         "unit": "sec",
         "timing": "min of 2 executions per query, plan shapes pre-warmed",
-        "sf": sf,
-        # the resolved width (SF-derived unless the caller exported one),
-        # so cross-SF runs are comparable-with-eyes-open
-        "shuffle_partitions": int(os.environ["SPARK_GRAFT_SHUFFLE"]),
+        # the resolved session config, so cross-SF and cross-core runs
+        # are comparable-with-eyes-open
+        **conf,
     }
     # Subset runs time only the subset's oracles — a standalone retime of
     # one query must not pay the full registry's DuckDB pass.
@@ -177,34 +275,26 @@ def main() -> None:
         out["spark_total_oracle_matched"] = matched
         if oracle_total > 0:
             out["spark_vs_oracle_ratio"] = round(matched / oracle_total, 3)
-    delta = _delta_vs_prev(timings, sf)
+    delta = _delta_vs_prev(timings, conf["sf"], conf["cpus"])
     full = dict(out)
     if delta:
         full["delta_vs_prev"] = delta
-    # Per-phase decomposition of the instrumented online-dedup queries
-    # (last execution of each — the r11 verdict's session-sensitivity
-    # attribution). Harmless when empty.
-    try:
-        from hdfs_mapreduce_spark.plans.streaming_plans import PHASE_SEC
-
-        if PHASE_SEC:
-            full["phase_sec"] = {k: dict(v) for k, v in PHASE_SEC.items()}
-    except Exception:
-        pass
     if oracle:
         full["oracle_sec"] = oracle
-    full["queries"] = timings
+    full["queries"] = records
     # Standalone copy FIRST: the driver's wrapper records only the last
     # ~2000 chars of stdout, which lost r2-r4's per-query timings and
     # broke _delta_vs_prev. The file carries the complete payload
-    # (queries + oracle_sec + delta_vs_prev) and is what _delta_vs_prev
-    # prefers when present. Skipped for subset runs so a scale smoke
-    # can't clobber the full-registry snapshot.
+    # (per-query records + oracle_sec + delta_vs_prev), one snapshot per
+    # (sf, cpus) so a run at another core count can't clobber it, and is
+    # what _delta_vs_prev prefers when present. Skipped for subset runs so
+    # a scale smoke can't clobber the full-registry snapshot.
     if not only:
+        snapshots = _read_local(HERE)
+        snapshots[_local_key(conf["sf"], conf["cpus"])] = full
         try:
-            here = os.path.dirname(os.path.abspath(__file__))
-            with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-                f.write(json.dumps(full) + "\n")
+            with open(os.path.join(HERE, "BENCH_LOCAL.json"), "w") as f:
+                f.write(json.dumps(snapshots) + "\n")
         except OSError:
             pass
     # The printed line must survive the wrapper's 2000-char stdout tail
@@ -285,44 +375,62 @@ def _time_oracles(
         return None
 
 
+def _local_key(sf: float | None, cpus: int) -> str:
+    return f"sf={sf},cpus={cpus}"
+
+
+def _read_local(root: str) -> dict[str, dict]:
+    """BENCH_LOCAL.json's snapshots keyed by _local_key. A single unkeyed
+    payload (the older shape) recorded no core count, so it is dropped."""
+    try:
+        with open(os.path.join(root, "BENCH_LOCAL.json")) as f:
+            data = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return data if isinstance(data, dict) and "queries" not in data else {}
+
+
 def _delta_vs_prev(
-    timings: dict[str, float], sf: float | None
+    timings: dict[str, float], sf: float | None, cpus: int, root: str = HERE
 ) -> dict[str, float] | None:
     """Per-query delta (sec; negative = faster) vs the newest prior bench
-    at the SAME scale factor, so regressions are visible in-run. Prefers
-    the standalone BENCH_LOCAL.json (complete by construction) over the
+    at the SAME scale factor AND core count (8 and 32 cores give different
+    totals), so regressions are visible in-run. Prefers the standalone
+    BENCH_LOCAL.json snapshot (complete by construction) over the
     driver's BENCH_r{N}.json records, whose wrapper nests the bench line
-    inside a 'tail' field and sometimes truncates it — both shapes are
-    handled. Queries missing from the previous run are reported with the
-    sentinel None."""
+    inside a 'tail' field (with the core count beside it) and sometimes
+    truncates it — both shapes are handled. Queries missing from the
+    previous run are reported with the sentinel None."""
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    benches = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    local = os.path.join(here, "BENCH_LOCAL.json")
-    if os.path.exists(local):
-        benches.append(local)
-    prev_q: dict[str, float] = {}
-    for path in reversed(benches):
-        try:
-            with open(path) as f:
-                prev = json.load(f)
-            if "queries" not in prev and "tail" in prev:
-                m = re.search(r'\{"metric".*\}', prev["tail"])
-                prev = json.loads(m.group(0)) if m else {}
-            if prev.get("queries") and prev.get("sf") == sf:
-                prev_q = prev["queries"]
-                break
-        except Exception:
-            continue
-    if not prev_q:
-        return None
-    return {
-        name: (round(t - prev_q[name], 4) if name in prev_q else None)
-        for name, t in timings.items()
-        if t >= 0
-    }
+    def prior_runs():
+        yield _read_local(root).get(_local_key(sf, cpus), {})
+        for path in sorted(glob.glob(os.path.join(root, "BENCH_r*.json")), reverse=True):
+            try:
+                with open(path) as f:
+                    prev = json.load(f)
+                if "queries" not in prev and "tail" in prev:
+                    m = re.search(r'\{"metric".*\}', prev["tail"])
+                    line = json.loads(m.group(0)) if m else {}
+                    prev = {"cpus": prev.get("cpus"), **line}
+            except Exception:
+                continue
+            yield prev
+
+    for prev in prior_runs():
+        if prev.get("queries") and prev.get("sf") == sf and prev.get("cpus") == cpus:
+            # per-query entries are records ({"sec": ...}) or bare seconds
+            prev_q = {
+                n: (v["sec"] if isinstance(v, dict) else v)
+                for n, v in prev["queries"].items()
+            }
+            return {
+                name: (round(t - prev_q[name], 4) if name in prev_q else None)
+                for name, t in timings.items()
+                if t >= 0
+            }
+    return None
 
 
 if __name__ == "__main__":

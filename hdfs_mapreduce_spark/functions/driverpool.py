@@ -29,24 +29,18 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 
-_POOL: ThreadPoolExecutor | None = None
-_POOL_WORKERS = 8
-
-
-def get_pool() -> ThreadPoolExecutor:
-    global _POOL
-    if _POOL is None:
-        _POOL = ThreadPoolExecutor(
-            max_workers=_POOL_WORKERS, thread_name_prefix="graft_driver_io"
-        )
-    return _POOL
+# Created at import: a lazy check-then-set could race two first callers
+# into two pools (the dedup foreachBatch body runs on a py4j callback
+# thread). Construction is cheap — the executor starts its worker
+# threads on the first ``submit``, not here.
+_POOL = ThreadPoolExecutor(max_workers=8, thread_name_prefix="graft_driver_io")
 
 
 def run_concurrently(thunks: Iterable[Callable[[], object]]) -> None:
     """Run the callables on the shared pool, wait for ALL to finish, and
     re-raise the first failure (after every thunk has completed, so no
     write is left silently in flight)."""
-    futures = [get_pool().submit(t) for t in thunks]
+    futures = [_POOL.submit(t) for t in thunks]
     errs: list[BaseException] = []
     for f in futures:
         try:

@@ -119,8 +119,6 @@ REVERIFY = {
     #     dq_checks' RI anti-join gained the parent-key alias (same
     #     relation, new executed join condition).
     "stream_upsert_log_snapshot": 7,
-    "logtable_cdf": 7,
-    "logtable_ivm": 7,
     "dq_checks": 7,
     # r9: bpe_learn now delegates to bpe_learn_batched(batch_k=1) —
     #     identical algorithm (pinned against the pure-Python reference)
@@ -145,7 +143,6 @@ REVERIFY = {
     #     shape resolution collapsed to ONE probe job
     #     (resolve_sketch_shape + validate_shape=False pass-down) with
     #     the empty-state fallback — same relation, new executed loop.
-    "stream_ann_ingest_fenced": 11,
     # r11 (second half): minhash_pairs' pair self-join factored into the
     #     shared _verified_pairs and incremental_pairs_against_sketch's
     #     probe body into _probe_pairs_from_sketches (so the online
@@ -186,15 +183,25 @@ REVERIFY = {
     #     (operators/ann_index.py). Same relations everywhere
     #     (hash-re-verified at sf0.01 in-round), but the driver should
     #     re-certify the new machinery.
-    "stream_dedup_admitted": 13,
-    "stream_dedup_resketch": 13,
-    "stream_dedup_compacted": 13,
-    "stream_dedup_maintained": 13,
-    "stream_ann_ingest_topk": 13,
-    "stream_ann_ingest_fenced": 13,
     "stream_cdc_apply": 13,
     "ann_probe_rebuilt": 13,
     "ann_probe_vacuumed": 13,
+    # r14: the ad-hoc per-phase wall-clock timers (the query-level one
+    #     in plans/streaming_plans.py, the ingest-loop one in
+    #     streaming/dedup.py) were removed from these queries' callables
+    #     and from the ingest loop they run — pure context managers, so
+    #     the relations and plans are unchanged, but the executed code
+    #     was re-indented and the driver should re-certify it. Supersedes
+    #     their earlier entries (r7, r11, r13).
+    "logtable_cdf": 14,
+    "logtable_ivm": 14,
+    "stream_ann_ingest_topk": 14,
+    "stream_ann_ingest_fenced": 14,
+    "dq_checks_incremental": 14,
+    "stream_dedup_admitted": 14,
+    "stream_dedup_resketch": 14,
+    "stream_dedup_compacted": 14,
+    "stream_dedup_maintained": 14,
 }
 
 

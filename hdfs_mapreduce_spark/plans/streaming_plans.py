@@ -47,8 +47,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,25 +54,6 @@ from pyspark.sql import functions as F
 from hdfs_mapreduce_spark.sources.catalog import load_table
 
 STREAM_TIMEOUT_SEC = 600
-
-# Per-phase wall-clock of the LAST invocation of each instrumented
-# online-dedup query (r11 verdict Next #2: the driver's bench sessions
-# measure these queries 2-2.6x slower than the builder's with identical
-# code and data — this decomposes the residual per ingest round /
-# maintenance verb / final read instead of leaving it unattributed).
-# bench.py embeds a snapshot in BENCH_LOCAL.json as "phase_sec".
-PHASE_SEC: dict[str, dict[str, float]] = {}
-
-
-@contextmanager
-def _phase(qname: str, phase: str):
-    t0 = time.perf_counter()
-    try:
-        yield
-    finally:
-        PHASE_SEC.setdefault(qname, {})[phase] = round(
-            time.perf_counter() - t0, 4
-        )
 
 # Unique per-invocation scratch suffix: a re-invocation (fresh RAW call in
 # the same session) must never point a fresh checkpoint at an existing
@@ -412,13 +391,11 @@ def logtable_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost tracks live data, never log length."""
     from hdfs_mapreduce_spark.streaming.logtable import table_changes
 
-    with _phase("logtable_cdf", "stage_fixture"):
-        root = _stage_cdf_table(spark, sf_dir, "cdf")
-    with _phase("logtable_cdf", "build_read_plan"):
-        ch = table_changes(spark, root, "event_id", 0, 2)
-        return ch.select(
-            "event_id", "change_type", "value_before", "value_after"
-        ).orderBy("event_id")
+    root = _stage_cdf_table(spark, sf_dir, "cdf")
+    ch = table_changes(spark, root, "event_id", 0, 2)
+    return ch.select(
+        "event_id", "change_type", "value_before", "value_after"
+    ).orderBy("event_id")
 
 
 def _apply_cdf_delta(agg: DataFrame, ch: DataFrame) -> DataFrame:
@@ -474,32 +451,30 @@ def logtable_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_changes,
     )
 
-    with _phase("logtable_ivm", "stage_fixture"):
-        root = _stage_cdf_table(spark, sf_dir, "ivm")
-    with _phase("logtable_ivm", "build_read_plan"):
-        agg = (
-            snapshot(spark, root, "event_id", as_of=0)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("sum_value"),
-            )
+    root = _stage_cdf_table(spark, sf_dir, "ivm")
+    agg = (
+        snapshot(spark, root, "event_id", as_of=0)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("sum_value"),
         )
-        # NOTE (r13, negative result kept for the record): materializing
-        # the two change feeds to session scratch before folding (the
-        # components_logrounds flattening) was tried to cut the 1.6s of
-        # eager plan analysis the decomposition measured here — it
-        # verified hash-exact but measured SLOWER under the bench
-        # protocol (3.55s -> 4.61s min-of-2: the two delta writes cost
-        # more than the saved re-analysis at sf0.1), so the fold stays
-        # on the raw snapshot-diff subtrees. At real scale an IVM
-        # deployment persists its deltas anyway — but that is the
-        # deployment's write, not this query's.
-        for v in (1, 2):
-            ch = table_changes(spark, root, "event_id", v - 1, v)
-            if ch is not None:
-                agg = _apply_cdf_delta(agg, ch)
-        return agg.where(F.col("n_events") > 0).orderBy("event_type")
+    )
+    # NOTE (r13, negative result kept for the record): materializing
+    # the two change feeds to session scratch before folding (the
+    # components_logrounds flattening) was tried to cut the 1.6s of
+    # eager plan analysis the decomposition measured here — it
+    # verified hash-exact but measured SLOWER under the bench
+    # protocol (3.55s -> 4.61s min-of-2: the two delta writes cost
+    # more than the saved re-analysis at sf0.1), so the fold stays
+    # on the raw snapshot-diff subtrees. At real scale an IVM
+    # deployment persists its deltas anyway — but that is the
+    # deployment's write, not this query's.
+    for v in (1, 2):
+        ch = table_changes(spark, root, "event_id", v - 1, v)
+        if ch is not None:
+            agg = _apply_cdf_delta(agg, ch)
+    return agg.where(F.col("n_events") > 0).orderBy("event_type")
 
 
 def _stage_day2_batches(root: str, day2: DataFrame, mod: int) -> str:
@@ -557,16 +532,14 @@ def stream_ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     day1 = emb.filter(F.col("vec_id") % APPEND_MOD != 0)
     day2 = emb.filter(F.col("vec_id") % APPEND_MOD == 0)
-    with _phase("stream_ann_ingest_topk", "build_index"):
-        index = build_ivfpq_index(
-            day1,
-            nlist=IVF_NLIST,
-            name=f"ivfpq_stream_{os.path.basename(sf_dir.rstrip('/'))}"
-            f"_{next(_INVOCATION)}",
-        )
+    index = build_ivfpq_index(
+        day1,
+        nlist=IVF_NLIST,
+        name=f"ivfpq_stream_{os.path.basename(sf_dir.rstrip('/'))}"
+        f"_{next(_INVOCATION)}",
+    )
 
-    with _phase("stream_ann_ingest_topk", "stage_src"):
-        stage = _stage_day2_batches(root, day2, APPEND_MOD)
+    stage = _stage_day2_batches(root, day2, APPEND_MOD)
     qsrc = emb.select("vec_id", "embedding")
     table_root = os.path.join(root, "codes_table")
 
@@ -585,19 +558,17 @@ def stream_ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    with _phase("stream_ann_ingest_topk", "stream_3_batches"):
-        _run(
-            stream.writeStream.foreachBatch(_sink),
-            None,
-            os.path.join(root, "ckpt"),
-        )
-    with _phase("stream_ann_ingest_topk", "build_read_plan"):
-        streamed_codes = snapshot(spark, table_root, "id")
-        combined = {
-            **index, "codes": index["codes"].unionByName(streamed_codes)
-        }
-        queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
-        return ann_probe_ivfpq(combined, queries, TOP_K, nprobe=IVF_NPROBE)
+    _run(
+        stream.writeStream.foreachBatch(_sink),
+        None,
+        os.path.join(root, "ckpt"),
+    )
+    streamed_codes = snapshot(spark, table_root, "id")
+    combined = {
+        **index, "codes": index["codes"].unionByName(streamed_codes)
+    }
+    queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
+    return ann_probe_ivfpq(combined, queries, TOP_K, nprobe=IVF_NPROBE)
 
 
 def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,13 +611,11 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     day1 = emb.filter(F.col("vec_id") % APPEND_MOD != 0)
     day2 = emb.filter(F.col("vec_id") % APPEND_MOD == 0)
-    with _phase("stream_ann_ingest_fenced", "create_managed_v1"):
-        index = create_managed_ivfpq(
-            day1, os.path.join(root, "idx"), nlist=IVF_NLIST
-        )
+    index = create_managed_ivfpq(
+        day1, os.path.join(root, "idx"), nlist=IVF_NLIST
+    )
 
-    with _phase("stream_ann_ingest_fenced", "stage_src"):
-        stage = _stage_day2_batches(root, day2, APPEND_MOD)
+    stage = _stage_day2_batches(root, day2, APPEND_MOD)
     qsrc = emb.select("vec_id", "embedding")
     table_root = os.path.join(root, "codes_table")
     sink = fenced_codes_sink(index, table_root)
@@ -657,50 +626,46 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    with _phase("stream_ann_ingest_fenced", "stream_3_batches"):
-        _run(
-            stream.writeStream.foreachBatch(sink),
-            None,
-            os.path.join(root, "ckpt"),
-        )
+    _run(
+        stream.writeStream.foreachBatch(sink),
+        None,
+        os.path.join(root, "ckpt"),
+    )
     streamed_codes = snapshot(spark, table_root, "id")
 
     # Flip: rebuild on the full current corpus (streamed rows included —
     # the rebuild-covers-streamed-ingest contract), then enforce that
     # the forgotten v1 writer fails loudly and commits nothing.
-    with _phase("stream_ann_ingest_fenced", "rebuild_v2"):
-        rebuild_ivfpq_index(
-            open_managed_ivfpq(spark, os.path.join(root, "idx")), emb
+    rebuild_ivfpq_index(
+        open_managed_ivfpq(spark, os.path.join(root, "idx")), emb
+    )
+    n_before = streamed_codes.count()
+    try:
+        sink(day2.select("vec_id", "embedding").limit(1), 999)
+    except IndexEpochError:
+        pass
+    else:
+        raise RuntimeError(
+            "epoch fence FAILED to trip: a post-flip commit beside the "
+            "dead generation went through silently"
         )
-    with _phase("stream_ann_ingest_fenced", "fence_checks"):
-        n_before = streamed_codes.count()
-        try:
-            sink(day2.select("vec_id", "embedding").limit(1), 999)
-        except IndexEpochError:
-            pass
-        else:
-            raise RuntimeError(
-                "epoch fence FAILED to trip: a post-flip commit beside the "
-                "dead generation went through silently"
-            )
-        if snapshot(spark, table_root, "id").count() != n_before:
-            raise RuntimeError(
-                "epoch fence tripped but the batch still committed — the "
-                "fence must run before the upsert, not after"
-            )
+    if snapshot(spark, table_root, "id").count() != n_before:
+        raise RuntimeError(
+            "epoch fence tripped but the batch still committed — the "
+            "fence must run before the upsert, not after"
+        )
 
     # Probe the rebuilt generation through a FRESH handle: certifies the
     # published post-flip state read back from disk, not the in-memory
     # return value of the rebuild call.
-    with _phase("stream_ann_ingest_fenced", "build_read_plan"):
-        handle = open_managed_ivfpq(spark, os.path.join(root, "idx"))
-        if handle["version"] != 2:
-            raise RuntimeError(
-                f"rebuild did not flip the manifest: current is "
-                f"v{handle['version']}, expected v2"
-            )
-        queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
-        return ann_probe_ivfpq(handle, queries, TOP_K, nprobe=IVF_NPROBE)
+    handle = open_managed_ivfpq(spark, os.path.join(root, "idx"))
+    if handle["version"] != 2:
+        raise RuntimeError(
+            f"rebuild did not flip the manifest: current is "
+            f"v{handle['version']}, expected v2"
+        )
+    queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
+    return ann_probe_ivfpq(handle, queries, TOP_K, nprobe=IVF_NPROBE)
 
 
 # stream_cdc_apply constants: residue-class batching of the events keys
@@ -808,8 +773,7 @@ def dq_checks_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_changes,
     )
 
-    with _phase("dq_checks_incremental", "stage_fixture"):
-        root = _stage_cdf_table(spark, sf_dir, "dqinc")
+    root = _stage_cdf_table(spark, sf_dir, "dqinc")
     checks = {
         "event_type_in_domain": lambda c: c("event_type").isNull()
         | ~c("event_type").isin(*EVENT_TYPE_DOMAIN),
@@ -818,19 +782,18 @@ def dq_checks_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_positive": lambda c: c("value").isNull()
         | (c("value") <= 0),
     }
-    with _phase("dq_checks_incremental", "build_read_plan"):
-        # Same negative result as logtable_ivm (r13): scratch-
-        # materializing the change feeds measured SLOWER min-of-2
-        # (3.21s -> 4.30s) despite the smaller final plan; reverted.
-        return incremental_row_checks(
-            snapshot(spark, root, "event_id", as_of=0),
-            [
-                table_changes(spark, root, "event_id", 0, 1),
-                table_changes(spark, root, "event_id", 1, 2),
-            ],
-            "events_logtable",
-            checks,
-        ).orderBy("check")
+    # Same negative result as logtable_ivm (r13): scratch-
+    # materializing the change feeds measured SLOWER min-of-2
+    # (3.21s -> 4.30s) despite the smaller final plan; reverted.
+    return incremental_row_checks(
+        snapshot(spark, root, "event_id", as_of=0),
+        [
+            table_changes(spark, root, "event_id", 0, 1),
+            table_changes(spark, root, "event_id", 1, 2),
+        ],
+        "events_logtable",
+        checks,
+    ).orderBy("check")
 
 
 MG_K = 64
@@ -935,31 +898,28 @@ def stream_dedup_admitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch(spark, "dedup_ingest", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    with _phase("stream_dedup_admitted", "stage_src"):
-        src = _stage_single_file_batches(
-            root,
-            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            name_of=lambda i: f"part-{i}.parquet",
-        )
+    src = _stage_single_file_batches(
+        root,
+        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+        name_of=lambda i: f"part-{i}.parquet",
+    )
     stream_in = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     state = os.path.join(root, "state")
-    with _phase("stream_dedup_admitted", "stream_3_batches"):
-        q = stream_dedup_ingest(
-            stream_in, state, os.path.join(root, "ckpt")
-        ).trigger(availableNow=True).start()
-        if not q.awaitTermination(STREAM_TIMEOUT_SEC):
-            q.stop()
-            raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
-    with _phase("stream_dedup_admitted", "build_read_plan"):
-        return (
-            read_accepted(spark, state)
-            .select("doc_id")
-            .orderBy("doc_id")
-        )
+    q = stream_dedup_ingest(
+        stream_in, state, os.path.join(root, "ckpt")
+    ).trigger(availableNow=True).start()
+    if not q.awaitTermination(STREAM_TIMEOUT_SEC):
+        q.stop()
+        raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
+    return (
+        read_accepted(spark, state)
+        .select("doc_id")
+        .orderBy("doc_id")
+    )
 
 
 def stream_dedup_resketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -987,14 +947,10 @@ def stream_dedup_resketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     state = os.path.join(root, "state")
     for i in range(2):
-        with _phase("stream_dedup_resketch", f"ingest_{i}"):
-            dedup_ingest_batch(docs.filter(F.col("doc_id") % 3 == i), i, state)
-    with _phase("stream_dedup_resketch", "resketch"):
-        resketch_state(spark, state, WIDE_PERM, WIDE_BANDS)
-    with _phase("stream_dedup_resketch", "ingest_2_wide"):
-        dedup_ingest_batch(docs.filter(F.col("doc_id") % 3 == 2), 2, state)
-    with _phase("stream_dedup_resketch", "build_read_plan"):
-        return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
+        dedup_ingest_batch(docs.filter(F.col("doc_id") % 3 == i), i, state)
+    resketch_state(spark, state, WIDE_PERM, WIDE_BANDS)
+    dedup_ingest_batch(docs.filter(F.col("doc_id") % 3 == 2), 2, state)
+    return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
 
 
 def stream_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,19 +974,15 @@ def stream_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     state = os.path.join(root, "state")
     for i in range(3):
-        with _phase("stream_dedup_compacted", f"ingest_{i}"):
-            dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == i), i, state)
-    with _phase("stream_dedup_compacted", "compact"):
-        compacted = compact_state(spark, state, keep_last=1)
+        dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == i), i, state)
+    compacted = compact_state(spark, state, keep_last=1)
     if compacted != [0, 1]:
         raise RuntimeError(
             f"compact_state folded {compacted}, expected [0, 1] — the "
             "retention tail or committed-id listing is broken"
         )
-    with _phase("stream_dedup_compacted", "ingest_3"):
-        dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == 3), 3, state)
-    with _phase("stream_dedup_compacted", "build_read_plan"):
-        return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
+    dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == 3), 3, state)
+    return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
 
 
 def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1053,26 +1005,24 @@ def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch(spark, "dedup_maintained", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    with _phase("stream_dedup_maintained", "stage_src"):
-        src = _stage_single_file_batches(
-            root,
-            [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)],
-            name_of=lambda i: f"part-{i}.parquet",
-        )
+    src = _stage_single_file_batches(
+        root,
+        [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)],
+        name_of=lambda i: f"part-{i}.parquet",
+    )
     stream_in = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     state = os.path.join(root, "state")
-    with _phase("stream_dedup_maintained", "stream_4_batches"):
-        q = stream_dedup_ingest(
-            stream_in, state, os.path.join(root, "ckpt"),
-            compact_every=2, compact_keep_last=1,
-        ).trigger(availableNow=True).start()
-        if not q.awaitTermination(STREAM_TIMEOUT_SEC):
-            q.stop()
-            raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
+    q = stream_dedup_ingest(
+        stream_in, state, os.path.join(root, "ckpt"),
+        compact_every=2, compact_keep_last=1,
+    ).trigger(availableNow=True).start()
+    if not q.awaitTermination(STREAM_TIMEOUT_SEC):
+        q.stop()
+        raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
     committed = [
         d
         for d in hfs.glob_parent_names(
@@ -1086,8 +1036,7 @@ def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(merged 0-2 + retained tail 3), found {sorted(committed)} — "
             "the compact_every cadence did not fire"
         )
-    with _phase("stream_dedup_maintained", "build_read_plan"):
-        return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
+    return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
 
 
 QUERIES = {

@@ -32,9 +32,6 @@ by a stream clock instead of cron.
 
 from __future__ import annotations
 
-import time
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,25 +71,6 @@ _MAINTENANCE_MARKERS = (
 # would otherwise fall back to the narrow default and the first
 # non-empty batch would pin that wrong lifetime shape silently.
 _SHAPE_META = "_shape_meta"
-
-# Cumulative wall-clock of the ingest loop's per-batch steps across all
-# batches this process ran — the r13 decomposition of the per-batch
-# cost (read by tools/decompose_query.py; bench embeds PHASE_SEC the
-# same way for the query-level phases). Passive: a handful of
-# perf_counter calls per batch, nothing in the engine reads it.
-PHASE_TOTALS: dict[str, float] = {}
-
-
-@contextmanager
-def _tick(phase: str):
-    t0 = time.perf_counter()
-    try:
-        yield
-    finally:
-        PHASE_TOTALS[phase] = PHASE_TOTALS.get(phase, 0.0) + (
-            time.perf_counter() - t0
-        )
-
 
 def _read_shape_meta(
     spark: SparkSession, state_dir: str
@@ -178,20 +156,19 @@ def dedup_ingest_batch(
     sketch_dir = hfs.join(state_dir, "sketch")
     # ONE listing RPC covers all five maintenance markers (per-marker
     # exists probes would pay five round trips per micro-batch).
-    with _tick("setup_listing"):
-        children = set(hfs.list_child_names(spark, state_dir))
-        for marker in _MAINTENANCE_MARKERS:
-            if marker in children:
-                verb = (
-                    "resketch_state" if marker.startswith("_sketch")
-                    else "compact_state"
-                )
-                raise RuntimeError(
-                    f"state dir has a leftover '{marker}' tree from an "
-                    f"interrupted {verb} — re-run {verb} (it rolls the swap "
-                    "back or forward) before ingesting"
-                )
-        corpus_sketch = _read_batch_dirs(spark, sketch_dir, below=batch_id)
+    children = set(hfs.list_child_names(spark, state_dir))
+    for marker in _MAINTENANCE_MARKERS:
+        if marker in children:
+            verb = (
+                "resketch_state" if marker.startswith("_sketch")
+                else "compact_state"
+            )
+            raise RuntimeError(
+                f"state dir has a leftover '{marker}' tree from an "
+                f"interrupted {verb} — re-run {verb} (it rolls the swap "
+                "back or forward) before ingesting"
+            )
+    corpus_sketch = _read_batch_dirs(spark, sketch_dir, below=batch_id)
     if (n_perm is None) != (n_bands is None):
         raise ValueError("pass BOTH n_perm and n_bands or neither")
     # Resolve the state's b/r shape ONCE (one limit(1) driver job per
@@ -206,11 +183,10 @@ def dedup_ingest_batch(
     # a resketch swap and its meta rewrite), and an explicit caller shape
     # that mismatches EITHER pin raises before anything commits.
     pinned = None
-    with _tick("resolve_shape"):
-        if corpus_sketch is not None:
-            pinned = resolve_sketch_shape(corpus_sketch)
-        if pinned is None and _SHAPE_META in children:
-            pinned = _read_shape_meta(spark, state_dir)
+    if corpus_sketch is not None:
+        pinned = resolve_sketch_shape(corpus_sketch)
+    if pinned is None and _SHAPE_META in children:
+        pinned = _read_shape_meta(spark, state_dir)
     if pinned is not None and n_perm is not None and (n_perm, n_bands) != pinned:
         raise ValueError(
             f"corpus sketch shape mismatch: state {state_dir} is pinned "
@@ -236,14 +212,19 @@ def dedup_ingest_batch(
     # shape ran the shingle scan + signature groupBy THREE times per
     # micro-batch), and — r13 — the three batch-bounded relations the
     # two state writes share (the sketch itself + the two reject sets)
-    # are EAGERLY localCheckpoint'ed instead of persist()ed. persist
+    # are LAZILY localCheckpoint'ed (eager=False) instead of persist()ed:
+    # no job runs here; the first action that reads a relation computes
+    # and stores its blocks. Compute-once under the concurrent writes
+    # below relies on the block manager's per-block write lock — a task
+    # that finds a block being written waits for it and reads it rather
+    # than recomputing the partition. persist
     # caches the DATA but every later action still re-ANALYZES the full
     # logical subtree (shingle explode + 16-32 MIN aggregates +
     # posexplode + the corpus probe join): Spark analyzes eagerly per
     # transformation, and the r13 decomposition measured this loop as
     # majority driver-side gaps (stream_dedup_maintained: 10.4s gaps vs
-    # 5.4s job time, 50 jobs — PHASE_TOTALS put 13.4s under the accepted
-    # write alone, most of it analysis of the nested plan). Checkpointing
+    # 5.4s job time, 50 jobs; the accepted write alone took 13.4s, most
+    # of it analysis of the nested plan). Checkpointing
     # truncates every downstream plan to a LogicalRDD leaf (guide §3.3:
     # materialising an intermediate truncates the plan; §5:
     # localCheckpoint as the cheap lineage cut). All three relations are
@@ -265,22 +246,20 @@ def dedup_ingest_batch(
 
     janitor = CheckpointJanitor(spark)
     try:
-        with _tick("sketch_batch"):
-            batch_bands = _banded_sketch(
-                batch_df, id_col, text_col, n_perm, n_bands
-            ).localCheckpoint(eager=False)
+        batch_bands = _banded_sketch(
+            batch_df, id_col, text_col, n_perm, n_bands
+        ).localCheckpoint(eager=False)
         survivors = batch_df
         surv_bands = batch_bands
         if corpus_sketch is not None:
-            with _tick("probe_corpus"):
-                dup_vs_corpus = (
-                    _probe_pairs_from_sketches(
-                        corpus_sketch, batch_bands, threshold
-                    )
-                    .select(F.col("new_doc").alias(id_col))
-                    .distinct()
-                    .localCheckpoint(eager=False)
+            dup_vs_corpus = (
+                _probe_pairs_from_sketches(
+                    corpus_sketch, batch_bands, threshold
                 )
+                .select(F.col("new_doc").alias(id_col))
+                .distinct()
+                .localCheckpoint(eager=False)
+            )
             survivors = survivors.join(
                 F.broadcast(dup_vs_corpus), id_col, "left_anti"
             )
@@ -300,13 +279,12 @@ def dedup_ingest_batch(
         # recall of unique content matters, run cluster-canonical
         # admission instead (operators/components.canonical_assignment
         # keeps one doc per connected component).
-        with _tick("within_batch_check"):
-            within_rejects = (
-                _verified_pairs(surv_bands, threshold, broadcast_right=True)
-                .select(F.col("doc_b").alias(id_col))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
+        within_rejects = (
+            _verified_pairs(surv_bands, threshold, broadcast_right=True)
+            .select(F.col("doc_b").alias(id_col))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
         survivors = survivors.join(
             F.broadcast(within_rejects), id_col, "left_anti"
         )
@@ -320,28 +298,27 @@ def dedup_ingest_batch(
         # executor work. Crash semantics are unchanged: either dir may
         # exist without the other after a mid-batch crash, exactly as
         # with sequential writes, and the replay overwrites both.
-        with _tick("state_writes"):
-            sketch_out = surv_bands.join(
-                F.broadcast(
-                    within_rejects.select(F.col(id_col).alias("doc"))
-                ),
-                "doc",
-                "left_anti",
-            )
-            from hdfs_mapreduce_spark.functions.driverpool import (
-                run_concurrently,
-            )
+        sketch_out = surv_bands.join(
+            F.broadcast(
+                within_rejects.select(F.col(id_col).alias("doc"))
+            ),
+            "doc",
+            "left_anti",
+        )
+        from hdfs_mapreduce_spark.functions.driverpool import (
+            run_concurrently,
+        )
 
-            run_concurrently(
-                [
-                    lambda: survivors.write.mode("overwrite").parquet(
-                        hfs.join(accepted_dir, f"batch_id={batch_id}")
-                    ),
-                    lambda: sketch_out.write.mode("overwrite").parquet(
-                        hfs.join(sketch_dir, f"batch_id={batch_id}")
-                    ),
-                ]
-            )
+        run_concurrently(
+            [
+                lambda: survivors.write.mode("overwrite").parquet(
+                    hfs.join(accepted_dir, f"batch_id={batch_id}")
+                ),
+                lambda: sketch_out.write.mode("overwrite").parquet(
+                    hfs.join(sketch_dir, f"batch_id={batch_id}")
+                ),
+            ]
+        )
     finally:
         janitor.free_all()
 

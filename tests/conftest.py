@@ -60,25 +60,49 @@ def ddb():
 _SLOW_TIER_FILE = os.path.join(os.path.dirname(__file__), "slow_tier.json")
 
 
+def _matches(nid: str, key: str) -> bool:
+    # nodeids in the json are repo-relative ("tests/file.py::test"); match
+    # on the suffix so invocation directory doesn't matter.
+    return nid == key or nid.endswith(key) or key.endswith(nid)
+
+
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
     import json
+    import warnings
 
     try:
         with open(_SLOW_TIER_FILE) as f:
             slow = json.load(f)
     except (OSError, ValueError):
         return
+    # A key that names no collected test in a collected file is stale (the
+    # test was renamed or deleted) and would silently skip its successor
+    # if the name came back; report them once, in the warnings summary.
+    # Only whole-file runs can tell: a node-id, -k or -m selection leaves
+    # out live tests too.
+    opt = config.option
+    stale = []
+    if not (opt.keyword or opt.markexpr or any("::" in a for a in config.args)):
+        files = {item.nodeid.split("::")[0] for item in items}
+        stale = [
+            key
+            for key in slow
+            if any(_matches(f, key.split("::")[0]) for f in files)
+            and not any(_matches(item.nodeid, key) for item in items)
+        ]
+    if stale:
+        warnings.warn(
+            pytest.PytestWarning(
+                f"tests/slow_tier.json has {len(stale)} key(s) matching no "
+                f"collected test: {', '.join(sorted(stale))}"
+            )
+        )
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+        return
     marker = pytest.mark.skip(
         reason="slow tier (see tests/slow_tier.json); "
         "SPARK_GRAFT_FULL_TESTS=1 runs it"
     )
-    # nodeids in the json are repo-relative ("tests/file.py::test"); match
-    # on the suffix so invocation directory doesn't matter.
     for item in items:
-        nid = item.nodeid
-        for key in slow:
-            if nid == key or nid.endswith(key) or key.endswith(nid):
-                item.add_marker(marker)
-                break
+        if any(_matches(item.nodeid, key) for key in slow):
+            item.add_marker(marker)

@@ -41,30 +41,3 @@ def test_upsert_snapshot_is_one_row_per_key(spark):
     ).collect()[0]
     assert agg["n"] == agg["d"] > 0
 
-
-def test_online_dedup_phase_instrumentation(spark):
-    """The per-phase wall-clock dict (plans/streaming_plans.py:PHASE_SEC,
-    the r11 session-sensitivity attribution) must cover every phase of a
-    declared online-dedup query after it runs, with phases that are
-    positive and sum to (at most) the query's end-to-end cost — bench.py
-    embeds this dict as phase_sec in every BENCH payload, so a missing
-    or stale phase would silently un-attribute the driver's numbers."""
-    import time
-
-    from hdfs_mapreduce_spark.plans.streaming_plans import PHASE_SEC
-
-    PHASE_SEC.pop("stream_dedup_resketch", None)
-    t0 = time.perf_counter()
-    RAW_QUERIES["stream_dedup_resketch"](spark, SF_CORRECTNESS).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    elapsed = time.perf_counter() - t0
-    phases = PHASE_SEC["stream_dedup_resketch"]
-    assert set(phases) == {
-        "ingest_0", "ingest_1", "resketch", "ingest_2_wide",
-        "build_read_plan",
-    }
-    assert all(v > 0 for v in phases.values())
-    # phases time plan BUILD (the noop write happens after), so their sum
-    # is bounded by the end-to-end cost
-    assert sum(phases.values()) <= elapsed

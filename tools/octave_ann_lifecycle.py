@@ -15,18 +15,16 @@ extrapolations:
      manifest small-file read over the plain logtable commit,
      independent of SF.
 
-Protocol: same as the BENCH_SF3 rounds — one session per SF, plan
-shapes pre-warmed with a full lifecycle pass at sf0.1, min-of-2 per
-timed verb (fresh index roots per repetition so every build is a real
-build), noop-write execution forcing, SPARK_GRAFT_DRIVER_MEM=16g for
-the sf10 session.
+Protocol: bench.octave — one session per SF under bench.configure,
+plan shapes pre-warmed by a full lifecycle pass in bench.warm, min-of-2
+per timed verb (fresh index roots per repetition so every build is a
+real build), noop-write execution forcing (bench.force).
 
 Usage: python tools/octave_ann_lifecycle.py <sf_dir> [out_json]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -34,11 +32,7 @@ import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _force(df) -> float:
-    t0 = time.monotonic()
-    df.write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
+import bench  # noqa: E402
 
 
 def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
@@ -158,7 +152,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     combined = {**index, "codes": index["codes"].unionByName(streamed)}
 
     def do_probe_pre():
-        return _force(
+        return bench.force(
             ann_probe_ivfpq(combined, queries, TOP_K, nprobe=IVF_NPROBE)
         )
 
@@ -189,7 +183,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     assert handle["version"] == 2, handle["version"]
 
     def do_probe_post():
-        return _force(
+        return bench.force(
             ann_probe_ivfpq(handle, queries, TOP_K, nprobe=IVF_NPROBE)
         )
 
@@ -210,25 +204,5 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "32")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    from hdfs_mapreduce_spark.session import get_spark
-
-    spark = get_spark("octave-ann-lifecycle")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm every plan shape (codegen, Python workers) at the small SF
-    run_lifecycle(spark, "/root/testdata/sf0.1")
-    result = {"sf_dir": sf_dir, **run_lifecycle(spark, sf_dir)}
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-
-
 if __name__ == "__main__":
-    main()
+    bench.octave("octave-ann-lifecycle", run_lifecycle)

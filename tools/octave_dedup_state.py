@@ -19,18 +19,17 @@ Plus one flatness proof: the per-micro-batch driver LISTING RPC count
 is identical for an ingest against 2-batch-old state and 6-batch-old
 state — stream age buys zero extra round trips per batch.
 
-Protocol: same as the BENCH_SF3 rounds — one session per SF, plan
-shapes pre-warmed with a full pass at sf0.1, min-of-2 per timed verb
-with a FRESH copytree of the built state per repetition (every timed
-maintenance run mutates real state), noop-free (the verbs force their
-own writes), SPARK_GRAFT_DRIVER_MEM=16g for the sf10 session.
+Protocol: bench.octave — one session per SF under bench.configure,
+plan shapes pre-warmed by a full pass in bench.warm, min-of-2 per timed
+verb with a FRESH copytree of the built state per repetition (every
+timed maintenance run mutates real state), noop-free (the verbs force
+their own writes).
 
 Usage: python tools/octave_dedup_state.py <sf_dir> [out_json]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -38,6 +37,8 @@ import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 N_BATCHES = 6
 TIER = 3  # tiered compaction reads the 3 smallest of the 5 below-tail dirs
@@ -95,9 +96,7 @@ def run_maintenance(spark, sf_dir: str) -> dict[str, object]:
     def fresh(tag):
         return os.path.join(scratch, f"octave_{tag}_{uuid.uuid4().hex[:8]}")
 
-    # -- build the base state: N_BATCHES ingest rounds (setup, timed once;
-    #    also the per-batch number the round-11 phase instrumentation
-    #    cross-checks) --
+    # -- build the base state: N_BATCHES ingest rounds (setup, timed once) --
     base = fresh("state")
     t0 = time.monotonic()
     for i, b in enumerate(batches):
@@ -185,25 +184,5 @@ def _timeit(fn) -> float:
     return time.monotonic() - t0
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "32")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    from hdfs_mapreduce_spark.session import get_spark
-
-    spark = get_spark("octave-dedup-state")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm every plan shape (codegen, Python workers) at the small SF
-    run_maintenance(spark, "/root/testdata/sf0.1")
-    result = {"sf_dir": sf_dir, **run_maintenance(spark, sf_dir)}
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-
-
 if __name__ == "__main__":
-    main()
+    bench.octave("octave-dedup-state", run_maintenance)

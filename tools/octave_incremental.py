@@ -1,8 +1,8 @@
 """Round-11 stretch octave: the INGEST-GATE twin of the r10 pairs A/B —
 incremental_minhash_pairs (batch-vs-corpus probe, the dedup_incremental
 composition) at the default 16x8 (r=2) vs the wide 32x8 (r=4) point,
-sf1 -> sf10. Same protocol as the pairs octaves: one session, both
-configs interleaved per SF, min-of-2 noop-forced wall-clock, plus the
+sf1 -> sf10. Protocol: bench.octave — one session per SF, both
+configs interleaved, min-of-2 noop-forced wall-clock, plus the
 drift-immune structural metric — candidate-pair counts (threshold=0
 keeps every band collision; the production threshold's verify then
 kills the junk), split into junk (J < 0.1) and true (J >= 0.5).
@@ -12,21 +12,15 @@ Usage: python tools/octave_incremental.py <sf_dir> [out_json]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 INC_MOD = 5  # the declared dedup_incremental split
 THRESHOLD = 0.5
-
-
-def _force(df) -> float:
-    t0 = time.monotonic()
-    df.write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
 
 
 def run(spark, sf_dir: str) -> dict:
@@ -47,7 +41,7 @@ def run(spark, sf_dir: str) -> dict:
         plan = dd.incremental_minhash_pairs(
             corpus, new, "doc_id", "text", THRESHOLD, n_perm=np_, n_bands=nb
         )
-        out[f"{tag}_sec"] = round(min(_force(plan) for _ in range(2)), 4)
+        out[f"{tag}_sec"] = round(min(bench.force(plan) for _ in range(2)), 4)
         cand = dd.incremental_minhash_pairs(
             corpus, new, "doc_id", "text", 0.0, n_perm=np_, n_bands=nb
         )
@@ -62,24 +56,5 @@ def run(spark, sf_dir: str) -> dict:
     return out
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "32")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    from hdfs_mapreduce_spark.session import get_spark
-
-    spark = get_spark("octave-incremental")
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, "/root/testdata/sf0.1")  # warm plan shapes
-    result = {"sf_dir": sf_dir, **run(spark, sf_dir)}
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-
-
 if __name__ == "__main__":
-    main()
+    bench.octave("octave-incremental", run)
