@@ -612,18 +612,12 @@ def create_managed_ivfpq(
     """Build generation 1 of a managed index under ``root`` (default: a
     'managed_ivfpq' tree in session scratch, auto-cleaned at exit) and
     publish it as manifest v1. Returns the opened handle."""
-    from hdfs_mapreduce_spark.operators.materialize import (
-        purge_scratch,
-        session_scratch_dir,
-    )
+    from hdfs_mapreduce_spark.operators.materialize import session_scratch_dir
     from hdfs_mapreduce_spark.sources import fs as hfs
 
     spark = embeddings.sparkSession
     if root is None:
-        import atexit
-
         root = hfs.join(session_scratch_dir(spark), "managed_ivfpq")
-        atexit.register(purge_scratch, spark)
     if current_index_version(spark, root) is not None:
         raise ValueError(f"index already exists under {root} — open it")
     gen = _gen_name(1)

@@ -35,11 +35,16 @@ def session_scratch_dir(spark: SparkSession) -> str:
     """Per-session scratch root: $SPARK_GRAFT_SCRATCH (or the system temp
     dir) + the Spark applicationId. Two sessions — even started in the
     same second on the same host — have distinct applicationIds, so their
-    scratch trees are disjoint."""
+    scratch trees are disjoint. The first call per session registers
+    ``purge_scratch`` to run at interpreter exit."""
     base = os.environ.get("SPARK_GRAFT_SCRATCH") or os.path.join(
         tempfile.gettempdir(), "hdfs_mapreduce_spark_scratch"
     )
-    return os.path.join(base, spark.sparkContext.applicationId)
+    root = os.path.join(base, spark.sparkContext.applicationId)
+    if root not in _CLEANUP_REGISTERED:
+        _CLEANUP_REGISTERED.add(root)
+        atexit.register(purge_scratch, spark)
+    return root
 
 
 def _remove_path(spark: SparkSession, path_str: str) -> None:
@@ -72,9 +77,6 @@ def materialize(df: DataFrame, name: str, base: str | None = None) -> DataFrame:
     the lineage references them — and only then swaps directories."""
     spark = df.sparkSession
     root = base or session_scratch_dir(spark)
-    if base is None and root not in _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED.add(root)
-        atexit.register(purge_scratch, spark)
     final = os.path.join(root, name)
     tmp = os.path.join(root, f"_mat_tmp_{name}")
     jpath = spark._jvm.org.apache.hadoop.fs.Path

@@ -83,7 +83,10 @@ DRIVER_WINDOW = 50
 # rounds for the same query are recorded in the comments only (a
 # duplicate dict key would be dead code: later wins — r12 verdict
 # hygiene item). History: dedup_lsh_recall also changed r5;
-# stream_upsert_snapshot r6/r11; stream_dedup_admitted r6/r11.
+# stream_upsert_snapshot r6/r11/r12; stream_dedup_admitted r6/r11/r14;
+# stream_upsert_log_snapshot r7; stream_heavy_hitters_audit r12 (the
+# r11-ADVICE fixes: glob-escaped listing bases and state reads);
+# stream_cdc_apply and ann_probe_rebuilt r13.
 REVERIFY = {
     "dedup_simhash_pairs": 5,
     "dedup_crosscheck": 5,
@@ -118,7 +121,6 @@ REVERIFY = {
     #     relations, new state machinery under all three consumers;
     #     dq_checks' RI anti-join gained the parent-key alias (same
     #     relation, new executed join condition).
-    "stream_upsert_log_snapshot": 7,
     "dq_checks": 7,
     # r9: bpe_learn now delegates to bpe_learn_batched(batch_k=1) —
     #     identical algorithm (pinned against the pure-Python reference)
@@ -165,43 +167,54 @@ REVERIFY = {
     "dedup_keep_best": 11,
     "dataset_split_safe": 11,
     "graph_pagerank": 11,
-    # r12: the r11-ADVICE fixes changed state machinery under the
-    #     streaming families — glob_parent_names now escapes a literal
-    #     base (new signature at every listing site), state reads are
-    #     glob-escaped, and the dedup state gained the _shape_meta
-    #     lifetime record written on first ingest (same relations, new
-    #     executed state machinery — the r6 os.*->Hadoop-FS precedent).
-    "stream_upsert_snapshot": 12,
-    "stream_heavy_hitters_audit": 12,
     # r13 (optimization round 2): executed machinery changed under these
     #     relations — the dedup ingest loop localCheckpoints its
     #     batch-bounded relations and runs the two state writes
     #     concurrently (streaming/dedup.py), fixture staging went
-    #     concurrent (_stage_single_file_batches), the managed-ANN
+    #     concurrent (the fixture staging helper), the managed-ANN
     #     create/rebuild verbs return build-direct handles and
     #     load_ivfpq_index folds its metadata jobs into one
     #     (operators/ann_index.py). Same relations everywhere
     #     (hash-re-verified at sf0.01 in-round), but the driver should
     #     re-certify the new machinery.
-    "stream_cdc_apply": 13,
-    "ann_probe_rebuilt": 13,
     "ann_probe_vacuumed": 13,
-    # r14: the ad-hoc per-phase wall-clock timers (the query-level one
-    #     in plans/streaming_plans.py, the ingest-loop one in
-    #     streaming/dedup.py) were removed from these queries' callables
-    #     and from the ingest loop they run — pure context managers, so
-    #     the relations and plans are unchanged, but the executed code
-    #     was re-indented and the driver should re-certify it. Supersedes
-    #     their earlier entries (r7, r11, r13).
-    "logtable_cdf": 14,
-    "logtable_ivm": 14,
-    "stream_ann_ingest_topk": 14,
-    "stream_ann_ingest_fenced": 14,
-    "dq_checks_incremental": 14,
-    "stream_dedup_admitted": 14,
-    "stream_dedup_resketch": 14,
-    "stream_dedup_compacted": 14,
-    "stream_dedup_maintained": 14,
+    # r14: the ad-hoc per-phase wall-clock timers were removed from
+    #     logtable_cdf, logtable_ivm, stream_ann_ingest_topk,
+    #     stream_ann_ingest_fenced, dq_checks_incremental and the four
+    #     stream_dedup_* queries (re-indented code, same plans).
+    # r15: one harness for the declared streams — every file stream is
+    #     staged by streaming/events.py ordered_feed (session scratch,
+    #     links or single-file writes, pinned mtimes), drained by one
+    #     _run, and the four closed-region queries read their sink
+    #     through one _closed_region; logtable.snapshot reads every live
+    #     version in ONE glob-escaped mergeSchema scan (versions from
+    #     _metadata.file_path) instead of a per-version read + union,
+    #     which moves every snapshot consumer (the logtable and
+    #     ANN-ingest streams, the CDF family, the tombstone-reading ANN
+    #     probes); the dedup state lists committed batch ids through one
+    #     helper (compact_state's per-id _SUCCESS probes became one glob
+    #     per tree); the MG audit reads its state via read_upsert_state.
+    #     Same relations. Supersedes the r7, r12, r13 and r14 entries of
+    #     these keys.
+    "stream_windowed_stats": 15,
+    "stream_sliding_stats": 15,
+    "stream_attribution": 15,
+    "stream_session_stats": 15,
+    "stream_upsert_snapshot": 15,
+    "stream_upsert_log_snapshot": 15,
+    "stream_heavy_hitters_audit": 15,
+    "stream_cdc_apply": 15,
+    "stream_ann_ingest_topk": 15,
+    "stream_ann_ingest_fenced": 15,
+    "stream_dedup_admitted": 15,
+    "stream_dedup_resketch": 15,
+    "stream_dedup_compacted": 15,
+    "stream_dedup_maintained": 15,
+    "logtable_cdf": 15,
+    "logtable_ivm": 15,
+    "dq_checks_incremental": 15,
+    "ann_probe_deleted": 15,
+    "ann_probe_rebuilt": 15,
 }
 
 

@@ -48,8 +48,9 @@ from __future__ import annotations
 import itertools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from hdfs_mapreduce_spark.sources.catalog import load_table
 
@@ -76,52 +77,6 @@ def _scratch(spark: SparkSession, name: str, sf_dir: str) -> str:
     return d
 
 
-def _stage_single_file_batches(
-    root: str,
-    parts: list[DataFrame],
-    name_of=lambda i: f"b{i}.parquet",
-) -> str:
-    """Stage each relation in ``parts`` as ONE single-file parquet
-    micro-batch under ``root/src`` with strictly increasing mtimes
-    (FileStreamSource orders staged files by mtime, so batch order is
-    guaranteed rather than timestamp-incidental — the same pinning every
-    staging site used individually). The per-part writes are independent
-    Spark jobs over disjoint filters of the same source, so they are
-    submitted CONCURRENTLY from driver threads (guide §2.6: fixture
-    staging was a sequential run of 3-4 small jobs per query, each
-    paying its own driver round trip); the mtime stamps are fixed
-    constants applied after the moves, so thread completion order cannot
-    reorder the batch sequence. Driver-local os/shutil on declared-
-    fixture staging only — state/table dirs go through the Hadoop FS
-    machinery."""
-    import glob as _glob
-    import shutil as _shutil
-
-    from hdfs_mapreduce_spark.functions.driverpool import run_concurrently
-
-    stage = os.path.join(root, "src")
-    os.makedirs(stage, exist_ok=True)
-
-    def _one(i: int, part: DataFrame) -> None:
-        tmp = os.path.join(root, f"tmp{i}")
-        part.coalesce(1).write.parquet(tmp)
-        dst = os.path.join(stage, name_of(i))
-        _shutil.move(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst
-        )
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    # shared bounded pool, never per-use threads: py4j pinned mode leaks
-    # one parked JVM thread per exited Python thread (driverpool.py)
-    run_concurrently(
-        [
-            (lambda i=i, p=p: _one(i, p))
-            for i, p in enumerate(parts)
-        ]
-    )
-    return stage
-
-
 def _run(writer, sink_dir: str | None, ckpt: str) -> None:
     """Drive a DataStreamWriter to completion with availableNow."""
     if sink_dir is not None:
@@ -142,6 +97,36 @@ def _max_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _closed_region(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    writer,
+    keep: Column,
+    order: tuple[str, ...],
+) -> DataFrame:
+    """Drive an append-mode writer into a parquet sink and return the
+    rows of its terminal state that lie in the closed region: every
+    TIMESTAMP column read back as NTZ (the events table's type), the
+    broadcast 1-row ``_max_ts`` cross-joined in, ``keep`` applied as the
+    per-query predicate over the row and ``max_ts``, then ``max_ts``
+    dropped and the rows ordered by ``order``."""
+    root = _scratch(spark, name, sf_dir)
+    sink = os.path.join(root, "sink")
+    _run(writer, sink, os.path.join(root, "ckpt"))
+    out = spark.read.parquet(sink)
+    out = out.select(
+        *[
+            F.col(f.name).cast("timestamp_ntz").alias(f.name)
+            if isinstance(f.dataType, TimestampType)
+            else F.col(f.name)
+            for f in out.schema.fields
+        ]
+    )
+    closed = out.crossJoin(F.broadcast(_max_ts(spark, sf_dir))).filter(keep)
+    return closed.drop("max_ts").orderBy(*order)
+
+
 def stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Terminal state of the watermarked tumbling-window stream
     (streaming/events.py:stream_windowed_event_stats): closed 1h windows
@@ -151,24 +136,15 @@ def stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_windowed_event_stats,
     )
 
-    root = _scratch(spark, "windowed", sf_dir)
-    sink = os.path.join(root, "sink")
-    _run(
+    return _closed_region(
+        spark,
+        sf_dir,
+        "windowed",
         stream_windowed_event_stats(spark, sf_dir),
-        sink,
-        os.path.join(root, "ckpt"),
-    )
-    out = spark.read.parquet(sink).select(
-        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-    closed = out.crossJoin(F.broadcast(_max_ts(spark, sf_dir))).filter(
         F.col("window_start") + F.expr("INTERVAL 1 HOUR")
-        <= F.col("max_ts") - F.expr("INTERVAL 1 HOUR")
+        <= F.col("max_ts") - F.expr("INTERVAL 1 HOUR"),
+        ("window_start", "event_type"),
     )
-    return closed.drop("max_ts").orderBy("window_start", "event_type")
 
 
 def stream_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,24 +155,15 @@ def stream_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_sliding_event_stats,
     )
 
-    root = _scratch(spark, "sliding", sf_dir)
-    sink = os.path.join(root, "sink")
-    _run(
+    return _closed_region(
+        spark,
+        sf_dir,
+        "sliding",
         stream_sliding_event_stats(spark, sf_dir),
-        sink,
-        os.path.join(root, "ckpt"),
-    )
-    out = spark.read.parquet(sink).select(
-        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-    closed = out.crossJoin(F.broadcast(_max_ts(spark, sf_dir))).filter(
         F.col("window_start") + F.expr(f"INTERVAL {SLIDE_DUR_MIN} MINUTES")
-        <= F.col("max_ts") - F.expr("INTERVAL 1 HOUR")
+        <= F.col("max_ts") - F.expr("INTERVAL 1 HOUR"),
+        ("window_start", "event_type"),
     )
-    return closed.drop("max_ts").orderBy("window_start", "event_type")
 
 
 def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,25 +176,13 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_click_attribution,
     )
 
-    root = _scratch(spark, "attrib", sf_dir)
-    sink = os.path.join(root, "sink")
-    _run(
+    return _closed_region(
+        spark,
+        sf_dir,
+        "attrib",
         stream_click_attribution(spark, sf_dir),
-        sink,
-        os.path.join(root, "ckpt"),
-    )
-    out = spark.read.parquet(sink).select(
-        "user_id",
-        "click_id",
-        "purchase_id",
-        F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-    )
-    closed = out.crossJoin(F.broadcast(_max_ts(spark, sf_dir))).filter(
-        F.col("purchase_ts") <= F.col("max_ts") - F.expr("INTERVAL 2 HOURS")
-    )
-    return closed.drop("max_ts").orderBy(
-        "user_id", "purchase_id", "click_id"
+        F.col("purchase_ts") <= F.col("max_ts") - F.expr("INTERVAL 2 HOURS"),
+        ("user_id", "purchase_id", "click_id"),
     )
 
 
@@ -239,34 +194,18 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     must still be exactly one row per event_id (= the events relation,
     event_id being unique)."""
     from hdfs_mapreduce_spark.streaming.events import (
-        _stream_source,
+        _events_stream,
         read_upsert_state,
         stream_upsert_events,
     )
 
     root = _scratch(spark, "upsert", sf_dir)
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = os.path.join(root, "src")
-    os.makedirs(stage, exist_ok=True)
-    for i in range(2):
-        os.symlink(src, os.path.join(stage, f"copy{i}.parquet"))
-    stream = _stream_source(spark, sf_dir, stage)
-    # maxFilesPerTrigger lives on the source options; _stream_source built
-    # the reader already, so re-read with the option via the same helper's
-    # schema by limiting files per batch at the writer level is not
-    # possible — stage the option on a fresh reader instead.
-    stream = (
-        spark.readStream.schema(stream.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
     _run(
         stream_upsert_events(
             spark,
             sf_dir,
             os.path.join(root, "state"),
-            stream=stream,
+            stream=_events_stream(spark, sf_dir, copies=2),
         ),
         None,
         os.path.join(root, "ckpt"),
@@ -293,7 +232,7 @@ def stream_upsert_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the OPTIMIZE path), and the declared relation is the snapshot —
     which must equal the events relation exactly, same oracle as the
     rewrite sink."""
-    from hdfs_mapreduce_spark.streaming.events import _stream_source
+    from hdfs_mapreduce_spark.streaming.events import _events_stream
     from hdfs_mapreduce_spark.streaming.logtable import (
         compact,
         snapshot,
@@ -301,22 +240,13 @@ def stream_upsert_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = _scratch(spark, "upsert_log", sf_dir)
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = os.path.join(root, "src")
-    os.makedirs(stage, exist_ok=True)
-    for i in range(2):
-        os.symlink(src, os.path.join(stage, f"copy{i}.parquet"))
-    schema = _stream_source(spark, sf_dir, stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
     table_root = os.path.join(root, "table")
     _run(
         stream_upsert_events_logtable(
-            spark, sf_dir, table_root, stream=stream
+            spark,
+            sf_dir,
+            table_root,
+            stream=_events_stream(spark, sf_dir, copies=2),
         ),
         None,
         os.path.join(root, "ckpt"),
@@ -477,15 +407,15 @@ def logtable_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.where(F.col("n_events") > 0).orderBy("event_type")
 
 
-def _stage_day2_batches(root: str, day2: DataFrame, mod: int) -> str:
-    """Stage the day-2 fifth as three single-file micro-batches under
-    ``root/src`` (concurrent staging + mtime pinning via
-    ``_stage_single_file_batches``). Disjoint-key upserts make the final
-    snapshot order-independent, but the strictly increasing mtimes keep
-    the batch_id ↔ content mapping guaranteed rather than
-    mtime-incidental."""
-    return _stage_single_file_batches(
-        root,
+def _day2_feed(day2: DataFrame, mod: int) -> DataFrame:
+    """The day-2 fifth as an ordered three-micro-batch stream
+    (``ordered_feed``). Disjoint-key upserts make the final snapshot
+    order-independent, but the pinned mtimes keep the batch_id ↔ content
+    mapping guaranteed rather than mtime-incidental."""
+    from hdfs_mapreduce_spark.streaming.events import ordered_feed
+
+    return ordered_feed(
+        day2.sparkSession,
         [
             day2.select("vec_id", "embedding").filter(
                 ((F.col("vec_id") / mod).cast("long") % 3) == i
@@ -539,8 +469,6 @@ def stream_ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"_{next(_INVOCATION)}",
     )
 
-    stage = _stage_day2_batches(root, day2, APPEND_MOD)
-    qsrc = emb.select("vec_id", "embedding")
     table_root = os.path.join(root, "codes_table")
 
     def _sink(batch_df, batch_id):
@@ -552,14 +480,8 @@ def stream_ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             writer="ann_codes_stream",
         )
 
-    stream = (
-        spark.readStream.schema(qsrc.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
     _run(
-        stream.writeStream.foreachBatch(_sink),
+        _day2_feed(day2, APPEND_MOD).writeStream.foreachBatch(_sink),
         None,
         os.path.join(root, "ckpt"),
     )
@@ -615,19 +537,10 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
         day1, os.path.join(root, "idx"), nlist=IVF_NLIST
     )
 
-    stage = _stage_day2_batches(root, day2, APPEND_MOD)
-    qsrc = emb.select("vec_id", "embedding")
     table_root = os.path.join(root, "codes_table")
     sink = fenced_codes_sink(index, table_root)
-
-    stream = (
-        spark.readStream.schema(qsrc.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
     _run(
-        stream.writeStream.foreachBatch(sink),
+        _day2_feed(day2, APPEND_MOD).writeStream.foreachBatch(sink),
         None,
         os.path.join(root, "ckpt"),
     )
@@ -691,6 +604,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches idempotent (pytest proves the replay). The declared
     relation is the terminal snapshot; the oracle computes the final
     state closed-form from the residue classes."""
+    from hdfs_mapreduce_spark.streaming.events import ordered_feed
     from hdfs_mapreduce_spark.streaming.logtable import (
         merge_batch,
         snapshot,
@@ -719,7 +633,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
 
-    stage = _stage_single_file_batches(root, batches)
     table_root = os.path.join(root, "table")
 
     def _sink(batch_df, batch_id):
@@ -732,14 +645,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             writer="cdc_stream",
         )
 
-    stream = (
-        spark.readStream.schema(batches[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
     _run(
-        stream.writeStream.foreachBatch(_sink),
+        ordered_feed(spark, batches).writeStream.foreachBatch(_sink),
         None,
         os.path.join(root, "ckpt"),
     )
@@ -814,24 +721,14 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_session_window_stats,
     )
 
-    root = _scratch(spark, "session", sf_dir)
-    sink = os.path.join(root, "sink")
-    _run(
+    return _closed_region(
+        spark,
+        sf_dir,
+        "session",
         stream_session_window_stats(spark, sf_dir),
-        sink,
-        os.path.join(root, "ckpt"),
+        F.col("session_end") < F.col("max_ts") - F.expr("INTERVAL 1 HOUR"),
+        ("user_id", "session_start"),
     )
-    out = spark.read.parquet(sink).select(
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        "user_id",
-        "n_events",
-        "sum_value",
-    )
-    closed = out.crossJoin(F.broadcast(_max_ts(spark, sf_dir))).filter(
-        F.col("session_end") < F.col("max_ts") - F.expr("INTERVAL 1 HOUR")
-    )
-    return closed.drop("max_ts").orderBy("user_id", "session_start")
 
 
 def stream_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,7 +739,7 @@ def stream_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     [exact − N/(k+1), exact]. The oracle pins the exact count and literal
     TRUEs — engine-specific state contents never enter the hash."""
     from hdfs_mapreduce_spark.streaming.events import (
-        _state_versions,
+        read_upsert_state,
         stream_heavy_hitters,
     )
 
@@ -853,8 +750,7 @@ def stream_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         None,
         os.path.join(root, "ckpt"),
     )
-    versions = _state_versions(spark, state)
-    mg = spark.read.parquet(os.path.join(state, versions[-1][2]))
+    mg = read_upsert_state(spark, state)
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("item"))
@@ -895,26 +791,16 @@ def stream_dedup_admitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_accepted,
         stream_dedup_ingest,
     )
+    from hdfs_mapreduce_spark.streaming.events import ordered_feed
 
     root = _scratch(spark, "dedup_ingest", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _stage_single_file_batches(
-        root,
-        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-        name_of=lambda i: f"part-{i}.parquet",
-    )
-    stream_in = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream_in = ordered_feed(
+        spark, [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
     )
     state = os.path.join(root, "state")
-    q = stream_dedup_ingest(
-        stream_in, state, os.path.join(root, "ckpt")
-    ).trigger(availableNow=True).start()
-    if not q.awaitTermination(STREAM_TIMEOUT_SEC):
-        q.stop()
-        raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
+    ckpt = os.path.join(root, "ckpt")
+    _run(stream_dedup_ingest(stream_in, state, ckpt), None, ckpt)
     return (
         read_accepted(spark, state)
         .select("doc_id")
@@ -997,43 +883,32 @@ def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the in-sink cadence silently stops firing. The oracle is the SAME
     admitted closed form at mod 4 as stream_dedup_compacted: in-sink
     maintenance is observable in dir counts, never in decisions."""
-    from hdfs_mapreduce_spark.sources import fs as hfs
     from hdfs_mapreduce_spark.streaming.dedup import (
+        committed_batch_ids,
         read_accepted,
         stream_dedup_ingest,
     )
+    from hdfs_mapreduce_spark.streaming.events import ordered_feed
 
     root = _scratch(spark, "dedup_maintained", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _stage_single_file_batches(
-        root,
-        [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)],
-        name_of=lambda i: f"part-{i}.parquet",
-    )
-    stream_in = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream_in = ordered_feed(
+        spark, [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
     )
     state = os.path.join(root, "state")
-    q = stream_dedup_ingest(
-        stream_in, state, os.path.join(root, "ckpt"),
-        compact_every=2, compact_keep_last=1,
-    ).trigger(availableNow=True).start()
-    if not q.awaitTermination(STREAM_TIMEOUT_SEC):
-        q.stop()
-        raise TimeoutError(f"stream did not finish in {STREAM_TIMEOUT_SEC}s")
-    committed = [
-        d
-        for d in hfs.glob_parent_names(
-            spark, os.path.join(state, "accepted"), "batch_id=*", "_SUCCESS"
-        )
-        if d.startswith("batch_id=")
-    ]
+    ckpt = os.path.join(root, "ckpt")
+    _run(
+        stream_dedup_ingest(
+            stream_in, state, ckpt, compact_every=2, compact_keep_last=1
+        ),
+        None,
+        ckpt,
+    )
+    committed = committed_batch_ids(spark, os.path.join(state, "accepted"))
     if len(committed) != 2:
         raise RuntimeError(
             f"expected 2 committed accepted dirs after in-sink maintenance "
-            f"(merged 0-2 + retained tail 3), found {sorted(committed)} — "
+            f"(merged 0-2 + retained tail 3), found batch ids {committed} — "
             "the compact_every cadence did not fire"
         )
     return read_accepted(spark, state).select("doc_id").orderBy("doc_id")

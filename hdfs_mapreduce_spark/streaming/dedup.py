@@ -90,39 +90,42 @@ def _write_shape_meta(
     )
 
 
+def committed_batch_ids(spark: SparkSession, path: str) -> list[int]:
+    """Ascending ids of the COMMITTED ``path/batch_id=*`` dirs (Spark
+    writes _SUCCESS last): a crash mid-write leaves a marker-less partial
+    dir that must stay invisible until its batch replays and overwrites
+    it — same discipline as the upsert sink's version listing
+    (streaming/events.py). ONE globStatus RPC finds every committed dir
+    (round 11: the former listing + one exists per dir paid one round
+    trip per batch of stream age — per HTTP call on an object store).
+    Goes through the Hadoop FS API (sources/fs.py), so the state root may
+    be any URI the cluster's Hadoop conf resolves — hdfs://, s3a://,
+    file:///, or a bare local path."""
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in hfs.glob_parent_names(spark, path, "batch_id=*", "_SUCCESS")
+        if d.startswith("batch_id=")
+    )
+
+
 def _read_batch_dirs(
     spark: SparkSession, path: str, below: int | None = None
 ) -> DataFrame | None:
-    """Union of ``path/batch_id=*`` parquet dirs (hive-partition read),
-    optionally restricted to batch ids strictly below ``below`` (the
-    replay-safety cut). None when no state exists yet. Listing and the
-    marker probes go through the Hadoop FS API (sources/fs.py), so the
-    state root may be any URI the cluster's Hadoop conf resolves —
-    hdfs://, s3a://, file:///, or a bare local path."""
-    # only COMMITTED batch dirs (Spark writes _SUCCESS last): a crash
-    # mid-write leaves a marker-less partial dir that must stay invisible
-    # until its batch replays and overwrites it — same discipline as the
-    # upsert sink's version listing (streaming/events.py). ONE globStatus
-    # RPC finds every committed dir (round 11: the former listing + one
-    # exists per dir paid one round trip per batch of stream age — per
-    # HTTP call on an object store).
-    dirs = [
-        d
-        for d in hfs.glob_parent_names(
-            spark, path, "batch_id=*", "_SUCCESS"
-        )
-        if d.startswith("batch_id=")
+    """Union of the committed ``path/batch_id=*`` parquet dirs
+    (hive-partition read), optionally restricted to batch ids strictly
+    below ``below`` (the replay-safety cut). None when no state exists
+    yet."""
+    ids = [
+        i for i in committed_batch_ids(spark, path) if below is None or i < below
     ]
-    if below is not None:
-        dirs = [d for d in dirs if int(d.split("=", 1)[1]) < below]
-    if not dirs:
+    if not ids:
         return None
     # read paths go through Hadoop globbing too, so the literal state
     # root is escaped (basePath stays literal — it is a prefix, not a
     # pattern); state dirs named with { } [ ] * ? read correctly
     esc = hfs.glob_escape(path)
     return spark.read.option("basePath", path).parquet(
-        *[hfs.join(esc, d) for d in sorted(dirs)]
+        *[hfs.join(esc, f"batch_id={i}") for i in ids]
     )
 
 
@@ -575,15 +578,6 @@ def compact_state(
     meta_path = hfs.join(state_dir, _COMPACT_META)
     tmps = {k: hfs.join(state_dir, v) for k, v in _COMPACT_TMP.items()}
 
-    def committed_ids(sub: str) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in hfs.glob_parent_names(
-                spark, hfs.join(state_dir, sub), "batch_id=*", "_SUCCESS"
-            )
-            if d.startswith("batch_id=")
-        )
-
     # ---- recovery from an interrupted previous attempt ----
     # Two-phase meta record: "PREP <ids>" while the merged trees build
     # (live trees untouched — rollback = drop tmps), flipped to
@@ -605,7 +599,7 @@ def compact_state(
         for p in tmps.values():
             hfs.delete(spark, p)
 
-    ids = committed_ids("accepted")
+    ids = committed_batch_ids(spark, hfs.join(state_dir, "accepted"))
     compact = ids[: max(len(ids) - keep_last, 0)]
     if max_batches_per_run is not None and len(compact) > max_batches_per_run:
         # Size-tiered selection (r11 verdict "What's missing" #4): the
@@ -640,13 +634,14 @@ def compact_state(
     # ---- build both merged trees beside the live ones ----
     for sub, tmp in tmps.items():
         src_root = hfs.join(state_dir, sub)
+        committed = set(committed_batch_ids(spark, src_root))
         dirs = [
-            hfs.join(src_root, f"batch_id={i}")
+            hfs.join(hfs.glob_escape(src_root), f"batch_id={i}")
             for i in compact
-            if hfs.exists(spark, hfs.join(src_root, f"batch_id={i}", "_SUCCESS"))
+            if i in committed
         ]
         if dirs:
-            merged = spark.read.parquet(*[hfs.glob_escape(d) for d in dirs])
+            merged = spark.read.parquet(*dirs)
         else:
             # a resketch drops empty-batch sketch dirs, so the sketch
             # side of the compact set can be empty: write a 0-row tree

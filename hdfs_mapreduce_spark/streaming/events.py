@@ -16,11 +16,19 @@ state eviction). The test proves the two produce identical session ids.
 
 from __future__ import annotations
 
+import glob
+import itertools
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 from pyspark.sql.window import Window
 
 from hdfs_mapreduce_spark.sources import fs as hfs
@@ -65,52 +73,98 @@ def windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _windowed_agg(events).orderBy("window_start", "event_type")
 
 
-def _stream_source(spark: SparkSession, sf_dir: str, src: str) -> DataFrame:
-    """readStream over a directory of events parquet files with the batch
-    loader's exact timestamp semantics. Mirrors ``load_table``'s unit
-    detection: TIMESTAMP(NANOS) files (which Spark cannot decode natively)
-    are stream-read as nanosecond longs and converted with the same exact
-    DIV-1000 truncation; micro/milli files stream with the batch schema."""
-    from pyspark.sql.types import LongType, StructField, StructType
+def _checkpointed(writer, checkpoint_dir: str | None):
+    """``writer`` with ``checkpoint_dir`` as its checkpoint location, when
+    one is given (the caller may set it later, as the declared queries'
+    drain does)."""
+    if checkpoint_dir:
+        return writer.option("checkpointLocation", checkpoint_dir)
+    return writer
 
-    from pyspark.sql.types import TimestampNTZType
 
-    batch_df = load_table(spark, sf_dir, "events")
-    ns_cols = _nanos_timestamp_cols(os.path.join(sf_dir, "events.parquet"))
-    if not ns_cols:
-        stream = (
-            spark.readStream.schema(batch_df.schema).format("parquet").load(src)
-        )
-        # Watermarks demand TIMESTAMP (LTZ); micros-without-tz parquet reads
-        # as NTZ, so promote. The session zone is UTC (session.py), making
-        # the promoted values identical to the batch twin's NTZ wall times.
-        for f in batch_df.schema.fields:
-            if isinstance(f.dataType, TimestampNTZType):
-                stream = stream.withColumn(f.name, F.col(f.name).cast("timestamp"))
-        return stream
-    raw_schema = StructType(
-        [
-            StructField(f.name, LongType(), f.nullable) if f.name in ns_cols else f
-            for f in batch_df.schema.fields
-        ]
+_FEEDS = itertools.count(1)
+
+
+def ordered_feed(
+    spark: SparkSession,
+    parts: list[DataFrame | str],
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Stage ``parts`` as one file each under a fresh session-scratch dir
+    and return the ``maxFilesPerTrigger=1`` readStream over them, so part
+    ``i`` is micro-batch ``i``. A DataFrame part is written as ONE parquet
+    file; a str part is an existing parquet file, linked rather than
+    rewritten (no write job). FileStreamSource orders files by mtime, so
+    written parts get strictly increasing fixed mtimes, stamped after the
+    move so write completion order cannot reorder the batches; a link
+    keeps its source's mtime, so a feed of links is ordered only when the
+    linked files are interchangeable (copies of one file). The writes are
+    independent Spark jobs, submitted concurrently on the shared bounded
+    pool (never per-use threads: py4j pinned mode leaks one parked JVM
+    thread per exited Python thread — driverpool.py). ``schema`` defaults
+    to the first part's. Driver-local os calls on fixture staging only;
+    state and table dirs go through the Hadoop FS API."""
+    from hdfs_mapreduce_spark.functions.driverpool import run_concurrently
+    from hdfs_mapreduce_spark.operators.materialize import session_scratch_dir
+
+    stage = os.path.join(session_scratch_dir(spark), f"feed_{next(_FEEDS)}")
+    os.makedirs(stage)
+
+    def _write(i: int, part: DataFrame, dst: str) -> None:
+        tmp = os.path.join(stage, f"_tmp{i}")  # "_": invisible to the source
+        part.coalesce(1).write.parquet(tmp)
+        shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    writes = []
+    for i, part in enumerate(parts):
+        dst = os.path.join(stage, f"p{i}.parquet")
+        if isinstance(part, str):
+            os.symlink(os.path.abspath(part), dst)
+        else:
+            writes.append(lambda i=i, part=part, dst=dst: _write(i, part, dst))
+    if writes:
+        run_concurrently(writes)
+    return (
+        spark.readStream.schema(schema or parts[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = spark.readStream.schema(raw_schema).format("parquet").load(src)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return stream
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file streaming source needs a *directory*; the test data is one
-    # parquet file per table in a shared dir, so stage a symlink dir (a real
-    # deployment points at a table directory and skips this).
+def _events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
+    """readStream over ``copies`` links of the events file, one micro-batch
+    each (``ordered_feed``), with the batch loader's exact timestamp
+    semantics. Mirrors ``load_table``'s unit detection: TIMESTAMP(NANOS)
+    files (which Spark cannot decode natively) are stream-read as
+    nanosecond longs and converted with the same exact DIV-1000
+    truncation; micro/milli files stream with the batch schema."""
     src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isfile(src):
-        stage = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(src, os.path.join(stage, "events.parquet"))
-        src = stage
-    return _stream_source(spark, sf_dir, src)
+    batch_schema = load_table(spark, sf_dir, "events").schema
+    ns_cols = _nanos_timestamp_cols(src)
+    schema = batch_schema
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        schema = StructType(
+            [
+                StructField(f.name, LongType(), f.nullable) if f.name in ns_cols else f
+                for f in batch_schema.fields
+            ]
+        )
+    stream = ordered_feed(spark, [src] * copies, schema)
+    for f in batch_schema.fields:
+        if f.name in ns_cols:
+            stream = stream.withColumn(
+                f.name, F.timestamp_micros(F.expr(f"`{f.name}` DIV 1000"))
+            )
+        elif isinstance(f.dataType, TimestampNTZType):
+            # Watermarks demand TIMESTAMP (LTZ); micros-without-tz parquet
+            # reads as NTZ, so promote. The session zone is UTC
+            # (session.py), making the promoted values identical to the
+            # batch twin's NTZ wall times.
+            stream = stream.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    return stream
 
 
 def stream_windowed_event_stats(
@@ -126,10 +180,7 @@ def stream_windowed_event_stats(
     """
     stream = _events_stream(spark, sf_dir)
     agg = _windowed_agg(stream.withWatermark("ts", "1 hour"))
-    writer = agg.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(agg.writeStream.outputMode("append"), checkpoint_dir)
 
 
 # Sliding-window layout: 30-minute windows every 10 minutes — each event
@@ -179,10 +230,7 @@ def stream_sliding_event_stats(
     tumbling form."""
     stream = _events_stream(spark, sf_dir)
     agg = _sliding_agg(stream.withWatermark("ts", "1 hour"))
-    writer = agg.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(agg.writeStream.outputMode("append"), checkpoint_dir)
 
 
 def sessionize(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
@@ -280,10 +328,7 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = out.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(out.writeStream.outputMode("append"), checkpoint_dir)
 
 
 def stream_dedup_events(
@@ -299,25 +344,17 @@ def stream_dedup_events(
     exactly-once repair stage every event pipeline needs in front of a
     training-data sink.
 
-    ``extra_copies`` re-stages the source directory N extra times (tests use
-    it to prove duplicates actually collapse). Returns the DataStreamWriter.
+    ``extra_copies`` feeds the events file N extra times, one micro-batch
+    per copy (tests use it to prove duplicates actually collapse). Returns
+    the DataStreamWriter.
     """
-    stream = _events_stream(spark, sf_dir)
-    if extra_copies:
-        src = os.path.join(sf_dir, "events.parquet")
-        stage = tempfile.mkdtemp(prefix="events_dup_")
-        for i in range(extra_copies + 1):
-            os.symlink(src, os.path.join(stage, f"copy{i}.parquet"))
-        stream = _stream_source(spark, sf_dir, stage)
+    stream = _events_stream(spark, sf_dir, copies=extra_copies + 1)
     deduped = (
         stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "ts", "event_type", "value")
     )
-    writer = deduped.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(deduped.writeStream.outputMode("append"), checkpoint_dir)
 
 
 def _state_versions(
@@ -399,10 +436,7 @@ def stream_upsert_events(
     # micro-batches so the anti-join merge path actually runs).
     if stream is None:
         stream = _events_stream(spark, sf_dir)
-    writer = stream.writeStream.foreachBatch(merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
 
 
 def read_upsert_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -447,10 +481,7 @@ def stream_cm_sketch(
         )
 
     stream = _events_stream(spark, sf_dir)
-    writer = stream.writeStream.foreachBatch(merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
 
 
 def _merge_batch_into_versioned_state(
@@ -558,10 +589,7 @@ def stream_heavy_hitters(
         )
 
     stream = _events_stream(spark, sf_dir)
-    writer = stream.writeStream.foreachBatch(merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
 
 
 # --- bucketed upsert state (the 100 TB swap, wired) -------------------------------
@@ -628,10 +656,7 @@ def stream_upsert_events_bucketed(
         )
 
     stream = _events_stream(spark, sf_dir)
-    writer = stream.writeStream.foreachBatch(merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
 
 
 def read_bucketed_upsert_state(
@@ -707,10 +732,7 @@ def stream_click_attribution(
         clicks.withWatermark("click_ts", "1 hour"),
         purchases.withWatermark("purchase_ts", "1 hour"),
     )
-    writer = joined.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(joined.writeStream.outputMode("append"), checkpoint_dir)
 
 
 def _session_window_agg(events: DataFrame) -> DataFrame:
@@ -763,10 +785,7 @@ def stream_session_window_stats(
     Returns the DataStreamWriter (caller picks sink + trigger)."""
     stream = _events_stream(spark, sf_dir)
     agg = _session_window_agg(stream.withWatermark("ts", "1 hour"))
-    writer = agg.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(agg.writeStream.outputMode("append"), checkpoint_dir)
 
 
 def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,7 +857,4 @@ def stream_enriched_event_stats(
     the window state, exactly as in stream_windowed_event_stats."""
     stream = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = _enriched_agg(stream, _nation_dims(spark, sf_dir))
-    writer = agg.writeStream.outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(agg.writeStream.outputMode("append"), checkpoint_dir)

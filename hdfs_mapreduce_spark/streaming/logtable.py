@@ -535,11 +535,23 @@ def snapshot(
     version since the latest compaction, minus tombstoned keys.
     ``as_of`` reads the table AS OF that commit version (time travel —
     only commits ≤ as_of participate, including the compaction floor
-    rule; reading below a vacuumed horizon fails at scan time, the same
-    contract the real formats have). Versions union by column NAME with
+    rule; reading below a vacuumed horizon fails at read time, the same
+    contract the real formats have). Versions merge by column NAME with
     missing columns null-filled, so columns added by later writers
     evolve the schema instead of breaking old versions. Returns None for
-    an empty table (no schema to synthesize a relation from)."""
+    an empty table (no schema to synthesize a relation from).
+
+    All live versions are read by ONE multi-path scan instead of one
+    read per version unioned together, so plan build stays a single
+    schema merge as the version count grows: each row's version comes
+    from its file's parent dir name through a literal dir → version map.
+    The root is glob-escaped because Hadoop globs read paths, so roots
+    containing ``{ } [ ] * ?`` read correctly. ``mergeSchema`` orders
+    columns like ``unionByName(allowMissingColumns=True)`` over the
+    versions in order: the oldest version's columns first, later
+    additions after. A column keeps its type across versions: parquet
+    schema merging rejects a changed type (int in one version, long in
+    another) where a per-version union would have widened it."""
     entries = _log_versions(spark, root)
     if as_of is not None:
         entries = [e for e in entries if e[0] <= as_of]
@@ -547,16 +559,16 @@ def snapshot(
         return None
     compactions = [e[0] for e in entries if e[2] == "compact"]
     floor = max(compactions) if compactions else 0
-    live = [(e[0], e[3]) for e in entries if e[0] >= floor]
-    parts = [
-        spark.read.parquet(hfs.join(root, "data", data)).withColumn(
-            "_v", F.lit(v)
-        )
-        for v, data in live
-    ]
-    allrows = parts[0]
-    for p in parts[1:]:
-        allrows = allrows.unionByName(p, allowMissingColumns=True)
+    live = {e[3]: e[0] for e in entries if e[0] >= floor}
+    data = hfs.join(hfs.glob_escape(root), "data")
+    allrows = spark.read.option("mergeSchema", "true").parquet(
+        *[hfs.join(data, d) for d in sorted(live, key=live.get)]
+    )
+    version_of = F.create_map(
+        *[F.lit(x) for d, v in live.items() for x in (d, v)]
+    )
+    parent = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
+    allrows = allrows.withColumn("_v", version_of[parent])
     w = Window.partitionBy(key_col).orderBy(F.col("_v").desc())
     out = (
         allrows.withColumn("_rn", F.row_number().over(w))
@@ -713,7 +725,10 @@ def stream_upsert_events_logtable(
     compaction itself is invisible to replay detection (``_is_replay``
     skips compact entries), so the one-commit-per-batch-id invariant
     holds across interleaved maintenance."""
-    from hdfs_mapreduce_spark.streaming.events import _events_stream
+    from hdfs_mapreduce_spark.streaming.events import (
+        _checkpointed,
+        _events_stream,
+    )
 
     if stream is None:
         stream = _events_stream(spark, sf_dir)
@@ -726,10 +741,7 @@ def stream_upsert_events_logtable(
         writer="events_upsert_stream",
         compact_every=compact_every,
     )
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _checkpointed(stream.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def make_upsert_sink(

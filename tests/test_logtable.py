@@ -193,6 +193,32 @@ def test_schema_evolution_null_fills_old_versions(spark, tmp_path):
     assert rows == {1: ("a", None), 2: ("b", 7)}
 
 
+def test_snapshot_glob_root_tombstone_first_and_widening(spark, tmp_path):
+    """A root named with glob metacharacters reads literally; a
+    tombstone-only first version and a later column-adding upsert merge
+    by name, with columns in version order (oldest first)."""
+    from hdfs_mapreduce_spark.streaming.logtable import delete_batch
+
+    keys = lambda ks: spark.createDataFrame([(k,) for k in ks], "k long")
+    root = str(tmp_path / "we[i]rd{x}")
+    assert delete_batch(keys([1, 4]), 0, root, "k")
+    assert upsert_batch(_batch(spark, [(1, "a"), (2, "b")]), 1, root, "k")
+    wide = spark.createDataFrame(
+        [(2, "b2", 7), (3, "c", 8)], "k long, v string, extra long"
+    )
+    assert upsert_batch(wide, 2, root, "k")
+    assert delete_batch(keys([3]), 3, root, "k")
+    old = snapshot(spark, root, "k", as_of=1)
+    assert old.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in old.collect()) == [(1, "a"), (2, "b")]
+    snap = snapshot(spark, root, "k")
+    assert snap.columns == ["k", "v", "extra"]
+    assert sorted(tuple(r) for r in snap.collect()) == [
+        (1, "a", None),
+        (2, "b2", 7),
+    ]
+
+
 def test_table_changes_insert_update_delete_and_netting(spark, tmp_path):
     """CDF semantics: labeled insert/update/delete between two versions;
     unchanged keys and insert-then-delete churn net out entirely."""

@@ -5,6 +5,8 @@ the driver's correctness surface (r4 verdict item 6)."""
 
 from __future__ import annotations
 
+import pytest
+
 from hdfs_mapreduce_spark.plans import ORACLE_SQL, RAW_QUERIES
 from tests.conftest import SF_CORRECTNESS
 from tests.oracle import assert_matches_oracle
@@ -23,10 +25,10 @@ STREAM_QUERIES = [
 ]
 
 
-def test_streaming_declared_queries_match_oracle(spark, ddb):
-    for name in STREAM_QUERIES:
-        df = RAW_QUERIES[name](spark, SF_CORRECTNESS)
-        assert_matches_oracle(df, ddb, ORACLE_SQL[name], name)
+@pytest.mark.parametrize("name", STREAM_QUERIES)
+def test_streaming_declared_queries_match_oracle(spark, ddb, name):
+    df = RAW_QUERIES[name](spark, SF_CORRECTNESS)
+    assert_matches_oracle(df, ddb, ORACLE_SQL[name], name)
 
 
 def test_upsert_snapshot_is_one_row_per_key(spark):
