@@ -27,6 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from hdfs_mapreduce_spark.sources.catalog import write_table
+from hdfs_mapreduce_spark.sources.fs import fs_and_path
 
 _CLEANUP_REGISTERED: set[str] = set()
 
@@ -48,10 +49,9 @@ def session_scratch_dir(spark: SparkSession) -> str:
 
 
 def _remove_path(spark: SparkSession, path_str: str) -> None:
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
+    fs, path = fs_and_path(spark, path_str)
+    if fs.exists(path):
+        fs.delete(path, True)
 
 
 def purge_scratch(spark: SparkSession) -> None:
@@ -79,7 +79,7 @@ def materialize(df: DataFrame, name: str, base: str | None = None) -> DataFrame:
     root = base or session_scratch_dir(spark)
     final = os.path.join(root, name)
     tmp = os.path.join(root, f"_mat_tmp_{name}")
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    jpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     fs = jpath(root).getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath(tmp)):  # leftover from a crashed materialize
         fs.delete(jpath(tmp), True)

@@ -89,8 +89,6 @@ DRIVER_WINDOW = 50
 # stream_cdc_apply and ann_probe_rebuilt r13.
 REVERIFY = {
     "dedup_simhash_pairs": 5,
-    "dedup_crosscheck": 5,
-    "dedup_semantic": 6,
     # r6 (second half): oracle text gained MATERIALIZED CTE hints (the
     # unrolled logreg oracle re-inlined exponentially; tok/scored CTEs
     # in the tfidf/lm/vocab oracles were touched by the same pass) —
@@ -110,11 +108,9 @@ REVERIFY = {
     #     persisted-index lifecycle also uses; identical arithmetic by
     #     construction, but the executed machinery moved, so the driver
     #     should re-certify it.
-    "ann_ivfpq": 7,
     # r7 (review pass): ann_topk_pq's LUTs are now sized by the FITTED
     #     codebook width instead of the requested ksub (small-corpus
     #     rule; identical at fixture scale, new executed line).
-    "ann_pq": 7,
     # r7: the logtable commit protocol grew the CommitBackend seam,
     #     compact-aware replay detection, and the checkpoint
     #     fallback-to-older-readable (streaming/logtable.py) — same
@@ -177,7 +173,6 @@ REVERIFY = {
     #     (operators/ann_index.py). Same relations everywhere
     #     (hash-re-verified at sf0.01 in-round), but the driver should
     #     re-certify the new machinery.
-    "ann_probe_vacuumed": 13,
     # r14: the ad-hoc per-phase wall-clock timers were removed from
     #     logtable_cdf, logtable_ivm, stream_ann_ingest_topk,
     #     stream_ann_ingest_fenced, dq_checks_incremental and the four
@@ -202,10 +197,7 @@ REVERIFY = {
     "stream_session_stats": 15,
     "stream_upsert_snapshot": 15,
     "stream_upsert_log_snapshot": 15,
-    "stream_heavy_hitters_audit": 15,
     "stream_cdc_apply": 15,
-    "stream_ann_ingest_topk": 15,
-    "stream_ann_ingest_fenced": 15,
     "stream_dedup_admitted": 15,
     "stream_dedup_resketch": 15,
     "stream_dedup_compacted": 15,
@@ -213,8 +205,42 @@ REVERIFY = {
     "logtable_cdf": 15,
     "logtable_ivm": 15,
     "dq_checks_incremental": 15,
-    "ann_probe_deleted": 15,
-    "ann_probe_rebuilt": 15,
+    # r16: Python tasks run under the engine's worker daemon
+    #     (hdfs_mapreduce_spark/pydaemon.py: pyspark's daemon with a
+    #     stat-guarded zipimporter.invalidate_caches). Same relations;
+    #     supersedes the earlier entries of these keys (their comments
+    #     above stay as history). The queries whose executed plan has a
+    #     Python-boundary node (tools/plans.py py > 0),
+    "ann_probe_deleted": 16,
+    "ann_probe_rebuilt": 16,
+    "plugin_binary_wordcount": 16,
+    "embedding_covariance": 16,
+    "dedup_embedding_pairs": 16,
+    "dedup_semantic": 16,
+    "embedding_kmeans": 16,
+    "multimodal_phash": 16,
+    "multimodal_external": 16,
+    "ann_pq": 16,
+    "ann_ivfpq": 16,
+    "ann_probe_persisted": 16,
+    "ann_probe_appended": 16,
+    "multimodal_frames": 16,
+    "pipeline_pack": 16,
+    "embedding_pq_codes": 16,
+    "ann_ivfpq_recall": 16,
+    "ann_ivfpq_residual": 16,
+    "dedup_pq_buckets": 16,
+    "multimodal_tiles": 16,
+    "multimodal_audio": 16,
+    "ann_lsh": 16,
+    "ann_ivf": 16,
+    "ann_probe_vacuumed": 16,
+    "dedup_crosscheck": 16,
+    "dedup_crosscheck_bucketed": 16,
+    #     and the streams whose pipelines run Python tasks.
+    "stream_ann_ingest_topk": 16,
+    "stream_ann_ingest_fenced": 16,
+    "stream_heavy_hitters_audit": 16,
 }
 
 

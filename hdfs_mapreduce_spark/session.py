@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Defaults sized for the local[32] test harness; on a real cluster the same
 # settings remain sane because AQE re-plans partition counts at runtime.
 _DEFAULTS = {
@@ -51,6 +53,16 @@ _DEFAULTS = {
     # exec-per-record plugin protocol becomes per-batch columnar transfer).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # --- Python worker daemon: pyspark's own, behind a stat guard on
+    # zipimporter.invalidate_caches (see pydaemon.py). Every Python task calls
+    # importlib.invalidate_caches(), which on Python 3.11 re-reads pyspark.zip's
+    # 1,328-entry directory once per zipimporter (~16 per worker). Measured at
+    # local[4] on a 4-core host, worker CPU per identity mapInPandas task went
+    # from 140-210 ms to 26-40 ms, per RDD map task from 110-205 ms to 10-20 ms.
+    # The workers must import this package: get_spark adds its parent
+    # directory to spark.executorEnv.PYTHONPATH; on a cluster ship it with
+    # --py-files, which module-level UDFs already require.
+    "spark.python.daemon.module": "hdfs_mapreduce_spark.pydaemon",
     # --- Broadcast joins for small dims (region/nation/supplier at any SF).
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # --- Timestamps: match the parquet test data (microsecond, no TZ games).
@@ -80,6 +92,11 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    # the daemon module and module-level UDFs import from the package, also
+    # when the session starts outside the repo (python -m puts only the cwd
+    # on the workers' path)
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), _PACKAGE_PARENT) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -148,7 +148,7 @@ print("WORKER-OK", writer, ",".join(map(str, backend.attempts)))
 
 
 def test_four_contended_writers_land_every_batch_without_livelock(
-    spark, tmp_path
+    spark, tmp_path, record_property
 ):
     """Liveness under real contention: four OS writer processes (four
     JVMs) racing 24 interleaved commits through the rename backend.
@@ -219,8 +219,14 @@ def test_four_contended_writers_land_every_batch_without_livelock(
     # actually sized for.
     all_attempts = [a for w in writers for a in attempts_by_writer[w]]
     assert len(all_attempts) == 24
+    # report the observed mean so drift shows in full-tier runs, not only
+    # when it crosses the bound
+    mean_attempts = sum(all_attempts) / len(all_attempts)
+    record_property("mean_attempts", round(mean_attempts, 3))
+    print(f"contended writers: mean attempts {mean_attempts:.3f}, "
+          f"max {max(all_attempts)}")
     assert max(all_attempts) <= 10, all_attempts
-    assert sum(all_attempts) / len(all_attempts) < 5.0, all_attempts
+    assert mean_attempts < 5.0, all_attempts
     # terminal snapshot carries every writer's newest rows
     snap = {r["k"]: r["v"] for r in snapshot(spark, root, "k").collect()}
     assert snap == {
