@@ -21,12 +21,14 @@ raw embeddings again:
                                        nprobe/nlist of the files
 
 Exactness contract: ``ann_probe_ivfpq(build_ivfpq_index(corpus), q)``
-≡ ``ann_topk_ivfpq(corpus, q)``. The builder fits from the same seeded
-model sample and the same float64 assignment kernels
-(similarity.ivfpq_model_rows / centroid_matrix / make_cos_to_cents /
-_pq_sub_dists), centroids and codewords round-trip losslessly through
-parquet doubles, codes through int64, and the probe's ADC fold is
-s-ascending exactly like the fused kernel — so the declared
+≡ ``ann_topk_ivfpq(corpus, q)``. Both faces run the same kernel code
+from operators/similarity.py rather than copies of it: the builder fits
+with ``_ivfpq_model`` (one ``_model_sample`` collect) and encodes with
+``_ivf_codes``; the probe plans each query's cells and tables with
+``_adc_probes`` and scores the codes with ``_adc_scores`` and
+``_adc_topk`` — the fused kernel's own scorer, s-ascending fold and
+top-k tail. Centroids and codewords round-trip losslessly through
+parquet doubles and codes through int64, so the declared
 ``ann_probe_persisted`` query hash-matches the ``ann_ivfpq`` oracle,
 and the equivalence pytest probes the same index twice without
 re-fitting (VERDICT r6 item 4).
@@ -47,24 +49,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from hdfs_mapreduce_spark.operators.materialize import materialize
 from hdfs_mapreduce_spark.operators.similarity import (
     PQ_KSUB,
     PQ_M,
-    _codewords_from_rows,
-    _pq_sub_dists,
-    centroid_matrix,
-    ivfpq_model_rows,
-    make_cos_to_cents,
+    _adc_probes,
+    _adc_queries,
+    _adc_topk,
+    _ivf_codes,
+    _ivfpq_model,
+    _no_neighbors,
 )
 
 
-def _encoder(cos_to_cents, cbs, m_sub: int, dsub: int, id_col: str, vec_col: str):
-    """The frozen-model encode kernel (cell assignment + PQ codes),
-    shared by build and append so day-2 vectors get byte-identical
-    treatment to day-1's."""
+def _encode(model, embeddings: DataFrame, id_col: str, vec_col: str):
+    """(id, cell, codes) of every row under a FROZEN model: the one
+    map-only encode kernel build, append and streaming encode share, so
+    day-2 vectors get byte-identical treatment to day-1's."""
     import numpy as np
     import pandas as pd
 
@@ -73,12 +75,7 @@ def _encoder(cos_to_cents, cbs, m_sub: int, dsub: int, id_col: str, vec_col: str
             if not len(pdf):
                 continue
             mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            cells = np.argmax(cos_to_cents(mat), axis=1)
-            codes = np.empty((mat.shape[0], m_sub), dtype=np.int64)
-            for s in range(m_sub):
-                codes[:, s] = _pq_sub_dists(
-                    mat[:, s * dsub : (s + 1) * dsub], cbs[s]
-                ).argmin(axis=0)
+            cells, codes = _ivf_codes(mat, model)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].values,
@@ -87,7 +84,9 @@ def _encoder(cos_to_cents, cbs, m_sub: int, dsub: int, id_col: str, vec_col: str
                 }
             )
 
-    return encode
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        encode, "id long, cell long, codes array<long>"
+    )
 
 
 def build_ivfpq_index(
@@ -112,13 +111,8 @@ def build_ivfpq_index(
 
     spark = embeddings.sparkSession
     root = base or session_scratch_dir(spark)
-    cent_rows = ivfpq_model_rows(embeddings, nlist, ksub, id_col, vec_col)
-    if not cent_rows:
-        raise ValueError("cannot build an IVF-PQ index over an empty corpus")
-    cmat, cnorm = centroid_matrix(cent_rows, nlist)
-    cos_to_cents = make_cos_to_cents(cmat, cnorm)
-    cbs = _codewords_from_rows(cent_rows[:ksub], m_sub)
-    dsub = cbs.shape[2]
+    model = _ivfpq_model(embeddings, nlist, m_sub, ksub, id_col, vec_col)
+    cmat, cbs, _ = model
 
     centroids = materialize(
         spark.createDataFrame(
@@ -141,10 +135,7 @@ def build_ivfpq_index(
         base,
     )
 
-    encoded = embeddings.select(id_col, vec_col).mapInPandas(
-        _encoder(cos_to_cents, cbs, m_sub, dsub, id_col, vec_col),
-        "id long, cell long, codes array<long>",
-    )
+    encoded = _encode(model, embeddings, id_col, vec_col)
     # Cell-clustered files via hash-repartition on cell + an in-partition
     # sort, NOT a global ORDER BY: a global sort's range-exchange runs a
     # boundary-sampling job over its child first, which EXECUTES the
@@ -171,7 +162,7 @@ def build_ivfpq_index(
         # lossless-round-trip contract in the module docstring), so the
         # first probe/encode against a fresh build skips the two
         # model-table collect jobs it would otherwise pay.
-        "_model_kernels": (cos_to_cents, cbs, m_sub, dsub),
+        "_model_kernels": model,
         # ACTUAL model shapes, not the requested ones: a corpus smaller
         # than nlist/ksub yields fewer centroids/codewords (the fused
         # kernel sizes everything from the fitted tensors too), and a
@@ -181,7 +172,7 @@ def build_ivfpq_index(
             "nlist": len(cmat),
             "m_sub": m_sub,
             "ksub": int(cbs.shape[1]),
-            "dsub": dsub,
+            "dsub": int(cbs.shape[2]),
         },
         "paths": {
             "centroids": f"{root}/{name}_centroids",
@@ -336,22 +327,17 @@ def encode_with_model(
     m_sub·ksub rows — bounded at any corpus size); arithmetic is the
     build kernel's, so encodings are byte-identical to build-time
     ones."""
-    cos_to_cents, cbs, m_sub, dsub = _model_from_tables(index)
-    return new_embeddings.select(id_col, vec_col).mapInPandas(
-        _encoder(cos_to_cents, cbs, m_sub, dsub, id_col, vec_col),
-        "id long, cell long, codes array<long>",
-    )
+    return _encode(_model_from_tables(index), new_embeddings, id_col, vec_col)
 
 
 def _model_from_tables(index: dict):
     """Rebuild the driver-side model kernels from the index's parquet
     tables — the ONE place the reconstruction arithmetic lives, so
     probe, append, and streaming encode can never drift from each
-    other. The centroid matrix/norms go through the same
-    ``centroid_matrix`` helper the fused kernel's fit uses (its row
-    shape is (id, vec); the sorted (cell, vec) collect matches), and
-    the codeword tensor is sized by the meta's ACTUAL shapes so every
-    row is filled by the codewords table."""
+    other. Returns the ``(cmat, cbs, origin)`` model the build fitted
+    (similarity._ivfpq_model): centroids in cell order, the codeword
+    tensor sized by the meta's ACTUAL shapes so every row is filled by
+    the codewords table, and raw PQ's zero origin."""
     import numpy as np
 
     # The model tables are immutable for a handle's lifetime (appends and
@@ -366,14 +352,12 @@ def _model_from_tables(index: dict):
     if cached is not None:
         return cached
     meta = index["meta"]
-    m_sub, ksub, dsub = meta["m_sub"], meta["ksub"], meta["dsub"]
     crows = sorted(index["centroids"].collect(), key=lambda r: r["cell"])
-    cmat, cnorm = centroid_matrix(crows, len(crows))
-    cos_to_cents = make_cos_to_cents(cmat, cnorm)
-    cbs = np.empty((m_sub, ksub, dsub))
+    cmat = np.stack([np.asarray(r["vec"], dtype=np.float64) for r in crows])
+    cbs = np.empty((meta["m_sub"], meta["ksub"], meta["dsub"]))
     for r in index["codewords"].collect():
         cbs[r["subspace"], r["code"]] = np.asarray(r["vec"], dtype=np.float64)
-    index["_model_kernels"] = (cos_to_cents, cbs, m_sub, dsub)
+    index["_model_kernels"] = (cmat, cbs, np.zeros_like(cmat))
     return index["_model_kernels"]
 
 
@@ -394,102 +378,26 @@ def ann_probe_ivfpq(
 
     ``queries`` carries (id_col, vec_col) rows for the probe batch."""
     import numpy as np
-    import pandas as pd
 
-    cos_to_cents, cbs, m_sub, dsub = _model_from_tables(index)
-    ksub = cbs.shape[1]
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = [r[0] for r in qrows]
+    model = _model_from_tables(index)
+    qids, qmat = _adc_queries(queries, id_col, vec_col)
     if not qids:
-        return index["codes"].limit(0).select(
-            F.col("id").alias("query_id"),
-            F.col("id").alias("neighbor_id"),
-            F.lit(0).alias("rank"),
-            F.lit(0.0).alias("approx_dist"),
-        )
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    probe_sets = [
-        set(int(c) for c in row)
-        for row in np.argsort(-cos_to_cents(qmat), kind="stable", axis=1)[
-            :, :nprobe
-        ]
-    ]
-    luts = np.empty((len(qids), m_sub, ksub))
-    for s in range(m_sub):
-        luts[:, s, :] = _pq_sub_dists(
-            qmat[:, s * dsub : (s + 1) * dsub], cbs[s]
-        ).T
-    probed_cells = sorted(set().union(*probe_sets))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cells = pdf["cell"].values
-            ids = pdf["id"].values
-            codes = np.stack(pdf["codes"].values).astype(np.int64)
-            # Group scanned rows by cell ONCE per batch (one argsort),
-            # then each query gathers its probed cells' row slices by
-            # fancy indexing — no per-query × per-row Python membership
-            # test (the r7 verdict's one hot-path weak item).
-            order = np.argsort(cells, kind="stable")
-            sorted_cells = cells[order]
-            uniq, starts = np.unique(sorted_cells, return_index=True)
-            bounds = np.append(starts, len(sorted_cells))
-            cell_rows = {
-                int(c): order[bounds[i] : bounds[i + 1]]
-                for i, c in enumerate(uniq)
-            }
-            frames = []
-            for qi, qid in enumerate(qids):
-                slices = [
-                    cell_rows[c]
-                    for c in probe_sets[qi]
-                    if c in cell_rows
-                ]
-                if not slices:
-                    continue
-                rows = np.concatenate(slices)
-                rows = rows[ids[rows] != qid]
-                if not len(rows):
-                    continue
-                acc = np.zeros(len(rows))
-                kcodes = codes[rows]
-                for s in range(m_sub):  # s-ascending fold = fused kernel
-                    acc = acc + luts[qi, s, kcodes[:, s]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[rows],
-                            "approx_dist": acc,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    live = index["codes"].filter(
-        F.col("cell").isin([int(c) for c in probed_cells])
-    )
+        return _no_neighbors(queries, id_col)
+    probes = _adc_probes(qmat, model, nprobe)
+    probed_cells = sorted({c for cell_luts in probes for c, _ in cell_luts})
+    live = index["codes"].filter(F.col("cell").isin(probed_cells))
     tombstones = index.get("tombstones")
     if tombstones is not None:
         # Deletion-vector read-through: the anti-join runs AFTER the
         # cell filter so row-group pruning still bounds the scan; the
         # tombstone side is delete-sized, hence broadcast.
         live = live.join(F.broadcast(tombstones), "id", "left_anti")
-    scored = live.mapInPandas(
-        score, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_dist")
-        .orderBy("query_id", "rank")
-    )
+
+    def encoded(pdf):
+        codes = np.stack(pdf["codes"].values).astype(np.int64)
+        return pdf["id"].values, pdf["cell"].values, codes
+
+    return _adc_topk(live, encoded, qids, probes, k)
 
 
 # ---- managed index: generations, rebuild, atomic swap ----------------------

@@ -1,27 +1,38 @@
 """Embedding similarity search over array<float> columns.
 
-Three operators, all pure DataFrame expressions (zip_with/aggregate run
-JVM-side inside codegen — no Python in the hot path):
+Operator families:
 
-* ``ann_topk_bruteforce`` — exact top-k cosine neighbors for a small query
-  set: broadcast the queries, one pass over the corpus, per-query top-k via
-  window rank. The baseline every ANN variant is measured against. At scale
-  this is one broadcast + one scan: no shuffle of the corpus at all until
-  the final per-query top-k (tiny).
-* ``ann_topk_lsh`` — the scale path: random-hyperplane LSH signatures bucket
-  the corpus; each query only scans buckets matching its signature within
-  ``probes`` Hamming distance (multi-probe). Approximate; recall is tested
-  against the brute-force baseline.
-* ``cosine_pairs`` — all corpus pairs with cosine ≥ t (embedding near-dup).
-  Quadratic by definition; the LSH-bucketed variant prunes first at scale.
+* Exact baselines — ``ann_topk_bruteforce`` (broadcast queries × one
+  corpus scan → per-query window top-k, pure expressions; the reference
+  every ANN twin is recall-audited against) and ``cosine_pairs`` (all
+  pairs with cosine ≥ t, block-partitioned dgemm in ``applyInPandas``).
+* Candidate pruning by bucket — ``ann_topk_lsh`` (random-hyperplane
+  signatures, multi-probe Hamming buckets) and ``ann_topk_ivf`` (an
+  argmax-cosine coarse quantizer); both score candidates with the
+  exact-fold Arrow cosine ``cosine_fast``.
+* Product quantization — ``pq_encode``, ``ann_topk_pq``, the fused
+  IVF-PQ pair ``ann_topk_ivfpq`` / ``ann_topk_ivfpq_residual``, and the
+  persisted index in operators/ann_index.py. They share one kernel set:
+  ``_model_sample`` (the seeded sample every centroid and codebook is
+  fitted from), ``_cos_to_cents`` and ``_probe_cells`` (cell
+  assignment and probe order), ``_pq_luts`` and ``_pq_codes`` (ADC
+  tables and first-min encoding, the only callers of the exact-fold
+  ``_pq_sub_dists``), ``_adc_probes`` (each query's probed cells with
+  their tables), ``_adc_scores`` (the cell-grouped ADC scorer) and
+  ``_topk`` (the per-query ranking tail, shared with LSH and IVF).
+* Clustering — ``kmeans_assign``, ``kmeans_fit``, ``kmeans_fit_summary``
+  and SemDeDup's ``semantic_dedup``.
+* Text to vectors and diverse selection — ``hash_embed_cells`` /
+  ``hash_embed_vectors`` (feature hashing) and ``mmr_select``.
 
-Hyperplanes are generated from the shared h56 hash (functions/hashing.py) —
-`plane[p][d] = (h56(f"hp:{p}:{d}") % 2001 - 1000) / 1000` — so the DuckDB
-oracle can rebuild the identical planes symbolically, with no literal blobs.
-
-Float parity: both engines evaluate the same expression shape (sequential
-fold over the array in index order, all-double arithmetic), so dot products
-are bit-identical and 6-decimal rounding in the driver's hash is safe.
+Float parity: the Python-boundary kernels (pandas UDFs, ``mapInPandas``)
+are Arrow-batched NumPy loops that keep the SQL oracle's sequential fold
+order (acc += term in dimension order, all float64), so Spark and the
+DuckDB twins in plans/similarity_plans.py agree bit-for-bit and 6-decimal
+rounding in the driver's hash is safe. Hyperplanes come from the shared
+h56 hash (functions/hashing.py) —
+`plane[p][d] = (h56(f"hp:{p}:{d}") % 2001 - 1000) / 1000` — so the oracle
+rebuilds the identical planes symbolically, with no literal blobs.
 """
 
 from __future__ import annotations
@@ -275,13 +286,20 @@ def ann_topk_lsh(
             cosine_fast(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
+    return _topk(cand, k, "cos_sim", ascending=False)
+
+
+def _topk(scored: DataFrame, k: int, score: str, ascending: bool) -> DataFrame:
+    """The per-query top-k tail of every ANN twin: rank each query's
+    (query_id, neighbor_id, ``score``) candidates by score, ties to the
+    lower neighbor id (deterministic, the oracles' ROW_NUMBER order),
+    keep rank <= k, present by (query_id, rank)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+        .select("query_id", "neighbor_id", "rank", score)
         .orderBy("query_id", "rank")
     )
 
@@ -303,8 +321,8 @@ def ann_topk_ivf(
        doubles, a few KB regardless of corpus size — the same "fit tiny model,
        broadcast it" shape as KMeans.fit.
     2. **Assign** — every corpus vector gets its argmax-cosine cell from one
-       Arrow-batched pandas UDF (a single BLAS matmul per batch; the centroid
-       matrix rides along in the UDF closure = a broadcast).
+       Arrow-batched pandas UDF (the exact-fold ``_cos_to_cents``; the
+       centroid matrix rides along in the UDF closure = a broadcast).
     3. **Probe** — each query expands to its ``nprobe`` nearest cells and the
        candidate set is the equi-join on ``cell``: only ~nprobe/nlist of the
        corpus is scored per query. At 100 TB the corpus is assigned once (or
@@ -321,38 +339,7 @@ def ann_topk_ivf(
     import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType
 
-    # Deterministic "random" sample: Knuth multiplicative scramble of the id.
-    cent_rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(
-            ((F.col(id_col) * F.lit(2654435761)) % F.lit(1 << 32)).asc(),
-            F.col(id_col),
-        )
-        .limit(nlist)
-        .collect()
-    )
-    cmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-    # Fold-order centroid norms: acc += c_d² in index order, like _NORM.
-    cnorm = np.zeros(cmat.shape[0])
-    for d in range(cmat.shape[1]):
-        cnorm = cnorm + cmat[:, d] * cmat[:, d]
-    cnorm = np.sqrt(cnorm)
-
-    def _cos_to_cents(m: "np.ndarray") -> "np.ndarray":
-        """(n_rows x nlist) cosine matrix with the oracle's exact expression
-        shape: fold-dot / (fold-norm(vec) * fold-norm(centroid))."""
-        n = m.shape[0]
-        nv = np.zeros(n)
-        for d in range(m.shape[1]):
-            nv = nv + m[:, d] * m[:, d]
-        nv = np.sqrt(nv)
-        cos = np.empty((n, cmat.shape[0]))
-        for j in range(cmat.shape[0]):
-            dot = np.zeros(n)
-            for d in range(m.shape[1]):
-                dot = dot + m[:, d] * cmat[j, d]
-            cos[:, j] = dot / (nv * cnorm[j])
-        return cos
+    cmat = _model_sample(embeddings, nlist, id_col, vec_col)
 
     @F.pandas_udf(IntegerType())
     def cell_of(vecs: pd.Series) -> pd.Series:
@@ -361,7 +348,8 @@ def ann_topk_ivf(
         m = np.stack(vecs.values).astype(np.float64)
         # argmax returns the FIRST maximum -> exact ties go to the lower
         # cell, matching ROW_NUMBER() ORDER BY cos DESC, cell ASC.
-        return pd.Series(np.argmax(_cos_to_cents(m), axis=1).astype("int32"))
+        cells = np.argmax(_cos_to_cents(m, cmat), axis=1)
+        return pd.Series(cells.astype("int32"))
 
     # asNondeterministic: the probe join's key is the cell_of-derived
     # column, and the optimizer otherwise plans the assignment kernel
@@ -375,10 +363,8 @@ def ann_topk_ivf(
         if len(vecs) == 0:
             return pd.Series([], dtype="object")
         m = np.stack(vecs.values).astype(np.float64)
-        # stable argsort of -cos keeps ascending cell order on exact ties —
-        # the same (cos DESC, cell ASC) ranking the oracle's ROW_NUMBER uses.
-        order = np.argsort(-_cos_to_cents(m), kind="stable", axis=1)[:, :nprobe]
-        return pd.Series([row.astype("int32") for row in order])
+        cells = _probe_cells(m, cmat, nprobe)
+        return pd.Series([row.astype("int32") for row in cells])
 
     corpus = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
@@ -399,15 +385,7 @@ def ann_topk_ivf(
             cosine_fast(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(cand, k, "cos_sim", ascending=False)
 
 
 def cosine_pairs(
@@ -1314,28 +1292,22 @@ def kmeans_fit_summary(
         cached.unpersist()
 
 
-# --- Product quantization (IVF-PQ's compression half) ------------------------
+# --- Product quantization and the shared IVF/PQ kernel set -------------------
 PQ_M = 8  # subspaces: EMB_DIM 64 → 8 dims per subspace
 PQ_KSUB = 16  # codewords per subspace → 4 bits/subspace, 64→4 bytes/vector
 
 
-def _pq_codewords(
-    embeddings: DataFrame,
-    m_sub: int,
-    ksub: int,
-    id_col: str,
-    vec_col: str,
-):
-    """(m_sub, ksub, dsub) codebook tensor. Codeword sources are the ksub
-    corpus vectors with the lowest Knuth-scrambled id — the IVF centroid
-    rule (ann_topk_ivf), so the oracle reproduces them with one ORDER BY
-    ... LIMIT — and codeword (s, j) is source j's s-th subvector slice.
-    Driver-side state is ksub × dim doubles (a few KB) at ANY corpus
-    size: the canonical fit-tiny-model-then-broadcast shape. A production
-    variant would Lloyd-refine each subspace codebook with the existing
-    exact-fold kernels; the seeded codebook keeps the whole operator a
-    deterministic function of the data, which is what the hash oracle
-    certifies."""
+def _model_sample(embeddings: DataFrame, n: int, id_col: str, vec_col: str):
+    """(n, dim) float64 matrix of the seeded sample every IVF and PQ model
+    is fitted from: the n corpus vectors with the lowest Knuth-scrambled
+    id — spread across the id space, stable across runs, and one ORDER BY
+    ... LIMIT CTE in the SQL oracle. IVF centroids are its first nlist
+    rows and PQ codeword sources its first ksub (residual PQ: the ksub
+    after the centroids), so every fit is a deterministic function of the
+    data, which is what the hash oracle certifies. Driver-side state is
+    n × dim doubles (a few KB) at ANY corpus size: the canonical
+    fit-tiny-model-then-broadcast shape. A production variant would
+    Lloyd-refine the sample with the existing exact-fold kernels."""
     import numpy as np
 
     rows = (
@@ -1344,28 +1316,60 @@ def _pq_codewords(
             ((F.col(id_col) * F.lit(2654435761)) % F.lit(1 << 32)).asc(),
             F.col(id_col),
         )
-        .limit(ksub)
+        .limit(n)
         .collect()
     )
-    return _codewords_from_rows(rows, m_sub)
+    if not rows:
+        raise ValueError("cannot fit an IVF/PQ model over an empty corpus")
+    return np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
 
 
-def _codewords_from_rows(rows, m_sub: int):
-    """Codebook tensor from already-collected (id, vector) rows — shared
-    with ann_topk_ivfpq, whose single scramble collect feeds BOTH the IVF
-    centroids and the PQ codeword sources (one driver round-trip, not
-    two)."""
+def _cos_to_cents(m, cmat):
+    """(n_rows × nlist) cosine from every row of ``m`` to every centroid,
+    with the oracle's exact expression shape: fold-dot / (fold-norm(vec)
+    * fold-norm(centroid)), each fold acc += term in index order like
+    _NORM. Every IVF path — ann_topk_ivf, the fused IVF-PQ kernels, the
+    persisted index's build and probe — assigns cells and orders probes
+    through it, so they stay bit-identical."""
     import numpy as np
 
-    if not rows:
-        raise ValueError("cannot build PQ codebooks from an empty corpus")
-    src = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    cnorm = np.zeros(cmat.shape[0])
+    for d in range(cmat.shape[1]):
+        cnorm = cnorm + cmat[:, d] * cmat[:, d]
+    cnorm = np.sqrt(cnorm)
+    n = m.shape[0]
+    nv = np.zeros(n)
+    for d in range(m.shape[1]):
+        nv = nv + m[:, d] * m[:, d]
+    nv = np.sqrt(nv)
+    cos = np.empty((n, cmat.shape[0]))
+    for j in range(cmat.shape[0]):
+        dot = np.zeros(n)
+        for d in range(m.shape[1]):
+            dot = dot + m[:, d] * cmat[j, d]
+        cos[:, j] = dot / (nv * cnorm[j])
+    return cos
+
+
+def _probe_cells(m, cmat, nprobe: int):
+    """(n_rows, nprobe) nearest cells of every row of ``m``. The stable
+    argsort of -cos keeps ascending cell order on exact ties — the
+    oracle's (cos DESC, cell ASC) ROW_NUMBER ranking."""
+    import numpy as np
+
+    return np.argsort(-_cos_to_cents(m, cmat), kind="stable", axis=1)[
+        :, :nprobe
+    ]
+
+
+def _pq_codebook(src, m_sub: int):
+    """(m_sub, k, dsub) codebook tensor from k source vectors: codeword
+    (s, j) is source j's s-th subvector slice."""
     dim = src.shape[1]
     if dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    # (ksub, m_sub, dsub) → (m_sub, ksub, dsub)
-    return src.reshape(src.shape[0], m_sub, dsub).transpose(1, 0, 2)
+    # (k, m_sub, dsub) → (m_sub, k, dsub)
+    return src.reshape(src.shape[0], m_sub, dim // m_sub).transpose(1, 0, 2)
 
 
 def _pq_sub_dists(sub, cw_s):
@@ -1385,6 +1389,163 @@ def _pq_sub_dists(sub, cw_s):
     return out
 
 
+def _pq_luts(mat, cbs):
+    """(n_rows, m_sub, ksub) ADC tables: entry [i, s, j] is the exact-fold
+    squared L2 from row i's s-th subvector to codeword (s, j). For a
+    query it is the query's lookup table; for a corpus row the argmin
+    over j is its PQ code. Sized by the FITTED codebook, so a corpus
+    smaller than ksub never folds uninitialized codeword rows. Rows fold
+    independently, so stacking any rows into one call changes no bit."""
+    import numpy as np
+
+    m_sub, ksub, dsub = cbs.shape
+    out = np.empty((mat.shape[0], m_sub, ksub))
+    for s in range(m_sub):
+        out[:, s, :] = _pq_sub_dists(
+            mat[:, s * dsub : (s + 1) * dsub], cbs[s]
+        ).T
+    return out
+
+
+def _pq_codes(mat, cbs):
+    """(n_rows, m_sub) PQ codes: per subspace the argmin-L2 codeword, the
+    first minimum winning ties (lower code, the oracle's ROW_NUMBER
+    (dist, j))."""
+    return _pq_luts(mat, cbs).argmin(axis=2)
+
+
+def _ivfpq_model(
+    embeddings: DataFrame,
+    nlist: int,
+    m_sub: int,
+    ksub: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The raw IVF-PQ model ``(cmat, cbs, origin)`` that both faces — the
+    fused ``ann_topk_ivfpq`` and the persisted index (operators/
+    ann_index.py) — fit from ONE sample collect: centroids are its first
+    nlist rows and codeword sources its first ksub, so they coincide by
+    construction and the oracle reproduces both with one CTE. ``origin``
+    is what each vector is offset by before PQ encoding: zeros here
+    (codes quantize the vector itself); ``ann_topk_ivfpq_residual``
+    passes the centroids instead."""
+    import numpy as np
+
+    sample = _model_sample(embeddings, max(nlist, ksub), id_col, vec_col)
+    cmat = sample[:nlist]
+    return cmat, _pq_codebook(sample[:ksub], m_sub), np.zeros_like(cmat)
+
+
+def _ivf_codes(mat, model):
+    """(cells, codes) of a batch of corpus rows under an IVF-PQ ``model``:
+    the argmax-cosine cell (first maximum → lower cell, the oracle's
+    ROW_NUMBER (cos DESC, cell ASC)) and the PQ codes of each row's
+    offset from ``origin[cell]`` (x − 0.0 is x exactly, so raw codes are
+    the vector's own)."""
+    import numpy as np
+
+    cmat, cbs, origin = model
+    cells = np.argmax(_cos_to_cents(mat, cmat), axis=1)
+    return cells, _pq_codes(mat - origin[cells], cbs)
+
+
+def _adc_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """(qids, qmat) of a query batch, collected driver-side (a probe batch
+    by declared contract, not a corpus); ([], None) when it is empty."""
+    import numpy as np
+
+    rows = queries.select(id_col, vec_col).collect()
+    if not rows:
+        return [], None
+    return [r[0] for r in rows], np.stack(
+        [np.asarray(r[1], dtype=np.float64) for r in rows]
+    )
+
+
+def _no_neighbors(queries: DataFrame, id_col: str) -> DataFrame:
+    """The ADC operators' result for an empty query batch: no rows, the
+    declared (query_id, neighbor_id, rank, approx_dist) schema."""
+    return queries.limit(0).select(
+        F.col(id_col).alias("query_id"),
+        F.col(id_col).alias("neighbor_id"),
+        F.lit(0).alias("rank"),
+        F.lit(0.0).alias("approx_dist"),
+    )
+
+
+def _adc_probes(qmat, model, nprobe: int) -> list:
+    """probes[qi] = [(cell, lut)]: query qi's nprobe nearest cells, each
+    with the (m_sub × ksub) ADC table its rows are scored against — the
+    table of (query − origin[cell]). With raw PQ's zero origin every cell
+    gets the query's own table; residual PQ's centroid origin gives q's
+    residual in each probed cell (nprobe× the tables, still
+    O(nprobe·m·ksub) driver floats per query)."""
+    cmat, cbs, origin = model
+    cells = _probe_cells(qmat, cmat, nprobe)
+    offsets = (qmat[:, None, :] - origin[cells]).reshape(-1, qmat.shape[1])
+    luts = _pq_luts(offsets, cbs).reshape(*cells.shape, *cbs.shape[:2])
+    return [list(zip(row.tolist(), qluts)) for row, qluts in zip(cells, luts)]
+
+
+def _adc_scores(ids, cells, codes, qids: list, probes: list):
+    """The one ADC scorer, over a batch of encoded corpus rows (ids, cells,
+    codes): for query qids[qi] and each (cell, lut) in probes[qi], every
+    row of that cell except the query itself, at distance Σ_s lut[s,
+    code_s] folded s-ascending — the oracle's list_reduce order, so each
+    approx_dist is bit-identical to the SQL twin's. PQ without IVF is the
+    one-cell case. Rows are grouped by cell ONCE per batch (one stable
+    argsort, which keeps batch order within a cell) and each (query,
+    cell) fancy-indexes its slice — no per-query × per-row membership
+    test. Returns a (query_id, neighbor_id, approx_dist) frame, or None
+    when no row scored."""
+    import numpy as np
+
+    order = np.argsort(cells, kind="stable")
+    uniq, starts = np.unique(cells[order], return_index=True)
+    bounds = np.append(starts, len(order))
+    cell_rows = {
+        int(c): order[bounds[i] : bounds[i + 1]] for i, c in enumerate(uniq)
+    }
+    parts = []
+    for qid, cell_luts in zip(qids, probes):
+        for c, lut in cell_luts:
+            rows = cell_rows.get(c)
+            if rows is None:
+                continue
+            rows = rows[ids[rows] != qid]
+            kcodes = codes[rows]
+            acc = np.zeros(len(rows))
+            for s in range(lut.shape[0]):
+                acc = acc + lut[s, kcodes[:, s]]
+            parts.append((np.full(len(rows), qid), ids[rows], acc))
+    if not parts:
+        return None
+    qcol, ncol, dcol = (np.concatenate(col) for col in zip(*parts))
+    return pd.DataFrame(
+        {"query_id": qcol, "neighbor_id": ncol, "approx_dist": dcol}
+    )
+
+
+def _adc_topk(corpus: DataFrame, encode, qids: list, probes: list, k: int):
+    """ONE map-only pass over ``corpus`` — ``encode(pdf)`` gives each
+    batch's (ids, cells, codes) and ``_adc_scores`` scores them against
+    the probe tables riding in the closure (broadcast-size driver state)
+    — then the per-query top-k by ascending approx_dist."""
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf):
+                out = _adc_scores(*encode(pdf), qids, probes)
+                if out is not None:
+                    yield out
+
+    scored = corpus.mapInPandas(
+        score, "query_id long, neighbor_id long, approx_dist double"
+    )
+    return _topk(scored, k, "approx_dist", ascending=True)
+
+
 def pq_encode(
     embeddings: DataFrame,
     m_sub: int = PQ_M,
@@ -1398,39 +1559,28 @@ def pq_encode(
     matching ROW_NUMBER (dist, j)) and its squared error. 64 float dims
     become m_sub 4-bit codes: the 32× compression that makes a 100 TB
     embedding corpus RAM-resident for ADC scanning (Jégou et al., PQ for
-    nearest neighbor search). Map-only over the corpus — the codebook
-    rides the UDF closure as a broadcast; nothing shuffles but the final
-    presentation sort."""
+    nearest neighbor search). Codeword sources are the ksub lowest
+    Knuth-scrambled ids (``_model_sample``). Map-only over the corpus —
+    the codebook rides the UDF closure as a broadcast; nothing shuffles
+    but the final presentation sort."""
     import numpy as np
 
-    cbs = _pq_codewords(
-        codebook_source if codebook_source is not None else embeddings,
-        m_sub, ksub, id_col, vec_col,
-    )
-    dsub = cbs.shape[2]
+    source = codebook_source if codebook_source is not None else embeddings
+    cbs = _pq_codebook(_model_sample(source, ksub, id_col, vec_col), m_sub)
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            n = mat.shape[0]
-            vids = np.repeat(pdf[id_col].values, m_sub)
-            ss = np.tile(np.arange(m_sub, dtype=np.int32), n)
-            codes = np.empty((n, m_sub), dtype=np.int32)
-            errs = np.empty((n, m_sub))
-            for s in range(m_sub):
-                dists = _pq_sub_dists(
-                    mat[:, s * dsub : (s + 1) * dsub], cbs[s]
-                )
-                best = dists.argmin(axis=0)  # first min → lower code
-                codes[:, s] = best
-                errs[:, s] = dists[best, np.arange(n)]
+            dists = _pq_luts(mat, cbs)
+            codes = dists.argmin(axis=2)  # first min → lower code
+            errs = np.take_along_axis(dists, codes[:, :, None], axis=2)
             yield pd.DataFrame(
                 {
-                    "vid": vids,
-                    "s": ss,
-                    "code": codes.reshape(-1),
+                    "vid": np.repeat(pdf[id_col].values, m_sub),
+                    "s": np.tile(np.arange(m_sub, dtype=np.int32), len(mat)),
+                    "code": codes.reshape(-1).astype(np.int32),
                     "sq_err": errs.reshape(-1),
                 }
             )
@@ -1468,132 +1618,54 @@ def ann_topk_pq(
     (bounded in tests/test_similarity.py)."""
     import numpy as np
 
-    cbs = _pq_codewords(embeddings, m_sub, ksub, id_col, vec_col)
-    # a corpus smaller than ksub fits fewer codewords: size the LUTs by
-    # the FITTED tensor, or the fold would read uninitialized rows
-    ksub = cbs.shape[1]
-    dsub = cbs.shape[2]
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    qids = [r[0] for r in qrows]
-    if not qids:  # no query rows: empty result with the declared schema
-        return embeddings.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0).alias("rank"),
-            F.lit(0.0).alias("approx_dist"),
-        )
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    # luts[q][s][j]: exact-fold subspace distance query→codeword.
-    luts = np.empty((len(qids), m_sub, ksub))
-    for s in range(m_sub):
-        luts[:, s, :] = _pq_sub_dists(
-            qmat[:, s * dsub : (s + 1) * dsub], cbs[s]
-        ).T
+    cbs = _pq_codebook(_model_sample(embeddings, ksub, id_col, vec_col), m_sub)
+    queries = embeddings.filter(F.col(id_col).isin(query_ids))
+    qids, qmat = _adc_queries(queries, id_col, vec_col)
+    if not qids:
+        return _no_neighbors(queries, id_col)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            n = mat.shape[0]
-            codes = np.empty((n, m_sub), dtype=np.int64)
-            for s in range(m_sub):
-                codes[:, s] = _pq_sub_dists(
-                    mat[:, s * dsub : (s + 1) * dsub], cbs[s]
-                ).argmin(axis=0)
-            ids = pdf[id_col].values
-            frames = []
-            for qi, qid in enumerate(qids):
-                acc = np.zeros(n)
-                for s in range(m_sub):  # s-ascending fold = oracle's
-                    acc = acc + luts[qi, s, codes[:, s]]  # list_reduce
-                keep = ids != qid
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[keep],
-                            "approx_dist": acc[keep],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+    def encode(pdf):
+        mat = np.stack(pdf[vec_col].values).astype(np.float64)
+        one_cell = np.zeros(len(mat), dtype=np.int64)
+        return pdf[id_col].values, one_cell, _pq_codes(mat, cbs)
 
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_dist")
-        .orderBy("query_id", "rank")
+    probes = [[(0, lut)] for lut in _pq_luts(qmat, cbs)]
+    return _adc_topk(
+        embeddings.select(id_col, vec_col), encode, qids, probes, k
     )
 
 
-def ivfpq_model_rows(
+def _ivfpq_topk(
     embeddings: DataFrame,
-    nlist: int,
-    ksub: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
-    """The shared seeded model sample both IVF-PQ faces (fused kernel
-    and persisted index) fit from: the Knuth-scramble ORDER BY … LIMIT
-    rule, so centroid and codeword sources coincide by construction and
-    the oracle reproduces them with one CTE."""
-    return (
-        embeddings.select(id_col, vec_col)
-        .orderBy(
-            ((F.col(id_col) * F.lit(2654435761)) % F.lit(1 << 32)).asc(),
-            F.col(id_col),
-        )
-        .limit(max(nlist, ksub))
-        .collect()
-    )
-
-
-def centroid_matrix(cent_rows: list, nlist: int):
-    """(cmat, cnorm) from the model sample's first nlist rows — float64,
-    column-loop arithmetic identical to the fused kernel's."""
+    query_ids: list[int],
+    k: int,
+    nprobe: int,
+    model,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The fused single pass both IVF-PQ kernels run: plan each query's
+    probed cells and tables driver-side, then ONE map-only corpus kernel
+    assigns cell + codes (``_ivf_codes``) and emits the ADC candidates of
+    the probed cells in the same pass."""
     import numpy as np
 
-    cmat = np.stack(
-        [np.asarray(r[1], dtype=np.float64) for r in cent_rows[:nlist]]
+    queries = embeddings.filter(F.col(id_col).isin(query_ids))
+    qids, qmat = _adc_queries(queries, id_col, vec_col)
+    if not qids:
+        return _no_neighbors(queries, id_col)
+
+    def encode(pdf):
+        mat = np.stack(pdf[vec_col].values).astype(np.float64)
+        return (pdf[id_col].values, *_ivf_codes(mat, model))
+
+    return _adc_topk(
+        embeddings.select(id_col, vec_col),
+        encode,
+        qids,
+        _adc_probes(qmat, model, nprobe),
+        k,
     )
-    cnorm = np.zeros(cmat.shape[0])
-    for d in range(cmat.shape[1]):
-        cnorm = cnorm + cmat[:, d] * cmat[:, d]
-    return cmat, np.sqrt(cnorm)
-
-
-def make_cos_to_cents(cmat, cnorm):
-    """Row-matrix → cosine-to-each-centroid kernel, shared between the
-    fused IVF-PQ kernel and the persisted index builder/prober so cell
-    assignment and probe ordering stay bit-identical."""
-    import numpy as np
-
-    def cos_to_cents(m):
-        n = m.shape[0]
-        nv = np.zeros(n)
-        for d in range(m.shape[1]):
-            nv = nv + m[:, d] * m[:, d]
-        nv = np.sqrt(nv)
-        cos = np.empty((n, cmat.shape[0]))
-        for j in range(cmat.shape[0]):
-            dot = np.zeros(n)
-            for d in range(m.shape[1]):
-                dot = dot + m[:, d] * cmat[j, d]
-            cos[:, j] = dot / (nv * cnorm[j])
-        return cos
-
-    return cos_to_cents
 
 
 def ann_topk_ivfpq(
@@ -1619,114 +1691,14 @@ def ann_topk_ivfpq(
     Locally one fused map-only kernel assigns cell + codes and emits ADC
     candidates per query in the same corpus pass (probe sets and LUTs are
     broadcast-size closure state); at scale the cells+codes relation is
-    materialized once and the probe is the equi-join on cell that
-    ann_topk_ivf demonstrates. Centroids and PQ codeword sources share
-    the same seeded sample by construction (both use the scramble ORDER
-    BY ... LIMIT rule), which the oracle reproduces with one CTE.
+    materialized once and probed (operators/ann_index.py). Centroids and
+    PQ codeword sources share the same seeded sample by construction
+    (``_ivfpq_model``), which the oracle reproduces with one CTE.
     Deterministic end-to-end → full hash oracle; recall vs brute force
     bounded in tests."""
-    import numpy as np
-
-    cent_rows = ivfpq_model_rows(embeddings, nlist, ksub, id_col, vec_col)
-    if not cent_rows:
-        raise ValueError("cannot run IVF-PQ over an empty corpus")
-    cmat, cnorm = centroid_matrix(cent_rows, nlist)
-    cos_to_cents = make_cos_to_cents(cmat, cnorm)
-    cbs = _codewords_from_rows(cent_rows[:ksub], m_sub)
-    # small-corpus rule as ann_topk_pq: LUT width = fitted codebook width
-    ksub = cbs.shape[1]
-    dsub = cbs.shape[2]
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    qids = [r[0] for r in qrows]
-    if not qids:  # no query rows: empty result with the declared schema
-        return embeddings.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0).alias("rank"),
-            F.lit(0.0).alias("approx_dist"),
-        )
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    # stable argsort of -cos keeps ascending cell order on exact ties —
-    # the oracle's (cos DESC, cell ASC) ROW_NUMBER ranking.
-    probe_sets = [
-        set(row)
-        for row in np.argsort(
-            -cos_to_cents(qmat), kind="stable", axis=1
-        )[:, :nprobe]
-    ]
-    luts = np.empty((len(qids), m_sub, ksub))
-    for s in range(m_sub):
-        luts[:, s, :] = _pq_sub_dists(
-            qmat[:, s * dsub : (s + 1) * dsub], cbs[s]
-        ).T
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            n = mat.shape[0]
-            cells = np.argmax(cos_to_cents(mat), axis=1)
-            codes = np.empty((n, m_sub), dtype=np.int64)
-            for s in range(m_sub):
-                codes[:, s] = _pq_sub_dists(
-                    mat[:, s * dsub : (s + 1) * dsub], cbs[s]
-                ).argmin(axis=0)
-            ids = pdf[id_col].values
-            # Group rows by cell ONCE per batch (one argsort), then each
-            # query gathers its probed cells' row slices by fancy
-            # indexing — the ann_index probe's vectorization (r8),
-            # applied to the fused kernel's identical inner loop.
-            order = np.argsort(cells, kind="stable")
-            sorted_cells = cells[order]
-            uniq, starts = np.unique(sorted_cells, return_index=True)
-            bounds = np.append(starts, len(sorted_cells))
-            cell_rows = {
-                int(c): order[bounds[i] : bounds[i + 1]]
-                for i, c in enumerate(uniq)
-            }
-            frames = []
-            for qi, qid in enumerate(qids):
-                slices = [
-                    cell_rows[c] for c in probe_sets[qi] if c in cell_rows
-                ]
-                if not slices:
-                    continue
-                rows = np.concatenate(slices)
-                rows = rows[ids[rows] != qid]
-                if not len(rows):
-                    continue
-                acc = np.zeros(len(rows))
-                kcodes = codes[rows]
-                for s in range(m_sub):  # s-ascending fold = list_reduce
-                    acc = acc + luts[qi, s, kcodes[:, s]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[rows],
-                            "approx_dist": acc,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_dist")
-        .orderBy("query_id", "rank")
+    model = _ivfpq_model(embeddings, nlist, m_sub, ksub, id_col, vec_col)
+    return _ivfpq_topk(
+        embeddings, query_ids, k, nprobe, model, id_col, vec_col
     )
 
 
@@ -1770,135 +1742,18 @@ def ann_topk_ivfpq_residual(
     bit-identical)."""
     import numpy as np
 
-    rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(
-            ((F.col(id_col) * F.lit(2654435761)) % F.lit(1 << 32)).asc(),
-            F.col(id_col),
-        )
-        .limit(nlist + ksub)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("cannot run IVF-PQ over an empty corpus")
-    cent_rows = rows[:nlist]
-    cw_rows = rows[nlist : nlist + ksub]
-    if not cw_rows:
+    sample = _model_sample(embeddings, nlist + ksub, id_col, vec_col)
+    cmat, src = sample[:nlist], sample[nlist:]
+    if not len(src):
         raise ValueError(
             "corpus too small for residual PQ: needs more than "
             f"nlist={nlist} rows to fit a disjoint codeword sample"
         )
-    cmat, cnorm = centroid_matrix(cent_rows, nlist)
-    cos_to_cents = make_cos_to_cents(cmat, cnorm)
     # codewords = the DISJOINT sample rows' residuals w.r.t. their cells
-    src = np.stack([np.asarray(r[1], dtype=np.float64) for r in cw_rows])
-    src_cells = np.argmax(cos_to_cents(src), axis=1)
-    res_src = src - cmat[src_cells]
-    dim = src.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    cbs = res_src.reshape(src.shape[0], m_sub, dsub).transpose(1, 0, 2)
-    ksub = cbs.shape[1]
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    qids = [r[0] for r in qrows]
-    if not qids:
-        return embeddings.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0).alias("rank"),
-            F.lit(0.0).alias("approx_dist"),
-        )
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    probe_lists = [
-        [int(c) for c in row]
-        for row in np.argsort(-cos_to_cents(qmat), kind="stable", axis=1)[
-            :, :nprobe
-        ]
-    ]
-    # per-(query, probed cell) LUT: q's residual differs in every cell
-    luts = {}
-    for qi in range(len(qids)):
-        for c in probe_lists[qi]:
-            qres = qmat[qi] - cmat[c]
-            lut = np.empty((m_sub, ksub))
-            for s in range(m_sub):
-                lut[s, :] = _pq_sub_dists(
-                    qres[None, s * dsub : (s + 1) * dsub], cbs[s]
-                )[:, 0]
-            luts[(qi, c)] = lut
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            cells = np.argmax(cos_to_cents(mat), axis=1)
-            res = mat - cmat[cells]
-            codes = np.empty((mat.shape[0], m_sub), dtype=np.int64)
-            for s in range(m_sub):
-                codes[:, s] = _pq_sub_dists(
-                    res[:, s * dsub : (s + 1) * dsub], cbs[s]
-                ).argmin(axis=0)
-            ids = pdf[id_col].values
-            # Group rows by cell ONCE per batch (one stable argsort) and
-            # serve every (query, probed cell) by fancy-indexing its
-            # cell's slice — the raw kernels' r8 vectorization; the only
-            # residual-specific part left in the loop is the per-(q, c)
-            # LUT the ADC math genuinely requires. The stable sort keeps
-            # rows in batch order within each cell, so distances and
-            # row sets are bit-identical to the masked form.
-            order = np.argsort(cells, kind="stable")
-            sorted_cells = cells[order]
-            uniq, starts = np.unique(sorted_cells, return_index=True)
-            bounds = np.append(starts, len(sorted_cells))
-            cell_rows = {
-                int(c): order[bounds[i] : bounds[i + 1]]
-                for i, c in enumerate(uniq)
-            }
-            frames = []
-            for qi, qid in enumerate(qids):
-                for c in probe_lists[qi]:
-                    rows_c = cell_rows.get(c)
-                    if rows_c is None:
-                        continue
-                    rows = rows_c[ids[rows_c] != qid]
-                    if not len(rows):
-                        continue
-                    lut = luts[(qi, c)]
-                    kcodes = codes[rows]
-                    acc = np.zeros(len(rows))
-                    for s in range(m_sub):  # s-ascending fold
-                        acc = acc + lut[s, kcodes[:, s]]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qid,
-                                "neighbor_id": ids[rows],
-                                "approx_dist": acc,
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_dist")
-        .orderBy("query_id", "rank")
+    src_cells = np.argmax(_cos_to_cents(src, cmat), axis=1)
+    cbs = _pq_codebook(src - cmat[src_cells], m_sub)
+    return _ivfpq_topk(
+        embeddings, query_ids, k, nprobe, (cmat, cbs, cmat), id_col, vec_col
     )
 
 

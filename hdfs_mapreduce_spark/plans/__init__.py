@@ -195,7 +195,6 @@ REVERIFY = {
     "stream_sliding_stats": 15,
     "stream_attribution": 15,
     "stream_session_stats": 15,
-    "stream_upsert_snapshot": 15,
     "stream_upsert_log_snapshot": 15,
     "stream_cdc_apply": 15,
     "stream_dedup_admitted": 15,
@@ -210,9 +209,9 @@ REVERIFY = {
     #     stat-guarded zipimporter.invalidate_caches). Same relations;
     #     supersedes the earlier entries of these keys (their comments
     #     above stay as history). The queries whose executed plan has a
-    #     Python-boundary node (tools/plans.py py > 0),
-    "ann_probe_deleted": 16,
-    "ann_probe_rebuilt": 16,
+    #     Python-boundary node (tools/plans.py py > 0) and the streams
+    #     whose pipelines run Python tasks; the ANN-family and
+    #     state-reader keys among them moved to r17.
     "plugin_binary_wordcount": 16,
     "embedding_covariance": 16,
     "dedup_embedding_pairs": 16,
@@ -220,27 +219,37 @@ REVERIFY = {
     "embedding_kmeans": 16,
     "multimodal_phash": 16,
     "multimodal_external": 16,
-    "ann_pq": 16,
-    "ann_ivfpq": 16,
-    "ann_probe_persisted": 16,
-    "ann_probe_appended": 16,
     "multimodal_frames": 16,
     "pipeline_pack": 16,
-    "embedding_pq_codes": 16,
-    "ann_ivfpq_recall": 16,
-    "ann_ivfpq_residual": 16,
-    "dedup_pq_buckets": 16,
     "multimodal_tiles": 16,
     "multimodal_audio": 16,
-    "ann_lsh": 16,
-    "ann_ivf": 16,
-    "ann_probe_vacuumed": 16,
     "dedup_crosscheck": 16,
-    "dedup_crosscheck_bucketed": 16,
-    #     and the streams whose pipelines run Python tasks.
-    "stream_ann_ingest_topk": 16,
-    "stream_ann_ingest_fenced": 16,
-    "stream_heavy_hitters_audit": 16,
+    # r17: one IVF-PQ kernel set (operators/similarity.py): the PQ,
+    #     fused IVF-PQ, residual and persisted-probe paths share one
+    #     seeded model sample, one encoder, one ADC scorer and one top-k
+    #     tail, which LSH and IVF use too; the streaming upsert and
+    #     Misra-Gries state readers return None for a state with no
+    #     committed version. Same relations (bit-identical results at
+    #     sf0.001/0.01/0.1), new executed code. Supersedes the r15 and
+    #     r16 entries of these keys.
+    "ann_lsh": 17,
+    "ann_ivf": 17,
+    "ann_pq": 17,
+    "ann_ivfpq": 17,
+    "ann_ivfpq_recall": 17,
+    "ann_ivfpq_residual": 17,
+    "embedding_pq_codes": 17,
+    "dedup_pq_buckets": 17,
+    "dedup_crosscheck_bucketed": 17,
+    "ann_probe_persisted": 17,
+    "ann_probe_appended": 17,
+    "ann_probe_deleted": 17,
+    "ann_probe_rebuilt": 17,
+    "ann_probe_vacuumed": 17,
+    "stream_ann_ingest_topk": 17,
+    "stream_ann_ingest_fenced": 17,
+    "stream_upsert_snapshot": 17,
+    "stream_heavy_hitters_audit": 17,
 }
 
 

@@ -439,9 +439,13 @@ def stream_upsert_events(
     return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
 
 
-def read_upsert_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Latest committed snapshot of a directory-versioned state table."""
+def read_upsert_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """Latest committed snapshot of a directory-versioned state table, or
+    None when no version has committed yet (an ``availableNow`` run that
+    saw no files, or only a partial _SUCCESS-less dir)."""
     versions = _state_versions(spark, state_dir)
+    if not versions:
+        return None
     return spark.read.parquet(hfs.join(hfs.glob_escape(state_dir), versions[-1][2]))
 
 
@@ -661,9 +665,12 @@ def stream_upsert_events_bucketed(
 
 def read_bucketed_upsert_state(
     spark: SparkSession, state_table: str
-) -> DataFrame:
-    """Latest snapshot of a bucketed upsert state table."""
+) -> DataFrame | None:
+    """Latest snapshot of a bucketed upsert state table, or None when no
+    version has been written yet."""
     versions = _bucketed_state_versions(spark, state_table)
+    if not versions:
+        return None
     return spark.table(f"{state_table}_v{versions[-1]}")
 
 

@@ -13,6 +13,12 @@ from hdfs_mapreduce_spark.operators.ann_index import (
     build_ivfpq_index,
     load_ivfpq_index,
 )
+from hdfs_mapreduce_spark.operators.similarity import (
+    ann_topk_ivf,
+    ann_topk_ivfpq,
+    ann_topk_ivfpq_residual,
+    ann_topk_pq,
+)
 from hdfs_mapreduce_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -26,8 +32,6 @@ def _rows(df):
 
 
 def test_persisted_probe_equals_fused_ivfpq(spark):
-    from hdfs_mapreduce_spark.operators.similarity import ann_topk_ivfpq
-
     emb = load_table(spark, SF, "embeddings")
     index = build_ivfpq_index(emb, name="ivfpq_eqtest")
     probed = ann_probe_ivfpq(
@@ -42,7 +46,6 @@ def test_probe_twice_without_refitting(spark, monkeypatch):
     fit or the raw corpus again. The fit entrypoint is poisoned after
     the build; two probes (different ks) still serve from the parquet
     index, consistently."""
-    import hdfs_mapreduce_spark.operators.ann_index as ai
     import hdfs_mapreduce_spark.operators.similarity as sim
 
     emb = load_table(spark, SF, "embeddings")
@@ -57,8 +60,7 @@ def test_probe_twice_without_refitting(spark, monkeypatch):
     def poisoned(*a, **k):
         raise AssertionError("probe re-ran the model fit")
 
-    monkeypatch.setattr(sim, "ivfpq_model_rows", poisoned)
-    monkeypatch.setattr(ai, "ivfpq_model_rows", poisoned)
+    monkeypatch.setattr(sim, "_model_sample", poisoned)
     first = _rows(ann_probe_ivfpq(index, queries, k=10, nprobe=4))
     second = _rows(ann_probe_ivfpq(index, queries, k=10, nprobe=4))
     assert first == second and len(first) == 20
@@ -104,10 +106,30 @@ def test_probe_empty_query_batch(spark):
     assert out.columns == ["query_id", "neighbor_id", "rank", "approx_dist"]
 
 
-def test_build_empty_corpus_raises(spark):
+@pytest.mark.parametrize(
+    "fit",
+    [
+        lambda emb: build_ivfpq_index(emb, name="ivfpq_empty"),
+        lambda emb: ann_topk_ivf(emb, [0, 1]),
+        lambda emb: ann_topk_pq(emb, [0, 1]),
+        lambda emb: ann_topk_ivfpq(emb, [0, 1]),
+        lambda emb: ann_topk_ivfpq_residual(emb, [0, 1]),
+    ],
+    ids=[
+        "build_ivfpq_index",
+        "ann_topk_ivf",
+        "ann_topk_pq",
+        "ann_topk_ivfpq",
+        "ann_topk_ivfpq_residual",
+    ],
+)
+def test_build_empty_corpus_raises(spark, fit):
+    """Every IVF/PQ model fit draws from the one seeded sample, which
+    rejects an empty corpus with a ValueError (not numpy's opaque
+    "need at least one array to stack")."""
     emb = load_table(spark, SF, "embeddings").limit(0)
     with pytest.raises(ValueError, match="empty corpus"):
-        build_ivfpq_index(emb, name="ivfpq_empty")
+        fit(emb)
 
 
 def test_append_is_frozen_model_and_covers_new_vectors(spark):

@@ -455,22 +455,16 @@ def test_pq_encode_single_kernel_map_only(spark):
     assert plan.count("Exchange") <= 1, plan  # ORDER BY only
 
 
-def test_ann_pq_one_corpus_pass_then_topk(spark):
-    """ADC search: one fused encode+score kernel over the corpus, then the
-    per-query top-k — a single shuffle for the window plus the
-    presentation sort; the tiny query-side collects are driver-side model
-    state, not plan nodes."""
-    plan = plan_of(QUERIES["ann_pq"](spark, SF), "simple")
+@pytest.mark.parametrize("query", ["ann_pq", "ann_ivfpq", "ann_ivfpq_residual"])
+def test_adc_one_corpus_pass_then_topk(spark, query):
+    """ADC search: one fused encode+score kernel over the corpus (for the
+    IVF-PQ pair, cell pruning fused into it too), then the per-query
+    top-k — a single shuffle for the window plus the presentation sort;
+    the tiny query-side collects are driver-side model state, not plan
+    nodes."""
+    plan = plan_of(QUERIES[query](spark, SF), "simple")
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Exchange") <= 2, plan  # window hash + final range
-
-
-def test_ann_ivfpq_one_corpus_pass_then_topk(spark):
-    """The composed IVF-PQ keeps the same one-pass shape: cell pruning and
-    ADC scoring fused into the single corpus kernel."""
-    plan = plan_of(QUERIES["ann_ivfpq"](spark, SF), "simple")
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.count("Exchange") <= 2, plan
 
 
 def test_lsh_recall_exact_side_is_capped(spark):

@@ -365,7 +365,8 @@ def test_pq_encode_picks_the_true_argmin(spark, vecs):
     ANY codeword of that subspace — and ties must go to the lower code
     (the ROW_NUMBER (dist, j) rule the oracle uses)."""
     from hdfs_mapreduce_spark.operators.similarity import (
-        _pq_codewords,
+        _model_sample,
+        _pq_codebook,
         pq_encode,
     )
 
@@ -375,7 +376,7 @@ def test_pq_encode_picks_the_true_argmin(spark, vecs):
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    cbs = _pq_codewords(emb, m_sub, ksub, "vec_id", "embedding")
+    cbs = _pq_codebook(_model_sample(emb, ksub, "vec_id", "embedding"), m_sub)
     rows = pq_encode(emb, m_sub=m_sub, ksub=ksub).collect()
     assert len(rows) == len(vecs) * m_sub
     # brute-force reference with the same sequential fold

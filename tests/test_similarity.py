@@ -322,7 +322,8 @@ def test_ann_pq_recall_and_consistency(spark):
     import numpy as np
 
     from hdfs_mapreduce_spark.operators.similarity import (
-        _pq_codewords,
+        _model_sample,
+        _pq_codebook,
         _pq_sub_dists,
         PQ_KSUB,
         PQ_M,
@@ -337,7 +338,9 @@ def test_ann_pq_recall_and_consistency(spark):
     codes = {
         (r["vid"], r["s"]): r["code"] for r in pq_encode(emb).collect()
     }
-    cbs = _pq_codewords(emb, PQ_M, PQ_KSUB, "vec_id", "embedding")
+    cbs = _pq_codebook(
+        _model_sample(emb, PQ_KSUB, "vec_id", "embedding"), PQ_M
+    )
     dsub = cbs.shape[2]
     qvecs = {
         r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)

@@ -423,7 +423,8 @@ def test_cm_state_replay_and_partial_writes_are_safe(spark, tmp_path):
     """Recovery semantics of the additive sketch state: a replayed batch
     (same id as the newest committed version) must NOT double-count, a
     later batch must merge, and a partial version dir (no _SUCCESS — a
-    crash mid-write) must be invisible to both readers and mergers."""
+    crash mid-write) must be invisible to both readers and mergers. A
+    state with no committed version reads as None, not an IndexError."""
     import os
 
     from pyspark.sql import functions as F
@@ -431,10 +432,17 @@ def test_cm_state_replay_and_partial_writes_are_safe(spark, tmp_path):
     from hdfs_mapreduce_spark.streaming.events import (
         _state_versions,
         cm_merge_batch_into_state,
+        read_bucketed_upsert_state,
         read_upsert_state,
     )
 
     state = str(tmp_path / "cm_state")
+    # nothing committed yet (an availableNow run that saw no files)
+    assert read_upsert_state(spark, state) is None
+    assert read_bucketed_upsert_state(spark, "cm_state_never_written") is None
+    # only a partial first version (crash mid-write of batch 0)
+    os.makedirs(os.path.join(state, "v0_b0"))
+    assert read_upsert_state(spark, state) is None
     b0 = spark.range(100).select(F.col("id").alias("user_id"))
     assert cm_merge_batch_into_state(spark, b0, state, batch_id=0)
     snap0 = {
