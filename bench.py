@@ -126,7 +126,11 @@ def warm(spark, fns, sf_dir: str) -> None:
     is forced) — whole-stage codegen compiles and JITs each plan shape
     (first execution of the heavier shapes measured 3-8s of one-time
     compilation at any SF), and the first pandas/Arrow kernel forks the
-    Python workers."""
+    Python workers. The compiles are saved only while Spark's codegen
+    cache holds the whole working set: a cache smaller than the plans
+    between two runs of a shape evicts its classes and the timed run
+    compiles them again (``time_query``'s ``codegen_compiles`` shows it;
+    see ``spark.sql.codegen.cache.maxEntries`` in session.py)."""
     from pyspark.sql import DataFrame
 
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
@@ -173,30 +177,43 @@ def _job_spans(spark, first: int, stop: int) -> list[tuple[float, float]]:
     return spans
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far:
+    one per codegen cache miss, so it stays put while the cache holds the
+    plan shapes being run."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def time_query(spark, fn, sf_dir: str, reps: int = 2) -> dict:
     """Min-of-``reps`` wall-clock of build + noop-forced execution, plus
     the fastest execution's Spark jobs: count, merged job seconds and the
     driver gap (wall − job time: Catalyst analysis, codegen, streaming
-    offset/commit bookkeeping). Only that execution's job-id range is
-    read, and only after its timer stops, so the split costs the timed
-    region two py4j calls. Raises on a failed execution."""
+    offset/commit bookkeeping), and the classes it compiled
+    (``codegen_compiles``; more than 0 after a warm pass means the codegen
+    cache is thrashing). Only that execution's job-id range is read, and
+    only after its timer stops, so the split costs the timed region two
+    py4j calls. Raises on a failed execution."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     best = None
     for _ in range(reps):
+        compiles = codegen_compiles(spark)
         first = int(dag.nextJobId())
         t0 = time.perf_counter()
         force(fn(spark, sf_dir))
         t = time.perf_counter() - t0
         stop = int(dag.nextJobId())
+        compiles = codegen_compiles(spark) - compiles
         if best is None or t < best[0]:
-            best = (t, first, stop)
-    sec, first, stop = best
+            best = (t, first, stop, compiles)
+    sec, first, stop, compiles = best
     job_s = _merged_seconds(_job_spans(spark, first, stop))
     return {
         "sec": round(sec, 4),
         "jobs": stop - first,
         "job_s": round(job_s, 4),
         "driver_gap_s": round(sec - job_s, 4),
+        "codegen_compiles": compiles,
     }
 
 

@@ -34,12 +34,9 @@ def h56_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 14) AS BIGINT)"
 
 
-def affine(a: int, b: int, x: Column) -> Column:
-    """Affine permutation h(x) = (a*(x%P) + b) % P over Mersenne-31 (Spark)."""
-    return (F.lit(a) * (x % F.lit(MERSENNE_31)) + F.lit(b)) % F.lit(MERSENNE_31)
-
-
 def affine_sql(a: int, b: int, x_expr: str) -> str:
+    """Affine permutation h(x) = (a*(x%P) + b) % P over Mersenne-31, as SQL
+    text that Spark and DuckDB parse alike."""
     return f"(({a} * (({x_expr}) % {MERSENNE_31}) + {b}) % {MERSENNE_31})"
 
 

@@ -23,10 +23,10 @@ is a pure function of the input — no RNG, no timestamps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hdfs_mapreduce_spark.functions.hashing import MERSENNE_31, h56, perm_params
+from hdfs_mapreduce_spark.functions.hashing import affine_sql, h56, perm_params
 from hdfs_mapreduce_spark.functions.text import tokens
 
 # MinHash configuration: 16 permutations in 8 bands of 2 → LSH threshold
@@ -184,19 +184,25 @@ def shingle_relation(
     )
 
 
+def _minhash_mins(perms: list[tuple[int, int]]) -> list[Column]:
+    """``mh{i}`` = MIN over the shingle hashes ``x`` of permutation i's
+    affine image. Written as SQL text the JVM parses once per aggregate:
+    the same expression tree through the Column API cost ~95 py4j round
+    trips per aggregate (16 aggregates on a 4-core host: 1,518 round trips
+    and ~200 ms of Python CPU, against 48 and ~6 ms as text)."""
+    return [
+        F.expr(f"min({affine_sql(a, b, 'x')}) AS mh{i}")
+        for i, (a, b) in enumerate(perms)
+    ]
+
+
 def _sig_agg(doc_col: str, exploded: DataFrame) -> DataFrame:
     """Signatures from an exploded (doc, shingle-hash x) relation: groupBy
     doc with N_PERM codegen'd MIN aggregates. This is the Spark-native
     formulation — whole-stage codegen end-to-end, map-side partial mins, one
     tiny shuffle of (doc × 16 longs). Array-fold versions (higher-order
     functions are interpreted per element) measured 10-100x slower."""
-    p = F.lit(MERSENNE_31)
-    return exploded.groupBy(doc_col).agg(
-        *[
-            F.min((F.lit(a) * (F.col("x") % p) + F.lit(b)) % p).alias(f"mh{i}")
-            for i, (a, b) in enumerate(PERMS)
-        ]
-    )
+    return exploded.groupBy(doc_col).agg(*_minhash_mins(PERMS))
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -239,53 +245,49 @@ def _banded_sketch(
     whose CTEs join on the injective string image of the same tuple —
     are unchanged. ``rpb`` (rows/band) rides along as a 1-int column so
     a probe can still validate a stored sketch's shape (the hashed key
-    no longer reveals it)."""
+    no longer reveals it). The aggregates and the band-key array are SQL
+    text (see ``_minhash_mins``)."""
     if n_perm % n_bands:
         raise ValueError(f"n_perm={n_perm} not divisible by n_bands={n_bands}")
     rows_per_band = n_perm // n_bands
     perms = PERMS if n_perm == N_PERM else perm_params(n_perm, seed=42)
-    p = F.lit(MERSENNE_31)
-    rel = shingle_relation(df, id_col, text_col)
-    per_doc = rel.groupBy("doc").agg(
-        F.collect_set("x").alias("sh"),
-        *[
-            F.min((F.lit(a) * (F.col("x") % p) + F.lit(b)) % p).alias(f"mh{i}")
-            for i, (a, b) in enumerate(perms)
-        ],
+    per_doc = shingle_relation(df, id_col, text_col).groupBy("doc").agg(
+        F.expr("collect_set(x) AS sh"), *_minhash_mins(perms)
     )
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.col(f"mh{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(n_bands)
-        ]
+    band_keys = ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ")"
+        for b in range(n_bands)
     )
-    return per_doc.select(
-        "doc", "sh", F.lit(rows_per_band).alias("rpb"), band_keys.alias("bkeys")
-    ).select(
-        "doc",
-        "sh",
-        "rpb",
-        "bkeys",
-        F.posexplode("bkeys").alias("band_idx", "band_key"),
+    return per_doc.selectExpr(
+        "doc", "sh", f"{rows_per_band} AS rpb", f"array({band_keys}) AS bkeys"
+    ).selectExpr(
+        "doc", "sh", "rpb", "bkeys", "posexplode(bkeys) AS (band_idx, band_key)"
     )
 
 
-def _earlier_collision(a: str, b: str):
-    """True iff the two sketch rows' docs already collided in a band before
-    this one — drop such rows so each pair survives exactly once."""
-    return F.array_contains(
-        F.zip_with(
-            F.slice(F.col(f"{a}.bkeys"), F.lit(1), F.col(f"{a}.band_idx")),
-            F.slice(F.col(f"{b}.bkeys"), F.lit(1), F.col(f"{b}.band_idx")),
-            lambda x, y: x == y,
-        ),
-        F.lit(True),
+def _band_join(a: str, b: str, ordered: bool = False) -> Column:
+    """Join condition of two aliased sketch relations: same band and key
+    (and ``{a}.doc < {b}.doc`` when ``ordered``), and no collision of the
+    two docs in an earlier band — first-band-wins, so each pair survives
+    exactly once. Parenthesized left-deep: the SQL parser balances an
+    unparenthesized AND chain, the Column API nests it to the left."""
+    cond = f"{a}.band_idx = {b}.band_idx AND {a}.band_key = {b}.band_key"
+    if ordered:
+        cond = f"({cond}) AND {a}.doc < {b}.doc"
+    return F.expr(
+        f"({cond}) AND NOT array_contains(zip_with("
+        f"slice({a}.bkeys, 1, {a}.band_idx), slice({b}.bkeys, 1, {b}.band_idx),"
+        " (x, y) -> x = y), true)"
+    )
+
+
+def _jaccard(a: str, b: str) -> str:
+    """SQL: exact Jaccard of the two sketch rows' shingle-hash sets."""
+    return (
+        f"size(array_intersect({a}.sh, {b}.sh))"
+        f" / size(array_union({a}.sh, {b}.sh)) AS jaccard"
     )
 
 
@@ -354,21 +356,8 @@ def _verified_pairs(
     left = bands.alias("l")
     right = F.broadcast(bands.alias("r")) if broadcast_right else bands.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc") < F.col("r.doc"))
-            & ~_earlier_collision("l", "r"),
-        )
-        .select(
-            F.col("l.doc").alias("doc_a"),
-            F.col("r.doc").alias("doc_b"),
-            (
-                F.size(F.array_intersect("l.sh", "r.sh"))
-                / F.size(F.array_union("l.sh", "r.sh"))
-            ).alias("jaccard"),
-        )
+        left.join(right, _band_join("l", "r", ordered=True))
+        .selectExpr("l.doc AS doc_a", "r.doc AS doc_b", _jaccard("l", "r"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -557,20 +546,8 @@ def _probe_pairs_from_sketches(
     nb = new_bands.alias("n")
     cb = corpus_sketch.alias("c")
     return (
-        cb.join(
-            F.broadcast(nb),
-            (F.col("n.band_idx") == F.col("c.band_idx"))
-            & (F.col("n.band_key") == F.col("c.band_key"))
-            & ~_earlier_collision("n", "c"),
-        )
-        .select(
-            F.col("n.doc").alias("new_doc"),
-            F.col("c.doc").alias("dup_of"),
-            (
-                F.size(F.array_intersect("n.sh", "c.sh"))
-                / F.size(F.array_union("n.sh", "c.sh"))
-            ).alias("jaccard"),
-        )
+        cb.join(F.broadcast(nb), _band_join("n", "c"))
+        .selectExpr("n.doc AS new_doc", "c.doc AS dup_of", _jaccard("n", "c"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -944,6 +921,22 @@ def ngram_jaccard_pairs(
 
 
 # --- edit-distance key dedup -------------------------------------------------------
+def _deletion_variants(text_col: str, window_len: int) -> str:
+    """SQL array of the ``window_len``-char key window (variant 0) and its
+    one-character deletions (variant i deletes character i). SQL text: at
+    window_len 16 the 17 entries as Column calls cost ~890 py4j round
+    trips, as text 3."""
+    t = text_col
+    return "array(" + ", ".join(
+        [f"substring({t}, 1, {window_len})"]
+        + [
+            f"concat(substring({t}, 1, {i - 1}),"
+            f" substring({t}, {i + 1}, {window_len - i}))"
+            for i in range(1, window_len + 1)
+        ]
+    ) + ")"
+
+
 def edit_distance_pairs(
     df: DataFrame,
     id_col: str,
@@ -993,25 +986,11 @@ def edit_distance_pairs(
     boilerplate, not duplication signal). The declared query pins C=64
     and mirrors the exclusion in its oracle; synthetic fixture dfs peak
     at 11 (sf0.1) so the cap binds only on adversarial corpora."""
-    key = F.substring(F.col(text_col), 1, key_len)
-    w = F.substring(F.col(text_col), 1, window_len)
-    # variant i=0 is the window itself; variant i deletes character i
-    variants = F.array(
-        w,
-        *[
-            F.concat(
-                F.substring(F.col(text_col), 1, i - 1),
-                F.substring(
-                    F.col(text_col), i + 1, window_len - i
-                ),
-            )
-            for i in range(1, window_len + 1)
-        ],
-    )
-    k = df.select(
-        F.col(id_col).alias("doc"),
-        key.alias("key"),
-        F.explode(F.array_distinct(variants)).alias("variant"),
+    k = df.selectExpr(
+        f"{id_col} AS doc",
+        f"substring({text_col}, 1, {key_len}) AS key",
+        f"explode(array_distinct({_deletion_variants(text_col, window_len)}))"
+        " AS variant",
     )
     if max_variant_df is not None:
         # array_distinct above makes each (doc, variant) unique, so row

@@ -102,7 +102,6 @@ REVERIFY = {
     #     and the exact verify moved before the pair-distinct; fixture
     #     dfs peak at 11 so sf0.01 values are unchanged, but the driver
     #     should re-certify the capped definition it now hashes.
-    "dedup_edit_pairs": 7,
     # r7: ann_ivfpq — model fit refactored into shared helpers
     #     (ivfpq_model_rows/centroid_matrix/make_cos_to_cents) the new
     #     persisted-index lifecycle also uses; identical arithmetic by
@@ -152,8 +151,6 @@ REVERIFY = {
     #     fixture SF). stream_upsert_snapshot's version listing moved to
     #     the one-RPC globStatus (same relation, new state machinery —
     #     the r6 os.*->Hadoop-FS precedent).
-    "dedup_minhash_pairs": 11,
-    "dedup_minhash_pairs_wide": 11,
     "dedup_incremental": 11,
     "dedup_lsh_recall": 11,
     "dataset_split_leakage": 11,
@@ -197,10 +194,6 @@ REVERIFY = {
     "stream_session_stats": 15,
     "stream_upsert_log_snapshot": 15,
     "stream_cdc_apply": 15,
-    "stream_dedup_admitted": 15,
-    "stream_dedup_resketch": 15,
-    "stream_dedup_compacted": 15,
-    "stream_dedup_maintained": 15,
     "logtable_cdf": 15,
     "logtable_ivm": 15,
     "dq_checks_incremental": 15,
@@ -250,6 +243,31 @@ REVERIFY = {
     "stream_ann_ingest_fenced": 17,
     "stream_upsert_snapshot": 17,
     "stream_heavy_hitters_audit": 17,
+    # r18: the wide generated expressions are SQL text parsed once by the
+    #     JVM instead of Column-call chains (operators/dedup.py: the
+    #     MinHash MIN aggregates, the band-key array, the band-join
+    #     conditions and pair select lists, the edit-distance deletion
+    #     variants; operators/logreg.py: the margin's weight map). Same
+    #     expression trees, bit-identical results. Supersedes the r7, r11
+    #     and r15 entries of these keys. The other consumers of
+    #     minhash_pairs / incremental_minhash_pairs (dedup_incremental,
+    #     dedup_lsh_recall, dataset_split_leakage, dataset_split_safe,
+    #     dedup_components, dedup_components_logrounds,
+    #     dedup_cluster_sizes, dedup_keep_best, graph_pagerank)
+    #     hash-passed at sf0.01 in-round but are left to the registry
+    #     rotation: with them the never-green set (59) would overflow
+    #     the 50-row window (tests/test_coverage.py).
+    "stream_dedup_admitted": 18,
+    "stream_dedup_resketch": 18,
+    "stream_dedup_compacted": 18,
+    "stream_dedup_maintained": 18,
+    "dedup_minhash_sigs": 18,
+    "dedup_minhash_pairs": 18,
+    "dedup_minhash_pairs_wide": 18,
+    "dedup_edit_pairs": 18,
+    "quality_logreg_fit": 18,
+    "quality_logreg_score": 18,
+    "quality_logreg_calibration": 18,
 }
 
 

@@ -1,4 +1,5 @@
-"""bench.py's measurement helpers — pure Python, no Spark session."""
+"""bench.py's measurement helpers: the pure-Python ones, and the per-query
+record over the shared test session."""
 
 from __future__ import annotations
 
@@ -98,3 +99,17 @@ def test_an_unkeyed_bench_local_payload_is_not_a_snapshot(tmp_path):
     )
     assert bench._read_local(str(tmp_path)) == {}
     assert bench._delta_vs_prev({"q1": 1.0}, 0.1, 8, str(tmp_path)) is None
+
+
+def test_time_query_records_the_classes_an_execution_compiles(spark):
+    """A plan shape no other test runs: its first execution compiles its
+    classes; a repeat finds them in the codegen cache, which is what a warm
+    pass relies on."""
+    def fn(session, _sf_dir):
+        return session.range(8).selectExpr("id * 40503 + 977 AS v")
+
+    cold = bench.time_query(spark, fn, "unused", reps=1)
+    warm = bench.time_query(spark, fn, "unused", reps=1)
+    assert set(cold) == {"sec", "jobs", "job_s", "driver_gap_s", "codegen_compiles"}
+    assert cold["codegen_compiles"] > 0
+    assert warm["codegen_compiles"] == 0
