@@ -23,6 +23,12 @@ import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+# perfbench's status-store probe and plan counter, imported as its own
+# tests import them
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
+
+from stats import merged_length  # noqa: E402
+from tracing import SparkProbe, plan_shape  # noqa: E402
 
 
 def _sf_of(sf_dir: str) -> float | None:
@@ -145,38 +151,6 @@ def warm(spark, fns, sf_dir: str) -> None:
             print(f"bench: warm {fn.__name__} FAILED: {exc}", file=sys.stderr)
 
 
-def _merged_seconds(spans: list[tuple[float, float]]) -> float:
-    """Total length of the union of [start, end] spans: concurrent jobs
-    (driver-pool writes) are not double-counted."""
-    total, reach = 0.0, float("-inf")
-    for start, end in sorted(spans):
-        if end > reach:
-            total += end - max(start, reach)
-            reach = end
-    return total
-
-
-def _job_spans(spark, first: int, stop: int) -> list[tuple[float, float]]:
-    """(submission, completion) epoch seconds of jobs ``first <= id <
-    stop`` from the JVM status store; a job evicted from the store or
-    still unfinished contributes no span."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty(30_000)  # the store lags the bus
-    store = jsc.statusStore()
-    spans = []
-    for jid in range(first, stop):
-        try:
-            job = store.job(jid)
-        except Exception:
-            continue
-        sub, com = job.submissionTime(), job.completionTime()
-        if sub.isDefined() and com.isDefined():
-            spans.append(
-                (sub.get().getTime() / 1000.0, com.get().getTime() / 1000.0)
-            )
-    return spans
-
-
 def codegen_compiles(spark) -> int:
     """Classes Spark's code generator has compiled in this JVM so far:
     one per codegen cache miss, so it stays put while the cache holds the
@@ -187,33 +161,43 @@ def codegen_compiles(spark) -> int:
 
 def time_query(spark, fn, sf_dir: str, reps: int = 2) -> dict:
     """Min-of-``reps`` wall-clock of build + noop-forced execution, plus
-    the fastest execution's Spark jobs: count, merged job seconds and the
-    driver gap (wall − job time: Catalyst analysis, codegen, streaming
-    offset/commit bookkeeping), and the classes it compiled
-    (``codegen_compiles``; more than 0 after a warm pass means the codegen
-    cache is thrashing). Only that execution's job-id range is read, and
-    only after its timer stops, so the split costs the timed region two
-    py4j calls. Raises on a failed execution."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    the fastest execution's Spark jobs, read by perfbench's ``SparkProbe``
+    after its timer stops: count, merged job seconds, the driver gap
+    (wall − job time: Catalyst analysis, codegen, streaming offset/commit
+    bookkeeping), stages, tasks and task CPU seconds; the classes it
+    compiled (``codegen_compiles``; more than 0 after a warm pass means
+    the codegen cache is thrashing); and ``plan_shape``'s exchange,
+    Python-boundary and scan node counts of the timed DataFrame. Only
+    that execution's job-id range is read. Raises on a failed
+    execution."""
+    probe = SparkProbe(spark)
     best = None
     for _ in range(reps):
         compiles = codegen_compiles(spark)
-        first = int(dag.nextJobId())
+        first = probe.next_job_id()
         t0 = time.perf_counter()
-        force(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        force(df)
         t = time.perf_counter() - t0
-        stop = int(dag.nextJobId())
+        stop = probe.next_job_id()
         compiles = codegen_compiles(spark) - compiles
         if best is None or t < best[0]:
-            best = (t, first, stop, compiles)
-    sec, first, stop, compiles = best
-    job_s = _merged_seconds(_job_spans(spark, first, stop))
+            best = (t, first, stop, compiles, df)
+    sec, first, stop, compiles, df = best
+    probe.drain()  # the store lags the listener bus
+    jobs = probe.jobs(first, stop)
+    job_s = merged_length([(s, e) for s, e, _ in jobs["intervals"]])
+    totals = jobs["totals"]
     return {
         "sec": round(sec, 4),
         "jobs": stop - first,
         "job_s": round(job_s, 4),
         "driver_gap_s": round(sec - job_s, 4),
         "codegen_compiles": compiles,
+        "stages": totals["exec.stages"],
+        "tasks": totals["exec.tasks"],
+        "task_cpu_s": round(totals["exec.task_cpu_s"], 4),
+        **{k.split(".", 1)[1]: v for k, v in plan_shape(df).items()},
     }
 
 

@@ -20,11 +20,16 @@ class CheckpointJanitor:
 
     def __init__(self, spark: SparkSession):
         self._sc = spark.sparkContext
-        self._before = set(self._sc._jsc.getPersistentRDDs().keySet())
+        self._before = self._persisted_ids()
+
+    def _persisted_ids(self) -> set[int]:
+        # One JVM call for the whole key set: iterating the Java set from
+        # Python costs one py4j round trip per persisted RDD.
+        keys = self._sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
+        return {int(k) for k in keys.split(",") if k}
 
     def _stale_ids(self) -> list:
-        jmap = self._sc._jsc.getPersistentRDDs()
-        return sorted(set(jmap.keySet()) - self._before)
+        return sorted(self._persisted_ids() - self._before)
 
     def free_all_but_latest(self) -> None:
         """Free every tracked checkpoint except the newest (the one the

@@ -260,9 +260,10 @@ def ann_topk_lsh(
     # asNondeterministic: the join condition references the sig-derived
     # columns, and the optimizer otherwise duplicates the kernel — the
     # executed plan carried TWO stacked ArrowEvalPython[sig] on EACH join
-    # side (captured in plans/r12/ann_lsh_before.txt), i.e. the corpus
-    # signature pass ran twice per query (guide §4.4). The kernel is
-    # pure; the flag only forbids the duplicating rewrite.
+    # side, i.e. the corpus signature pass ran twice per query (guide
+    # §4.4; the ann_lsh row of tests/plan_budget.json pins 3
+    # Python-boundary nodes, 5 without the flag). The kernel is pure;
+    # the flag only forbids the duplicating rewrite.
     sig = lsh_signature_fast(dim).asNondeterministic()
     corpus = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
@@ -353,8 +354,9 @@ def ann_topk_ivf(
 
     # asNondeterministic: the probe join's key is the cell_of-derived
     # column, and the optimizer otherwise plans the assignment kernel
-    # TWICE stacked over the corpus scan (plans/r12/ann_ivf_before.txt)
-    # — a full duplicate corpus encode pass (guide §4.4). Pure kernel;
+    # TWICE stacked over the corpus scan — a full duplicate corpus
+    # encode pass (guide §4.4; the ann_ivf row of tests/plan_budget.json
+    # pins 3 Python-boundary nodes, 4 without the flag). Pure kernel;
     # results unchanged.
     cell_of = cell_of.asNondeterministic()
 

@@ -257,10 +257,6 @@ REVERIFY = {
     #     hash-passed at sf0.01 in-round but are left to the registry
     #     rotation: with them the never-green set (59) would overflow
     #     the 50-row window (tests/test_coverage.py).
-    "stream_dedup_admitted": 18,
-    "stream_dedup_resketch": 18,
-    "stream_dedup_compacted": 18,
-    "stream_dedup_maintained": 18,
     "dedup_minhash_sigs": 18,
     "dedup_minhash_pairs": 18,
     "dedup_minhash_pairs_wide": 18,
@@ -268,6 +264,18 @@ REVERIFY = {
     "quality_logreg_fit": 18,
     "quality_logreg_score": 18,
     "quality_logreg_calibration": 18,
+    # r19: CheckpointJanitor (functions/checkpoints.py) reads the
+    #     persisted-RDD key set in one JVM call instead of one py4j round
+    #     trip per key. Same relations. Supersedes the r18 entries of
+    #     these keys. The janitor's other consumers, the connected
+    #     components and BPE plans (operators/components.py,
+    #     operators/bpe.py), hash-passed at sf0.01 in-round but are left to
+    #     the registry rotation: listing them would overflow the 50-row
+    #     window (tests/test_coverage.py).
+    "stream_dedup_admitted": 19,
+    "stream_dedup_resketch": 19,
+    "stream_dedup_compacted": 19,
+    "stream_dedup_maintained": 19,
 }
 
 

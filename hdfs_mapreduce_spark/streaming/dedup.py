@@ -240,8 +240,9 @@ def dedup_ingest_batch(
     # Every reject set below is duplicate-id-sized (bounded by the batch),
     # so each anti-join hints its reject side as a broadcast build: the
     # default planner shaped all four of them as SortMergeJoin LeftAnti
-    # (captured in plans/r12/dedup_ingest_*_bcast_before.txt) — two
-    # exchanges + two sorts per join, per micro-batch, to anti-join a
+    # — two exchanges + two sorts per join, per micro-batch (the
+    # dedup_ingest_batch:* rows of tests/plan_budget.json now pin two
+    # broadcast exchanges per write) — to anti-join a
     # relation the ingest contract bounds at batch size. Broadcast is the
     # scale-correct strategy at ANY corpus size for the same reason the
     # corpus probe already broadcasts the batch sketch (guide §3.1).

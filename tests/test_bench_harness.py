@@ -9,6 +9,8 @@ import os
 import pytest
 
 import bench
+from hdfs_mapreduce_spark.plans import QUERIES
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture
@@ -50,14 +52,6 @@ def test_configure_rejects_a_non_integer_shuffle_export(env, bad):
     env["SPARK_GRAFT_SHUFFLE"] = bad
     with pytest.raises(SystemExit, match="SPARK_GRAFT_SHUFFLE"):
         bench.configure("/data/sf0.1")
-
-
-def test_merged_seconds_counts_overlap_once():
-    assert bench._merged_seconds([]) == 0.0
-    assert bench._merged_seconds([(5.0, 6.0), (0.0, 2.0)]) == 3.0  # disjoint
-    assert bench._merged_seconds([(0.0, 2.0), (1.0, 3.0)]) == 3.0  # overlap
-    assert bench._merged_seconds([(0.0, 4.0), (1.0, 2.0)]) == 4.0  # nested
-    assert bench._merged_seconds([(0.0, 1.0), (1.0, 2.0)]) == 2.0  # touching
 
 
 def test_fit_line_stays_under_budget_and_keeps_failures_first():
@@ -110,6 +104,34 @@ def test_time_query_records_the_classes_an_execution_compiles(spark):
 
     cold = bench.time_query(spark, fn, "unused", reps=1)
     warm = bench.time_query(spark, fn, "unused", reps=1)
-    assert set(cold) == {"sec", "jobs", "job_s", "driver_gap_s", "codegen_compiles"}
+    assert set(cold) == {
+        "sec", "jobs", "job_s", "driver_gap_s", "codegen_compiles",
+        "stages", "tasks", "task_cpu_s", "exchanges", "python_nodes", "scans",
+    }
     assert cold["codegen_compiles"] > 0
     assert warm["codegen_compiles"] == 0
+
+
+def test_time_query_record_is_the_probes_read_of_its_job_range(spark):
+    """bench's record is perfbench's SparkProbe read of the timed job
+    range, plus plan_shape's node counts of the timed DataFrame."""
+    from stats import merged_length
+    from tracing import SparkProbe, plan_shape
+
+    fn = QUERIES["q7_join_agg"]
+    probe = SparkProbe(spark)
+    first = probe.next_job_id()
+    rec = bench.time_query(spark, fn, SF_SMOKE, reps=1)
+    stop = probe.next_job_id()
+    assert rec["jobs"] == stop - first > 0
+    jobs = probe.jobs(first, stop)
+    totals = jobs["totals"]
+    assert totals["exec.jobs"] == rec["jobs"]
+    assert rec["stages"] == totals["exec.stages"] > 0
+    assert rec["tasks"] == totals["exec.tasks"] >= rec["stages"]
+    assert rec["task_cpu_s"] == round(totals["exec.task_cpu_s"], 4)
+    job_s = merged_length([(s, e) for s, e, _ in jobs["intervals"]])
+    assert rec["job_s"] == round(job_s, 4)
+    shape = plan_shape(fn(spark, SF_SMOKE))
+    assert {f"plans.{k}": rec[k] for k in ("exchanges", "python_nodes", "scans")} == shape
+    assert rec["exchanges"] > 0 and rec["scans"] > 0

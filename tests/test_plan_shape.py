@@ -65,26 +65,19 @@ def test_q8_anti_join_strategy(spark):
 
 
 def test_text_tokens_map_only_scan(spark):
-    """Token counting is a pure map stage: only (doc_id, text) read, and the
-    only exchange is the final presentation sort."""
-    df = QUERIES["text_tokens"](spark, SF)
-    plan = plan_of(df)
+    """Token counting is a pure map stage: only (doc_id, text) read (its
+    exchange count is pinned by tests/plan_budget.json)."""
+    plan = plan_of(QUERIES["text_tokens"](spark, SF))
     read_schema = plan.split("ReadSchema")[1].splitlines()[0]
     assert "doc_id" in read_schema and "text" in read_schema
     assert "lang" not in read_schema
-    # simple mode prints each node once — count exchanges there.
-    # Allowed: the local-only spread() round-robin + the ORDER BY range
-    # exchange; no hash shuffle of token-level data may appear.
-    assert plan_of(df, "simple").count("Exchange") <= 2
 
 
 def test_minhash_signatures_single_shuffle(spark):
-    """Shingling is map-only (array-side build, no window); the only data
-    shuffle is the signature groupBy — plus the final ORDER BY exchange."""
+    """Shingling is map-only (array-side build, no window); the data
+    shuffle is the signature groupBy (exchanges pinned by
+    tests/plan_budget.json) — crucially NO per-token window shuffle."""
     plan = plan_of(QUERIES["dedup_minhash_sigs"](spark, SF), "simple")
-    # spread() round-robin (local-only) + groupBy hash + ORDER BY range;
-    # crucially NO per-token window shuffle.
-    assert plan.count("Exchange") <= 3
     assert "Window" not in plan
     assert plan.count("HashAggregate") >= 2  # map-side partial mins
 
@@ -162,10 +155,9 @@ def test_metadata_scan_prunes_payload(spark, tmp_path):
 
 def test_text_analysis_stays_jvm_side(spark):
     """Text analysis is pure Column expressions — no Python evaluation node
-    (BatchEvalPython / ArrowEvalPython / mapInPandas) may appear: one Project
-    straight over the FileScan."""
+    (tests/plan_budget.json pins 0): one Project straight over the
+    FileScan."""
     plan = plan_of(QUERIES["text_quality"](spark, SF), mode="simple")
-    assert "Python" not in plan
     assert "FileScan parquet" in plan
 
 
@@ -215,11 +207,11 @@ def test_tpch_q10_topk_no_global_sort(spark):
 
 def test_bm25_single_scan_no_python(spark):
     """BM25 with constant terms: tf counts are array-side in one map pass —
-    no Python node, no token-explode shuffle; stats come back as a 1-row
-    broadcast; top-k is TakeOrdered, never a global sort."""
+    no Python node (pinned by tests/plan_budget.json), no token-explode
+    shuffle; stats come back as a 1-row broadcast; top-k is TakeOrdered,
+    never a global sort."""
     df = QUERIES["text_bm25"](spark, SF)
     plan = plan_of(df, "simple")
-    assert "Python" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "TakeOrderedAndProject" in plan
 
@@ -235,11 +227,10 @@ def test_tfidf_broadcasts_df_and_group_limits(spark):
 
 
 def test_pipeline_chunk_map_only(spark):
-    """Chunking is array-side + one explode: no Python node, no exchange
-    except the presentation sort."""
+    """Chunking is array-side + one explode (its Python-node and exchange
+    counts are pinned by tests/plan_budget.json)."""
     plan = plan_of(QUERIES["pipeline_chunk"](spark, SF), "simple")
-    assert "Python" not in plan
-    assert plan.count("Exchange") <= 2  # spread() repartition + ORDER BY
+    assert plan.count("Generate") == 1, plan
 
 
 def test_paragraph_scrub_uses_window_group_limit(spark):
@@ -252,9 +243,9 @@ def test_paragraph_scrub_uses_window_group_limit(spark):
 
 def test_bloom_semi_prefilters_before_exchange(spark):
     """The Bloom probe must sit under the fact side's exchange (filter at
-    the scan stage), and the whole probe stays JVM-side."""
+    the scan stage), and the whole probe stays JVM-side (no Python node:
+    tests/plan_budget.json)."""
     plan = plan_of(QUERIES["events_bloom_semi"](spark, SF), "formatted")
-    assert "Python" not in plan
     assert "might_contain" not in plan  # hand-rolled, no optimizer construct
     tree = plan.split("\n\n")[0]
     # the bloom map broadcast feeds a BroadcastNestedLoopJoin/BHJ below the
@@ -263,12 +254,12 @@ def test_bloom_semi_prefilters_before_exchange(spark):
 
 
 def test_scalar_funcs_map_only(spark):
-    """The scalar suite is one codegen'd Project over the scan: no Python
-    node, no exchange except the presentation sort."""
-    df = QUERIES["scalar_funcs"](spark, SF)
-    plan = plan_of(df, "simple")
-    assert "Python" not in plan
-    assert plan.count("Exchange") <= 1  # ORDER BY range partitioning only
+    """The scalar suite is one codegen'd Project over the scan: no join,
+    aggregate or window (its Python-node and exchange counts are pinned by
+    tests/plan_budget.json)."""
+    plan = plan_of(QUERIES["scalar_funcs"](spark, SF), "simple")
+    for op in ("Join", "Aggregate", "Window"):
+        assert op not in plan, (op, plan)
 
 
 def test_boilerplate_ngrams_topk_and_partial_agg(spark):
@@ -296,11 +287,12 @@ def test_domain_cap_window_group_limit(spark):
 
 
 def test_embedding_quantize_map_only(spark):
-    """int8 quantization audit is one codegen'd Project chain: no Python
-    node, no shuffle except the presentation sort."""
+    """int8 quantization audit is one codegen'd Project chain: no join,
+    aggregate or window (its Python-node and exchange counts are pinned
+    by tests/plan_budget.json)."""
     plan = plan_of(QUERIES["embedding_quantize"](spark, SF), "simple")
-    assert "Python" not in plan
-    assert plan.count("Exchange") <= 1, plan
+    for op in ("Join", "Aggregate", "Window"):
+        assert op not in plan, (op, plan)
 
 
 def test_dedup_incremental_broadcasts_batch_sketch(spark):
@@ -404,11 +396,9 @@ def test_q25_grouping_sets_expand_plus_partial_agg(spark):
 def test_dataset_shuffle_single_exchange_before_shard_sort(spark):
     """The seeded shard shuffle is one hash exchange on the shard key into
     the per-shard window sort; no second corpus shuffle beyond the
-    presentation sort."""
+    presentation sort (exchanges pinned by tests/plan_budget.json)."""
     plan = plan_of(QUERIES["dataset_shuffle"](spark, SF), "simple")
     assert plan.count("Scan parquet") == 1
-    # window's partitioning exchange + the final orderBy range exchange
-    assert plan.count("Exchange") <= 3
 
 
 def test_nb_lang_confusion_reuses_the_tf_exchange(spark):
@@ -447,24 +437,24 @@ def test_bucketed_upsert_control_pair_is_asserted_in_streaming_tests():
 
 
 def test_pq_encode_single_kernel_map_only(spark):
-    """PQ encode is ONE Arrow kernel over the scan (codebook in the
-    closure = broadcast) — exactly one MapInPandas, and no exchange
-    except the presentation sort."""
+    """PQ encode is an Arrow map kernel over the scan with the codebook in
+    its closure, so no join (tests/plan_budget.json pins one Python node
+    and the exchanges)."""
     plan = plan_of(QUERIES["embedding_pq_codes"](spark, SF), "simple")
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.count("Exchange") <= 1, plan  # ORDER BY only
+    assert "MapInPandas" in plan, plan
+    assert "Join" not in plan, plan
 
 
 @pytest.mark.parametrize("query", ["ann_pq", "ann_ivfpq", "ann_ivfpq_residual"])
 def test_adc_one_corpus_pass_then_topk(spark, query):
-    """ADC search: one fused encode+score kernel over the corpus (for the
-    IVF-PQ pair, cell pruning fused into it too), then the per-query
-    top-k — a single shuffle for the window plus the presentation sort;
-    the tiny query-side collects are driver-side model state, not plan
-    nodes."""
+    """ADC search: one fused encode+score map kernel over the corpus (for
+    the IVF-PQ pair, cell pruning fused into it too), then the per-query
+    top-k (tests/plan_budget.json pins the Python nodes and exchanges);
+    the tiny query-side collects are driver-side model state, not a
+    joined relation."""
     plan = plan_of(QUERIES[query](spark, SF), "simple")
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.count("Exchange") <= 2, plan  # window hash + final range
+    assert "MapInPandas" in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_lsh_recall_exact_side_is_capped(spark):

@@ -1,111 +1,110 @@
 """Plan evidence for declared queries, under bench.py's session config.
 
-Run: python tools/plans.py [--dump SUFFIX] [query ...]
+Run: python tools/plans.py [--budget | query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01),
-     SPARK_GRAFT_PLAN_DIR (default r14 — the round subdir under plans/).
+     whose sibling BUDGET_SF fixture --budget plans at.
 
 Prints one audit row per query (default: every non-stream_* query, whose
-callables run a whole pipeline eagerly): the executed plan's
-Python-boundary nodes, Exchanges, ReusedExchanges and parquet scans, and
-the seconds to build the DataFrame. ``--dump SUFFIX`` also writes the
-``.explain("formatted")`` plan to plans/<round>/<query>_<suffix>.txt, and
-the plan of every parquet write the query runs (a DataFrameWriter.parquet
-spy explains each write right before it executes — e.g. the online-dedup
-ingest's accepted/sketch state writes) to
-plans/<round>/<query>_write_<target>_<suffix>.txt, <target> being the
-write path's last two components.
+callables run a whole pipeline eagerly): perfbench's ``plan_shape`` of
+the executed plan (Python-boundary nodes, exchanges — a reused exchange
+counts as one — and scans) and the seconds to build the DataFrame.
+``--budget`` writes every such row, plus the two state writes of one
+``dedup_ingest_batch`` over non-empty state, to tests/plan_budget.json,
+which tests/test_relational.py::test_plan_budget checks exactly.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
+import shutil
 import sys
-import threading
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
-PY_NODES = (
-    "MapInPandas",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "FlatMapGroupsInPandas",
-    "MapInArrow",
-)
+BUDGET = os.path.join(bench.HERE, "tests", "plan_budget.json")
+BUDGET_SF = "sf0.001"  # the fixture the budget is planned at
 
 
-def _explain(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def shape(df) -> dict[str, int]:
+    """``plan_shape`` of a fresh re-plan of ``df`` with AQE off (bench's
+    setting; adaptive plans count some nodes differently)."""
+    conf, key = df.sparkSession.conf, "spark.sql.adaptive.enabled"
+    aqe = conf.get(key)
+    conf.set(key, "false")
+    try:
+        counts = bench.plan_shape(df.select("*"))
+    finally:
+        conf.set(key, aqe)
+    return {k.split(".", 1)[1]: v for k, v in counts.items()}
 
 
 def main() -> None:
-    import pyspark.sql.readwriter as rw
-
     args = sys.argv[1:]
-    suffix = None
-    if args[:1] == ["--dump"]:
-        if len(args) < 2:
-            sys.exit("usage: plans.py [--dump SUFFIX] [query ...]")
-        suffix, args = args[1], args[2:]
+    budget = args == ["--budget"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    if budget:
+        sf_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), BUDGET_SF)
     spark, conf = bench.session("plans", sf_dir)
     print(json.dumps(conf))
     import __spark_entry__ as entry
 
     queries = entry.queries()
-    outdir = os.path.join(
-        bench.HERE, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r14")
-    )
-
-    def dump(stem: str, text: str) -> None:
-        os.makedirs(outdir, exist_ok=True)
-        path = os.path.join(outdir, f"{stem}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(text)
-        print(f"wrote {path}")
-
-    # writes may come from driver-pool threads, hence the lock
-    writes: list[tuple[str, str]] = []
-    lock = threading.Lock()
-    parquet = rw.DataFrameWriter.parquet
-
-    def spy(self, path, *a, **kw):
-        with lock:
-            writes.append((path, _explain(self._df)))
-        return parquet(self, path, *a, **kw)
-
-    if suffix:
-        rw.DataFrameWriter.parquet = spy
-    print(f"{'query':36s} {'py':>3s} {'exch':>4s} {'reuse':>5s} {'scans':>5s} {'build_s':>7s}")
-    for name in args or [n for n in queries if not n.startswith("stream_")]:
-        writes.clear()
+    rows = {}
+    print(f"{'query':36s} {'py':>3s} {'exch':>4s} {'scans':>5s} {'build_s':>7s}")
+    default = [n for n in queries if not n.startswith("stream_")]
+    for name in args if args and not budget else default:
         t0 = time.perf_counter()
         try:
             df = queries[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            build_s = time.perf_counter() - t0
+            rows[name] = row = shape(df)
         except Exception as exc:
             print(f"{name}: ERR {type(exc).__name__}: {exc}"[:300])
             continue
-        build_s = time.perf_counter() - t0
-        py = sum(plan.count(k) for k in PY_NODES)
-        rx = plan.count("ReusedExchange")
-        ex = plan.count("Exchange") - rx
-        scans = plan.count("Scan parquet")
-        print(f"{name:36s} {py:3d} {ex:4d} {rx:5d} {scans:5d} {build_s:7.2f}")
-        if suffix:
-            dump(name, _explain(df))
-            for path, wplan in writes:
-                target = "/".join(path.rstrip("/").split("/")[-2:])
-                stem = re.sub(r"[^A-Za-z0-9=._-]", "_", target)
-                dump(f"{name}_write_{stem}", f"-- write target: .../{target}\n{wplan}")
-    rw.DataFrameWriter.parquet = parquet
+        py, ex, sc = row["python_nodes"], row["exchanges"], row["scans"]
+        print(f"{name:36s} {py:3d} {ex:4d} {sc:5d} {build_s:7.2f}")
+    if budget:
+        rows.update(ingest_write_rows(spark, sf_dir))
+        lines = [f"  {json.dumps(n)}: {json.dumps(rows[n])}" for n in sorted(rows)]
+        with open(BUDGET, "w") as f:  # one row per line: diffs read by row
+            f.write("{\n" + ",\n".join(lines) + "\n}\n")
+        print(f"wrote {BUDGET}")
     spark.stop()
+
+
+def ingest_write_rows(spark, sf_dir: str) -> dict[str, dict[str, int]]:
+    """Rows of the accepted and sketch writes of one ``dedup_ingest_batch``
+    over non-empty state, planned after the call from the DataFrames a
+    DataFrameWriter.parquet spy kept (the writes run on pool threads)."""
+    import pyspark.sql.readwriter as rw
+
+    from hdfs_mapreduce_spark.sources.catalog import load_table
+    from hdfs_mapreduce_spark.streaming.dedup import dedup_ingest_batch
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    writes = {}
+    parquet = rw.DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        writes[path.rstrip("/").split("/")[-2]] = self._df
+        return parquet(self, path, *a, **kw)
+
+    state = tempfile.mkdtemp(prefix="plan_budget_")
+    try:
+        dedup_ingest_batch(docs.filter("doc_id % 2 = 0"), 0, state)
+        rw.DataFrameWriter.parquet = spy
+        try:
+            dedup_ingest_batch(docs.filter("doc_id % 2 = 1"), 1, state)
+        finally:
+            rw.DataFrameWriter.parquet = parquet
+        return {f"dedup_ingest_batch:{t}": shape(df) for t, df in writes.items()}
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
 
 
 if __name__ == "__main__":
