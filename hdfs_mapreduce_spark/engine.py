@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from hdfs_mapreduce_spark.functions.plugin import run_mapreduce
+from hdfs_mapreduce_spark.sources import fs as hfs
 
 # The reference streams these job milestones to the client while a COMPUTE
 # runs (proto/dfs.proto:95-107 ComputationStatus, dfs/controller/
@@ -55,23 +56,8 @@ class Engine:
         self.spark = spark
         self.warehouse = warehouse
         self._registered_views: set[str] = set()
-        fs, path = self._fs_path(warehouse)
+        fs, path = hfs.fs_and_path(self.spark, warehouse)
         fs.mkdirs(path)
-
-    # --- Hadoop FS plumbing ----------------------------------------------------
-    def _jpath(self, path_str: str):
-        from hdfs_mapreduce_spark.sources import fs as hfs
-
-        return hfs.jpath(self.spark, path_str)
-
-    def _fs_path(self, path_str: str):
-        """(FileSystem, Path) for any URI the Hadoop conf can resolve —
-        LocalFileSystem for bare paths, DistributedFileSystem for hdfs://,
-        the object-store connectors for s3a:// etc. (shared implementation:
-        sources/fs.py, which the streaming state dirs also use)."""
-        from hdfs_mapreduce_spark.sources import fs as hfs
-
-        return hfs.fs_and_path(self.spark, path_str)
 
     def _path(self, name: str) -> str:
         return f"{self.warehouse.rstrip('/')}/{name}"
@@ -128,7 +114,7 @@ class Engine:
         nesting order IS the layout, so it must be preserved exactly, not
         sorted; a top-level-only look sees just the first level and a
         compact/append would silently flatten the rest."""
-        fs, path = self._fs_path(self._path(name))
+        fs, path = hfs.fs_and_path(self.spark, self._path(name))
         cols: list[str] = []
         while fs.exists(path):
             part_dirs = [
@@ -215,7 +201,7 @@ class Engine:
 
     # --- ls (S6) ---------------------------------------------------------------
     def ls(self) -> list[str]:
-        fs, path = self._fs_path(self.warehouse)
+        fs, path = hfs.fs_and_path(self.spark, self.warehouse)
         return sorted(
             st.getPath().getName()
             for st in fs.listStatus(path)
@@ -224,7 +210,7 @@ class Engine:
 
     # --- rm (S7) ---------------------------------------------------------------
     def rm(self, name: str) -> None:
-        fs, path = self._fs_path(self._path(name))
+        fs, path = hfs.fs_and_path(self.spark, self._path(name))
         if not fs.exists(path):
             raise FileNotFoundError(name)
         fs.delete(path, True)
@@ -243,7 +229,7 @@ class Engine:
         from an in-flight or crashed write holds parquet files Spark
         readers will never see, and counting them would overstate the
         table."""
-        fs, root = self._fs_path(self._path(name))
+        fs, root = hfs.fs_and_path(self.spark, self._path(name))
         root_uri = root.toUri().getPath()
         n_files = n_bytes = 0
         it = fs.listFiles(root, True)
@@ -304,12 +290,12 @@ class Engine:
         renames swap it in: readers see the old file set or the new one,
         never a mix. Returns {files_before, files_after, n_bytes}.
         """
-        fs, cur = self._fs_path(self._path(name))
+        fs, cur = hfs.fs_and_path(self.spark, self._path(name))
         if not fs.exists(cur):
             raise FileNotFoundError(name)
         before = self._table_stats(name)["n_files"]
-        tmp = self._jpath(self._path(f"_compact_tmp_{name}"))
-        old = self._jpath(self._path(f"_compact_old_{name}"))
+        tmp = hfs.jpath(self.spark, self._path(f"_compact_tmp_{name}"))
+        old = hfs.jpath(self.spark, self._path(f"_compact_old_{name}"))
         # preserve a hive-partitioned layout — every level, in nesting
         # order: a flat (or partially flat) rewrite would keep the data
         # (partition columns read back as normal columns) but silently

@@ -22,7 +22,6 @@ from hdfs_mapreduce_spark.operators.materialize import (
     materialize,
     materialize_banded_sketch,
     materialize_minhash_pairs,
-    materialize_minhash_signatures,
     purge_scratch,
     session_scratch_dir,
 )
@@ -85,7 +84,6 @@ __all__ = [
     "materialize",
     "materialize_banded_sketch",
     "materialize_minhash_pairs",
-    "materialize_minhash_signatures",
     "purge_scratch",
     "session_scratch_dir",
     "pack_sequences",

@@ -155,19 +155,3 @@ def materialize_banded_sketch(
     sketch = _banded_sketch(docs, id_col, text_col, n_perm, n_bands)
     return materialize(sketch, name, base)
 
-
-def materialize_minhash_signatures(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    name: str = "minhash_sigs",
-    base: str | None = None,
-) -> DataFrame:
-    """The per-document minhash sketch table, materialized — the probe
-    side of incremental dedup: a nightly batch bands against this table
-    without touching the corpus text (operators/dedup.py:
-    incremental_minhash_dedup)."""
-    from hdfs_mapreduce_spark.operators.dedup import minhash_signatures
-
-    sigs = minhash_signatures(docs, id_col, text_col)
-    return materialize(sigs, name, base)

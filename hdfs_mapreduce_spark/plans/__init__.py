@@ -86,7 +86,11 @@ DRIVER_WINDOW = 50
 # stream_upsert_snapshot r6/r11/r12; stream_dedup_admitted r6/r11/r14;
 # stream_upsert_log_snapshot r7; stream_heavy_hitters_audit r12 (the
 # r11-ADVICE fixes: glob-escaped listing bases and state reads);
-# stream_cdc_apply and ann_probe_rebuilt r13.
+# stream_cdc_apply and ann_probe_rebuilt r13; stream_upsert_log_snapshot,
+# stream_cdc_apply, logtable_cdf, logtable_ivm and dq_checks_incremental
+# r15; stream_upsert_snapshot, stream_heavy_hitters_audit,
+# stream_ann_ingest_topk, stream_ann_ingest_fenced, ann_probe_deleted and
+# ann_probe_rebuilt r17 (their r20 entries below supersede these).
 REVERIFY = {
     "dedup_simhash_pairs": 5,
     # r6 (second half): oracle text gained MATERIALIZED CTE hints (the
@@ -185,18 +189,13 @@ REVERIFY = {
     #     ANN-ingest streams, the CDF family, the tombstone-reading ANN
     #     probes); the dedup state lists committed batch ids through one
     #     helper (compact_state's per-id _SUCCESS probes became one glob
-    #     per tree); the MG audit reads its state via read_upsert_state.
-    #     Same relations. Supersedes the r7, r12, r13 and r14 entries of
-    #     these keys.
+    #     per tree); the MG audit reads its state via the upsert
+    #     state reader. Same relations. Supersedes the r7, r12, r13 and
+    #     r14 entries of these keys.
     "stream_windowed_stats": 15,
     "stream_sliding_stats": 15,
     "stream_attribution": 15,
     "stream_session_stats": 15,
-    "stream_upsert_log_snapshot": 15,
-    "stream_cdc_apply": 15,
-    "logtable_cdf": 15,
-    "logtable_ivm": 15,
-    "dq_checks_incremental": 15,
     # r16: Python tasks run under the engine's worker daemon
     #     (hdfs_mapreduce_spark/pydaemon.py: pyspark's daemon with a
     #     stat-guarded zipimporter.invalidate_caches). Same relations;
@@ -236,13 +235,7 @@ REVERIFY = {
     "dedup_crosscheck_bucketed": 17,
     "ann_probe_persisted": 17,
     "ann_probe_appended": 17,
-    "ann_probe_deleted": 17,
-    "ann_probe_rebuilt": 17,
     "ann_probe_vacuumed": 17,
-    "stream_ann_ingest_topk": 17,
-    "stream_ann_ingest_fenced": 17,
-    "stream_upsert_snapshot": 17,
-    "stream_heavy_hitters_audit": 17,
     # r18: the wide generated expressions are SQL text parsed once by the
     #     JVM instead of Column-call chains (operators/dedup.py: the
     #     MinHash MIN aggregates, the band-key array, the band-join
@@ -276,6 +269,27 @@ REVERIFY = {
     "stream_dedup_resketch": 19,
     "stream_dedup_compacted": 19,
     "stream_dedup_maintained": 19,
+    # r20: one state log. stream_upsert_snapshot drains the logtable
+    #     upsert sink (merge-on-read over two live versions) instead of
+    #     the directory-versioned rewrite sink, and the Misra-Gries sink
+    #     behind stream_heavy_hitters_audit commits each merged summary
+    #     as a logtable full-state commit (replace_batch) read back with
+    #     latest_state. Every other consumer of the logtable's commit log
+    #     runs the changed _log_versions (one log grammar: the legacy
+    #     filename-only entries and the data-dir fallback are gone) and
+    #     _is_replay (skips entries with no batch id instead of compact
+    #     entries). Same relations.
+    "stream_upsert_snapshot": 20,
+    "stream_heavy_hitters_audit": 20,
+    "stream_upsert_log_snapshot": 20,
+    "stream_cdc_apply": 20,
+    "logtable_cdf": 20,
+    "logtable_ivm": 20,
+    "dq_checks_incremental": 20,
+    "stream_ann_ingest_topk": 20,
+    "stream_ann_ingest_fenced": 20,
+    "ann_probe_deleted": 20,
+    "ann_probe_rebuilt": 20,
 }
 
 

@@ -20,9 +20,9 @@ Determinism contract per query (what makes a hash oracle possible):
   guaranteed complete there and emits nothing extra, so terminal ∩ closed
   == batch ∩ closed.
 * the upsert sink's terminal snapshot is one row per event_id regardless
-  of batch boundaries (the anti-join merge is idempotent); the staged
-  source feeds every event TWICE across two micro-batches so the merge
-  path genuinely runs, and event_id is unique in the events table, so the
+  of batch boundaries (the newest row per key wins); the staged source
+  feeds every event TWICE across two micro-batches so the merge-on-read
+  genuinely merges, and event_id is unique in the events table, so the
   snapshot equals the events relation itself.
 * Misra-Gries heavy hitters: the maintained state depends on batch
   boundaries, so the declared relation is the bound AUDIT in the
@@ -35,12 +35,12 @@ Determinism contract per query (what makes a hash oracle possible):
   probe-then-admit rounds over the shared MinHash CTEs.
 
 Scale: the streams themselves carry the scale posture (watermarked
-bounded state, broadcast batch sketches, versioned idempotent sinks —
-see streaming/events.py and streaming/dedup.py); this module only stages
-sources, drives the run, and reads the terminal state. Running a stream
-inside a ``queries()`` callable is the availableNow backfill pattern — a
-production deployment starts the same writer without the trigger and
-lets it run forever.
+bounded state, broadcast batch sketches, replay-safe logged sinks —
+see streaming/events.py, streaming/logtable.py and streaming/dedup.py);
+this module only stages sources, drives the run, and reads the terminal
+state. Running a stream inside a ``queries()`` callable is the
+availableNow backfill pattern — a production deployment starts the same
+writer without the trigger and lets it run forever.
 """
 
 from __future__ import annotations
@@ -186,60 +186,19 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Terminal snapshot of the versioned upsert sink after feeding every
-    event TWICE across two micro-batches (maxFilesPerTrigger=1 over two
-    staged copies): batch 0 seeds the state, batch 1's rows all hit the
-    anti-join — the merge path runs for real, and the terminal snapshot
-    must still be exactly one row per event_id (= the events relation,
-    event_id being unique)."""
-    from hdfs_mapreduce_spark.streaming.events import (
-        _events_stream,
-        read_upsert_state,
-        stream_upsert_events,
-    )
-
-    root = _scratch(spark, "upsert", sf_dir)
-    _run(
-        stream_upsert_events(
-            spark,
-            sf_dir,
-            os.path.join(root, "state"),
-            stream=_events_stream(spark, sf_dir, copies=2),
-        ),
-        None,
-        os.path.join(root, "ckpt"),
-    )
-    snap = read_upsert_state(spark, os.path.join(root, "state"))
-    return snap.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.col("ts").cast("timestamp_ntz").alias("ts"),
-    ).orderBy("event_id")
-
-
-def stream_upsert_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Terminal snapshot of the LOG-STRUCTURED upsert table
-    (streaming/logtable.py): the same two-batch duplicate feed as
-    stream_upsert_snapshot, but each micro-batch COMMITS O(batch)
-    appended rows to an immutable data version + an atomic log entry
-    instead of rewriting the whole state — the ACID-table-format
-    (Delta/Iceberg MERGE) economics, in-repo. After the stream drains,
-    one ``compact()`` materializes the merge-on-read snapshot as a single
-    version (exercising both the multi-version newest-row-per-key read
-    and the OPTIMIZE path), and the declared relation is the snapshot —
-    which must equal the events relation exactly, same oracle as the
-    rewrite sink."""
+def _drain_twice_fed_upsert(
+    spark: SparkSession, sf_dir: str, name: str
+) -> str:
+    """Feed every event TWICE across two micro-batches
+    (maxFilesPerTrigger=1 over two staged copies) through the logtable
+    upsert sink: batch 0 seeds the table, batch 1 re-upserts every key.
+    Returns the table root."""
     from hdfs_mapreduce_spark.streaming.events import _events_stream
     from hdfs_mapreduce_spark.streaming.logtable import (
-        compact,
-        snapshot,
         stream_upsert_events_logtable,
     )
 
-    root = _scratch(spark, "upsert_log", sf_dir)
+    root = _scratch(spark, name, sf_dir)
     table_root = os.path.join(root, "table")
     _run(
         stream_upsert_events_logtable(
@@ -251,15 +210,52 @@ def stream_upsert_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         None,
         os.path.join(root, "ckpt"),
     )
+    return table_root
+
+
+def _events_snapshot(spark: SparkSession, table_root: str) -> DataFrame:
+    """The upsert table's snapshot in the events relation's shape."""
+    from hdfs_mapreduce_spark.streaming.logtable import snapshot
+
+    return (
+        snapshot(spark, table_root, "event_id")
+        .select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            F.col("ts").cast("timestamp_ntz").alias("ts"),
+        )
+        .orderBy("event_id")
+    )
+
+
+def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Terminal snapshot of the upsert sink (streaming/logtable.py) after
+    the two-copy feed, read merge-on-read across both live versions with
+    no compaction: it must still be exactly one row per event_id (= the
+    events relation, event_id being unique)."""
+    return _events_snapshot(
+        spark, _drain_twice_fed_upsert(spark, sf_dir, "upsert")
+    )
+
+
+def stream_upsert_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Terminal snapshot of the LOG-STRUCTURED upsert table
+    (streaming/logtable.py) after the same two-copy feed as
+    stream_upsert_snapshot: each micro-batch COMMITS O(batch) appended
+    rows to an immutable data version + an atomic log entry — the
+    ACID-table-format (Delta/Iceberg MERGE) economics, in-repo. After
+    the stream drains, one ``compact()`` materializes the merge-on-read
+    snapshot as a single version (the OPTIMIZE path), and the declared
+    relation is the compacted snapshot, where stream_upsert_snapshot
+    reads the two live versions — it must equal the events relation
+    exactly, the same oracle."""
+    from hdfs_mapreduce_spark.streaming.logtable import compact
+
+    table_root = _drain_twice_fed_upsert(spark, sf_dir, "upsert_log")
     compact(spark, table_root, "event_id")
-    snap = snapshot(spark, table_root, "event_id")
-    return snap.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.col("ts").cast("timestamp_ntz").alias("ts"),
-    ).orderBy("event_id")
+    return _events_snapshot(spark, table_root)
 
 
 # logtable_cdf staging: three deterministic commits over the events
@@ -738,10 +734,8 @@ def stream_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact > N/(k+1)) present, and every estimate within
     [exact − N/(k+1), exact]. The oracle pins the exact count and literal
     TRUEs — engine-specific state contents never enter the hash."""
-    from hdfs_mapreduce_spark.streaming.events import (
-        read_upsert_state,
-        stream_heavy_hitters,
-    )
+    from hdfs_mapreduce_spark.streaming.events import stream_heavy_hitters
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     root = _scratch(spark, "mg", sf_dir)
     state = os.path.join(root, "state")
@@ -750,7 +744,7 @@ def stream_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         None,
         os.path.join(root, "ckpt"),
     )
-    mg = read_upsert_state(spark, state)
+    mg = latest_state(spark, state)
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("item"))

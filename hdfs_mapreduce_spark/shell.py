@@ -84,7 +84,9 @@ def list_remote_paths(eng) -> list[str]:
     ``ls`` the reference's dir tree renders. A directory is a TABLE leaf
     when it has any plain-file child (parquet part files / _SUCCESS);
     directories with only directory children are virtual folders."""
-    fs, root = eng._fs_path(eng.warehouse)
+    from hdfs_mapreduce_spark.sources import fs as hfs
+
+    fs, root = hfs.fs_and_path(eng.spark, eng.warehouse)
     rootstr = str(root.toUri().getPath()).rstrip("/")
     out: list[str] = []
 

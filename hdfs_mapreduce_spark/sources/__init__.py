@@ -1,9 +1,6 @@
 from hdfs_mapreduce_spark.sources.catalog import (
     TABLES,
-    ingest_text,
     load_table,
-    load_tables,
-    register_views,
     spread,
     write_bucketed,
     write_table,
@@ -11,10 +8,7 @@ from hdfs_mapreduce_spark.sources.catalog import (
 
 __all__ = [
     "TABLES",
-    "ingest_text",
     "load_table",
-    "load_tables",
-    "register_views",
     "spread",
     "write_bucketed",
     "write_table",

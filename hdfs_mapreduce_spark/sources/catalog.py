@@ -122,27 +122,6 @@ _SPREAD_CACHE: "weakref.WeakKeyDictionary[DataFrame, DataFrame]" = (
 )
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works directly —
-    the ``ls``-visible namespace of the new engine."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def ingest_text(spark: SparkSession, path: str) -> DataFrame:
-    """Reference ingest path: a text file becomes (one line per row), the
-    chunked-upload equivalent (dfs/client/chunkinator.go:35-112 splits at
-    newline-aligned 256 KiB boundaries; Spark split planning does the same job
-    at spark.sql.files.maxPartitionBytes granularity)."""
-    return spark.read.text(path)
-
-
 def ingest_text_with_lineno(spark: SparkSession, path: str) -> DataFrame:
     """Text ingest with the reference's mapper key: a stable 0-based line
     number per file (dfs/compute_engine/compute_engine.go:47-53 keys each

@@ -1,7 +1,7 @@
 """Hadoop FileSystem path operations for state/table directories.
 
-Streaming state (the upsert sink's ``v{N}`` versions, the online dedup
-loop's ``batch_id=N`` partitions) must live wherever the cluster's
+Streaming state (the logtable's commit log and data dirs, the online
+dedup loop's ``batch_id=N`` partitions) must live wherever the cluster's
 storage is — ``hdfs://``, ``s3a://``, ``file:///`` — not just on the
 driver's local disk. Python ``os.*`` calls only ever see the local
 filesystem, so every directory listing / existence probe / mkdir on a
@@ -12,9 +12,8 @@ s3a:// etc.), reached over the session's py4j gateway. Each call is one
 driver-side RPC — these helpers are for BOUNDED metadata (a handful of
 version dirs per state table), never for per-row work.
 
-This is the same pattern Engine uses for its warehouse
-(engine.py ``_fs_path``); it delegates here so there is exactly one
-implementation.
+Engine's warehouse verbs (engine.py) and the shell call the same
+helpers, so there is exactly one implementation.
 """
 
 from __future__ import annotations

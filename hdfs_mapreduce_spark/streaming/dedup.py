@@ -17,11 +17,11 @@ before it, without ever re-deduplicating the corpus against itself:
            batch N's survivors.
 
 State is directory-versioned per micro-batch (``batch_id=<n>``
-subdirectories written with overwrite), the same replay-safe discipline
-as streaming/events.py's upsert sink: a failed batch re-runs
-idempotently — its overwrite replaces its own partial output, and the
-probe for batch N reads only batch dirs < N, so a replay can never match
-a document against its own earlier attempt.
+subdirectories written with overwrite; a dir counts once its _SUCCESS
+marker lands): a failed batch re-runs idempotently — its overwrite
+replaces its own partial output, and the probe for batch N reads only
+batch dirs < N, so a replay can never match a document against its own
+earlier attempt.
 
 At 100 TB the sketch table is the only state that grows, it is
 band-bucketed parquet (probe = scan of matching band rows), and the
@@ -94,8 +94,7 @@ def committed_batch_ids(spark: SparkSession, path: str) -> list[int]:
     """Ascending ids of the COMMITTED ``path/batch_id=*`` dirs (Spark
     writes _SUCCESS last): a crash mid-write leaves a marker-less partial
     dir that must stay invisible until its batch replays and overwrites
-    it — same discipline as the upsert sink's version listing
-    (streaming/events.py). ONE globStatus RPC finds every committed dir
+    it. ONE globStatus RPC finds every committed dir
     (round 11: the former listing + one exists per dir paid one round
     trip per batch of stream age — per HTTP call on an object store).
     Goes through the Hadoop FS API (sources/fs.py), so the state root may

@@ -31,8 +31,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from hdfs_mapreduce_spark.sources import fs as hfs
 from hdfs_mapreduce_spark.sources.catalog import _nanos_timestamp_cols, load_table
+from hdfs_mapreduce_spark.streaming.logtable import latest_state, replace_batch
 
 SESSION_GAP_MIN = 30
 
@@ -357,98 +357,6 @@ def stream_dedup_events(
     return _checkpointed(deduped.writeStream.outputMode("append"), checkpoint_dir)
 
 
-def _state_versions(
-    spark: SparkSession, state_dir: str
-) -> list[tuple[int, int | None, str]]:
-    """COMMITTED versions of a directory-versioned state table, ascending
-    by version number: (version, batch_id or None, dirname). Version dirs
-    are ``v{N}`` or ``v{N}_b{batchId}`` (the latter records which stream
-    batch produced the version, for replay detection by sinks whose merge
-    is NOT idempotent). A version counts only if its parquet write
-    finished (_SUCCESS marker): a crash mid-write leaves a partial
-    directory, and treating it as latest would silently drop rows on
-    recovery — partials are invisible here and simply overwritten by the
-    retry. Listing and the marker probes go through the Hadoop FS API
-    (sources/fs.py), so ``state_dir`` may be any URI the cluster's Hadoop
-    conf resolves — hdfs://, s3a://, file:///, or a bare local path —
-    at a cost of ONE globStatus metadata RPC regardless of version count
-    (round 11 — was a listing plus one exists probe per version, each a
-    full HTTP round trip on an object store)."""
-    out = []
-    for d in hfs.glob_parent_names(spark, state_dir, "v*", "_SUCCESS"):
-        if not d.startswith("v"):
-            continue
-        core, _, btag = d[1:].partition("_b")
-        if not core.isdigit() or (btag and not btag.isdigit()):
-            continue
-        out.append((int(core), int(btag) if btag else None, d))
-    return sorted(out)
-
-
-def stream_upsert_events(
-    spark: SparkSession,
-    sf_dir: str,
-    state_dir: str,
-    checkpoint_dir: str | None = None,
-    stream: DataFrame | None = None,
-):
-    """Incremental upsert sink via ``foreachBatch``: each micro-batch is
-    merged into a keyed parquet state table (key = event_id, new rows win).
-    This is the CDC/ingest landing pattern — the stream maintains a
-    queryable deduplicated table instead of an append log.
-
-    Plain parquet has no atomic MERGE, so state versions are immutable
-    directories ``v0, v1, …``: a batch reads the newest COMMITTED
-    version (``_state_versions`` — partial dirs from a mid-write crash
-    carry no _SUCCESS and are invisible, so the retry overwrites them),
-    anti-joins it against the batch's keys, unions the batch, and writes
-    the next version. A replayed batch (foreachBatch is at-least-once)
-    re-merges the same rows and the anti-join makes that a content
-    no-op — the upsert merge is idempotent by construction, so no replay
-    bookkeeping is needed (contrast stream_cm_sketch, whose additive
-    merge is not). A production deployment swaps this for an ACID table
-    format's MERGE INTO (Delta/Iceberg) and keeps the identical
-    dataflow. At scale the anti-join is one shuffle of state × batch
-    keys — or zero, bucketed by key (write_bucketed). All state-dir
-    metadata goes through the Hadoop FS API (sources/fs.py), so
-    ``state_dir`` may be hdfs://, s3a://, file:/// or a bare local path.
-    """
-    hfs.mkdirs(spark, state_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["event_id"])
-        versions = _state_versions(spark, state_dir)
-        if versions:
-            latest = versions[-1]
-            state = spark.read.parquet(hfs.join(hfs.glob_escape(state_dir), latest[2]))
-            merged = state.join(
-                batch.select("event_id"), "event_id", "left_anti"
-            ).unionByName(batch)
-            next_v = latest[0] + 1
-        else:
-            merged, next_v = batch, 0
-        merged.write.mode("overwrite").parquet(
-            hfs.join(state_dir, f"v{next_v}")
-        )
-
-    # ``stream`` lets a caller supply its own staged source (e.g. the
-    # declared registry query feeds every event twice across two
-    # micro-batches so the anti-join merge path actually runs).
-    if stream is None:
-        stream = _events_stream(spark, sf_dir)
-    return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
-
-
-def read_upsert_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Latest committed snapshot of a directory-versioned state table, or
-    None when no version has committed yet (an ``availableNow`` run that
-    saw no files, or only a partial _SUCCESS-less dir)."""
-    versions = _state_versions(spark, state_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(hfs.join(hfs.glob_escape(state_dir), versions[-1][2]))
-
-
 # --- streaming count-min sketch ---------------------------------------------------
 def stream_cm_sketch(
     spark: SparkSession,
@@ -461,23 +369,22 @@ def stream_cm_sketch(
 ):
     """Maintain a count-min sketch of a streaming column via foreachBatch:
     each micro-batch's sketch (depth x width, tiny) merges cell-wise into
-    the versioned state — the exact mergeability the sketch guarantees,
-    so the maintained state equals the batch sketch of everything seen
-    (tested cell for cell). This is the streaming form of frequency
-    monitoring (heavy-hitter users, trending tokens) whose state stays
+    the state — the exact mergeability the sketch guarantees, so the
+    maintained state equals the batch sketch of everything seen (tested
+    cell for cell). This is the streaming form of frequency monitoring
+    (heavy-hitter users, trending tokens) whose state stays
     O(depth x width) forever while the stream is unbounded.
 
-    Recovery: the additive merge is NOT idempotent (contrast the upsert
-    sink's anti-join), so each version dir records the batch that
-    produced it (``v{N}_b{batchId}``). Under foreachBatch's
-    at-least-once contract a replay re-delivers the LAST batch: if the
-    newest committed version already carries this batch id, the merge is
-    skipped instead of double-counting; a crash mid-write leaves an
-    uncommitted partial (no _SUCCESS) that ``_state_versions`` ignores
-    and the retry overwrites. The state_dir is bound to one checkpoint
-    lineage — restarting the stream with a FRESH checkpoint over an
-    existing state_dir re-counts from batch 0 and is undefined."""
-    hfs.mkdirs(spark, state_dir)
+    The state is a logtable (streaming/logtable.py) whose every commit
+    is the full merged sketch. Recovery: the additive merge is NOT
+    idempotent, so each commit records the batch that produced it;
+    under foreachBatch's at-least-once contract a replay re-delivers the
+    LAST batch, and a batch id already committed is skipped instead of
+    double-counted. A crash mid-commit leaves an attempt dir no log
+    record names, invisible to the next merge. The state_dir is bound
+    to one checkpoint lineage — restarting the stream with a FRESH
+    checkpoint over an existing state_dir re-counts from batch 0 and is
+    undefined."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         cm_merge_batch_into_state(
@@ -486,38 +393,6 @@ def stream_cm_sketch(
 
     stream = _events_stream(spark, sf_dir)
     return _checkpointed(stream.writeStream.foreachBatch(merge), checkpoint_dir)
-
-
-def _merge_batch_into_versioned_state(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    build_summary,
-    merge_fn,
-) -> bool:
-    """The shared recovery protocol for NON-idempotent summary sinks
-    (count-min, Misra-Gries): skip the batch if the newest committed
-    version already carries its id (at-least-once replay), otherwise
-    merge ``build_summary()`` into the previous committed version via
-    ``merge_fn(prev, summary)`` and write ``v{N}_b{batchId}``; partial
-    writes (no _SUCCESS) are invisible and get overwritten by the retry.
-    Returns False on a skipped replay, True when a version landed.
-    State-dir metadata goes through the Hadoop FS API, so ``state_dir``
-    accepts any URI the cluster's Hadoop conf resolves."""
-    hfs.mkdirs(spark, state_dir)
-    versions = _state_versions(spark, state_dir)
-    if versions and versions[-1][1] == batch_id:
-        return False  # at-least-once replay of the already-committed batch
-    summary = build_summary()
-    if versions:
-        prev = spark.read.parquet(hfs.join(hfs.glob_escape(state_dir), versions[-1][2]))
-        merged, next_v = merge_fn(prev, summary), versions[-1][0] + 1
-    else:
-        merged, next_v = summary, 0
-    merged.write.mode("overwrite").parquet(
-        hfs.join(state_dir, f"v{next_v}_b{batch_id}")
-    )
-    return True
 
 
 def cm_merge_batch_into_state(
@@ -529,22 +404,21 @@ def cm_merge_batch_into_state(
     depth: int = 4,
     width: int = 1024,
 ) -> bool:
-    """One additive count-min merge under the shared versioned-state
-    recovery protocol (see _merge_batch_into_versioned_state)."""
+    """One additive count-min merge: the batch's sketch plus the latest
+    state, committed as the next full state (logtable
+    ``replace_batch``). Returns False on a skipped replay."""
     from hdfs_mapreduce_spark.operators.sketches import cm_merge, cm_sketch
 
-    return _merge_batch_into_versioned_state(
-        spark,
-        state_dir,
-        batch_id,
-        lambda: cm_sketch(
-            batch_df.select(F.col(col).cast("string").alias("item")),
-            "item",
-            depth,
-            width,
-        ),
-        cm_merge,
+    merged = cm_sketch(
+        batch_df.select(F.col(col).cast("string").alias("item")),
+        "item",
+        depth,
+        width,
     )
+    prev = latest_state(spark, state_dir)
+    if prev is not None:
+        merged = cm_merge(prev, merged)
+    return replace_batch(merged, batch_id, state_dir)
 
 
 def mg_merge_batch_into_state(
@@ -555,17 +429,16 @@ def mg_merge_batch_into_state(
     col: str = "user_id",
     k: int = 64,
 ) -> bool:
-    """One Misra-Gries merge under the shared versioned-state recovery
-    protocol (see _merge_batch_into_versioned_state)."""
+    """One Misra-Gries merge: the batch's summary merged into the latest
+    state, committed as the next full state (logtable
+    ``replace_batch``). Returns False on a skipped replay."""
     from hdfs_mapreduce_spark.operators.sketches import mg_merge, mg_summary
 
-    return _merge_batch_into_versioned_state(
-        spark,
-        state_dir,
-        batch_id,
-        lambda: mg_summary(batch_df, col, k=k),
-        lambda a, b: mg_merge(a, b, k=k),
-    )
+    merged = mg_summary(batch_df, col, k=k)
+    prev = latest_state(spark, state_dir)
+    if prev is not None:
+        merged = mg_merge(prev, merged, k=k)
+    return replace_batch(merged, batch_id, state_dir)
 
 
 def stream_heavy_hitters(
@@ -582,10 +455,9 @@ def stream_heavy_hitters(
     everything the stream has seen while staying O(k) forever. Unlike
     the count-min state, the summary depends on batch boundaries, so the
     maintained state is bound-tested, not equality-tested, against the
-    batch truth. Same recovery contract as stream_cm_sketch: versions
+    batch truth. Same recovery contract as stream_cm_sketch: commits
     record the producing batch id (the subtract-merge is not
-    idempotent), partial writes are invisible."""
-    hfs.mkdirs(spark, state_dir)
+    idempotent), and crashed attempts are invisible."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         mg_merge_batch_into_state(
@@ -597,7 +469,7 @@ def stream_heavy_hitters(
 
 
 # --- bucketed upsert state (the 100 TB swap, wired) -------------------------------
-def _bucketed_state_versions(spark: SparkSession, state_table: str) -> list[int]:
+def _bucketed_versions(spark: SparkSession, state_table: str) -> list[int]:
     prefix = f"{state_table}_v"
     return sorted(
         int(t.name[len(prefix):])
@@ -616,19 +488,17 @@ def upsert_batch_into_bucketed_state(
     """One upsert merge against a BUCKETED state table (new rows win).
     Returns the version number written.
 
-    This is stream_upsert_events' documented 100 TB swap, actually
-    wired: the state versions are managed tables bucketed on the key
-    (sources/catalog.write_bucketed), so the per-batch anti-join reads
-    the state side with its bucket partitioning intact — NO Exchange
-    ever touches the state relation, only the micro-batch (orders of
-    magnitude smaller) hashes to align with it
-    (tests/test_streaming.py asserts the Exchange count). The versioned
-    snapshot contract is identical to the directory variant: readers see
+    Each batch rewrites the state, but the state versions are managed
+    tables bucketed on the key (sources/catalog.write_bucketed), so the
+    per-batch anti-join reads the state side with its bucket
+    partitioning intact — NO Exchange ever touches the state relation,
+    only the micro-batch (orders of magnitude smaller) hashes to align
+    with it (tests/test_streaming.py asserts the Exchange count). Readers see
     v{N} or v{N+1}, never a mix, and a failed batch leaves v{N} intact."""
     from hdfs_mapreduce_spark.sources.catalog import write_bucketed
 
     batch = batch_df.dropDuplicates([key])
-    versions = _bucketed_state_versions(spark, state_table)
+    versions = _bucketed_versions(spark, state_table)
     if versions:
         state = spark.table(f"{state_table}_v{versions[-1]}")
         merged = state.join(
@@ -650,9 +520,9 @@ def stream_upsert_events_bucketed(
     checkpoint_dir: str | None = None,
     n_buckets: int = 32,
 ):
-    """stream_upsert_events with bucketed managed-table state: identical
-    dataflow, but the steady-state merge join is exchange-free on the
-    state side (see upsert_batch_into_bucketed_state)."""
+    """Incremental upsert sink with bucketed managed-table state: the
+    steady-state merge join is exchange-free on the state side (see
+    upsert_batch_into_bucketed_state)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         upsert_batch_into_bucketed_state(
@@ -668,7 +538,7 @@ def read_bucketed_upsert_state(
 ) -> DataFrame | None:
     """Latest snapshot of a bucketed upsert state table, or None when no
     version has been written yet."""
-    versions = _bucketed_state_versions(spark, state_table)
+    versions = _bucketed_versions(spark, state_table)
     if not versions:
         return None
     return spark.table(f"{state_table}_v{versions[-1]}")

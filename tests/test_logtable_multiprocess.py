@@ -14,6 +14,8 @@ import os
 import subprocess
 import sys
 
+from hdfs_mapreduce_spark.streaming.logtable import RenameCommitBackend
+
 WORKER = """
 import os, sys, time
 sys.path.insert(0, {repo!r})
@@ -42,6 +44,69 @@ print("WORKER-OK", writer)
 """
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+class CountingBackend(RenameCommitBackend):
+    """The rename backend, recording how many publish attempts each
+    landed commit took (first-try wins + lost slot races)."""
+
+    def __init__(self):
+        self.attempts = []
+        self._cur = 0
+
+    def put_if_absent(self, spark, path, payload):
+        self._cur += 1
+        won = super().put_if_absent(spark, path, payload)
+        if won:
+            self.attempts.append(self._cur)
+            self._cur = 0
+        return won
+
+
+def _assert_contended_log(spark, root, writers, n_batches, attempts):
+    """The contention invariants: every (writer, batch) landed exactly
+    once in a gapless version sequence, the attempt tail stayed bounded,
+    and the terminal snapshot carries every writer's rows. Returns the
+    mean attempts per commit."""
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        _log_versions,
+        snapshot,
+    )
+
+    n = len(writers) * n_batches
+    entries = _log_versions(spark, root)
+    # n commits, each in its own slot, no gaps, no double-landing
+    assert [e[0] for e in entries] == list(range(n))
+    by_writer = {}
+    for v, bid, kind, data, writer, _ts in entries:
+        assert kind == "upsert"
+        by_writer.setdefault(writer, []).append(bid)
+    assert sorted(by_writer) == sorted(writers)
+    for w in writers:
+        assert sorted(by_writer[w]) == list(range(n_batches))
+    # retry boundedness: every commit landed, and the attempt tail is
+    # bounded — at or under the production budget of 5 on average. The
+    # former mean bound of 3.0 was an empirical statistic that flaked
+    # under machine load with the correctness half fully green (r13:
+    # three loaded runs measured mean 3.00-3.08, idle runs pass well
+    # under — scheduling jitter widens the listing->rename race window,
+    # which is contention the protocol must absorb, not a defect), so
+    # the liveness claim is pinned at the budget the protocol is
+    # actually sized for.
+    assert len(attempts) == n
+    mean_attempts = sum(attempts) / len(attempts)
+    print(f"contended writers: mean attempts {mean_attempts:.3f}, "
+          f"max {max(attempts)}")
+    assert max(attempts) <= 10, attempts
+    assert mean_attempts < 5.0, attempts
+    # terminal snapshot carries every writer's newest rows
+    snap = {r["k"]: r["v"] for r in snapshot(spark, root, "k").collect()}
+    assert snap == {
+        100 * (i + 1) + b: f"{w}-b{b}"
+        for i, w in enumerate(writers)
+        for b in range(n_batches)
+    }
+    return mean_attempts
 
 
 def test_two_real_writer_processes_never_collide(spark, tmp_path):
@@ -107,25 +172,12 @@ sys.path.insert(0, {repo!r})
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 from hdfs_mapreduce_spark.session import get_spark
 from hdfs_mapreduce_spark.streaming import logtable
-from hdfs_mapreduce_spark.streaming.logtable import (
-    RenameCommitBackend, upsert_batch,
-)
+from hdfs_mapreduce_spark.streaming.logtable import upsert_batch
+from tests.test_logtable_multiprocess import CountingBackend
 
 root, writer, offset, barrier, n_writers = (
     sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4], int(sys.argv[5])
 )
-
-class CountingBackend(RenameCommitBackend):
-    def __init__(self):
-        self.attempts = []
-        self._cur = 0
-    def put_if_absent(self, spark, path, payload):
-        self._cur += 1
-        won = super().put_if_absent(spark, path, payload)
-        if won:
-            self.attempts.append(self._cur)
-            self._cur = 0
-        return won
 
 # Liveness headroom for the EMPIRICAL bound: the production budget (5)
 # is sized for 2-3 writers; the test raises the ceiling so a tail race
@@ -191,49 +243,60 @@ def test_four_contended_writers_land_every_batch_without_livelock(
         _, w, counts = ok_line[0].split(" ", 2)
         attempts_by_writer[w] = [int(c) for c in counts.split(",")]
 
-    from hdfs_mapreduce_spark.streaming.logtable import (
-        _log_versions,
-        snapshot,
-    )
-
-    entries = _log_versions(spark, root)
-    versions = [e[0] for e in entries]
-    # 24 commits, each in its own slot, no gaps, no double-landing
-    assert len(entries) == 24
-    assert versions == sorted(versions) and versions == list(range(24))
-    by_writer = {}
-    for v, bid, kind, data, writer, _ts in entries:
-        assert kind == "upsert"
-        by_writer.setdefault(writer, []).append(bid)
-    assert sorted(by_writer) == writers
-    for w in writers:
-        assert sorted(by_writer[w]) == list(range(6))
-    # retry boundedness: every commit landed, and the attempt tail is
-    # bounded — at or under the production budget of 5 on average. The
-    # former mean bound of 3.0 was an empirical statistic that flaked
-    # under machine load with the correctness half fully green (r13:
-    # three loaded runs measured mean 3.00-3.08, idle runs pass well
-    # under — scheduling jitter widens the listing->rename race window,
-    # which is contention the protocol must absorb, not a defect), so
-    # the liveness claim is pinned at the budget the protocol is
-    # actually sized for.
     all_attempts = [a for w in writers for a in attempts_by_writer[w]]
-    assert len(all_attempts) == 24
     # report the observed mean so drift shows in full-tier runs, not only
     # when it crosses the bound
-    mean_attempts = sum(all_attempts) / len(all_attempts)
+    mean_attempts = _assert_contended_log(
+        spark, root, writers, 6, all_attempts
+    )
     record_property("mean_attempts", round(mean_attempts, 3))
-    print(f"contended writers: mean attempts {mean_attempts:.3f}, "
-          f"max {max(all_attempts)}")
-    assert max(all_attempts) <= 10, all_attempts
-    assert mean_attempts < 5.0, all_attempts
-    # terminal snapshot carries every writer's newest rows
-    snap = {r["k"]: r["v"] for r in snapshot(spark, root, "k").collect()}
-    assert snap == {
-        100 * (i + 1) + b: f"{w}-b{b}"
+
+
+def test_four_pooled_writers_land_every_batch_without_livelock(
+    spark, tmp_path, monkeypatch, record_property
+):
+    """The same contention invariants in the default tier: four writers
+    in this session race 12 commits through the rename backend,
+    submitted on the shared driver pool (never per-use threads: py4j
+    pinned mode leaks a JVM thread per exited Python thread —
+    functions/driverpool.py). The writers share one JVM, so the race is
+    the commit protocol's, not the process boundary's; the slow-tier
+    four-process test above covers that."""
+    import time
+
+    from hdfs_mapreduce_spark.functions.driverpool import run_concurrently
+    from hdfs_mapreduce_spark.streaming import logtable
+
+    monkeypatch.setattr(logtable, "_COMMIT_RETRIES", 25)
+    writers = ["w1", "w2", "w3", "w4"]
+    root = str(tmp_path / "pooled")
+    backends = {w: CountingBackend() for w in writers}
+    frames = {
+        w: [
+            spark.createDataFrame(
+                [(100 * (i + 1) + b, f"{w}-b{b}")], "k long, v string"
+            )
+            for b in range(3)
+        ]
         for i, w in enumerate(writers)
-        for b in range(6)
     }
+
+    def write(w):
+        for b, df in enumerate(frames[w]):
+            assert logtable.upsert_batch(
+                df, b, root, "k", writer=w, backend=backends[w]
+            )
+
+    t0 = time.perf_counter()
+    run_concurrently([lambda w=w: write(w) for w in writers])
+    commit_s = time.perf_counter() - t0
+    all_attempts = [a for w in writers for a in backends[w].attempts]
+    mean_attempts = _assert_contended_log(
+        spark, root, writers, 3, all_attempts
+    )
+    record_property("mean_attempts", round(mean_attempts, 3))
+    record_property("commit_s", round(commit_s, 2))
+    print(f"pooled writers: 12 commits in {commit_s:.2f}s")
 
 
 # ---- ANN manifest contention (round 10): the index publication seam --------

@@ -211,36 +211,40 @@ def test_stream_sliding_equals_batch(spark):
 
 def test_stream_upsert_builds_latest_snapshot(spark):
     from hdfs_mapreduce_spark.sources.catalog import load_table
-    from hdfs_mapreduce_spark.streaming.events import (
-        read_upsert_state,
-        stream_upsert_events,
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        snapshot,
+        stream_upsert_events_logtable,
     )
 
     with tempfile.TemporaryDirectory() as root:
         state = f"{root}/state"
         q = (
-            stream_upsert_events(spark, SF, state, checkpoint_dir=f"{root}/ckpt")
+            stream_upsert_events_logtable(
+                spark, SF, state, checkpoint_dir=f"{root}/ckpt"
+            )
             .trigger(availableNow=True)
             .start()
         )
         assert q.awaitTermination(120), 'stream did not finish in time'
-        snap = read_upsert_state(spark, state)
+        snap = snapshot(spark, state, "event_id")
         batch = load_table(spark, SF, "events")
         assert snap.count() == batch.select("event_id").distinct().count()
         # snapshot content equals the batch table exactly (both directions)
         cols = ["event_id", "user_id", "event_type", "value"]
         assert snap.select(cols).exceptAll(batch.select(cols)).count() == 0
         assert batch.select(cols).exceptAll(snap.select(cols)).count() == 0
-        # re-running the same stream over the same source is a no-op upsert:
-        # a second availableNow pass with a fresh checkpoint re-merges every
-        # row, and the snapshot must not grow
+        # re-running the same stream over the same source is a no-op: a
+        # second availableNow pass with a fresh checkpoint restarts its
+        # batch ids at 0 over the same rows, and the snapshot must not grow
         q2 = (
-            stream_upsert_events(spark, SF, state, checkpoint_dir=f"{root}/ckpt2")
+            stream_upsert_events_logtable(
+                spark, SF, state, checkpoint_dir=f"{root}/ckpt2"
+            )
             .trigger(availableNow=True)
             .start()
         )
         q2.awaitTermination(120)
-        assert read_upsert_state(spark, state).count() == snap.count()
+        assert snapshot(spark, state, "event_id").count() == snap.count()
 
 
 def test_stream_static_enrichment_equals_batch(spark):
@@ -389,10 +393,8 @@ def test_stream_cm_sketch_equals_batch_sketch_exactly(spark):
 
     from hdfs_mapreduce_spark.operators.sketches import cm_sketch
     from hdfs_mapreduce_spark.sources.catalog import load_table
-    from hdfs_mapreduce_spark.streaming.events import (
-        read_upsert_state,
-        stream_cm_sketch,
-    )
+    from hdfs_mapreduce_spark.streaming.events import stream_cm_sketch
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     with tempfile.TemporaryDirectory() as root:
         state = f"{root}/state"
@@ -404,7 +406,7 @@ def test_stream_cm_sketch_equals_batch_sketch_exactly(spark):
         assert q.awaitTermination(120), 'stream did not finish in time'
         streamed = {
             (r["row"], r["bucket"]): r["cnt"]
-            for r in read_upsert_state(spark, state).collect()
+            for r in latest_state(spark, state).collect()
         }
         events = load_table(spark, SF, "events")
         batch = {
@@ -422,48 +424,57 @@ def test_stream_cm_sketch_equals_batch_sketch_exactly(spark):
 def test_cm_state_replay_and_partial_writes_are_safe(spark, tmp_path):
     """Recovery semantics of the additive sketch state: a replayed batch
     (same id as the newest committed version) must NOT double-count, a
-    later batch must merge, and a partial version dir (no _SUCCESS — a
-    crash mid-write) must be invisible to both readers and mergers. A
-    state with no committed version reads as None, not an IndexError."""
+    later batch must merge, and a partial write (an attempt dir no log
+    record names — a crash mid-commit) must be invisible to both readers
+    and mergers. A state with no committed version reads as None, not an
+    IndexError."""
     import os
 
     from pyspark.sql import functions as F
 
     from hdfs_mapreduce_spark.streaming.events import (
-        _state_versions,
         cm_merge_batch_into_state,
         read_bucketed_upsert_state,
-        read_upsert_state,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        _log_versions,
+        latest_state,
+    )
+
+    def orphan(name):
+        # a crashed attempt: real sketch rows, but no log record
+        spark.createDataFrame(
+            [(0, 0, 10**6)], "row int, bucket int, cnt long"
+        ).write.parquet(os.path.join(state, "data", name))
 
     state = str(tmp_path / "cm_state")
     # nothing committed yet (an availableNow run that saw no files)
-    assert read_upsert_state(spark, state) is None
+    assert latest_state(spark, state) is None
     assert read_bucketed_upsert_state(spark, "cm_state_never_written") is None
-    # only a partial first version (crash mid-write of batch 0)
-    os.makedirs(os.path.join(state, "v0_b0"))
-    assert read_upsert_state(spark, state) is None
+    # only a partial first commit (crash mid-commit of batch 0)
+    orphan("a000000000000")
+    assert latest_state(spark, state) is None
     b0 = spark.range(100).select(F.col("id").alias("user_id"))
     assert cm_merge_batch_into_state(spark, b0, state, batch_id=0)
     snap0 = {
         (r["row"], r["bucket"]): r["cnt"]
-        for r in read_upsert_state(spark, state).collect()
+        for r in latest_state(spark, state).collect()
     }
     # at-least-once replay of batch 0: skipped, state unchanged
     assert not cm_merge_batch_into_state(spark, b0, state, batch_id=0)
     assert {
         (r["row"], r["bucket"]): r["cnt"]
-        for r in read_upsert_state(spark, state).collect()
+        for r in latest_state(spark, state).collect()
     } == snap0
-    # a partial version (crash mid-write: no _SUCCESS) is invisible
-    os.makedirs(os.path.join(state, "v9_b7"))
-    assert [v[0] for v in _state_versions(spark, state)] == [0]
+    # a partial commit (crash mid-commit: no log record) is invisible
+    orphan("a999999999999")
+    assert [e[0] for e in _log_versions(spark, state)] == [0]
     # batch 1 merges on top of the committed v0, ignoring the partial
     b1 = spark.range(50).select(F.col("id").alias("user_id"))
     assert cm_merge_batch_into_state(spark, b1, state, batch_id=1)
     total0 = sum(snap0.values())
     total1 = sum(
-        r["cnt"] for r in read_upsert_state(spark, state).collect()
+        r["cnt"] for r in latest_state(spark, state).collect()
     )
     assert total1 == total0 + 50 * 4  # depth=4 cells per item
 
@@ -475,10 +486,8 @@ def test_stream_heavy_hitters_respects_mg_bounds(spark):
     from pyspark.sql import functions as F
 
     from hdfs_mapreduce_spark.sources.catalog import load_table
-    from hdfs_mapreduce_spark.streaming.events import (
-        read_upsert_state,
-        stream_heavy_hitters,
-    )
+    from hdfs_mapreduce_spark.streaming.events import stream_heavy_hitters
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     k = 8
     with tempfile.TemporaryDirectory() as root:
@@ -493,7 +502,7 @@ def test_stream_heavy_hitters_respects_mg_bounds(spark):
         assert q.awaitTermination(120), 'stream did not finish in time'
         got = {
             r["item"]: r["cnt"]
-            for r in read_upsert_state(spark, f"{root}/state").collect()
+            for r in latest_state(spark, f"{root}/state").collect()
         }
         events = load_table(spark, SF, "events")
         truth = {
@@ -514,32 +523,30 @@ def test_stream_heavy_hitters_respects_mg_bounds(spark):
 
 
 def test_mg_state_replay_is_skipped(spark, tmp_path):
-    """The Misra-Gries sink shares the versioned-state recovery protocol:
-    a replayed batch (same id as the newest committed version) must not
-    re-subtract into the state."""
+    """The Misra-Gries sink commits through the logtable like the
+    count-min sink: a replayed batch (same id as the newest committed
+    version) must not re-subtract into the state."""
     from pyspark.sql import functions as F
 
-    from hdfs_mapreduce_spark.streaming.events import (
-        mg_merge_batch_into_state,
-        read_upsert_state,
-    )
+    from hdfs_mapreduce_spark.streaming.events import mg_merge_batch_into_state
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     state = str(tmp_path / "mg_state")
     b0 = spark.range(100).select((F.col("id") % 5).alias("user_id"))
     assert mg_merge_batch_into_state(spark, b0, state, batch_id=0, k=8)
     snap = {
         r["item"]: r["cnt"]
-        for r in read_upsert_state(spark, state).collect()
+        for r in latest_state(spark, state).collect()
     }
     assert not mg_merge_batch_into_state(spark, b0, state, batch_id=0, k=8)
     assert {
         r["item"]: r["cnt"]
-        for r in read_upsert_state(spark, state).collect()
+        for r in latest_state(spark, state).collect()
     } == snap
     assert mg_merge_batch_into_state(spark, b0, state, batch_id=1, k=8)
     grown = {
         r["item"]: r["cnt"]
-        for r in read_upsert_state(spark, state).collect()
+        for r in latest_state(spark, state).collect()
     }
     assert sum(grown.values()) > sum(snap.values())
 
@@ -729,16 +736,16 @@ def test_state_dirs_accept_file_scheme_uris(spark, tmp_path):
         dedup_ingest_batch,
         read_accepted,
     )
-    from hdfs_mapreduce_spark.streaming.events import (
-        _state_versions,
-        read_upsert_state,
-        stream_upsert_events,
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        _log_versions,
+        snapshot,
+        stream_upsert_events_logtable,
     )
 
     # --- upsert sink, state behind file:// ---------------------------------
     state_uri = f"file://{tmp_path}/upsert_state"
     q = (
-        stream_upsert_events(
+        stream_upsert_events_logtable(
             spark, SF, state_uri, checkpoint_dir=str(tmp_path / "ckpt")
         )
         .trigger(availableNow=True)
@@ -746,12 +753,14 @@ def test_state_dirs_accept_file_scheme_uris(spark, tmp_path):
     )
     assert q.awaitTermination(180)
     n_events = load_table(spark, SF, "events").count()
-    snap = read_upsert_state(spark, state_uri)
+    snap = snapshot(spark, state_uri, "event_id")
     assert snap.count() == n_events
     assert snap.select("event_id").distinct().count() == n_events
-    # a partial version (no _SUCCESS) behind the URI stays invisible
-    os.makedirs(tmp_path / "upsert_state" / "v9", exist_ok=True)
-    assert [v[0] for v in _state_versions(spark, state_uri)] == [0]
+    # a partial commit (an attempt dir no log record names) behind the
+    # URI stays invisible
+    os.makedirs(tmp_path / "upsert_state" / "data" / "a9", exist_ok=True)
+    assert [e[0] for e in _log_versions(spark, state_uri)] == [0]
+    assert snapshot(spark, state_uri, "event_id").count() == n_events
 
     # --- online dedup loop, state behind file:// ---------------------------
     docs = load_table(spark, SF, "documents").select("doc_id", "text")

@@ -33,7 +33,8 @@ def test_streaming_declared_queries_match_oracle(spark, ddb, name):
 
 def test_upsert_snapshot_is_one_row_per_key(spark):
     """Two staged copies over two micro-batches must still produce exactly
-    one row per event_id (the anti-join merge actually deduplicates)."""
+    one row per event_id (the merge-on-read snapshot keeps the newest row
+    per key across both live versions)."""
     from pyspark.sql import functions as F
 
     snap = RAW_QUERIES["stream_upsert_snapshot"](spark, SF_CORRECTNESS)
