@@ -536,7 +536,10 @@ def create_managed_ivfpq(
     if not hfs.write_text_atomic(
         spark, hfs.join(_manifest_dir(root), "v1"), gen
     ):
-        _remove_dir(spark, hfs.join(root, gen))
+        try:  # best effort: nothing references the lost race's gen dir
+            hfs.delete(spark, hfs.join(root, gen))
+        except Exception:
+            pass
         raise RuntimeError(
             f"lost the v1 manifest race under {root}: another writer "
             "created this index concurrently"
@@ -550,19 +553,6 @@ def create_managed_ivfpq(
     # just-published v1 by construction has version 1 / generation
     # ``gen``: the manifest write above is the only record.
     return {**built, "root": root, "version": 1, "generation": gen}
-
-
-def _remove_dir(spark: SparkSession, path: str) -> None:
-    """Best-effort orphan cleanup (a LOST race's unpublished gen dir —
-    nothing references it, so failure to delete costs only disk)."""
-    from hdfs_mapreduce_spark.sources import fs as hfs
-
-    try:
-        fs, p = hfs.fs_and_path(spark, path)
-        if fs.exists(p):
-            fs.delete(p, True)
-    except Exception:
-        pass
 
 
 def rebuild_ivfpq_index(
@@ -659,7 +649,10 @@ def rebuild_ivfpq_index(
     if not hfs.write_text_atomic(
         spark, hfs.join(_manifest_dir(root), f"v{v_next}"), gen
     ):
-        _remove_dir(spark, hfs.join(root, gen))
+        try:  # best effort: nothing references the lost race's gen dir
+            hfs.delete(spark, hfs.join(root, gen))
+        except Exception:
+            pass
         raise RuntimeError(
             f"lost the v{v_next} manifest race under {root}: a concurrent "
             "rebuild published first — reopen and re-evaluate"
@@ -791,7 +784,6 @@ def vacuum_index_generations(
         return []
     keep = set(versions[-retain_last:])
     removed: list[str] = []
-    fs, _ = hfs.fs_and_path(spark, root)
     for v in versions:
         if v in keep:
             continue
@@ -803,8 +795,6 @@ def vacuum_index_generations(
             # Record vanished mid-iteration (legacy layout where vacuums
             # deleted records, or external cleanup) — nothing to reclaim.
             continue
-        _, p = hfs.fs_and_path(spark, hfs.join(root, gen))
-        if fs.exists(p):
-            fs.delete(p, True)
+        if hfs.delete(spark, hfs.join(root, gen)):
             removed.append(gen)
     return removed

@@ -27,7 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from hdfs_mapreduce_spark.sources.catalog import write_table
-from hdfs_mapreduce_spark.sources.fs import fs_and_path
+from hdfs_mapreduce_spark.sources import fs as hfs
 
 _CLEANUP_REGISTERED: set[str] = set()
 
@@ -48,16 +48,10 @@ def session_scratch_dir(spark: SparkSession) -> str:
     return root
 
 
-def _remove_path(spark: SparkSession, path_str: str) -> None:
-    fs, path = fs_and_path(spark, path_str)
-    if fs.exists(path):
-        fs.delete(path, True)
-
-
 def purge_scratch(spark: SparkSession) -> None:
     """Delete this session's scratch tree (safe to call repeatedly)."""
     try:
-        _remove_path(spark, session_scratch_dir(spark))
+        hfs.delete(spark, session_scratch_dir(spark))
     except Exception:
         pass  # session already stopped — nothing left to clean
 

@@ -235,7 +235,6 @@ REVERIFY = {
     "dedup_crosscheck_bucketed": 17,
     "ann_probe_persisted": 17,
     "ann_probe_appended": 17,
-    "ann_probe_vacuumed": 17,
     # r18: the wide generated expressions are SQL text parsed once by the
     #     JVM instead of Column-call chains (operators/dedup.py: the
     #     MinHash MIN aggregates, the band-key array, the band-join
@@ -265,10 +264,6 @@ REVERIFY = {
     #     operators/bpe.py), hash-passed at sf0.01 in-round but are left to
     #     the registry rotation: listing them would overflow the 50-row
     #     window (tests/test_coverage.py).
-    "stream_dedup_admitted": 19,
-    "stream_dedup_resketch": 19,
-    "stream_dedup_compacted": 19,
-    "stream_dedup_maintained": 19,
     # r20: one state log. stream_upsert_snapshot drains the logtable
     #     upsert sink (merge-on-read over two live versions) instead of
     #     the directory-versioned rewrite sink, and the Misra-Gries sink
@@ -279,17 +274,36 @@ REVERIFY = {
     #     filename-only entries and the data-dir fallback are gone) and
     #     _is_replay (skips entries with no batch id instead of compact
     #     entries). Same relations.
-    "stream_upsert_snapshot": 20,
-    "stream_heavy_hitters_audit": 20,
-    "stream_upsert_log_snapshot": 20,
-    "stream_cdc_apply": 20,
-    "logtable_cdf": 20,
-    "logtable_ivm": 20,
-    "dq_checks_incremental": 20,
-    "stream_ann_ingest_topk": 20,
-    "stream_ann_ingest_fenced": 20,
-    "ann_probe_deleted": 20,
-    "ann_probe_rebuilt": 20,
+    # r21: one state log, part 2. The online dedup state (accepted and
+    #     sketch) is two unkeyed logtables: each batch publishes its two
+    #     attempt dirs through the split halves of _commit
+    #     (_write_attempt, _publish), compact_state and resketch_state
+    #     are compaction commits, and the _SUCCESS-gated batch_id=N dirs,
+    #     swap markers and keep_last tail are gone. A compaction record
+    #     lists the data dirs it replaces, and snapshot, as_of and vacuum
+    #     skip replaced dirs instead of applying the newest-compaction
+    #     floor, so every consumer of _commit, snapshot or vacuum runs
+    #     new code; vacuum_index_generations deletes through
+    #     sources/fs.py delete. The keys below are the queries whose
+    #     traced run reaches any of these (every one never-green). Same
+    #     relations. Supersedes the r17 (ann_probe_vacuumed), r19 and r20
+    #     entries of these keys.
+    "stream_dedup_admitted": 21,
+    "stream_dedup_resketch": 21,
+    "stream_dedup_compacted": 21,
+    "stream_dedup_maintained": 21,
+    "stream_upsert_snapshot": 21,
+    "stream_heavy_hitters_audit": 21,
+    "stream_upsert_log_snapshot": 21,
+    "stream_cdc_apply": 21,
+    "logtable_cdf": 21,
+    "logtable_ivm": 21,
+    "dq_checks_incremental": 21,
+    "stream_ann_ingest_topk": 21,
+    "stream_ann_ingest_fenced": 21,
+    "ann_probe_deleted": 21,
+    "ann_probe_rebuilt": 21,
+    "ann_probe_vacuumed": 21,
 }
 
 

@@ -837,13 +837,13 @@ def stream_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Admitted corpus across a MID-STREAM state compaction — the
     round-11 compact_state verb certified as a declared relation: three
     micro-batches ingest (doc_id % 4 == 0, 1, 2), ``compact_state``
-    folds batches 0–1 into one merged dir (keep_last=1 retains batch 2,
-    the replay tail), then batch 3 ingests AGAINST THE COMPACTED state —
-    its corpus probe reads the merged dir through the same below-cut
-    that covered its constituents. The oracle is the SAME admitted
-    closed form at mod 4 (the shared ``_dedup_admitted_sql`` generator):
-    compaction is observable only in dir counts, never in decisions, and
-    the driver hash is what holds that claim."""
+    merges each state table's three live versions into one compaction
+    commit, then batch 3 ingests AGAINST THE COMPACTED state — its
+    corpus probe reads the merged version. The plan checks that the
+    merge covered batches 0-2. The oracle is the SAME admitted closed
+    form at mod 4 (the shared ``_dedup_admitted_sql`` generator):
+    compaction is observable only in live-version counts, never in
+    decisions, and the oracle hash is what holds that claim."""
     from hdfs_mapreduce_spark.streaming.dedup import (
         compact_state,
         dedup_ingest_batch,
@@ -855,11 +855,11 @@ def stream_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(root, "state")
     for i in range(3):
         dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == i), i, state)
-    compacted = compact_state(spark, state, keep_last=1)
-    if compacted != [0, 1]:
+    compacted = compact_state(spark, state)
+    if compacted != [0, 1, 2]:
         raise RuntimeError(
-            f"compact_state folded {compacted}, expected [0, 1] — the "
-            "retention tail or committed-id listing is broken"
+            f"compact_state merged batches {compacted}, expected [0, 1, 2]"
+            " — the live-version read of the state log is broken"
         )
     dedup_ingest_batch(docs.filter(F.col("doc_id") % 4 == 3), 3, state)
     return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
@@ -868,21 +868,22 @@ def stream_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SELF-MAINTAINING production sink certified end-to-end: four
     micro-batches (doc_id % 4, one file each, maxFilesPerTrigger=1)
-    through ``stream_dedup_ingest(compact_every=2, keep_last=1)`` — the
-    round-12 sink-integrated maintenance, where compaction fires INSIDE
+    through ``stream_dedup_ingest(compact_every=2)`` — the round-12
+    sink-integrated maintenance, where compaction fires INSIDE
     foreachBatch every 2 committed batches with no operator stopping the
-    stream. After batch 3 the cadence merges batches 0-2 into one dir;
-    the plan asserts the post-stream state holds exactly 2 committed
-    accepted dirs (merged + retained replay tail) so the query fails red
-    if the in-sink cadence silently stops firing. The oracle is the SAME
-    admitted closed form at mod 4 as stream_dedup_compacted: in-sink
-    maintenance is observable in dir counts, never in decisions."""
+    stream. After batch 1 the cadence merges batches 0-1, and after
+    batch 3 it merges that version with batches 2 and 3; the plan
+    asserts each state table's log then names exactly one live version,
+    so the query fails red if the in-sink cadence silently stops firing.
+    The oracle is the SAME admitted closed form at mod 4 as
+    stream_dedup_compacted: in-sink maintenance is observable in
+    live-version counts, never in decisions."""
     from hdfs_mapreduce_spark.streaming.dedup import (
-        committed_batch_ids,
         read_accepted,
         stream_dedup_ingest,
     )
     from hdfs_mapreduce_spark.streaming.events import ordered_feed
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     root = _scratch(spark, "dedup_maintained", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -892,18 +893,19 @@ def stream_dedup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(root, "state")
     ckpt = os.path.join(root, "ckpt")
     _run(
-        stream_dedup_ingest(
-            stream_in, state, ckpt, compact_every=2, compact_keep_last=1
-        ),
+        stream_dedup_ingest(stream_in, state, ckpt, compact_every=2),
         None,
         ckpt,
     )
-    committed = committed_batch_ids(spark, os.path.join(state, "accepted"))
-    if len(committed) != 2:
+    live = {
+        sub: len(_live(_log_versions(spark, os.path.join(state, sub))))
+        for sub in ("accepted", "sketch")
+    }
+    if live != {"accepted": 1, "sketch": 1}:
         raise RuntimeError(
-            f"expected 2 committed accepted dirs after in-sink maintenance "
-            f"(merged 0-2 + retained tail 3), found batch ids {committed} — "
-            "the compact_every cadence did not fire"
+            f"expected 1 live version per state table after in-sink "
+            f"maintenance, found {live} — the compact_every cadence did "
+            "not fire"
         )
     return read_accepted(spark, state).select("doc_id").orderBy("doc_id")
 

@@ -1,7 +1,7 @@
 """Hadoop FileSystem path operations for state/table directories.
 
-Streaming state (the logtable's commit log and data dirs, the online
-dedup loop's ``batch_id=N`` partitions) must live wherever the cluster's
+Streaming state (the logtable's commit log and data dirs, which hold
+every sink's state) must live wherever the cluster's
 storage is — ``hdfs://``, ``s3a://``, ``file:///`` — not just on the
 driver's local disk. Python ``os.*`` calls only ever see the local
 filesystem, so every directory listing / existence probe / mkdir on a

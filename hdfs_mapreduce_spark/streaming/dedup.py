@@ -16,12 +16,18 @@ before it, without ever re-deduplicating the corpus against itself:
            sketch rows to the corpus sketch, so batch N+1 probes
            batch N's survivors.
 
-State is directory-versioned per micro-batch (``batch_id=<n>``
-subdirectories written with overwrite; a dir counts once its _SUCCESS
-marker lands): a failed batch re-runs idempotently — its overwrite
-replaces its own partial output, and the probe for batch N reads only
-batch dirs < N, so a replay can never match a document against its own
-earlier attempt.
+State is two unkeyed logtables (streaming/logtable.py) under the state
+dir, ``accepted`` and ``sketch``: each batch writes one unique attempt
+dir per table, then publishes the accepted record and, last, the sketch
+record. The sketch record is the batch's commit point. A batch whose id
+is already the sketch log's newest batch id is a replay and returns at
+once; any other probe reads only the live sketch dirs that log names,
+which never hold the batch's own rows. A crash between the two
+publishes replays into ``_publish``'s replay skip of the accepted
+record, then lands the sketch record; an attempt dir no record names
+stays invisible. Compaction and resketch are log commits too: a
+``kind='compact'`` record names the dirs it replaces, so no rename swap
+or marker file is needed.
 
 At 100 TB the sketch table is the only state that grows, it is
 band-bucketed parquet (probe = scan of matching band rows), and the
@@ -47,23 +53,17 @@ from hdfs_mapreduce_spark.operators.dedup import (
     resolve_sketch_shape,
 )
 from hdfs_mapreduce_spark.sources import fs as hfs
-
-# Leftover markers of an interrupted resketch_state swap: their presence
-# means the sketch tree may be mid-swap, so ingest refuses to run until
-# resketch_state is re-run (which rolls back or forward and cleans up).
-_RESKETCH_TMP = "_sketch_resketch"
-_RESKETCH_OLD = "_sketch_old"
-# Likewise for an interrupted compact_state: the meta record names the
-# compacted ids, the two tmp trees hold the merged data.
-_COMPACT_META = "_compact_meta"
-_COMPACT_TMP = {"accepted": "_compact_accepted", "sketch": "_compact_sketch"}
-_MAINTENANCE_MARKERS = (
-    _RESKETCH_OLD,
-    _RESKETCH_TMP,
-    _COMPACT_META,
-    _COMPACT_TMP["accepted"],
-    _COMPACT_TMP["sketch"],
+from hdfs_mapreduce_spark.streaming.logtable import (
+    _commit,
+    _is_replay,
+    _live,
+    _log_versions,
+    _publish,
+    _scan,
+    _write_attempt,
+    snapshot,
 )
+
 # Lifetime b/r point record ("n_perm n_bands"), written by the FIRST
 # ingest — even an empty one. Sketch rows remain the ground truth when
 # they exist; the meta file covers the r11-ADVICE hole where early
@@ -87,44 +87,6 @@ def _write_shape_meta(
 ) -> None:
     hfs.write_text_atomic(
         spark, hfs.join(state_dir, _SHAPE_META), f"{n_perm} {n_bands}"
-    )
-
-
-def committed_batch_ids(spark: SparkSession, path: str) -> list[int]:
-    """Ascending ids of the COMMITTED ``path/batch_id=*`` dirs (Spark
-    writes _SUCCESS last): a crash mid-write leaves a marker-less partial
-    dir that must stay invisible until its batch replays and overwrites
-    it. ONE globStatus RPC finds every committed dir
-    (round 11: the former listing + one exists per dir paid one round
-    trip per batch of stream age — per HTTP call on an object store).
-    Goes through the Hadoop FS API (sources/fs.py), so the state root may
-    be any URI the cluster's Hadoop conf resolves — hdfs://, s3a://,
-    file:///, or a bare local path."""
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in hfs.glob_parent_names(spark, path, "batch_id=*", "_SUCCESS")
-        if d.startswith("batch_id=")
-    )
-
-
-def _read_batch_dirs(
-    spark: SparkSession, path: str, below: int | None = None
-) -> DataFrame | None:
-    """Union of the committed ``path/batch_id=*`` parquet dirs
-    (hive-partition read), optionally restricted to batch ids strictly
-    below ``below`` (the replay-safety cut). None when no state exists
-    yet."""
-    ids = [
-        i for i in committed_batch_ids(spark, path) if below is None or i < below
-    ]
-    if not ids:
-        return None
-    # read paths go through Hadoop globbing too, so the literal state
-    # root is escaped (basePath stays literal — it is a prefix, not a
-    # pattern); state dirs named with { } [ ] * ? read correctly
-    esc = hfs.glob_escape(path)
-    return spark.read.option("basePath", path).parquet(
-        *[hfs.join(esc, f"batch_id={i}") for i in ids]
     )
 
 
@@ -154,23 +116,15 @@ def dedup_ingest_batch(
     n_perm=32, n_bands=8 once at stream start and every later batch —
     and restart — inherits it from the state itself)."""
     spark = batch_df.sparkSession
-    accepted_dir = hfs.join(state_dir, "accepted")
-    sketch_dir = hfs.join(state_dir, "sketch")
-    # ONE listing RPC covers all five maintenance markers (per-marker
-    # exists probes would pay five round trips per micro-batch).
-    children = set(hfs.list_child_names(spark, state_dir))
-    for marker in _MAINTENANCE_MARKERS:
-        if marker in children:
-            verb = (
-                "resketch_state" if marker.startswith("_sketch")
-                else "compact_state"
-            )
-            raise RuntimeError(
-                f"state dir has a leftover '{marker}' tree from an "
-                f"interrupted {verb} — re-run {verb} (it rolls the swap "
-                "back or forward) before ingesting"
-            )
-    corpus_sketch = _read_batch_dirs(spark, sketch_dir, below=batch_id)
+    accepted_root = hfs.join(state_dir, "accepted")
+    sketch_root = hfs.join(state_dir, "sketch")
+    # The sketch log is read ONCE per batch: its newest batch id says
+    # whether this batch already committed, and the same entries name
+    # the live dirs the corpus probe reads.
+    sketch_log = _log_versions(spark, sketch_root)
+    if _is_replay(sketch_log, batch_id, None):
+        return
+    corpus_sketch = _scan(spark, sketch_root, _live(sketch_log))
     if (n_perm is None) != (n_bands is None):
         raise ValueError("pass BOTH n_perm and n_bands or neither")
     # Resolve the state's b/r shape ONCE (one limit(1) driver job per
@@ -182,12 +136,12 @@ def dedup_ingest_batch(
     # yet, or every early batch admitted nothing — r11 ADVICE: a restart
     # omitting the explicit wide values must not silently downgrade a
     # pinned stream). Rows win over a stale meta record (a crash between
-    # a resketch swap and its meta rewrite), and an explicit caller shape
-    # that mismatches EITHER pin raises before anything commits.
+    # a resketch commit and its meta rewrite), and an explicit caller
+    # shape that mismatches EITHER pin raises before anything commits.
     pinned = None
     if corpus_sketch is not None:
         pinned = resolve_sketch_shape(corpus_sketch)
-    if pinned is None and _SHAPE_META in children:
+    if pinned is None:
         pinned = _read_shape_meta(spark, state_dir)
     if pinned is not None and n_perm is not None and (n_perm, n_bands) != pinned:
         raise ValueError(
@@ -202,14 +156,12 @@ def dedup_ingest_batch(
         # Truly unfixed lifetime point (first ingest ever): the caller's
         # choice (or the module default) applies. Without this fallback
         # an empty first micro-batch would wedge the stream permanently
-        # (adoption raises on every replay).
+        # (adoption raises on every replay). The point is pinned now,
+        # even when this batch is empty; the happy path (stored rows
+        # resolve the shape) never touches the meta record.
         shape = (n_perm, n_bands) if n_perm is not None else (N_PERM, N_BANDS)
+        _write_shape_meta(spark, state_dir, *shape)
     n_perm, n_bands = shape
-    if _SHAPE_META not in children:
-        # Pin the lifetime point on FIRST ingest, even when this batch is
-        # empty — the `children` listing above already told us whether the
-        # record exists, so the happy path pays no extra metadata RPC.
-        _write_shape_meta(spark, state_dir, n_perm, n_bands)
     # The batch's banded sketch is built ONCE (round 11: the previous
     # shape ran the shingle scan + signature groupBy THREE times per
     # micro-batch), and — r13 — the three batch-bounded relations the
@@ -291,16 +243,15 @@ def dedup_ingest_batch(
         survivors = survivors.join(
             F.broadcast(within_rejects), id_col, "left_anti"
         )
-        # The two state writes are independent jobs over the checkpointed
-        # relations (different output dirs, no shared mutable state), so
-        # they are submitted CONCURRENTLY on the shared bounded driver
-        # pool (guide §2.6; functions/driverpool.py explains why a
-        # persistent pool, never per-use threads — py4j pinned mode
-        # leaks one parked JVM thread per exited Python thread). Each
-        # write's driver-side analysis/codegen overlaps the other's
-        # executor work. Crash semantics are unchanged: either dir may
-        # exist without the other after a mid-batch crash, exactly as
-        # with sequential writes, and the replay overwrites both.
+        # The two attempt writes are independent jobs over the
+        # checkpointed relations (different unique dirs, no shared
+        # mutable state), so they are submitted CONCURRENTLY on the
+        # shared bounded driver pool (guide §2.6; functions/driverpool.py
+        # explains why a persistent pool, never per-use threads — py4j
+        # pinned mode leaks one parked JVM thread per exited Python
+        # thread). Each write's driver-side analysis/codegen overlaps
+        # the other's executor work. No record names either dir yet, so
+        # a crash here leaves only invisible orphans.
         sketch_out = surv_bands.join(
             F.broadcast(
                 within_rejects.select(F.col(id_col).alias("doc"))
@@ -312,18 +263,27 @@ def dedup_ingest_batch(
             run_concurrently,
         )
 
+        attempt = {}
+
+        def write(root: str, rows: DataFrame) -> None:
+            attempt[root] = _write_attempt(root, rows)
+
         run_concurrently(
             [
-                lambda: survivors.write.mode("overwrite").parquet(
-                    hfs.join(accepted_dir, f"batch_id={batch_id}")
-                ),
-                lambda: sketch_out.write.mode("overwrite").parquet(
-                    hfs.join(sketch_dir, f"batch_id={batch_id}")
-                ),
+                lambda: write(accepted_root, survivors),
+                lambda: write(sketch_root, sketch_out),
             ]
         )
     finally:
         janitor.free_all()
+    # The accepted record lands first and the sketch record, the
+    # batch's commit point, last.
+    accepted_log = _log_versions(spark, accepted_root)
+    for root, log in (
+        (accepted_root, accepted_log),
+        (sketch_root, sketch_log),
+    ):
+        _publish(spark, root, attempt[root], log, batch_id, "append")
 
 
 def dedup_ingest_batch_maintained(
@@ -336,7 +296,6 @@ def dedup_ingest_batch_maintained(
     n_perm: int | None = None,
     n_bands: int | None = None,
     compact_every: int | None = None,
-    compact_keep_last: int = 1,
     compact_max_batches: int | None = None,
     on_resketch_recommended=None,
     resketch_min_docs: int | None = None,
@@ -344,54 +303,33 @@ def dedup_ingest_batch_maintained(
     """``dedup_ingest_batch`` plus the logtable sink's self-maintenance
     discipline (streaming/logtable.py ``make_upsert_sink`` —
     ``compact_every=K``): every K committed batches the state compacts
-    in-sink, so a long-lived stream's dir count stays bounded without an
-    operator ever stopping it. Safe by the same argument the logtable
-    used: foreachBatch is the sole serial writer, so between two batches
-    the stopped-stream precondition holds by construction. Replay-aware
-    by construction too — a replayed batch re-triggers the cadence, but
-    its compactable set was already merged, so ``compact_state`` finds
-    fewer than two below-tail dirs and no-ops (and never compacts an id
-    that can still replay: compaction runs AFTER this batch's commit,
-    and ``compact_keep_last`` >= the source's replay depth keeps the
-    newest ids out of every merge).
-
-    When the maintenance cadence is sink-owned, an interrupted in-sink
-    compaction self-heals: the next batch's marker refusal is caught,
-    ``compact_state`` rolls the swap forward or back, and the ingest
-    retries once — no operator intervention (an interrupted RESKETCH
-    still refuses: only an operator knows the intended b/r point).
+    in-sink, so a long-lived stream's live-version count stays bounded
+    without an operator ever stopping it. Safe by the same argument the
+    logtable used: foreachBatch is the sole serial writer, so between
+    two batches the stopped-stream precondition holds by construction.
+    Replay-aware by construction too — a replayed batch no-ops on the
+    sketch log's batch id (compaction commits carry none, so they never
+    hide it) and re-triggers the cadence, whose merge then finds fewer
+    than two live versions and no-ops. An in-sink compaction that
+    crashes fails the batch and leaves only invisible attempt dirs, or
+    one table merged and the other not — both valid states — so the
+    batch's replay no-ops its ingest and re-runs the merge.
 
     ``on_resketch_recommended`` (optional callable, receives the state
     dir) runs on the same cadence and fires when the accumulated corpus
     has outgrown the state's b/r point — the advisory hook a deployment
     wires to its alerting; None skips the check entirely (its probe
     costs one sampled row + one bounded count)."""
-
-    def _compact() -> None:
+    dedup_ingest_batch(
+        batch_df, batch_id, state_dir, id_col, text_col, threshold,
+        n_perm=n_perm, n_bands=n_bands,
+    )
+    if compact_every is not None and (batch_id + 1) % compact_every == 0:
         compact_state(
             batch_df.sparkSession,
             state_dir,
-            keep_last=compact_keep_last,
-            id_col=id_col,
-            text_col=text_col,
             max_batches_per_run=compact_max_batches,
         )
-
-    try:
-        dedup_ingest_batch(
-            batch_df, batch_id, state_dir, id_col, text_col, threshold,
-            n_perm=n_perm, n_bands=n_bands,
-        )
-    except RuntimeError as err:
-        if compact_every is None or "compact_state" not in str(err):
-            raise
-        _compact()  # rolls the interrupted in-sink swap forward/back
-        dedup_ingest_batch(
-            batch_df, batch_id, state_dir, id_col, text_col, threshold,
-            n_perm=n_perm, n_bands=n_bands,
-        )
-    if compact_every is not None and (batch_id + 1) % compact_every == 0:
-        _compact()
         if on_resketch_recommended is not None and resketch_recommended(
             batch_df.sparkSession, state_dir, wide_min_docs=resketch_min_docs
         ):
@@ -408,7 +346,6 @@ def stream_dedup_ingest(
     n_perm: int | None = None,
     n_bands: int | None = None,
     compact_every: int | None = None,
-    compact_keep_last: int = 1,
     compact_max_batches: int | None = None,
     on_resketch_recommended=None,
     resketch_min_docs: int | None = None,
@@ -427,7 +364,6 @@ def stream_dedup_ingest(
                 df, bid, state_dir, id_col, text_col, threshold,
                 n_perm=n_perm, n_bands=n_bands,
                 compact_every=compact_every,
-                compact_keep_last=compact_keep_last,
                 compact_max_batches=compact_max_batches,
                 on_resketch_recommended=on_resketch_recommended,
                 resketch_min_docs=resketch_min_docs,
@@ -440,7 +376,7 @@ def stream_dedup_ingest(
 
 def read_accepted(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The admitted (deduplicated) corpus across all completed batches."""
-    return _read_batch_dirs(spark, hfs.join(state_dir, "accepted"))
+    return snapshot(spark, hfs.join(state_dir, "accepted"), None)
 
 
 def resketch_state(
@@ -458,68 +394,32 @@ def resketch_state(
     narrow 16×8 sketch even past AUTO_WIDE_MIN_DOCS docs;
     ``resketch_recommended`` is the advisory that surfaces this).
 
-    Run with the STREAM STOPPED — the sketch tree is swapped wholesale
-    and concurrent batch writes into it would be lost. The rebuild is
-    ONE Spark pass: the accepted corpus (with its hive ``batch_id``
-    partition column) re-sketches at the new point, the per-doc batch id
-    joins back onto the band rows, and a single ``partitionBy("batch_id")``
-    write recreates the per-batch directory layout — preserving the
-    probe-below-batch-id replay cut, so a post-restart replay of the
-    last micro-batch still never matches documents against their own
-    earlier attempt. Each partition dir then gets the ``_SUCCESS``
-    marker ``_read_batch_dirs`` requires.
-
-    Crash safety: the new tree is built under ``_sketch_resketch`` and
-    swapped in by two renames (sketch → ``_sketch_old``, tmp → sketch).
-    ``dedup_ingest_batch`` refuses to run while either marker tree
-    exists; re-running resketch_state first ROLLS BACK an incomplete
-    swap (old → sketch) or completes a finished one (deletes leftovers),
-    then rebuilds — so an interrupted migration is always recoverable by
-    the same command, and the probe can never silently see a
-    mixed-shape sketch (a single-row shape sample cannot detect one).
+    Run with the STREAM STOPPED — the rebuild replaces the whole sketch
+    table, and a batch committed meanwhile would be replaced unseen.
+    The rebuild is ONE Spark pass over the accepted corpus, committed
+    as a full-state replace of the sketch table (a ``kind='compact'``
+    record that replaces every live sketch dir and carries no batch id,
+    so a post-restart replay of the last micro-batch still finds its own
+    batch id in the sketch log and no-ops). A crash before the record
+    lands leaves the old sketch live and an invisible attempt dir, so
+    the probe can never see a mixed-shape sketch (a single-row shape
+    sample cannot detect one).
 
     Returns the (n_perm, n_bands) now recorded in the state."""
     if n_perm % n_bands:
         raise ValueError(f"n_perm={n_perm} not divisible by n_bands={n_bands}")
-    sketch_dir = hfs.join(state_dir, "sketch")
-    tmp = hfs.join(state_dir, _RESKETCH_TMP)
-    old = hfs.join(state_dir, _RESKETCH_OLD)
-    # recovery from an interrupted previous swap: if the live tree is
-    # missing the rollback source is the old tree; leftovers then clear
-    if not hfs.exists(spark, sketch_dir) and hfs.exists(spark, old):
-        if not hfs.rename(spark, old, sketch_dir):
-            raise RuntimeError(f"rollback rename failed: {old} -> {sketch_dir}")
-    hfs.delete(spark, old)
-    hfs.delete(spark, tmp)
-    accepted = _read_batch_dirs(spark, hfs.join(state_dir, "accepted"))
+    accepted = read_accepted(spark, state_dir)
     if accepted is None:
         raise ValueError(
             f"no accepted state under {state_dir} — nothing to resketch"
         )
     bands = _banded_sketch(accepted, id_col, text_col, n_perm, n_bands)
-    doc_batch = accepted.select(
-        F.col(id_col).alias("doc"), F.col("batch_id")
-    )
-    (
-        bands.join(doc_batch, "doc")
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    for child in hfs.list_child_names(spark, tmp):
-        if child.startswith("batch_id="):
-            hfs.write_text_atomic(
-                spark, hfs.join(tmp, child, "_SUCCESS"), ""
-            )
-    if hfs.exists(spark, sketch_dir):
-        if not hfs.rename(spark, sketch_dir, old):
-            raise RuntimeError(f"swap rename failed: {sketch_dir} -> {old}")
-    if not hfs.rename(spark, tmp, sketch_dir):
-        raise RuntimeError(f"swap rename failed: {tmp} -> {sketch_dir}")
-    hfs.delete(spark, old)
+    _commit(spark, hfs.join(state_dir, "sketch"), bands, None, "compact")
     # the migration changed the state's lifetime point — re-pin the
     # first-ingest record so a later empty-state restart adopts the NEW
-    # shape (stored rows still win whenever they exist)
+    # shape (stored rows still win whenever they exist). The publish is
+    # put-if-absent, so the old record goes first.
+    hfs.delete(spark, hfs.join(state_dir, _SHAPE_META), recursive=False)
     _write_shape_meta(spark, state_dir, n_perm, n_bands)
     return n_perm, n_bands
 
@@ -527,165 +427,80 @@ def resketch_state(
 def compact_state(
     spark: SparkSession,
     state_dir: str,
-    keep_last: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_batches_per_run: int | None = None,
 ) -> list[int]:
-    """Merge old per-micro-batch state dirs into one — the logtable
-    checkpoint discipline applied to the dedup state. The online loop
-    writes one ``batch_id=N`` dir per micro-batch under BOTH ``accepted``
-    and ``sketch``; per-batch driver work (the dir listing + one
-    ``_SUCCESS`` probe per dir) and the probe's parquet footer count grow
-    LINEARLY with stream age — at a year of 5-minute batches that is
-    ~100k dirs scanned per micro-batch. Compaction folds every committed
-    batch below the retention tail into a single merged dir named with
-    the HIGHEST compacted id, so listing cost tracks ``keep_last`` + 1
-    regardless of stream age.
+    """Merge the live versions of each state table into one — the
+    logtable compaction applied to the dedup state. The online loop
+    commits one version per micro-batch to BOTH ``accepted`` and
+    ``sketch``; the probe's scan (one data dir and parquet footer per
+    version) and the log read grow LINEARLY with stream age — at a year
+    of 5-minute batches that is ~100k dirs scanned per micro-batch.
+    Compaction writes the live rows of a table as one attempt dir and
+    publishes a ``kind='compact'`` record that replaces the merged
+    versions, so the live-version count stays bounded regardless of
+    stream age.
 
-    Admission semantics are UNCHANGED by construction: the merged dir's
-    id M is smaller than every retained id, so any future batch N (and
-    any replay of a retained batch) probes it via the same
-    ``below=batch_id`` cut that covered its constituents — a replay can
-    still never see its own rows because only batches at ids > M can
-    replay. ``keep_last`` must therefore cover the source's maximum
-    replay depth (1 for Structured Streaming's file source / availableNow:
-    only the newest uncommitted batch re-runs) and is floored at 1.
+    Admission semantics are UNCHANGED by construction: the merged
+    version holds exactly the rows it replaces, and the record carries
+    no batch id, so replay detection still finds each batch's own
+    record in the log — every version can be merged, the newest one
+    included.
 
-    ``max_batches_per_run`` bounds each run to the N smallest below-tail
-    dirs (size-tiered, LSM-style — see the inline comment): repeated
-    tiered runs converge to the same single merged dir as one untiered
-    run, but no single maintenance window ever reads more than the tier,
-    so a long-lived stream's compaction cost is amortized instead of
-    O(accumulated corpus) per run. None (the default) keeps the one-shot
-    full merge.
+    ``max_batches_per_run`` bounds each run to the N smallest live
+    versions of a table (size-tiered, LSM-style): small fresh versions
+    fold together first, and a previously merged big version is only
+    re-read once its peers have grown to match — amortized O(N log N)
+    bytes over the stream's life, never O(N²), and no single
+    maintenance window reads more than the tier. Repeated tiered runs
+    converge to the same single live version as one untiered run. None
+    (the default) merges every live version.
 
     Run with the stream stopped (same contract as resketch_state) — or
     let the sink run it between committed batches via
     ``stream_dedup_ingest(..., compact_every=K)``, which is equivalent
-    because foreachBatch is the sole serial writer.
-    Crash safety mirrors resketch: a meta record naming the compacted
-    ids lands first, the merged trees build beside the live ones, and
-    the swap (delete compacted dirs, rename merged into place) only
-    starts after both merges are complete-with-markers;
-    ``dedup_ingest_batch`` refuses to run while any compaction marker
-    exists, and re-running compact_state rolls an interrupted swap
-    forward (complete merges) or back (incomplete ones). Returns the
-    compacted batch ids ([] when fewer than two dirs fall below the
-    tail — nothing to do)."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (the replay tail)")
-    meta_path = hfs.join(state_dir, _COMPACT_META)
-    tmps = {k: hfs.join(state_dir, v) for k, v in _COMPACT_TMP.items()}
-
-    # ---- recovery from an interrupted previous attempt ----
-    # Two-phase meta record: "PREP <ids>" while the merged trees build
-    # (live trees untouched — rollback = drop tmps), flipped to
-    # "SWAP <ids>" only after BOTH tmps are complete (destructive phase
-    # — roll FORWARD; _finish_compact_swap is idempotent because a tree
-    # whose tmp is gone has already finished its swap).
-    if hfs.exists(spark, meta_path):
-        rec = hfs.read_text(spark, meta_path).split()
-        phase, old_ids = rec[0], [int(x) for x in rec[1:]]
-        if phase == "SWAP":
-            _finish_compact_swap(spark, state_dir, old_ids, tmps)
-        else:
-            for p in tmps.values():
-                hfs.delete(spark, p)
-        hfs.delete(spark, meta_path, recursive=False)
-    else:
-        # stale tmps with no meta (crash in the PREP->SWAP meta gap, or
-        # before meta landed): nothing destructive happened — drop them
-        for p in tmps.values():
-            hfs.delete(spark, p)
-
-    ids = committed_batch_ids(spark, hfs.join(state_dir, "accepted"))
-    compact = ids[: max(len(ids) - keep_last, 0)]
-    if max_batches_per_run is not None and len(compact) > max_batches_per_run:
-        # Size-tiered selection (r11 verdict "What's missing" #4): the
-        # untiered verb re-reads ALL below-tail state every run —
-        # O(accumulated corpus) per maintenance window, and the single
-        # merged dir grows monotonically. Bounding each run to the
-        # ``max_batches_per_run`` SMALLEST below-tail dirs gives the LSM
-        # discipline instead: small fresh dirs fold together first, and a
-        # previously-merged big dir is only re-read once its peers have
-        # grown to match — amortized O(N log N) bytes over the stream's
-        # life, never O(N²). ANY below-tail subset is safe to merge into
-        # its own max id: every constituent row keeps an id <= the merged
-        # dir's, which stays below every retained id, so the
-        # ``below=batch_id`` probe cut covers constituents exactly as
-        # before (ties broken by id so the choice is deterministic).
-        if max_batches_per_run < 2:
-            raise ValueError("max_batches_per_run must be >= 2 (a merge)")
-        acc_root = hfs.join(state_dir, "accepted")
-        sizes = {
-            i: hfs.dir_size(spark, hfs.join(acc_root, f"batch_id={i}"))
-            for i in compact
-        }
-        compact = sorted(
-            sorted(compact, key=lambda i: (sizes[i], i))[:max_batches_per_run]
-        )
-    if len(compact) < 2:
-        return []
-    if not hfs.write_text_atomic(
-        spark, meta_path, "PREP " + " ".join(str(i) for i in compact)
-    ):
-        raise RuntimeError(f"could not publish {meta_path} — concurrent compact?")
-    # ---- build both merged trees beside the live ones ----
-    for sub, tmp in tmps.items():
-        src_root = hfs.join(state_dir, sub)
-        committed = set(committed_batch_ids(spark, src_root))
-        dirs = [
-            hfs.join(hfs.glob_escape(src_root), f"batch_id={i}")
-            for i in compact
-            if i in committed
-        ]
-        if dirs:
-            merged = spark.read.parquet(*dirs)
-        else:
-            # a resketch drops empty-batch sketch dirs, so the sketch
-            # side of the compact set can be empty: write a 0-row tree
-            # with the real sketch schema (derived from the accepted
-            # corpus relation) so the swap protocol stays uniform
-            acc = _read_batch_dirs(spark, hfs.join(state_dir, "accepted"))
-            merged = _banded_sketch(
-                acc.limit(0), id_col, text_col, N_PERM, N_BANDS
-            )
-        merged.write.mode("overwrite").parquet(tmp)
-    # ---- destructive phase ----
-    hfs.delete(spark, meta_path, recursive=False)
-    if not hfs.write_text_atomic(
-        spark, meta_path, "SWAP " + " ".join(str(i) for i in compact)
-    ):
-        raise RuntimeError(f"could not flip {meta_path} to the swap phase")
-    _finish_compact_swap(spark, state_dir, compact, tmps)
-    hfs.delete(spark, meta_path, recursive=False)
-    return compact
-
-
-def _finish_compact_swap(
-    spark: SparkSession,
-    state_dir: str,
-    compact: list[int],
-    tmps: dict[str, str],
-) -> None:
-    """The idempotent destructive half of compact_state: per tree, drop
-    the compacted dirs and rename the merged tmp to ``batch_id=<max>``.
-    Only entered with BOTH tmps complete (the SWAP meta phase), so on a
-    re-run a missing tmp means that tree's swap already finished —
-    nothing to do; a present tmp means its dir deletes are safe to
-    repeat (exists-checked) before the rename lands."""
-    m = compact[-1]
-    for sub, tmp in tmps.items():
-        if not hfs.exists(spark, tmp):
-            continue  # this tree's swap completed before a crash
+    because foreachBatch is the sole serial writer. A crash before a
+    table's record lands leaves only an invisible attempt dir. Returns
+    the batch ids whose rows were merged ([] when no table has two live
+    versions — nothing to do)."""
+    if max_batches_per_run is not None and max_batches_per_run < 2:
+        raise ValueError("max_batches_per_run must be >= 2 (a merge)")
+    merged: set[int] = set()
+    for sub in ("accepted", "sketch"):
         root = hfs.join(state_dir, sub)
-        for i in compact:
-            hfs.delete(spark, hfs.join(root, f"batch_id={i}"))
-        if not hfs.rename(spark, tmp, hfs.join(root, f"batch_id={m}")):
-            raise RuntimeError(
-                f"compact swap rename failed: {tmp} -> {root}/batch_id={m}"
+        entries = _log_versions(spark, root)
+        live = _live(entries)
+        if max_batches_per_run is not None and len(live) > max_batches_per_run:
+            size = {
+                e[3]: hfs.dir_size(spark, hfs.join(root, "data", e[3]))
+                for e in live
+            }
+            live = sorted(
+                sorted(live, key=lambda e: (size[e[3]], e[0]))[
+                    :max_batches_per_run
+                ]
             )
+        if len(live) < 2:
+            continue
+        attempt = _write_attempt(root, _scan(spark, root, live))
+        replaces = [e[3] for e in live]
+        _publish(
+            spark, root, attempt, entries, None, "compact", replaces=replaces
+        )
+        ids = _batch_ids(entries)
+        merged.update(i for d in replaces for i in ids[d])
+    return sorted(merged)
+
+
+def _batch_ids(entries: list) -> dict[str, set[int]]:
+    """Data dir name → the ids of the batches whose rows it holds: its
+    own batch id, or for a compaction the ids of the dirs it replaced."""
+    ids: dict[str, set[int]] = {}
+    for e in entries:
+        if e[1] is not None:
+            ids[e[3]] = {e[1]}
+        else:
+            ids[e[3]] = set().union(*(ids[d] for d in e[6]))
+    return ids
 
 
 def resketch_recommended(
@@ -703,7 +518,7 @@ def resketch_recommended(
     as the bound is exceeded; run it on the ingest owner's maintenance
     cadence, not per micro-batch."""
     bound = AUTO_WIDE_MIN_DOCS if wide_min_docs is None else wide_min_docs
-    sketch = _read_batch_dirs(spark, hfs.join(state_dir, "sketch"))
+    sketch = snapshot(spark, hfs.join(state_dir, "sketch"), None)
     if sketch is None:
         return False
     shape = resolve_sketch_shape(sketch)

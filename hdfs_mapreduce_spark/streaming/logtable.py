@@ -3,10 +3,11 @@ commits — the ACID-table-format economics (Delta/Iceberg MERGE) without
 new dependencies.
 
 This is the engine's one state log: the keyed upsert, delete and CDC
-sinks, and the count-min and Misra-Gries summary sinks
-(streaming/events.py), all commit and replay through it. A keyed sink
-never rewrites its state: each micro-batch commits only its own rows, so
-the per-batch cost is O(batch), not O(state). It uses only parquet + the
+sinks, the count-min and Misra-Gries summary sinks (streaming/events.py),
+and the online dedup ingest's accepted and sketch tables
+(streaming/dedup.py), all commit and replay through it. A sink never
+rewrites its state: each micro-batch commits only its own rows, so the
+per-batch cost is O(batch), not O(state). It uses only parquet + the
 Hadoop FS API (sources/fs.py), with the same layout ideas the real
 formats use:
 
@@ -51,16 +52,23 @@ formats use:
 * **Replay safety**: foreachBatch is at-least-once and a blind append is
   NOT idempotent, so commits record their batch id and a replayed batch
   whose id is already the writer's newest committed batch id no-ops.
-* **Compaction**: ``compact()`` materializes the snapshot as one new
-  data version and logs a ``kind='compact'`` commit; readers then union
-  only versions ≥ the newest compaction. Run it on whatever cadence
-  bounds the live-version count (the real formats' OPTIMIZE).
+* **Compaction**: a ``kind='compact'`` commit lists the data dirs it
+  replaces (``replaces``), and every reader skips a replaced dir: that
+  is the one rule ``snapshot``, ``as_of`` and ``vacuum`` share. Keyed
+  ``compact()`` materializes the snapshot as one new data version that
+  replaces every live dir; the dedup state's merge replaces only the
+  versions it read. Run it on whatever cadence bounds the live-version
+  count (the real formats' OPTIMIZE).
 * **Full-state commits**: a summary sink (count-min, Misra-Gries) merges
   each batch into its whole previous state, read with
   ``latest_state``, and commits the result with ``replace_batch`` — a
-  ``kind='compact'`` commit that carries the batch id. The compaction
-  floor, ``as_of`` and ``vacuum`` then treat every summary version as a
-  full state, and the batch id keeps the commit replay-detectable.
+  ``kind='compact'`` commit that carries the batch id and replaces
+  every live dir. The batch id keeps the commit replay-detectable.
+* **Unkeyed tables**: ``snapshot(key_col=None)`` returns every row of
+  the live dirs with no window — an append-only table such as the
+  online dedup state, whose two tables commit with the two halves of
+  ``_commit`` (``_write_attempt`` then ``_publish``) so both attempt
+  writes can run concurrently before either record lands.
 
 Reference parity note: the reference engine (a Go DFS) has no mutable
 tables at all; this is the forward-looking scale surface the r5 verdict
@@ -78,7 +86,7 @@ from pyspark.sql.window import Window
 from hdfs_mapreduce_spark.sources import fs as hfs
 
 
-_KINDS = ("upsert", "delete", "merge", "compact")
+_KINDS = ("upsert", "delete", "merge", "append", "compact")
 
 # Attempts before giving up when racing other writers for a version slot.
 _COMMIT_RETRIES = 5
@@ -165,10 +173,13 @@ class ConcurrentCommitError(RuntimeError):
 
 def _log_versions(
     spark: SparkSession, root: str
-) -> list[tuple[int, int | None, str, str, str | None, float | None]]:
+) -> list[
+    tuple[int, int | None, str, str, str | None, float | None, tuple[str, ...]]
+]:
     """Committed log entries ascending by version:
     ``(version, batch_id or None, kind, data_dir_name, writer or None,
-    commit wall-clock ts or None)`` — ts is None for pre-r8 commits.
+    commit wall-clock ts or None, replaced data dir names)`` — ts is None
+    for pre-r8 commits, and only a compaction replaces anything.
 
     The grammar: one ``v{N}.commit`` file per version — the FILENAME
     is the version slot (so two concurrent writers of version N collide
@@ -219,17 +230,7 @@ def _log_versions(
                     "data"
                 ):
                     raise ValueError(f"bad checkpoint record {rec!r}")
-            out = [
-                (
-                    rec["version"],
-                    rec.get("batch_id"),
-                    rec["kind"],
-                    rec["data"],
-                    rec.get("writer"),
-                    rec.get("ts"),
-                )
-                for rec in recs
-            ]
+            out = [_entry(rec["version"], rec) for rec in recs]
             floor = cand
             break
         except Exception:
@@ -252,6 +253,7 @@ def _log_versions(
                 raise ValueError(f"bad kind {rec.get('kind')!r}")
             if not rec.get("data"):
                 raise ValueError("no data dir")
+            entry = _entry(int(core), rec)
         except (OSError, ValueError) as exc:
             # A COMMITTED record that cannot be parsed is corruption,
             # not absence: skipping it would silently drop committed
@@ -260,17 +262,30 @@ def _log_versions(
             raise CorruptCommitError(
                 f"{hfs.join(log_dir, name)}: {exc}"
             ) from exc
-        out.append(
-            (
-                int(core),
-                rec.get("batch_id"),
-                rec["kind"],
-                rec["data"],
-                rec.get("writer"),
-                rec.get("ts"),
-            )
-        )
+        out.append(entry)
     return sorted(out, key=lambda e: e[0])
+
+
+def _entry(version: int, rec: dict) -> tuple:
+    replaces = rec.get("replaces", [])
+    if not isinstance(replaces, list):
+        raise ValueError(f"bad replaces {replaces!r}")
+    return (
+        version,
+        rec.get("batch_id"),
+        rec["kind"],
+        rec["data"],
+        rec.get("writer"),
+        rec.get("ts"),
+        tuple(replaces),
+    )
+
+
+def _live(entries: list) -> list:
+    """The entries whose data dir no compaction among ``entries``
+    replaced, ascending: the versions a reader of the table reads."""
+    replaced = {d for e in entries for d in e[6]}
+    return [e for e in entries if e[3] not in replaced]
 
 
 def checkpoint_log(spark: SparkSession, root: str) -> int | None:
@@ -305,8 +320,9 @@ def checkpoint_log(spark: SparkSession, root: str) -> int | None:
                 "data": d,
                 "writer": w,
                 "ts": ts,
+                "replaces": list(r),
             }
-            for v, b, k, d, w, ts in entries
+            for v, b, k, d, w, ts, r in entries
         ]
     )
     # Losing the rename means a same-N checkpoint (identical content by
@@ -371,11 +387,6 @@ def _is_replay(
     return False
 
 
-def _delete_data_dir(spark: SparkSession, root: str, data_name: str) -> None:
-    fs, path = hfs.fs_and_path(spark, hfs.join(root, "data", data_name))
-    fs.delete(path, True)
-
-
 def _commit(
     spark: SparkSession,
     root: str,
@@ -385,39 +396,68 @@ def _commit(
     writer: str | None = None,
     backend: CommitBackend | None = None,
 ) -> int | None:
-    """The concurrent-writer-safe commit. The rows are written ONCE to a
-    version-free UNIQUE data directory (``data/a{token}`` — racing
-    writers can never touch each other's files, and losing a slot race
-    never re-runs the expensive write); the retry loop then spins only
-    on the cheap log publish: pick the next version slot, publish
-    ``_log/v{N}.commit`` through the backend's put-if-absent. With the
-    default rename backend exactly one writer wins each slot
-    (rename-to-existing fails on HDFS/local); a loser re-reads the log
-    — a racing replay of this writer's batch id resolves to the replay
-    no-op (the orphan attempt dir is deleted) — and otherwise retries
-    the next slot. A non-rename store (S3) plugs in a backend whose
-    put really is conditional; the protocol only needs put_if_absent
-    to report slot ownership truthfully. Every
-    ``_CHECKPOINT_EVERY``-th slot also writes a log checkpoint,
-    keeping the per-commit log read O(K) forever with no manual
-    maintenance."""
-    import json
-    import uuid
-
-    backend = backend or DEFAULT_BACKEND
+    """The concurrent-writer-safe commit: the attempt write
+    (``_write_attempt``) then the log publish (``_publish``), skipped
+    whole when the batch id is a replay. Returns the committed version,
+    or None on a skipped replay."""
     entries = _log_versions(spark, root)
     if _is_replay(entries, batch_id, writer):
         return None
+    data_name = _write_attempt(root, rows)
+    return _publish(
+        spark, root, data_name, entries, batch_id, kind, writer, backend
+    )
+
+
+def _write_attempt(root: str, rows: DataFrame) -> str:
+    """Write the rows ONCE to a version-free UNIQUE data directory
+    (``data/a{token}``) and return its name: racing writers can never
+    touch each other's files, and losing a slot race never re-runs the
+    expensive write. Until a log record names it the dir is invisible."""
+    import uuid
+
     data_name = f"a{uuid.uuid4().hex[:12]}"
     rows.write.mode("overwrite").parquet(hfs.join(root, "data", data_name))
+    return data_name
+
+
+def _publish(
+    spark: SparkSession,
+    root: str,
+    data_name: str,
+    entries: list,
+    batch_id: int | None,
+    kind: str,
+    writer: str | None = None,
+    backend: CommitBackend | None = None,
+    replaces: list[str] | None = None,
+) -> int | None:
+    """Publish the log record of a written attempt: pick the next
+    version slot after ``entries`` (the caller's log read) and publish
+    ``_log/v{N}.commit`` through the backend's put-if-absent. With the
+    default rename backend exactly one writer wins each slot
+    (rename-to-existing fails on HDFS/local); a loser re-reads the log —
+    a racing replay of this writer's batch id resolves to the replay
+    no-op (the attempt dir is deleted) — and otherwise retries the next
+    slot. A non-rename store (S3) plugs in a backend whose put really is
+    conditional; the protocol only needs put_if_absent to report slot
+    ownership truthfully. A ``kind='compact'`` record lists the data
+    dirs it replaces: ``replaces``, or every live dir when None. Every
+    ``_CHECKPOINT_EVERY``-th slot also writes a log checkpoint, keeping
+    the per-commit log read O(K) forever with no manual maintenance.
+    Returns the committed version, or None on a skipped replay."""
+    import json
+
+    backend = backend or DEFAULT_BACKEND
+    attempt_dir = hfs.join(root, "data", data_name)
     log_dir = hfs.join(root, "_log")
     hfs.mkdirs(spark, log_dir)
     for attempt in range(_COMMIT_RETRIES):
         if attempt:
             entries = _log_versions(spark, root)
-            if _is_replay(entries, batch_id, writer):
-                _delete_data_dir(spark, root, data_name)
-                return None
+        if _is_replay(entries, batch_id, writer):
+            hfs.delete(spark, attempt_dir)
+            return None
         next_v = entries[-1][0] + 1 if entries else 0
         record = {
             "version": next_v,
@@ -431,6 +471,11 @@ def _commit(
             # precision — the same contract Delta's timestamps carry.
             "ts": time.time(),
         }
+        if kind == "compact":
+            record["replaces"] = (
+                replaces if replaces is not None
+                else [e[3] for e in _live(entries)]
+            )
         if backend.put_if_absent(
             spark,
             hfs.join(log_dir, f"v{next_v}.commit"),
@@ -439,7 +484,7 @@ def _commit(
             if next_v % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
                 checkpoint_log(spark, root)
             return next_v
-    _delete_data_dir(spark, root, data_name)
+    hfs.delete(spark, attempt_dir)
     raise ConcurrentCommitError(
         f"lost the commit race {_COMMIT_RETRIES} times at {root}"
     )
@@ -520,8 +565,9 @@ def replace_batch(
     """Commit ``df`` as the table's FULL new state for one batch: a
     ``kind='compact'`` commit that carries the batch id, so readers need
     no version below it and a replayed batch no-ops (the summary sinks'
-    commit, whose merge of batch into state is not idempotent). Returns
-    False on a skipped replay, True when a commit landed."""
+    commit, whose merge of batch into state is not idempotent). The
+    commit replaces every live dir. Returns False on a skipped replay,
+    True when a commit landed."""
     return (
         _commit(df.sparkSession, root, df, batch_id, "compact", writer)
         is not None
@@ -543,18 +589,20 @@ def latest_state(spark: SparkSession, root: str) -> DataFrame | None:
 def snapshot(
     spark: SparkSession,
     root: str,
-    key_col: str,
+    key_col: str | None,
     as_of: int | None = None,
 ) -> DataFrame:
-    """Merge-on-read state: newest row per key across every committed
-    version since the latest compaction, minus tombstoned keys.
-    ``as_of`` reads the table AS OF that commit version (time travel —
-    only commits ≤ as_of participate, including the compaction floor
-    rule; reading below a vacuumed horizon fails at read time, the same
-    contract the real formats have). Versions merge by column NAME with
-    missing columns null-filled, so columns added by later writers
-    evolve the schema instead of breaking old versions. Returns None for
-    an empty table (no schema to synthesize a relation from).
+    """Merge-on-read state: newest row per key across every live
+    version (one that no compaction replaced), minus tombstoned keys.
+    With ``key_col=None`` the table is unkeyed: every row of the live
+    versions, with no window. ``as_of`` reads the table AS OF that
+    commit version (time travel — only commits ≤ as_of participate,
+    their compactions included; reading below a vacuumed horizon fails
+    at read time, the same contract the real formats have). Versions
+    merge by column NAME with missing columns null-filled, so columns
+    added by later writers evolve the schema instead of breaking old
+    versions. Returns None for an empty table (no schema to synthesize a
+    relation from).
 
     All live versions are read by ONE multi-path scan instead of one
     read per version unioned together, so plan build stays a single
@@ -570,17 +618,12 @@ def snapshot(
     entries = _log_versions(spark, root)
     if as_of is not None:
         entries = [e for e in entries if e[0] <= as_of]
-    if not entries:
-        return None
-    compactions = [e[0] for e in entries if e[2] == "compact"]
-    floor = max(compactions) if compactions else 0
-    live = {e[3]: e[0] for e in entries if e[0] >= floor}
-    data = hfs.join(hfs.glob_escape(root), "data")
-    allrows = spark.read.option("mergeSchema", "true").parquet(
-        *[hfs.join(data, d) for d in sorted(live, key=live.get)]
-    )
+    live = _live(entries)
+    allrows = _scan(spark, root, live)
+    if allrows is None or key_col is None:
+        return allrows
     version_of = F.create_map(
-        *[F.lit(x) for d, v in live.items() for x in (d, v)]
+        *[F.lit(x) for e in live for x in (e[3], e[0])]
     )
     parent = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
     allrows = allrows.withColumn("_v", version_of[parent])
@@ -597,6 +640,17 @@ def snapshot(
     return out
 
 
+def _scan(spark: SparkSession, root: str, live: list) -> DataFrame | None:
+    """ONE mergeSchema scan of the ``live`` entries' data dirs, oldest
+    first; None when there are none."""
+    if not live:
+        return None
+    data = hfs.join(hfs.glob_escape(root), "data")
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[hfs.join(data, e[3]) for e in live]
+    )
+
+
 def vacuum(
     spark: SparkSession,
     root: str,
@@ -604,7 +658,7 @@ def vacuum(
     retain_last: int | None = None,
     older_than_s: float | None = None,
 ) -> list[int]:
-    """Physically delete data versions BELOW the latest compaction — the
+    """Physically delete data versions a compaction replaced — the
     snapshot never reads them (the compaction carries their net effect),
     they only serve time travel, and this is the one irreversible
     operation the format exposes (the real formats' VACUUM). Log entries
@@ -615,19 +669,18 @@ def vacuum(
     ``older_than_s=S`` is Delta's RETAIN clause proper — only data
     whose commit wall-clock ts is older than S seconds ago is
     deletable. Both mean "time travel inside the retained window must
-    keep working": a snapshot as-of version v reads every data version
-    from its compaction floor up, so the deletable set is everything
-    below the newest compaction that is itself ≤ the retention horizon
-    — deleting anything above that compaction would break an as-of
-    INSIDE the retained window, not just below it. With no compaction
-    at or below the horizon nothing is deletable, exactly like Delta
-    when no checkpoint predates the retention boundary. When both
+    keep working": a snapshot as-of version v reads every version no
+    compaction ≤ v replaced, so the deletable set is what the
+    compactions ≤ the retention horizon replaced — deleting anything
+    else would break an as-of INSIDE the retained window, not just
+    below it. With no compaction at or below the horizon nothing is
+    deletable, exactly like Delta when no checkpoint predates the
+    retention boundary. When both
     policies are given, a version is retained if EITHER retains it
     (the stricter horizon wins). Commits with no ts (pre-r8 tables) are
     never dated and therefore never deletable by the clock policy —
-    never delete what you can't date. Default
-    (None, None) retains nothing below the newest compaction — the
-    pre-r8 behavior.
+    never delete what you can't date. Default (None, None) deletes
+    everything any compaction replaced.
 
     ``sweep_orphans=True`` additionally deletes data dirs no committed
     log entry references — the residue of attempts that crashed between
@@ -643,7 +696,7 @@ def vacuum(
             f"retained), got {retain_last}"
         )
     entries = _log_versions(spark, root)
-    compactions = [e[0] for e in entries if e[2] == "compact"]
+    compactions = [e for e in entries if e[6]]
     removed = []
     horizons = []
     if retain_last is not None:
@@ -661,24 +714,17 @@ def vacuum(
         )
     if horizons:
         horizon = min(horizons)  # stricter policy wins
-        compactions = [c for c in compactions if c <= horizon]
-    if compactions:
-        floor = max(compactions)
-        for e in entries:
-            if e[0] < floor:
-                fs, path = hfs.fs_and_path(
-                    spark, hfs.join(root, "data", e[3])
-                )
-                if fs.exists(path):
-                    fs.delete(path, True)
-                    removed.append(e[0])
+        compactions = [c for c in compactions if c[0] <= horizon]
+    replaced = {d for c in compactions for d in c[6]}
+    data_dir = hfs.join(root, "data")
+    for e in entries:
+        if e[3] in replaced and hfs.delete(spark, hfs.join(data_dir, e[3])):
+            removed.append(e[0])
     if sweep_orphans:
         referenced = {e[3] for e in entries}
-        data_dir = hfs.join(root, "data")
         for name in hfs.list_child_names(spark, data_dir):
             if name not in referenced:
-                fs, path = hfs.fs_and_path(spark, hfs.join(data_dir, name))
-                fs.delete(path, True)
+                hfs.delete(spark, hfs.join(data_dir, name))
     return removed
 
 
@@ -691,11 +737,12 @@ def compact(
     n_partitions: int = 8,
 ) -> int | None:
     """Materialize the snapshot as one new data version and log it as a
-    compaction: readers thereafter union a single version until new
-    upserts land. Returns the compaction's version, or None on an empty
-    table. Earlier data dirs become dead weight a vacuum can delete —
-    exactly the real formats' OPTIMIZE/VACUUM split; kept out of scope
-    here because deletion is irreversible and orthogonal to reads.
+    compaction that replaces every live dir: readers thereafter union a
+    single version until new upserts land. Returns the compaction's
+    version, or None on an empty table. Earlier data dirs become dead
+    weight a vacuum can delete — exactly the real formats'
+    OPTIMIZE/VACUUM split; kept out of scope here because deletion is
+    irreversible and orthogonal to reads.
 
     ``cluster_by=(col_a, col_b)`` re-lays the compacted rows along the
     Z curve of two non-negative integer columns before writing (the

@@ -78,7 +78,7 @@ def _assert_contended_log(spark, root, writers, n_batches, attempts):
     # n commits, each in its own slot, no gaps, no double-landing
     assert [e[0] for e in entries] == list(range(n))
     by_writer = {}
-    for v, bid, kind, data, writer, _ts in entries:
+    for v, bid, kind, data, writer, _ts, _replaces in entries:
         assert kind == "upsert"
         by_writer.setdefault(writer, []).append(bid)
     assert sorted(by_writer) == sorted(writers)
@@ -150,7 +150,7 @@ def test_two_real_writer_processes_never_collide(spark, tmp_path):
     assert len(entries) == 12
     assert versions == sorted(versions) and len(set(versions)) == 12
     by_writer = {}
-    for v, bid, kind, data, writer, _ts in entries:
+    for v, bid, kind, data, writer, _ts, _replaces in entries:
         assert kind == "upsert"
         by_writer.setdefault(writer, []).append(bid)
     assert sorted(by_writer) == ["alpha", "beta"]

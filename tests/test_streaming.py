@@ -603,7 +603,7 @@ def test_stream_dedup_ingest_admits_exactly_the_sequential_result(spark):
     """The online dedup loop: 3 micro-batches streamed through
     foreachBatch must admit exactly the docs the same operators admit
     when applied sequentially batch-by-batch; replaying a batch must not
-    change the state (idempotent overwrite + probe-below-batch cut)."""
+    change the state (its batch id is already in the sketch log)."""
     import os
     import shutil
     import tempfile
@@ -840,10 +840,8 @@ def test_dedup_ingest_state_pins_its_band_shape(spark, tmp_path):
 
     import hdfs_mapreduce_spark.operators.dedup as dd
     from hdfs_mapreduce_spark.sources.catalog import load_table
-    from hdfs_mapreduce_spark.streaming.dedup import (
-        _read_batch_dirs,
-        dedup_ingest_batch,
-    )
+    from hdfs_mapreduce_spark.streaming.dedup import dedup_ingest_batch
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     halves = [docs.filter(F.col("doc_id") % 2 == i) for i in range(2)]
@@ -851,7 +849,7 @@ def test_dedup_ingest_state_pins_its_band_shape(spark, tmp_path):
     dedup_ingest_batch(
         halves[0], 0, state, n_perm=dd.WIDE_PERM, n_bands=dd.WIDE_BANDS
     )
-    sk = _read_batch_dirs(spark, state + "/sketch")
+    sk = latest_state(spark, state + "/sketch")
     row = sk.select("rpb", "bkeys").limit(1).collect()[0]
     assert (row["rpb"] * len(row["bkeys"]), len(row["bkeys"])) == (
         dd.WIDE_PERM,
@@ -859,7 +857,7 @@ def test_dedup_ingest_state_pins_its_band_shape(spark, tmp_path):
     )
     # omitted shape: adopted from state — batch 1's sketch is wide too
     dedup_ingest_batch(halves[1], 1, state)
-    sk1 = spark.read.parquet(state + "/sketch/batch_id=1")
+    sk1 = latest_state(spark, state + "/sketch")
     row1 = sk1.select("rpb", "bkeys").limit(1).collect()[0]
     assert row1["rpb"] == dd.WIDE_PERM // dd.WIDE_BANDS
     assert len(row1["bkeys"]) == dd.WIDE_BANDS
@@ -871,8 +869,8 @@ def test_dedup_ingest_state_pins_its_band_shape(spark, tmp_path):
 
 
 def test_dedup_ingest_empty_first_batch_does_not_wedge(spark, tmp_path):
-    """Round-10 ADVICE: an empty micro-batch 0 writes a 0-row sketch
-    partition; later default-shape batches must fall back to the module
+    """Round-10 ADVICE: an empty micro-batch 0 commits a 0-row sketch
+    version; later default-shape batches must fall back to the module
     defaults instead of failing shape adoption forever (the raise would
     recur on every replay — a permanently wedged stream). The first
     NON-empty batch is what fixes the state's lifetime b/r point."""
@@ -881,23 +879,23 @@ def test_dedup_ingest_empty_first_batch_does_not_wedge(spark, tmp_path):
     import hdfs_mapreduce_spark.operators.dedup as dd
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
-        _read_batch_dirs,
         dedup_ingest_batch,
         read_accepted,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state, snapshot
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     state = str(tmp_path / "empty_first")
     dedup_ingest_batch(docs.filter(F.lit(False)), 0, state)  # empty batch
     dedup_ingest_batch(docs, 1, state)  # must not raise
-    sk1 = spark.read.parquet(state + "/sketch/batch_id=1")
+    sk1 = latest_state(spark, state + "/sketch")
     row = sk1.select("rpb", "bkeys").limit(1).collect()[0]
     assert row["rpb"] == dd.N_PERM // dd.N_BANDS
     assert len(row["bkeys"]) == dd.N_BANDS
     assert read_accepted(spark, state).count() > 0
     # and adoption works from then on (batch 2 omits the shape too)
     dedup_ingest_batch(docs.filter("doc_id % 7 = 0"), 2, state)
-    assert _read_batch_dirs(spark, state + "/sketch") is not None
+    assert snapshot(spark, state + "/sketch", None) is not None
 
 
 def test_dedup_ingest_empty_batch_preserves_wide_pin_across_restart(
@@ -914,6 +912,7 @@ def test_dedup_ingest_empty_batch_preserves_wide_pin_across_restart(
     import hdfs_mapreduce_spark.operators.dedup as dd
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import dedup_ingest_batch
+    from hdfs_mapreduce_spark.streaming.logtable import latest_state
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     state = str(tmp_path / "wide_empty_first")
@@ -924,7 +923,7 @@ def test_dedup_ingest_empty_batch_preserves_wide_pin_across_restart(
     )
     # restart omits the shape (the documented deployment pattern)
     dedup_ingest_batch(docs, 1, state)
-    sk1 = spark.read.parquet(state + "/sketch/batch_id=1")
+    sk1 = latest_state(spark, state + "/sketch")
     row = sk1.select("rpb", "bkeys").limit(1).collect()[0]
     assert row["rpb"] == dd.WIDE_PERM // dd.WIDE_BANDS
     assert len(row["bkeys"]) == dd.WIDE_BANDS
@@ -941,9 +940,10 @@ def test_dedup_ingest_empty_batch_preserves_wide_pin_across_restart(
 
 
 def test_dedup_state_dir_with_glob_metacharacters(spark, tmp_path):
-    """r11 ADVICE: glob_parent_names escapes the literal base, so state
-    dirs named with { } [ ] — legal in file names — list their committed
-    batch dirs correctly instead of being parsed as a pattern."""
+    """r11 ADVICE: the state log's scans escape the literal state root,
+    so state dirs named with { } [ ] — legal in file names — read their
+    live versions correctly instead of being parsed as a pattern, and a
+    replayed batch no-ops there as well."""
     from pyspark.sql import functions as F
 
     from hdfs_mapreduce_spark.sources.catalog import load_table
@@ -957,12 +957,15 @@ def test_dedup_state_dir_with_glob_metacharacters(spark, tmp_path):
     state = str(tmp_path / "run{a}[0]")
     dedup_ingest_batch(halves[0], 0, state)
     dedup_ingest_batch(halves[1], 1, state)
+    dedup_ingest_batch(halves[1], 1, state)  # replay: a no-op
     plain = str(tmp_path / "run_plain")
     dedup_ingest_batch(halves[0], 0, plain)
     dedup_ingest_batch(halves[1], 1, plain)
-    got = {r["doc_id"] for r in read_accepted(spark, state).collect()}
-    want = {r["doc_id"] for r in read_accepted(spark, plain).collect()}
-    assert got == want and got, "metachar state dir diverged from plain"
+    got = [r["doc_id"] for r in read_accepted(spark, state).collect()]
+    want = [r["doc_id"] for r in read_accepted(spark, plain).collect()]
+    assert sorted(got) == sorted(want) and got, (
+        "metachar state dir diverged from plain"
+    )
 
 
 def test_dedup_ingest_batch_resolves_shape_once(spark, tmp_path, monkeypatch):
@@ -1008,8 +1011,9 @@ def test_dedup_ingest_batch_resolves_shape_once(spark, tmp_path, monkeypatch):
 def test_resketch_state_matches_wide_from_scratch(spark, tmp_path):
     """resketch_state migrates the state sketch to the wide b/r point:
     after resketching a default-shape state, subsequent admission
-    decisions equal a state that ran WIDE from scratch; the per-batch
-    dir layout (and so replay idempotence) survives the migration; and
+    decisions equal a state that ran WIDE from scratch; the rebuilt
+    sketch is one full-state version and the shape record is re-pinned;
+    replay idempotence survives the migration; and
     resketch_recommended flags exactly the narrow-state-past-bound
     case."""
     from pyspark.sql import functions as F
@@ -1017,11 +1021,16 @@ def test_resketch_state_matches_wide_from_scratch(spark, tmp_path):
     import hdfs_mapreduce_spark.operators.dedup as dd
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
-        _read_batch_dirs,
+        _read_shape_meta,
         dedup_ingest_batch,
         read_accepted,
         resketch_recommended,
         resketch_state,
+    )
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        _live,
+        _log_versions,
+        snapshot,
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
@@ -1050,12 +1059,12 @@ def test_resketch_state_matches_wide_from_scratch(spark, tmp_path):
     assert resketch_state(
         spark, mig, dd.WIDE_PERM, dd.WIDE_BANDS
     ) == (dd.WIDE_PERM, dd.WIDE_BANDS)
-    # stored shape is wide now, per-batch layout preserved
-    sk = _read_batch_dirs(spark, mig + "/sketch")
+    # stored shape is wide now: one live full-state sketch version, and
+    # the shape record follows it
+    sk = snapshot(spark, mig + "/sketch", None)
     assert dd.resolve_sketch_shape(sk) == (dd.WIDE_PERM, dd.WIDE_BANDS)
-    assert sorted(
-        r["batch_id"] for r in sk.select("batch_id").distinct().collect()
-    ) == [0, 1]
+    assert len(_live(_log_versions(spark, mig + "/sketch"))) == 1
+    assert _read_shape_meta(spark, mig) == (dd.WIDE_PERM, dd.WIDE_BANDS)
     # a wide state never recommends again
     assert resketch_recommended(spark, mig, wide_min_docs=1) is False
     dedup_ingest_batch(thirds[2], 2, mig)  # adopts the wide shape
@@ -1065,20 +1074,23 @@ def test_resketch_state_matches_wide_from_scratch(spark, tmp_path):
     assert accepted_ids(mig) == accepted_ids(wide)
 
 
-def test_resketch_interrupted_swap_guards_and_recovers(spark, tmp_path):
-    """An interrupted resketch swap leaves a marker tree: ingest refuses
-    to run against it (a single-row shape sample cannot detect a
-    mixed-shape sketch), and re-running resketch_state rolls back /
-    cleans up and completes the migration."""
+def test_resketch_interrupted_swap_guards_and_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A resketch that crashes after its rebuild is written but before
+    its log record lands leaves the old sketch live and the rebuild an
+    invisible attempt dir: the probe never sees a mixed-shape sketch (a
+    single-row shape sample cannot detect one), and re-running
+    resketch_state completes the migration."""
+    import os
+
     import pytest
     from pyspark.sql import functions as F
 
     import hdfs_mapreduce_spark.operators.dedup as dd
-    from hdfs_mapreduce_spark.sources import fs as hfs
+    import hdfs_mapreduce_spark.streaming.logtable as lt
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
-        _RESKETCH_OLD,
-        _read_batch_dirs,
         dedup_ingest_batch,
         resketch_state,
     )
@@ -1086,37 +1098,44 @@ def test_resketch_interrupted_swap_guards_and_recovers(spark, tmp_path):
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     state = str(tmp_path / "interrupted")
     dedup_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, state)
-    # simulate a crash between the two swap renames: live tree moved to
-    # the old slot, new tree never landed
-    assert hfs.rename(
-        spark, state + "/sketch", hfs.join(state, _RESKETCH_OLD)
-    )
-    with pytest.raises(RuntimeError, match="resketch_state"):
-        dedup_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
-    # re-running the verb recovers (rollback) and completes the migration
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before the resketch record")
+
+    monkeypatch.setattr(lt, "_publish", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        resketch_state(spark, state, dd.WIDE_PERM, dd.WIDE_BANDS)
+    monkeypatch.undo()
+    # the rebuild's attempt dir exists but the live sketch is the old one
+    assert len(os.listdir(os.path.join(state, "sketch", "data"))) == 2
+    sk = lt.snapshot(spark, state + "/sketch", None)
+    assert dd.resolve_sketch_shape(sk) == (dd.N_PERM, dd.N_BANDS)
+    # re-running the verb completes the migration
     resketch_state(spark, state, dd.WIDE_PERM, dd.WIDE_BANDS)
-    assert not hfs.exists(spark, hfs.join(state, _RESKETCH_OLD))
-    sk = _read_batch_dirs(spark, state + "/sketch")
+    sk = lt.snapshot(spark, state + "/sketch", None)
     assert dd.resolve_sketch_shape(sk) == (dd.WIDE_PERM, dd.WIDE_BANDS)
-    # ingest runs again after recovery
+    # ingest adopts the migrated shape
     dedup_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
+    sk1 = lt.latest_state(spark, state + "/sketch")
+    row = sk1.select("rpb", "bkeys").limit(1).collect()[0]
+    assert len(row["bkeys"]) == dd.WIDE_BANDS
 
 
 def test_compact_state_preserves_admissions_and_bounds_dirs(spark, tmp_path):
-    """compact_state folds old batch dirs into one: admission decisions
-    are unchanged (the merged dir's id is below every retained id, so
-    the probe-below cut covers its constituents exactly as before), the
-    dir count drops to keep_last + 1, and a replay of the retained last
-    batch is still a no-op."""
+    """compact_state merges each state table's live versions into one
+    compaction commit: admission decisions are unchanged (the merged
+    version holds exactly the rows it replaces), the live-version count
+    drops to one per table, a second run finds nothing to merge, and a
+    replay of the newest batch is still a no-op."""
     from pyspark.sql import functions as F
 
-    from hdfs_mapreduce_spark.sources import fs as hfs
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
         compact_state,
         dedup_ingest_batch,
         read_accepted,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     parts = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
@@ -1134,34 +1153,33 @@ def test_compact_state_preserves_admissions_and_bounds_dirs(spark, tmp_path):
     comp = str(tmp_path / "comp")
     for i in range(3):
         dedup_ingest_batch(parts[i], i, comp)
-    assert compact_state(spark, comp) == [0, 1]  # keep_last=1 retains b2
+    assert compact_state(spark, comp) == [0, 1, 2]
     for sub in ("accepted", "sketch"):
-        dirs = sorted(
-            d
-            for d in hfs.list_child_names(spark, hfs.join(comp, sub))
-            if d.startswith("batch_id=")
-        )
-        assert dirs == ["batch_id=1", "batch_id=2"], (sub, dirs)
+        live = _live(_log_versions(spark, f"{comp}/{sub}"))
+        assert [e[2] for e in live] == ["compact"], (sub, live)
+    assert compact_state(spark, comp) == []  # one live version: no-op
+    dedup_ingest_batch(parts[2], 2, comp)  # replay after compaction
+    assert len(_log_versions(spark, f"{comp}/sketch")) == 4
     dedup_ingest_batch(parts[3], 3, comp)
     assert ids(comp) == ids(plain)
     dedup_ingest_batch(parts[3], 3, comp)  # replay: still a no-op
     assert ids(comp) == ids(plain)
-    # nothing below the tail -> no-op
-    assert compact_state(spark, comp, keep_last=2) == []
 
 
 def test_compact_state_interrupted_swap_guards_and_recovers(
     spark, tmp_path, monkeypatch
 ):
-    """A crash inside the destructive swap phase leaves the SWAP meta +
-    a partially-swapped tree: ingest refuses to run, and re-running
-    compact_state rolls the swap forward to a consistent compacted
-    state with admissions unchanged."""
+    """A compaction that crashes after the accepted table's compaction
+    record lands and before the sketch table's leaves one table merged
+    and the other not, plus an invisible attempt dir: ingest runs on
+    with admissions unchanged, and re-running compact_state finishes
+    the merge."""
     import pytest
     from pyspark.sql import functions as F
 
     import hdfs_mapreduce_spark.streaming.dedup as sd
     from hdfs_mapreduce_spark.sources.catalog import load_table
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     parts = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
@@ -1173,26 +1191,26 @@ def test_compact_state_interrupted_swap_guards_and_recovers(
         dedup(parts[i], i, plain)
         dedup(parts[i], i, comp)
 
-    real_finish = sd._finish_compact_swap
-    calls = {"n": 0}
+    real_publish = sd._publish
 
-    def crashing_finish(spark_, state_dir, compact, tmps):
-        calls["n"] += 1
-        # swap ONE tree fully, then "crash" before the second
-        one = dict(list(tmps.items())[:1])
-        real_finish(spark_, state_dir, compact, one)
-        raise RuntimeError("injected crash mid-swap")
+    def crashing_publish(spark_, root, *a, **k):
+        if root.endswith("sketch"):
+            raise RuntimeError("injected crash between the two records")
+        return real_publish(spark_, root, *a, **k)
 
-    monkeypatch.setattr(sd, "_finish_compact_swap", crashing_finish)
+    monkeypatch.setattr(sd, "_publish", crashing_publish)
     with pytest.raises(RuntimeError, match="injected"):
         sd.compact_state(spark, comp)
-    assert calls["n"] == 1
-    with pytest.raises(RuntimeError, match="compact_state"):
-        sd.dedup_ingest_batch(parts[3], 3, comp)
-    monkeypatch.setattr(sd, "_finish_compact_swap", real_finish)
-    sd.compact_state(spark, comp)  # recovers: rolls the swap forward
+    monkeypatch.setattr(sd, "_publish", real_publish)
+
+    def n_live(state, sub):
+        return len(_live(_log_versions(spark, f"{state}/{sub}")))
+
+    assert (n_live(comp, "accepted"), n_live(comp, "sketch")) == (1, 3)
     sd.dedup_ingest_batch(parts[3], 3, comp)
     sd.dedup_ingest_batch(parts[3], 3, plain)
+    assert sd.compact_state(spark, comp) == [0, 1, 2, 3]
+    assert (n_live(comp, "accepted"), n_live(comp, "sketch")) == (1, 1)
 
     def ids(state):
         return sorted(
@@ -1205,23 +1223,23 @@ def test_compact_state_interrupted_swap_guards_and_recovers(
 
 def test_maintenance_verbs_compose_with_empty_batches(spark, tmp_path):
     """The round-11 maintenance verbs compose on one state dir, through
-    the awkward corners: empty early batches (no shape recorded),
-    resketch (which drops empty-batch sketch dirs from the partitioned
-    rewrite), then compaction whose compact set has NO surviving sketch
-    dirs (exercising the 0-row-schema merge branch), then more ingest —
-    admissions must equal a plain wide-from-scratch run throughout."""
+    the awkward corners: empty early batches (no shape recorded), a
+    resketch over a state whose early versions hold no rows, then a
+    compaction that merges the resketch's full-state version with a
+    later batch and the accepted table's empty versions, then more
+    ingest — admissions must equal a plain wide-from-scratch run
+    throughout."""
     from pyspark.sql import functions as F
 
     import hdfs_mapreduce_spark.operators.dedup as dd
-    from hdfs_mapreduce_spark.sources import fs as hfs
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
-        _read_batch_dirs,
         compact_state,
         dedup_ingest_batch,
         read_accepted,
         resketch_state,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import snapshot
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     empty = docs.filter(F.lit(False))
@@ -1233,11 +1251,10 @@ def test_maintenance_verbs_compose_with_empty_batches(spark, tmp_path):
     dedup_ingest_batch(halves[0], 2, state)
     resketch_state(spark, state, dd.WIDE_PERM, dd.WIDE_BANDS)
     dedup_ingest_batch(halves[1], 3, state)
-    # compact [0, 1]: both sketch dirs were dropped by the resketch's
-    # partitioned rewrite (no rows), so the sketch merge takes the
-    # 0-row-schema branch; the accepted merge folds two empty dirs
-    assert compact_state(spark, state, keep_last=2) == [0, 1]
-    sk = _read_batch_dirs(spark, state + "/sketch")
+    # the sketch's live versions are the resketch (batches 0-2) and
+    # batch 3; the accepted table's are batches 0-3
+    assert compact_state(spark, state) == [0, 1, 2, 3]
+    sk = snapshot(spark, state + "/sketch", None)
     assert dd.resolve_sketch_shape(sk) == (dd.WIDE_PERM, dd.WIDE_BANDS)
     dedup_ingest_batch(halves[0], 4, state)  # replays half 0: all dups
 
@@ -1258,18 +1275,18 @@ def test_maintenance_verbs_compose_with_empty_batches(spark, tmp_path):
 
 def test_tiered_compact_bounds_per_run_input_and_converges(spark, tmp_path):
     """r11 verdict 'What's missing' #4: max_batches_per_run bounds each
-    compaction to the N smallest below-tail dirs (size-tiered), repeated
-    tiered runs converge to the same single merged dir as one untiered
-    run, and admissions are unchanged throughout."""
+    compaction to the N smallest live versions of a table (size-tiered),
+    repeated tiered runs converge to the same single live version as one
+    untiered run, and admissions are unchanged throughout."""
     from pyspark.sql import functions as F
 
-    from hdfs_mapreduce_spark.sources import fs as hfs
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
         compact_state,
         dedup_ingest_batch,
         read_accepted,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     parts = [docs.filter(F.col("doc_id") % 6 == i) for i in range(6)]
@@ -1286,27 +1303,26 @@ def test_tiered_compact_bounds_per_run_input_and_converges(spark, tmp_path):
             for r in read_accepted(spark, state).select("doc_id").collect()
         )
 
-    def dirs(state, sub):
-        return sorted(
-            d
-            for d in hfs.list_child_names(spark, hfs.join(state, sub))
-            if d.startswith("batch_id=")
-        )
+    def n_live(sub):
+        return len(_live(_log_versions(spark, f"{tier}/{sub}")))
 
     want = ids(plain)
     runs = []
     while True:
+        before = {sub: n_live(sub) for sub in ("accepted", "sketch")}
         merged = compact_state(spark, tier, max_batches_per_run=2)
         if not merged:
             break
         runs.append(merged)
-        assert len(merged) <= 2, "tier bound violated"
+        for sub, n in before.items():
+            # a merge of at most 2 versions removes at most 1 live one
+            assert n - n_live(sub) <= 1, f"tier bound violated in {sub}"
         assert ids(tier) == want, f"admissions changed after {merged}"
-    # 5 below-tail dirs at tier 2 -> strictly more than one run needed,
-    # and the end state matches the one-shot full merge: a single merged
-    # dir at the highest below-tail id plus the retained tail
+    # 6 live versions at tier 2 -> strictly more than one run needed,
+    # and the end state matches the one-shot full merge: a single live
+    # version per table
     assert len(runs) >= 2
-    assert dirs(tier, "accepted") == ["batch_id=4", "batch_id=5"]
+    assert (n_live("accepted"), n_live("sketch")) == (1, 1)
     # future ingest over the tiered state is unaffected
     dedup_ingest_batch(parts[0], 6, tier)  # pure replay content: all dups
     assert ids(tier) == want
@@ -1321,19 +1337,19 @@ def test_sink_self_compaction_bounds_dirs_with_admissions_unchanged(
 ):
     """Sink-integrated maintenance (r11 verdict Next #3): a long stream
     of micro-batches through dedup_ingest_batch_maintained with
-    compact_every=K keeps the state dir count bounded (never more than
-    K + keep_last + 1 committed accepted dirs) while admitting exactly
-    what the unmaintained sink admits; a replayed batch id never
-    double-compacts (the cadence re-fires into a no-op)."""
+    compact_every=K keeps the live-version count bounded (never more
+    than K live accepted versions) while admitting exactly what the
+    unmaintained sink admits; a replayed batch id never double-compacts
+    (the cadence re-fires into a no-op and the log does not grow)."""
     from pyspark.sql import functions as F
 
-    from hdfs_mapreduce_spark.sources import fs as hfs
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
         dedup_ingest_batch,
         dedup_ingest_batch_maintained,
         read_accepted,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     n_batches, k = 12, 3
@@ -1343,19 +1359,15 @@ def test_sink_self_compaction_bounds_dirs_with_admissions_unchanged(
 
     plain = str(tmp_path / "plain")
     kept = str(tmp_path / "maintained")
-    max_dirs = 0
+    max_live = 0
     for i in range(n_batches):
         dedup_ingest_batch(parts[i], i, plain)
         dedup_ingest_batch_maintained(
             parts[i], i, kept, compact_every=k, compact_max_batches=4
         )
-        n_dirs = sum(
-            1
-            for d in hfs.list_child_names(spark, hfs.join(kept, "accepted"))
-            if d.startswith("batch_id=")
-        )
-        max_dirs = max(max_dirs, n_dirs)
-    assert max_dirs <= k + 2, f"dir count unbounded: peaked at {max_dirs}"
+        n_live = len(_live(_log_versions(spark, kept + "/accepted")))
+        max_live = max(max_live, n_live)
+    assert max_live <= k, f"live versions unbounded: peaked at {max_live}"
 
     def ids(state):
         return sorted(
@@ -1364,27 +1376,36 @@ def test_sink_self_compaction_bounds_dirs_with_admissions_unchanged(
         )
 
     assert ids(kept) == ids(plain)
-    # replay of the cadence batch: ingest no-ops (its docs are all dups
-    # of its own committed attempt), compact re-fires into a no-op
+    # replay of the cadence batch: ingest no-ops on its own committed
+    # batch id, compact re-fires into a no-op
+    def log_lengths():
+        return [
+            len(_log_versions(spark, f"{kept}/{t}"))
+            for t in ("accepted", "sketch")
+        ]
+
+    logs = log_lengths()
     last = n_batches - 1
     dedup_ingest_batch_maintained(
         parts[last], last, kept, compact_every=k, compact_max_batches=4
     )
+    assert log_lengths() == logs
     assert ids(kept) == ids(plain)
 
 
 def test_sink_self_heals_interrupted_in_sink_compaction(
     spark, tmp_path, monkeypatch
 ):
-    """An in-sink compaction that crashes mid-swap leaves markers that
-    make plain ingest refuse; the NEXT maintained batch catches the
-    refusal, re-runs compact_state (rolling the swap forward), and
-    retries the ingest — the stream heals without an operator."""
+    """An in-sink compaction that crashes after the batch committed fails
+    the batch; the stream's replay of that batch no-ops the ingest on
+    its committed batch id, re-fires the cadence, and finishes the
+    merge — the stream heals without an operator."""
     import pytest
     from pyspark.sql import functions as F
 
     import hdfs_mapreduce_spark.streaming.dedup as sd
     from hdfs_mapreduce_spark.sources.catalog import load_table
+    from hdfs_mapreduce_spark.streaming.logtable import _live, _log_versions
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     parts = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
@@ -1393,24 +1414,25 @@ def test_sink_self_heals_interrupted_in_sink_compaction(
     state = str(tmp_path / "healing")
     for i in range(3):
         sd.dedup_ingest_batch(parts[i], i, plain)
-        sd.dedup_ingest_batch(parts[i], i, state)
+    for i in range(2):
+        sd.dedup_ingest_batch_maintained(parts[i], i, state, compact_every=3)
 
-    real_finish = sd._finish_compact_swap
+    real_publish = sd._publish
 
-    def crashing_finish(spark_, state_dir, compact, tmps):
-        one = dict(list(tmps.items())[:1])
-        real_finish(spark_, state_dir, compact, one)
-        raise RuntimeError("injected crash mid-swap")
+    def crashing_publish(spark_, root, data, entries, bid, kind, *a, **k):
+        if kind == "compact" and root.endswith("sketch"):
+            raise RuntimeError("injected crash mid-compaction")
+        return real_publish(spark_, root, data, entries, bid, kind, *a, **k)
 
-    monkeypatch.setattr(sd, "_finish_compact_swap", crashing_finish)
+    monkeypatch.setattr(sd, "_publish", crashing_publish)
     with pytest.raises(RuntimeError, match="injected"):
-        sd.compact_state(spark, state)
-    monkeypatch.setattr(sd, "_finish_compact_swap", real_finish)
-    # an UNmaintained sink still refuses (operator-owned cadence)...
-    with pytest.raises(RuntimeError, match="compact_state"):
-        sd.dedup_ingest_batch(parts[3], 3, state)
-    # ...but the maintained sink heals and ingests in one call
-    sd.dedup_ingest_batch_maintained(parts[3], 3, state, compact_every=100)
+        sd.dedup_ingest_batch_maintained(parts[2], 2, state, compact_every=3)
+    monkeypatch.setattr(sd, "_publish", real_publish)
+    # the replay heals: ingest no-ops, the cadence merges the sketch
+    sd.dedup_ingest_batch_maintained(parts[2], 2, state, compact_every=3)
+    for sub in ("accepted", "sketch"):
+        assert len(_live(_log_versions(spark, f"{state}/{sub}"))) == 1, sub
+    sd.dedup_ingest_batch_maintained(parts[3], 3, state, compact_every=3)
     sd.dedup_ingest_batch(parts[3], 3, plain)
 
     def ids(st):
@@ -1460,3 +1482,92 @@ def test_sink_resketch_advisory_fires_on_cadence(spark, tmp_path):
             resketch_min_docs=5,
         )
     assert fired_wide == []
+
+
+def test_dedup_state_log_crash_windows_on_a_small_corpus(
+    spark, tmp_path, monkeypatch
+):
+    """The dedup state's crash windows on a small in-memory corpus: a
+    crash after the accepted record and before the sketch record,
+    replayed, admits exactly what an uninterrupted run admits (the set
+    follows from how the corpus is built, and the accepted record is
+    not landed twice); orphan attempt dirs under either table stay
+    invisible; and a batch replayed after an in-sink compaction is a
+    no-op."""
+    import random
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    import hdfs_mapreduce_spark.streaming.dedup as sd
+    from hdfs_mapreduce_spark.streaming.logtable import _log_versions
+
+    # batch 0 holds the even ids, batch 1 the odd ones. Docs 0-23 are
+    # random; docs 0-11 get a near-dup (one word changed) in the other
+    # batch, and docs 0-7 an exact copy in their own batch. Batch 0
+    # admits its 12 docs and the 6 near-dups of docs 1-11; batch 1
+    # admits only docs 13-23, the ones without a near-dup.
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(400)]
+    rows = []
+    for i in range(24):
+        text = [rng.choice(words) for _ in range(40)]
+        rows.append((i, " ".join(text)))
+        if i < 8:
+            rows.append((i + 60, " ".join(text)))
+        if i < 12:
+            text[5] = "changed"
+            rows.append((i + 31, " ".join(text)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    halves = [docs.filter(F.col("doc_id") % 2 == i) for i in range(2)]
+    want = sorted(
+        [i for i in range(24) if i % 2 == 0 or i > 12]
+        + [i + 31 for i in range(1, 12, 2)]
+    )
+
+    def ids(state):
+        return sorted(
+            r["doc_id"] for r in sd.read_accepted(spark, state).collect()
+        )
+
+    state = str(tmp_path / "crashy")
+
+    def maintained(i):
+        sd.dedup_ingest_batch_maintained(halves[i], i, state, compact_every=2)
+
+    maintained(0)
+    # orphans: attempt dirs no record names, holding batch 1's rows and
+    # sketch — read by mistake, they would add rejected ids to the
+    # admitted set and reject every batch-1 doc in the probe
+    halves[1].write.parquet(f"{state}/accepted/data/aorphan")
+    orphan_sketch = sd._banded_sketch(
+        halves[1], "doc_id", "text", sd.N_PERM, sd.N_BANDS
+    )
+    orphan_sketch.write.parquet(f"{state}/sketch/data/aorphan")
+    real_publish = sd._publish
+
+    def crash_before_sketch(spark_, root, *a, **k):
+        if root.endswith("sketch"):
+            raise RuntimeError("injected crash before the sketch record")
+        return real_publish(spark_, root, *a, **k)
+
+    monkeypatch.setattr(sd, "_publish", crash_before_sketch)
+    with pytest.raises(RuntimeError, match="injected"):
+        maintained(1)
+    monkeypatch.setattr(sd, "_publish", real_publish)
+    maintained(1)  # the replay lands the sketch record, then compacts
+    assert [e[1] for e in _log_versions(spark, state + "/accepted")] == [
+        0, 1, None
+    ]
+    assert ids(state) == want
+
+    def log_lengths():
+        return [
+            len(_log_versions(spark, f"{state}/{t}"))
+            for t in ("accepted", "sketch")
+        ]
+
+    logs = log_lengths()
+    maintained(1)  # replay after the in-sink compaction
+    assert log_lengths() == logs
+    assert ids(state) == want

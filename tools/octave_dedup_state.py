@@ -10,14 +10,17 @@ extrapolations:
   1. resketch tracks the accepted corpus AT WORST linearly (one
      shingle+minhash pass over the corpus plus one partitioned write —
      nothing hidden should be superlinear);
-  2. compact_state tracks the live below-tail state; the TIERED run
+  2. compact_state tracks the live state; the TIERED run
      (``max_batches_per_run``) reads only its tier, so per-run cost is
      bounded by the tier's share of the state, not the stream's age.
 
-Plus one flatness proof: the per-micro-batch driver LISTING RPC count
-(glob_parent_names / list_child_names / exists through sources/fs.py)
-is identical for an ingest against 2-batch-old state and 6-batch-old
-state — stream age buys zero extra round trips per batch.
+Plus the per-micro-batch driver metadata call count (list_child_names /
+exists / read_text through sources/fs.py) for an ingest against
+2-batch-old and 6-batch-old state. Each ingest reads both state tables'
+logs once: one listing plus one record read per commit since the
+newest log checkpoint (every 32 commits), so the count grows with
+stream age between checkpoints; ``rpc_growth_age2_to_age6`` reports
+that growth.
 
 Protocol: bench.octave — one session per SF under bench.configure,
 plan shapes pre-warmed by a full pass in bench.warm, min-of-2 per timed
@@ -41,15 +44,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 
 N_BATCHES = 6
-TIER = 3  # tiered compaction reads the 3 smallest of the 5 below-tail dirs
+TIER = 3  # tiered compaction reads the 3 smallest of the 6 live versions
 
 
-def _count_fs_listings(fn):
-    """Run ``fn`` with the sources/fs listing entry points wrapped in
-    counters; return (result, {fn_name: calls})."""
+def _count_fs_reads(fn):
+    """Run ``fn`` with the sources/fs listing and read entry points
+    wrapped in counters; return (result, {fn_name: calls})."""
     from hdfs_mapreduce_spark.sources import fs as hfs
 
-    counted = ["glob_parent_names", "list_child_names", "exists"]
+    counted = ["list_child_names", "exists", "read_text"]
     calls: dict[str, int] = {}
     saved = {}
 
@@ -125,16 +128,12 @@ def run_maintenance(spark, sf_dir: str) -> dict[str, object]:
         on_copy(lambda s: resketch_state(spark, s, WIDE_PERM, WIDE_BANDS)),
     )
 
-    # -- compaction: full merge (5 below-tail dirs) vs one tiered run
+    # -- compaction: full merge (6 live versions) vs one tiered run
     #    (the TIER smallest) --
-    timed("compact_full_sec", on_copy(lambda s: compact_state(spark, s, keep_last=1)))
+    timed("compact_full_sec", on_copy(lambda s: compact_state(spark, s)))
     timed(
         "compact_tiered_sec",
-        on_copy(
-            lambda s: compact_state(
-                spark, s, keep_last=1, max_batches_per_run=TIER
-            )
-        ),
+        on_copy(lambda s: compact_state(spark, s, max_batches_per_run=TIER)),
     )
 
     # -- the advisory (read-only): one count over accepted state --
@@ -156,24 +155,24 @@ def run_maintenance(spark, sf_dir: str) -> dict[str, object]:
 
     timed("ingest_after_resketch_sec", do_ingest_wide)
 
-    # -- RPC flatness: listing calls for one ingest at state age 2 vs 6 --
+    # -- metadata calls for one ingest at state age 2 vs 6 --
     young = fresh("young")
     os.makedirs(young, exist_ok=True)
     for i in range(2):
         dedup_ingest_batch(batches[i], i, young)
     probe = docs.filter(F.col("doc_id") % 97 == 5)
-    _, young_calls = _count_fs_listings(
+    _, young_calls = _count_fs_reads(
         lambda: dedup_ingest_batch(probe, 2, young)
     )
     aged = fresh("aged")
     shutil.copytree(base, aged)
-    _, aged_calls = _count_fs_listings(
+    _, aged_calls = _count_fs_reads(
         lambda: dedup_ingest_batch(probe, N_BATCHES, aged)
     )
-    out["rpc_listings_ingest_age2"] = young_calls
-    out["rpc_listings_ingest_age6"] = aged_calls
-    out["rpc_flat_with_age"] = sum(young_calls.values()) == sum(
-        aged_calls.values()
+    out["rpc_calls_ingest_age2"] = young_calls
+    out["rpc_calls_ingest_age6"] = aged_calls
+    out["rpc_growth_age2_to_age6"] = sum(aged_calls.values()) - sum(
+        young_calls.values()
     )
     return out
 

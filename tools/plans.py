@@ -90,8 +90,8 @@ def ingest_write_rows(spark, sf_dir: str) -> dict[str, dict[str, int]]:
     writes = {}
     parquet = rw.DataFrameWriter.parquet
 
-    def spy(self, path, *a, **kw):
-        writes[path.rstrip("/").split("/")[-2]] = self._df
+    def spy(self, path, *a, **kw):  # path: <state>/<table>/data/a<tok>
+        writes[path.rstrip("/").split("/")[-3]] = self._df
         return parquet(self, path, *a, **kw)
 
     state = tempfile.mkdtemp(prefix="plan_budget_")
