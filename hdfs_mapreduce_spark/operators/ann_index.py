@@ -61,6 +61,12 @@ from hdfs_mapreduce_spark.operators.similarity import (
     _ivfpq_model,
     _no_neighbors,
 )
+from hdfs_mapreduce_spark.streaming.logtable import (
+    _attempt_name,
+    _log_versions,
+    _publish,
+    vacuum,
+)
 
 
 def _encode(model, embeddings: DataFrame, id_col: str, vec_col: str):
@@ -406,106 +412,96 @@ def ann_probe_ivfpq(
 # drifts, centroids go stale and probe pruning (then recall) decays with
 # no recovery path short of a manual rebuild that would yank parquet
 # files out from under concurrent probes. The managed layer adds the
-# missing verb — rebuild — with the lake-format publication discipline
-# the logtable already uses (streaming/logtable.py RenameCommitBackend):
+# missing verb — rebuild — by making the index root a logtable
+# (streaming/logtable.py), the engine's one state log:
 #
-#     {root}/_manifest/v{K}          one rename-committed record per
-#                                    version, content = the generation
-#                                    dir it points at
-#     {root}/gen-{K:06d}-{token}/... a full immutable index (centroids,
-#                                    codewords, codes, tombstone logtable)
+#     {root}/_log/v{N}.commit   one put-if-absent record per version,
+#                               naming the generation dir it publishes
+#     {root}/data/a{token}/...  a full immutable index (centroids,
+#                               codewords, codes, tombstone logtable)
 #
-# Readers resolve the HIGHEST manifest version once at open; their
-# DataFrames pin that generation's file listing, so a rebuild — which
-# only ever ADDS a new gen dir and a new manifest record — is invisible
-# to in-flight probes (old files are never touched). Writers race on the
-# manifest slot with put-if-absent rename semantics: the flip either
-# happens entirely or not at all, and a concurrent rebuild loses the
-# slot and raises instead of half-publishing. Generation dir names
-# carry a UNIQUE token (the logtable's attempt-dir rule): were they
-# derived from the version alone, a stale-handle rebuild racing toward
-# the same v+1 would build INTO the directory the winner already
-# published — clobbering live tables before ever reaching the manifest
-# race it is about to lose. This is the same swap-by-pointer pattern
-# FAISS deployments hand-roll around index files and Delta/Iceberg
-# formalize as the table manifest.
-
-
-def _gen_name(version: int) -> str:
-    import uuid
-
-    return f"gen-{version:06d}-{uuid.uuid4().hex[:8]}"
-
-
-def _manifest_dir(root: str) -> str:
-    from hdfs_mapreduce_spark.sources import fs as hfs
-
-    return hfs.join(root, "_manifest")
+# Each generation is a kind='compact' commit, the log's full-state
+# replace: it replaces the generation before it, and it publishes only
+# at the slot right after the log read it was built from. Readers
+# resolve the newest version once at open; their DataFrames pin that
+# generation's file listing, so a rebuild — which only ever ADDS a new
+# attempt dir and a new log record — is invisible to in-flight probes
+# (old files are never touched). Two rebuilds of the same version race
+# on one slot: the loser raises ConcurrentCommitError and the log
+# deletes its orphan dir. As-of opens and retention are the log's own
+# as-of read and vacuum; log records are never deleted, so a version
+# slot never reopens. This is the same swap-by-pointer pattern FAISS
+# deployments hand-roll around index files and Delta/Iceberg formalize
+# as the table manifest.
 
 
 def current_index_version(spark: SparkSession, root: str):
-    """(version, generation-dir-name) of the newest published index, or
-    None when no manifest record exists yet. One directory listing plus
-    one small-file read — the only metadata a reader consults."""
-    from hdfs_mapreduce_spark.sources import fs as hfs
-
-    names = hfs.list_child_names(spark, _manifest_dir(root))
-    versions = sorted(
-        int(n[1:]) for n in names if n.startswith("v") and n[1:].isdigit()
-    )
-    if not versions:
-        return None
-    v = versions[-1]
-    gen = hfs.read_text(spark, hfs.join(_manifest_dir(root), f"v{v}")).strip()
-    return v, gen
+    """(version, generation-dir-name) of the newest published index —
+    the log's newest entry — or None before the first commit. One log
+    read: a listing plus one small-file read per record since the
+    newest checkpoint, whatever the corpus size."""
+    entries = _log_versions(spark, root)
+    return (entries[-1][0], entries[-1][3]) if entries else None
 
 
 class IndexRetentionError(RuntimeError):
     """An as-of open asked for a version whose generation was vacuumed
-    below the retention horizon (the manifest record survives as a
-    tombstone marker, the data does not) — the logtable
-    read-below-vacuum-horizon contract, mirrored."""
+    below the retention horizon (the log record survives, the data does
+    not) — the logtable read-below-vacuum-horizon contract."""
 
 
 def open_managed_ivfpq(
     spark: SparkSession, root: str, version: int | None = None
 ) -> dict:
-    """Open a generation of a managed index: resolve the manifest
-    pointer (newest by default, a specific ``version`` for as-of
-    reads), then load that generation's tables. The returned handle
-    carries (root, version, generation) so rebuilds can do optimistic
-    concurrency on the version they saw.
+    """Open a generation of a managed index: the newest by default, or
+    an as-of read of the log at ``version``, then load that
+    generation's tables. The returned handle carries (root, version,
+    generation) so rebuilds can do optimistic concurrency on the
+    version they saw.
 
-    As-of semantics mirror logtable retention: an unknown version
-    raises ValueError; a version whose manifest record survives but
-    whose generation directory was vacuumed raises
-    :class:`IndexRetentionError` AT OPEN — never a half-readable
-    handle that fails mid-probe."""
+    An unknown version raises ValueError; a version whose generation
+    was vacuumed raises :class:`IndexRetentionError` AT OPEN — never a
+    half-readable handle that fails mid-probe."""
     from hdfs_mapreduce_spark.sources import fs as hfs
 
-    if version is None:
-        cur = current_index_version(spark, root)
-        if cur is None:
-            raise ValueError(f"no published index generation under {root}")
-        v, gen = cur
-    else:
-        record = hfs.join(_manifest_dir(root), f"v{version}")
-        if not hfs.exists(spark, record):
-            raise ValueError(
-                f"no manifest record v{version} under {root} — versions "
-                "are dense from v1 to the current pointer"
-            )
-        v, gen = version, hfs.read_text(spark, record).strip()
-    gen_dir = hfs.join(root, gen)
+    entries = _log_versions(spark, root)
+    if version is not None:
+        entries = [e for e in entries if e[0] <= version]
+    if not entries:
+        raise ValueError(f"no published index generation under {root}")
+    v, gen = entries[-1][0], entries[-1][3]
+    if version is not None and v != version:
+        raise ValueError(f"no index version {version} under {root}")
+    gen_dir = hfs.join(root, "data", gen)
     if not hfs.exists(spark, gen_dir):
         raise IndexRetentionError(
             f"generation v{v} ({gen}) of {root} was vacuumed below the "
-            "retention horizon — its manifest record remains as a "
-            "tombstone marker but the data is gone; open a retained "
-            "version or raise retain_last on the vacuum"
+            "retention horizon — its log record remains but the data is "
+            "gone; open a retained version or raise retain_last on the "
+            "vacuum"
         )
     index = load_ivfpq_index(spark, gen_dir, "ivfpq")
     return {**index, "root": root, "version": v, "generation": gen}
+
+
+def _publish_generation(
+    root: str, entries: list, embeddings: DataFrame, *model
+) -> dict:
+    """Build a generation (``model`` = build_ivfpq_index's nlist, m_sub,
+    ksub, id_col, vec_col) into a fresh attempt dir and publish it as
+    the log's full-state replace at the slot after ``entries``. The
+    handle is the build's own dict: its DataFrames already read the
+    written parquet, its meta carries the ACTUAL fitted shapes and a
+    fresh generation has no tombstones, so a re-open would only repeat
+    three footer reads and a metadata job (r13)."""
+    from hdfs_mapreduce_spark.sources import fs as hfs
+
+    gen = _attempt_name()
+    built = build_ivfpq_index(
+        embeddings, *model, name="ivfpq", base=hfs.join(root, "data", gen)
+    )
+    v = _publish(embeddings.sparkSession, root, gen, entries, None, "compact")
+    return {**built, "root": root, "version": v, "generation": gen}
 
 
 def create_managed_ivfpq(
@@ -517,42 +513,23 @@ def create_managed_ivfpq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """Build generation 1 of a managed index under ``root`` (default: a
-    'managed_ivfpq' tree in session scratch, auto-cleaned at exit) and
-    publish it as manifest v1. Returns the opened handle."""
+    """Build the first generation of a managed index under ``root``
+    (default: a 'managed_ivfpq' tree in session scratch, auto-cleaned at
+    exit) and publish it as the log's first commit, version 0. A
+    concurrent create loses that slot and raises
+    ``ConcurrentCommitError``. Returns the opened handle."""
     from hdfs_mapreduce_spark.operators.materialize import session_scratch_dir
     from hdfs_mapreduce_spark.sources import fs as hfs
 
     spark = embeddings.sparkSession
     if root is None:
         root = hfs.join(session_scratch_dir(spark), "managed_ivfpq")
-    if current_index_version(spark, root) is not None:
+    entries = _log_versions(spark, root)
+    if entries:
         raise ValueError(f"index already exists under {root} — open it")
-    gen = _gen_name(1)
-    built = build_ivfpq_index(
-        embeddings, nlist, m_sub, ksub, id_col, vec_col,
-        name="ivfpq", base=hfs.join(root, gen),
+    return _publish_generation(
+        root, entries, embeddings, nlist, m_sub, ksub, id_col, vec_col
     )
-    if not hfs.write_text_atomic(
-        spark, hfs.join(_manifest_dir(root), "v1"), gen
-    ):
-        try:  # best effort: nothing references the lost race's gen dir
-            hfs.delete(spark, hfs.join(root, gen))
-        except Exception:
-            pass
-        raise RuntimeError(
-            f"lost the v1 manifest race under {root}: another writer "
-            "created this index concurrently"
-        )
-    # The returned handle is the build's own dict (its DataFrames already
-    # read the written parquet via materialize(), its meta carries the
-    # ACTUAL fitted shapes, and a fresh generation has no tombstones) —
-    # a full open_managed_ivfpq here re-read three parquet footers and
-    # re-derived the same metadata with an extra driver job for nothing
-    # (r13; opens elsewhere still go through load_ivfpq_index). A
-    # just-published v1 by construction has version 1 / generation
-    # ``gen``: the manifest write above is the only record.
-    return {**built, "root": root, "version": 1, "generation": gen}
 
 
 def rebuild_ivfpq_index(
@@ -572,17 +549,18 @@ def rebuild_ivfpq_index(
     (broadcast anti-join — deletes are compacted away, the rebuild half
     of the delete contract), model parameters default to the open
     generation's, and the new model + cell-clustered codes land in a
-    fresh uniquely-named ``gen-{v+1}-{token}`` directory that no reader
-    can see until the single rename-commit of manifest ``v{v+1}``
-    publishes it (the unique token keeps a racing rebuild's build-side
-    writes out of any directory another writer could publish).
+    fresh attempt dir that no reader can see until the log record of
+    version v+1 publishes it.
 
     Concurrency contract: in-flight probes of ANY open handle keep
     their generation's files (never touched, never deleted here) and
     finish with pre-rebuild results; handles opened after the flip see
-    the new model. Two concurrent rebuilds of the same version race on
-    the manifest slot — the loser raises and retries against the
-    winner's generation (optimistic concurrency, the logtable's rule).
+    the new model. The log read behind the staleness check is the one
+    the publish builds on, so the rebuild wins or loses exactly slot
+    v+1: a handle already behind the log fails before the retrain, and
+    a rebuild that loses the slot while building raises
+    ``ConcurrentCommitError`` with its orphan dir deleted. Either way
+    the caller reopens and re-evaluates (optimistic concurrency).
 
     When to call: the signals already shipped — ann_ivfpq_recall below
     target, corpus_drift_psi above threshold, or rebuild_recommended()'s
@@ -601,8 +579,6 @@ def rebuild_ivfpq_index(
     resumed against the new generation with a fresh epoch — the same
     stop-the-writer discipline every swap-by-pointer index deployment
     uses."""
-    from hdfs_mapreduce_spark.sources import fs as hfs
-
     spark = corpus.sparkSession
     root = index.get("root")
     if root is None:
@@ -610,20 +586,12 @@ def rebuild_ivfpq_index(
             "rebuild requires a managed index handle "
             "(create_managed_ivfpq / open_managed_ivfpq)"
         )
-    # Cheap staleness check BEFORE the expensive retrain: the manifest
-    # write is the real arbiter, but a handle that is already behind the
-    # published version can only lose, so fail it now instead of after a
-    # full corpus scan. Because vacuum retains manifest records as
-    # tombstone markers (see vacuum_index_generations), version slots
-    # never reopen — a stale handle's v_next write collides with the
-    # retained record and raises, never resurrecting a below-current
-    # version (round-9 ADVICE: rebuild-after-vacuum slot reuse).
-    cur = current_index_version(spark, root)
-    if cur is None or cur[0] != index["version"]:
+    entries = _log_versions(spark, root)
+    if not entries or entries[-1][0] != index["version"]:
         raise RuntimeError(
             f"stale index handle: opened v{index['version']} but the "
-            f"manifest is at v{cur[0] if cur else '<empty>'} — reopen "
-            "the index and re-evaluate the rebuild trigger"
+            f"log is at v{entries[-1][0] if entries else '<empty>'} — "
+            "reopen the index and re-evaluate the rebuild trigger"
         )
     meta = index["meta"]
     live = corpus
@@ -634,38 +602,16 @@ def rebuild_ivfpq_index(
             id_col,
             "left_anti",
         )
-    v_next = index["version"] + 1
-    gen = _gen_name(v_next)
-    built = build_ivfpq_index(
+    return _publish_generation(
+        root,
+        entries,
         live,
         nlist if nlist is not None else meta["nlist"],
         m_sub if m_sub is not None else meta["m_sub"],
         ksub if ksub is not None else meta["ksub"],
         id_col,
         vec_col,
-        name="ivfpq",
-        base=hfs.join(root, gen),
     )
-    if not hfs.write_text_atomic(
-        spark, hfs.join(_manifest_dir(root), f"v{v_next}"), gen
-    ):
-        try:  # best effort: nothing references the lost race's gen dir
-            hfs.delete(spark, hfs.join(root, gen))
-        except Exception:
-            pass
-        raise RuntimeError(
-            f"lost the v{v_next} manifest race under {root}: a concurrent "
-            "rebuild published first — reopen and re-evaluate"
-        )
-    # Build-direct handle, same rationale as create_managed_ivfpq (r13):
-    # the build dict already reads the published parquet, carries the
-    # fitted meta/kernels, and a fresh generation has no tombstone table
-    # (deletes were compacted away by the anti-join above) — re-opening
-    # paid three footer reads + a metadata job per rebuild. Winning the
-    # manifest race means v_next IS the current version: any later
-    # version would collide with a record that already existed, and
-    # records are never deleted (vacuum keeps them as tombstones).
-    return {**built, "root": root, "version": v_next, "generation": gen}
 
 
 def rebuild_recommended(index: dict, max_tombstone_frac: float = 0.2) -> bool:
@@ -687,8 +633,8 @@ def rebuild_recommended(index: dict, max_tombstone_frac: float = 0.2) -> bool:
 
 
 class IndexEpochError(RuntimeError):
-    """A streaming codes writer observed a manifest version different
-    from the generation it opened — the index was rebuilt under it."""
+    """A streaming codes writer observed a log version different from
+    the generation it opened — the index was rebuilt under it."""
 
 
 def fenced_codes_sink(
@@ -703,9 +649,10 @@ def fenced_codes_sink(
     by convention, a writer forgotten across a rebuild flip keeps
     committing frozen-model codes beside a dead generation silently).
 
-    The fence: capture the handle's manifest version at sink creation;
-    before every batch commit, re-read ``current_index_version`` (one
-    small-file read against the manifest dir — O(1), no table scan) and
+    The fence: the epoch is the index log's version the handle opened;
+    before every batch commit, re-read the log's newest version
+    (``current_index_version`` — one listing plus small-file reads of
+    the index log, independent of corpus size, no table scan) and
     raise :class:`IndexEpochError` on mismatch instead of committing.
     The failure message carries the resume protocol: drain/stop this
     stream, re-open the index (``open_managed_ivfpq``), re-encode from
@@ -735,7 +682,7 @@ def fenced_codes_sink(
         if cur is None or cur[0] != epoch:
             raise IndexEpochError(
                 f"index epoch fence: this stream ingests against "
-                f"generation v{epoch} of {root} but the manifest is at "
+                f"generation v{epoch} of {root} but the log is at "
                 f"v{cur[0] if cur else '<empty>'} — the index was rebuilt "
                 "under this writer. Drain the stream, re-open the index "
                 "(open_managed_ivfpq), and resume by re-encoding from the "
@@ -755,46 +702,15 @@ def fenced_codes_sink(
 
 def vacuum_index_generations(
     spark: SparkSession, root: str, retain_last: int = 2
-) -> list[str]:
-    """Delete generation directories no longer referenced by the newest
-    ``retain_last`` manifest versions. Same retention contract as
-    logtable.vacuum: handles still open on a vacuumed generation break —
-    retain enough versions to cover the longest-running probe.
-
-    Manifest records of vacuumed versions are RETAINED as tombstone
-    markers (the gen dir goes, the ``v{N}`` pointer stays). Two reasons
-    (both round-9 ADVICE findings): (1) deleting records reopens version
-    slots, letting a stale handle's rebuild resurrect a below-current
-    version by winning a freed slot — with the record retained, that
-    write collides and raises per the documented loser-raises contract;
-    (2) records are what concurrent/crashed vacuums coordinate on — every
-    step here is an exists-checked delete of a dir no reader can reach
-    (only below the retained horizon), so re-running or racing vacuums
-    is idempotent and a crash mid-vacuum leaves only un-reclaimed disk,
-    never a referenced-but-missing CURRENT generation. Opening a
-    vacuumed version fails at load (its tables are gone) — the as-of
-    analogue of logtable reads below the vacuum horizon."""
-    from hdfs_mapreduce_spark.sources import fs as hfs
-
-    names = hfs.list_child_names(spark, _manifest_dir(root))
-    versions = sorted(
-        int(n[1:]) for n in names if n.startswith("v") and n[1:].isdigit()
-    )
-    if len(versions) <= retain_last:
-        return []
-    keep = set(versions[-retain_last:])
-    removed: list[str] = []
-    for v in versions:
-        if v in keep:
-            continue
-        try:
-            gen = hfs.read_text(
-                spark, hfs.join(_manifest_dir(root), f"v{v}")
-            ).strip()
-        except Exception:
-            # Record vanished mid-iteration (legacy layout where vacuums
-            # deleted records, or external cleanup) — nothing to reclaim.
-            continue
-        if hfs.delete(spark, hfs.join(root, gen)):
-            removed.append(gen)
-    return removed
+) -> list[int]:
+    """Delete the generations of all but the newest ``retain_last``
+    versions: the log's ``vacuum(retain_last=…)``, since each
+    generation is a replace of the one before it. Returns the versions
+    whose generation was deleted. Same retention contract as the log:
+    handles still open on a vacuumed generation break — retain enough
+    versions to cover the longest-running probe — and an as-of open
+    of a vacuumed version raises :class:`IndexRetentionError`. Log
+    records stay, so a version slot never reopens: a stale handle's
+    rebuild collides with the retained record instead of resurrecting
+    a below-current version. Re-running a vacuum is idempotent."""
+    return vacuum(spark, root, retain_last=retain_last)

@@ -289,21 +289,35 @@ REVERIFY = {
     #     relations. Supersedes the r17 (ann_probe_vacuumed), r19 and r20
     #     entries of these keys.
     "stream_dedup_admitted": 21,
-    "stream_dedup_resketch": 21,
-    "stream_dedup_compacted": 21,
-    "stream_dedup_maintained": 21,
     "stream_upsert_snapshot": 21,
-    "stream_heavy_hitters_audit": 21,
-    "stream_upsert_log_snapshot": 21,
     "stream_cdc_apply": 21,
     "logtable_cdf": 21,
     "logtable_ivm": 21,
     "dq_checks_incremental": 21,
     "stream_ann_ingest_topk": 21,
-    "stream_ann_ingest_fenced": 21,
     "ann_probe_deleted": 21,
-    "ann_probe_rebuilt": 21,
-    "ann_probe_vacuumed": 21,
+    # r22: one state log, part 3. A kind='compact' commit (keyed
+    #     compact(), replace_batch, the dedup state's merge and
+    #     resketch) publishes only at the slot after the log read its
+    #     rows come from, and raises ConcurrentCommitError instead of
+    #     moving to a later slot; compact() pins its snapshot to that
+    #     read and resketch_state reads the sketch log before the
+    #     accepted rows. The managed ANN index is a logtable: each
+    #     generation is such a commit, as-of opens read the log,
+    #     vacuum_index_generations is logtable.vacuum, and versions are
+    #     the log's (0-based; the plans' version checks shifted by one).
+    #     The keys below are the queries whose run reaches a
+    #     kind='compact' publish (scratch probe over the whole registry
+    #     at sf0.001), every one never-green. Same relations.
+    #     Supersedes their r21 entries.
+    "stream_dedup_resketch": 22,
+    "stream_dedup_compacted": 22,
+    "stream_dedup_maintained": 22,
+    "stream_heavy_hitters_audit": 22,
+    "stream_upsert_log_snapshot": 22,
+    "stream_ann_ingest_fenced": 22,
+    "ann_probe_rebuilt": 22,
+    "ann_probe_vacuumed": 22,
 }
 
 

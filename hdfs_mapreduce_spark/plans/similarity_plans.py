@@ -477,11 +477,11 @@ def ann_probe_rebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index REBUILD with atomic swap (operators/ann_index.py
     rebuild_ivfpq_index — VERDICT r8 item 4, the drift-recovery verb
     the frozen-model lifecycle lacked): run the full day-2 story —
-    create the managed index on the day-1 corpus (manifest v1), append
-    the day-2 fifth encode-only, tombstone the vec_id % 7 == 0 seventh
-    — then REBUILD: retrain centroids + codewords on the live corpus
-    (tombstones compacted away), write a fresh cell-clustered gen-2,
-    and publish it with one rename-committed manifest flip. The probe
+    create the managed index on the day-1 corpus (log version 0),
+    append the day-2 fifth encode-only, tombstone the vec_id % 7 == 0
+    seventh — then REBUILD: retrain centroids + codewords on the live
+    corpus (tombstones compacted away), write a fresh cell-clustered
+    generation, and publish it with one log commit (version 1). The probe
     goes through the post-flip handle, so the oracle is a fresh
     fit+encode of the live corpus (model_rel = corpus_rel = survivors):
     rebuild ≡ build of current data, the invariant that makes the swap
@@ -525,18 +525,17 @@ def ann_probe_rebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_probe_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generation retention — the lifecycle verb after rebuild
     (operators/ann_index.py vacuum_index_generations, round-9 verdict
-    stretch): create the managed index on the day-1 corpus (manifest
-    v1), REBUILD on the full corpus (v2), then vacuum with
+    stretch): create the managed index on the day-1 corpus (log
+    version 0), REBUILD on the full corpus (v1), then vacuum with
     retain_last=1. The declared relation is the post-vacuum probe
-    through the current pointer — hash-identical to a fresh build over
+    through the newest version — hash-identical to a fresh build over
     the full corpus, proving vacuum touches only dead generations. The
     retention CONTRACT is enforced at plan build and raises on
-    violation (driver marks the query red): exactly the v1 generation
-    is reclaimed, its manifest record survives as a tombstone marker
-    (version slots never reopen — the rebuild-after-vacuum resurrection
-    guard), and an as-of open below the horizon fails AT OPEN with
-    IndexRetentionError, the logtable read-below-vacuum-horizon
-    semantics mirrored."""
+    violation (driver marks the query red): exactly the v0 generation
+    is reclaimed (its log record stays, so version slots never reopen —
+    the rebuild-after-vacuum resurrection guard), and an as-of open
+    below the horizon fails AT OPEN with IndexRetentionError, the
+    logtable read-below-vacuum-horizon semantics."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -561,16 +560,15 @@ def ann_probe_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = create_managed_ivfpq(
         emb.filter(F.col("vec_id") % APPEND_MOD != 0), root, nlist=IVF_NLIST
     )
-    gen1 = index["generation"]
     index = rebuild_ivfpq_index(index, emb)
     removed = vacuum_index_generations(spark, root, retain_last=1)
-    if removed != [gen1]:
+    if removed != [0]:
         raise RuntimeError(
-            f"vacuum retention violated: expected exactly [{gen1}] "
+            "vacuum retention violated: expected exactly [0] "
             f"reclaimed, got {removed}"
         )
     try:
-        open_managed_ivfpq(spark, root, version=1)
+        open_managed_ivfpq(spark, root, version=0)
     except IndexRetentionError:
         pass
     else:
@@ -579,9 +577,9 @@ def ann_probe_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "IndexRetentionError — retention semantics violated"
         )
     handle = open_managed_ivfpq(spark, root)
-    if handle["version"] != 2:
+    if handle["version"] != 1:
         raise RuntimeError(
-            f"vacuum moved the current pointer: v{handle['version']}"
+            f"vacuum moved the newest version: v{handle['version']}"
         )
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
     return ann_probe_ivfpq(handle, queries, TOP_K, nprobe=IVF_NPROBE)

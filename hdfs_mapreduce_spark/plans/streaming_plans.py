@@ -494,9 +494,9 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
     EPOCH FENCE live (operators/ann_index.py fenced_codes_sink —
     round-10's mechanical enforcement of the drain-before-flip
     contract): day-2 arrives in three micro-batches through the fenced
-    sink beside manifest v1 (the fence reads one manifest record per
-    commit and is transparent while v1 is current), then the owner
-    REBUILDS on the full corpus (flip to v2) and the contract is
+    sink beside log version 0 (the fence reads the index log once per
+    commit and is transparent while v0 is newest), then the owner
+    REBUILDS on the full corpus (flip to v1) and the contract is
     enforced at plan build: the forgotten writer's next commit must
     raise IndexEpochError and commit nothing (both checked — a raise
     of the wrong kind or a silent commit fails the query red). The
@@ -544,7 +544,7 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Flip: rebuild on the full current corpus (streamed rows included —
     # the rebuild-covers-streamed-ingest contract), then enforce that
-    # the forgotten v1 writer fails loudly and commits nothing.
+    # the forgotten v0 writer fails loudly and commits nothing.
     rebuild_ivfpq_index(
         open_managed_ivfpq(spark, os.path.join(root, "idx")), emb
     )
@@ -568,10 +568,10 @@ def stream_ann_ingest_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
     # published post-flip state read back from disk, not the in-memory
     # return value of the rebuild call.
     handle = open_managed_ivfpq(spark, os.path.join(root, "idx"))
-    if handle["version"] != 2:
+    if handle["version"] != 1:
         raise RuntimeError(
-            f"rebuild did not flip the manifest: current is "
-            f"v{handle['version']}, expected v2"
+            f"rebuild did not flip the index log: newest is "
+            f"v{handle['version']}, expected v1"
         )
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
     return ann_probe_ivfpq(handle, queries, TOP_K, nprobe=IVF_NPROBE)

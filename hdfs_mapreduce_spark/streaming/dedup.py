@@ -54,7 +54,6 @@ from hdfs_mapreduce_spark.operators.dedup import (
 )
 from hdfs_mapreduce_spark.sources import fs as hfs
 from hdfs_mapreduce_spark.streaming.logtable import (
-    _commit,
     _is_replay,
     _live,
     _log_versions,
@@ -394,27 +393,37 @@ def resketch_state(
     narrow 16×8 sketch even past AUTO_WIDE_MIN_DOCS docs;
     ``resketch_recommended`` is the advisory that surfaces this).
 
-    Run with the STREAM STOPPED — the rebuild replaces the whole sketch
-    table, and a batch committed meanwhile would be replaced unseen.
-    The rebuild is ONE Spark pass over the accepted corpus, committed
-    as a full-state replace of the sketch table (a ``kind='compact'``
-    record that replaces every live sketch dir and carries no batch id,
-    so a post-restart replay of the last micro-batch still finds its own
-    batch id in the sketch log and no-ops). A crash before the record
-    lands leaves the old sketch live and an invisible attempt dir, so
-    the probe can never see a mixed-shape sketch (a single-row shape
-    sample cannot detect one).
+    Run with the STREAM STOPPED. The rebuild is ONE Spark pass over the
+    accepted corpus, committed as a full-state replace of the sketch
+    table (a ``kind='compact'`` record that replaces every sketch dir
+    live at the sketch log read that precedes the accepted read, and
+    carries no batch id, so a post-restart replay of the last
+    micro-batch still finds its own batch id in the sketch log and
+    no-ops). A batch whose sketch record lands during the rebuild takes
+    the replace's slot: the resketch raises ``ConcurrentCommitError``
+    and commits nothing, and a rerun sees that batch. A crash before
+    the record lands leaves the old sketch live and an invisible
+    attempt dir, so the probe can never see a mixed-shape sketch (a
+    single-row shape sample cannot detect one).
 
     Returns the (n_perm, n_bands) now recorded in the state."""
     if n_perm % n_bands:
         raise ValueError(f"n_perm={n_perm} not divisible by n_bands={n_bands}")
+    # Sketch log first: a batch's accepted record lands before its
+    # sketch record, so every batch this read names is in the accepted
+    # read below, and any later batch takes the replace's slot.
+    sketch_root = hfs.join(state_dir, "sketch")
+    entries = _log_versions(spark, sketch_root)
     accepted = read_accepted(spark, state_dir)
     if accepted is None:
         raise ValueError(
             f"no accepted state under {state_dir} — nothing to resketch"
         )
     bands = _banded_sketch(accepted, id_col, text_col, n_perm, n_bands)
-    _commit(spark, hfs.join(state_dir, "sketch"), bands, None, "compact")
+    _publish(
+        spark, sketch_root, _write_attempt(sketch_root, bands), entries,
+        None, "compact",
+    )
     # the migration changed the state's lifetime point — re-pin the
     # first-ingest record so a later empty-state restart adopts the NEW
     # shape (stored rows still win whenever they exist). The publish is

@@ -4,8 +4,9 @@ new dependencies.
 
 This is the engine's one state log: the keyed upsert, delete and CDC
 sinks, the count-min and Misra-Gries summary sinks (streaming/events.py),
-and the online dedup ingest's accepted and sketch tables
-(streaming/dedup.py), all commit and replay through it. A sink never
+the online dedup ingest's accepted and sketch tables
+(streaming/dedup.py) and the managed ANN index's generations
+(operators/ann_index.py) all commit and replay through it. A sink never
 rewrites its state: each micro-batch commits only its own rows, so the
 per-batch cost is O(batch), not O(state). It uses only parquet + the
 Hadoop FS API (sources/fs.py), with the same layout ideas the real
@@ -36,14 +37,15 @@ formats use:
   mid-publish leaves only the dot-prefixed tmp file, which the log
   parser ignores. The backend contract is PUT-IF-ABSENT on the slot
   file: rename-to-existing FAILS on HDFS/local, so a writer that
-  loses the version-slot race deletes its attempt and retries on the
-  next slot (a racing REPLAY of the same batch id resolves to the
-  normal replay no-op). On S3-family stores plain rename is
-  copy+delete and OVERWRITES — it silently breaks the contract; swap
-  in a backend built on a conditional put (If-None-Match) or a
-  catalog commit instead. ``OverwritePlusVerifyBackend`` models the
-  broken-rename store adversarially so the race test can prove the
-  protocol detects a clobbered slot.
+  loses the version-slot race retries on the next slot (a racing
+  REPLAY of the same batch id resolves to the normal replay no-op; a
+  full-state replace never retries, see below). On S3-family stores
+  plain rename is copy+delete and OVERWRITES — it silently breaks the
+  contract; swap in a backend built on a conditional put
+  (If-None-Match) or a catalog commit instead.
+  ``OverwritePlusVerifyBackend`` models the broken-rename store
+  adversarially so the race test can prove the protocol detects a
+  clobbered slot.
 * **Merge-on-read snapshot**: union every committed data version since
   the latest compaction with its version stamped on, then keep the
   newest row per key (ROW_NUMBER over (key) ORDER BY version DESC —
@@ -64,6 +66,14 @@ formats use:
   ``latest_state``, and commits the result with ``replace_batch`` — a
   ``kind='compact'`` commit that carries the batch id and replaces
   every live dir. The batch id keeps the commit replay-detectable.
+* **The replace-commit rule**: every ``kind='compact'`` commit (keyed
+  ``compact()``, ``replace_batch``, the dedup state's merge and
+  resketch, a managed-index generation) holds rows derived from ONE
+  log read, so it replaces the dirs live at that read and publishes
+  only at the slot right after it. If another writer takes that slot
+  the commit is stale: after the replay no-op check it deletes its
+  attempt dir and raises ``ConcurrentCommitError``. It never moves to
+  a later slot, where it would replace the winner's rows unseen.
 * **Unkeyed tables**: ``snapshot(key_col=None)`` returns every row of
   the live dirs with no window — an append-only table such as the
   online dedup state, whose two tables commit with the two halves of
@@ -168,7 +178,8 @@ class CorruptCommitError(RuntimeError):
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Raised when a writer repeatedly loses the version-slot race."""
+    """Raised when a writer repeatedly loses the version-slot race, or
+    when a full-state replace loses its one slot."""
 
 
 def _log_versions(
@@ -409,14 +420,20 @@ def _commit(
     )
 
 
-def _write_attempt(root: str, rows: DataFrame) -> str:
-    """Write the rows ONCE to a version-free UNIQUE data directory
-    (``data/a{token}``) and return its name: racing writers can never
-    touch each other's files, and losing a slot race never re-runs the
-    expensive write. Until a log record names it the dir is invisible."""
+def _attempt_name() -> str:
+    """A version-free UNIQUE data dir name (``a{token}``): racing
+    writers can never touch each other's files. Until a log record
+    names it the dir is invisible."""
     import uuid
 
-    data_name = f"a{uuid.uuid4().hex[:12]}"
+    return f"a{uuid.uuid4().hex[:12]}"
+
+
+def _write_attempt(root: str, rows: DataFrame) -> str:
+    """Write the rows ONCE to a fresh attempt dir under ``data/`` and
+    return its name: losing a slot race never re-runs the expensive
+    write."""
+    data_name = _attempt_name()
     rows.write.mode("overwrite").parquet(hfs.join(root, "data", data_name))
     return data_name
 
@@ -441,8 +458,15 @@ def _publish(
     no-op (the attempt dir is deleted) — and otherwise retries the next
     slot. A non-rename store (S3) plugs in a backend whose put really is
     conditional; the protocol only needs put_if_absent to report slot
-    ownership truthfully. A ``kind='compact'`` record lists the data
-    dirs it replaces: ``replaces``, or every live dir when None. Every
+    ownership truthfully.
+
+    A ``kind='compact'`` record is a full-state replace built from
+    ``entries``: it lists the data dirs it replaces (``replaces``, or
+    every live dir of ``entries`` when None), fixed before the first
+    put, and it publishes only at the slot right after ``entries``.
+    Losing that slot deletes the attempt and raises
+    ``ConcurrentCommitError`` (after the replay no-op check): at a
+    later slot it would replace the winner's commit unseen. Every
     ``_CHECKPOINT_EVERY``-th slot also writes a log checkpoint, keeping
     the per-commit log read O(K) forever with no manual maintenance.
     Returns the committed version, or None on a skipped replay."""
@@ -452,12 +476,21 @@ def _publish(
     attempt_dir = hfs.join(root, "data", data_name)
     log_dir = hfs.join(root, "_log")
     hfs.mkdirs(spark, log_dir)
+    if kind == "compact" and replaces is None:
+        replaces = [e[3] for e in _live(entries)]
     for attempt in range(_COMMIT_RETRIES):
         if attempt:
             entries = _log_versions(spark, root)
         if _is_replay(entries, batch_id, writer):
             hfs.delete(spark, attempt_dir)
             return None
+        if attempt and kind == "compact":
+            hfs.delete(spark, attempt_dir)
+            raise ConcurrentCommitError(
+                f"another writer took slot v{next_v} at {root}: a "
+                "full-state replace built from the log before it is "
+                "stale and does not move to a later slot"
+            )
         next_v = entries[-1][0] + 1 if entries else 0
         record = {
             "version": next_v,
@@ -472,10 +505,7 @@ def _publish(
             "ts": time.time(),
         }
         if kind == "compact":
-            record["replaces"] = (
-                replaces if replaces is not None
-                else [e[3] for e in _live(entries)]
-            )
+            record["replaces"] = replaces
         if backend.put_if_absent(
             spark,
             hfs.join(log_dir, f"v{next_v}.commit"),
@@ -566,8 +596,11 @@ def replace_batch(
     ``kind='compact'`` commit that carries the batch id, so readers need
     no version below it and a replayed batch no-ops (the summary sinks'
     commit, whose merge of batch into state is not idempotent). The
-    commit replaces every live dir. Returns False on a skipped replay,
-    True when a commit landed."""
+    commit replaces every live dir, so it publishes only at the slot
+    after its own log read: if another writer's record takes that slot
+    it raises ``ConcurrentCommitError`` instead of replacing that
+    record's rows. Returns False on a skipped replay, True when a
+    commit landed."""
     return (
         _commit(df.sparkSession, root, df, batch_id, "compact", writer)
         is not None
@@ -751,15 +784,27 @@ def compact(
     shuffle replaces — not adds to — the write's, and every snapshot
     scan between compactions then prunes parquet row groups on BOTH
     columns. Merge-on-read semantics are unaffected (the snapshot's
-    newest-row-per-key window doesn't care about row order)."""
-    snap = snapshot(spark, root, key_col)
+    newest-row-per-key window doesn't care about row order).
+
+    The rows are the snapshot as of one log read, and the commit
+    replaces exactly the dirs live at that read: a commit another
+    writer lands after it takes the compaction's slot, and the
+    compaction raises ``ConcurrentCommitError`` instead of replacing
+    it."""
+    entries = _log_versions(spark, root)
+    if not entries:
+        return None
+    snap = snapshot(spark, root, key_col, as_of=entries[-1][0])
     if snap is None:
         return None
     if cluster_by is not None:
         from hdfs_mapreduce_spark.operators.layout import zorder_layout
 
         snap = zorder_layout(snap, *cluster_by, n_partitions=n_partitions)
-    return _commit(spark, root, snap, None, "compact", None, backend)
+    return _publish(
+        spark, root, _write_attempt(root, snap), entries, None, "compact",
+        None, backend,
+    )
 
 
 def stream_upsert_events_logtable(
@@ -824,7 +869,12 @@ def make_upsert_sink(
     id, not the version number, so replays (which commit nothing) never
     double-compact; a compaction that crashes after the upsert commit is
     just skipped maintenance, retried K batches later (the data loses no
-    durability — compaction is an optimization commit).
+    durability — compaction is an optimization commit). The same holds
+    when another writer's commit takes the compaction's slot: the
+    compaction raises ``ConcurrentCommitError`` and fails the
+    micro-batch AFTER its upsert committed, so a restarted query
+    replays that batch as a no-op and compacts K batches later; the
+    other writer's rows are never replaced.
 
     ``vacuum_after_compact=True`` additionally vacuums superseded data
     versions right after each compaction, so a long-running stream

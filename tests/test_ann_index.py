@@ -388,9 +388,9 @@ def test_rebuild_probe_continuity_and_atomic_flip(spark, tmp_path):
     """The rebuild contract end-to-end: (a) a handle opened BEFORE the
     rebuild keeps serving its generation's results after the flip (its
     files are never touched); (b) the rebuilt index equals a fresh
-    build over the live corpus; (c) the manifest advances exactly one
+    build over the live corpus; (c) the index log advances exactly one
     version per publish, and a reader opening at any moment sees a
-    COMPLETE generation (the pointer flips after all tables exist)."""
+    COMPLETE generation (the record lands after all tables exist)."""
     from hdfs_mapreduce_spark.operators.ann_index import (
         create_managed_ivfpq,
         current_index_version,
@@ -403,8 +403,8 @@ def test_rebuild_probe_continuity_and_atomic_flip(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 5 != 0)
     index = create_managed_ivfpq(day1, root)
-    v1, gen1 = current_index_version(spark, root)
-    assert v1 == 1 and gen1.startswith("gen-000001-")
+    v0, gen0 = current_index_version(spark, root)
+    assert v0 == 0 and gen0 == index["generation"]
 
     queries = emb.filter(F.col("vec_id").isin([0, 1]))
     old_handle = open_managed_ivfpq(spark, root)
@@ -413,10 +413,10 @@ def test_rebuild_probe_continuity_and_atomic_flip(spark, tmp_path):
     dels = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
     index = delete_from_ivfpq_index(index, dels, batch_id=0)
     rebuilt = rebuild_ivfpq_index(index, emb)
-    assert rebuilt["version"] == 2
-    v2, gen2 = current_index_version(spark, root)
+    assert rebuilt["version"] == 1
+    v1, gen1 = current_index_version(spark, root)
     # unique tokens: a racing rebuild can never build into a published dir
-    assert v2 == 2 and gen2.startswith("gen-000002-") and gen2 != gen1
+    assert v1 == 1 and gen1 == rebuilt["generation"] and gen1 != gen0
 
     # (a) the pre-flip handle still serves pre-rebuild results
     assert _rows(ann_probe_ivfpq(old_handle, queries, k=5, nprobe=4)) == before
@@ -433,12 +433,27 @@ def test_rebuild_probe_continuity_and_atomic_flip(spark, tmp_path):
     assert _rows(ann_probe_ivfpq(reopened, queries, k=5, nprobe=4)) == want
 
 
+def _competing_generation(spark, root):
+    """Another writer's rebuild landing on the index log: a log commit
+    of a (placeholder) generation dir at the next slot. Returns its
+    dir name."""
+    from hdfs_mapreduce_spark.streaming.logtable import (
+        _log_versions,
+        _publish,
+        _write_attempt,
+    )
+
+    gen = _write_attempt(root, spark.range(1))
+    _publish(spark, root, gen, _log_versions(spark, root), None, "compact")
+    return gen
+
+
 def test_rebuild_loses_manifest_race_atomically(spark, tmp_path):
     """Optimistic concurrency on the version slot: when another writer
-    published v2 first, the late rebuild must raise — not overwrite,
-    not half-publish — the winner's generation stays current, the
-    winner's DIRECTORY is never written into (the loser builds under
-    its own unique token), and the loser's orphan dir is cleaned up."""
+    published version 1 first, the late rebuild must raise — not
+    overwrite, not half-publish — the winner's generation stays current,
+    the winner's DIRECTORY is never written into (the loser builds under
+    its own unique attempt name), and the loser leaves no dir behind."""
     import os
 
     from hdfs_mapreduce_spark.operators.ann_index import (
@@ -446,38 +461,33 @@ def test_rebuild_loses_manifest_race_atomically(spark, tmp_path):
         current_index_version,
         rebuild_ivfpq_index,
     )
-    from hdfs_mapreduce_spark.sources import fs as hfs
 
     root = str(tmp_path / "raced")
     emb = load_table(spark, SF, "embeddings")
     index = create_managed_ivfpq(emb.filter(F.col("vec_id") % 5 != 0), root)
-    gen1 = index["generation"]
-    # A competing rebuild won slot v2 BEFORE ours starts: the staleness
+    gen0 = index["generation"]
+    # A competing rebuild won slot v1 BEFORE ours starts: the staleness
     # pre-check fails the loser before it wastes the full retrain (and
     # before any build dir exists).
-    assert hfs.write_text_atomic(
-        spark, hfs.join(root, "_manifest", "v2"), "gen-000002-winner"
-    )
+    winner = _competing_generation(spark, root)
     with pytest.raises(RuntimeError, match="stale index handle"):
         rebuild_ivfpq_index(index, emb)
-    assert current_index_version(spark, root) == (2, "gen-000002-winner")
-    # the winner's published dir name was never created or touched by
-    # the loser, and the loser never created a build dir at all
-    leftovers = [
-        n for n in os.listdir(root)
-        if n.startswith("gen-") and n != gen1
-    ]
-    assert leftovers == []
+    assert current_index_version(spark, root) == (1, winner)
+    # the winner's published dir was never touched by the loser, and
+    # the loser never created a build dir at all
+    assert sorted(os.listdir(os.path.join(root, "data"))) == sorted(
+        [gen0, winner]
+    )
 
 
 def test_rebuild_manifest_race_during_build_cleans_orphan(
     spark, tmp_path, monkeypatch
 ):
     """The TOCTOU window the staleness pre-check cannot close: a
-    competitor publishes AFTER our pre-check passes but BEFORE our
-    manifest write. The manifest slot write stays the real arbiter —
-    the loser raises, never overwrites the winner's record, and its
-    fully-built orphan generation dir is cleaned up."""
+    competitor publishes AFTER our pre-check passes but BEFORE our log
+    publish. The log slot stays the real arbiter — the loser raises
+    ConcurrentCommitError, never replaces the winner's record, and its
+    fully-built orphan generation dir is deleted."""
     import os
 
     import hdfs_mapreduce_spark.operators.ann_index as ann_mod
@@ -486,32 +496,29 @@ def test_rebuild_manifest_race_during_build_cleans_orphan(
         current_index_version,
         rebuild_ivfpq_index,
     )
-    from hdfs_mapreduce_spark.sources import fs as hfs
+    from hdfs_mapreduce_spark.streaming.logtable import ConcurrentCommitError
 
     root = str(tmp_path / "toctou")
     emb = load_table(spark, SF, "embeddings")
     index = create_managed_ivfpq(emb.filter(F.col("vec_id") % 5 != 0), root)
-    gen1 = index["generation"]
+    gen0 = index["generation"]
 
     real_build = ann_mod.build_ivfpq_index
+    winner = []
 
     def build_then_lose(*args, **kwargs):
         out = real_build(*args, **kwargs)
-        # competitor flips v2 while our build is in flight
-        assert hfs.write_text_atomic(
-            spark, hfs.join(root, "_manifest", "v2"), "gen-000002-winner"
-        )
+        # competitor flips v1 while our build is in flight
+        winner.append(_competing_generation(spark, root))
         return out
 
     monkeypatch.setattr(ann_mod, "build_ivfpq_index", build_then_lose)
-    with pytest.raises(RuntimeError, match="manifest race"):
+    with pytest.raises(ConcurrentCommitError, match="took slot v1"):
         rebuild_ivfpq_index(index, emb)
-    assert current_index_version(spark, root) == (2, "gen-000002-winner")
-    leftovers = [
-        n for n in os.listdir(root)
-        if n.startswith("gen-") and n != gen1
-    ]
-    assert leftovers == []
+    assert current_index_version(spark, root) == (1, winner[0])
+    assert sorted(os.listdir(os.path.join(root, "data"))) == sorted(
+        [gen0, winner[0]]
+    )
 
 
 def test_rebuild_recommended_tombstone_fraction(spark, tmp_path):
@@ -544,12 +551,12 @@ def test_vacuum_generations_keeps_current_readable(spark, tmp_path):
     root = str(tmp_path / "vac")
     emb = load_table(spark, SF, "embeddings")
     index = create_managed_ivfpq(emb.filter(F.col("vec_id") % 5 != 0), root)
-    gen1 = index["generation"]
+    gen0 = index["generation"]
     index = rebuild_ivfpq_index(index, emb)
     index = rebuild_ivfpq_index(index, emb)
     removed = vacuum_index_generations(spark, root, retain_last=2)
-    assert removed == [gen1]
-    assert not hfs.exists(spark, hfs.join(root, gen1))
+    assert removed == [0]
+    assert not hfs.exists(spark, hfs.join(root, "data", gen0))
     queries = emb.filter(F.col("vec_id").isin([0, 1]))
     assert len(_rows(ann_probe_ivfpq(
         open_managed_ivfpq(spark, root), queries, k=5, nprobe=4
@@ -606,7 +613,7 @@ def test_epoch_fence_blocks_writer_across_rebuild_flip(spark, tmp_path):
     """The drain-before-flip contract, enforced mechanically
     (fenced_codes_sink): a streaming codes writer (1) commits normally
     while its generation is current, (2) RAISES IndexEpochError on the
-    first commit after a rebuild flips the manifest — never committing
+    first commit after a rebuild advances the index log — never committing
     beside the dead generation — and (3) after the documented resume
     (re-open, re-encode from the source cursor) the probe serves the
     union of the rebuilt generation and the resumed stream's codes."""
@@ -643,7 +650,7 @@ def test_epoch_fence_blocks_writer_across_rebuild_flip(spark, tmp_path):
     # (3) resume per the fence's instruction: re-open, re-encode the
     # un-ingested tail against the new generation
     handle = open_managed_ivfpq(spark, root)
-    assert handle["version"] == rebuilt["version"] == 2
+    assert handle["version"] == rebuilt["version"] == 1
     codes_v2 = str(tmp_path / "codes_v2")
     sink2 = fenced_codes_sink(handle, codes_v2)
     sink2(b2.select("vec_id", "embedding"), 0)
@@ -724,8 +731,8 @@ def test_as_of_open_and_retention_error_after_vacuum(spark, tmp_path):
     """open_managed_ivfpq(version=) mirrors logtable as-of + retention:
     a retained historical version opens and serves ITS generation's
     model; an unknown version raises ValueError; a vacuumed version
-    fails AT OPEN with IndexRetentionError while its manifest record
-    survives as a tombstone marker (slots never reopen)."""
+    fails AT OPEN with IndexRetentionError while its log record
+    survives (slots never reopen)."""
     from hdfs_mapreduce_spark.operators.ann_index import (
         IndexRetentionError,
         create_managed_ivfpq,
@@ -739,23 +746,24 @@ def test_as_of_open_and_retention_error_after_vacuum(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 5 != 0)
     index = create_managed_ivfpq(day1, root)
-    gen1 = index["generation"]
-    rebuild_ivfpq_index(index, emb)
+    gen0 = index["generation"]
+    rebuilt = rebuild_ivfpq_index(index, emb)
     rebuild_ivfpq_index(open_managed_ivfpq(spark, root), emb)
 
-    # retained as-of: v2 opens and is exactly generation 2
-    h2 = open_managed_ivfpq(spark, root, version=2)
-    assert h2["version"] == 2 and h2["generation"].startswith("gen-000002-")
-    with pytest.raises(ValueError, match="no manifest record v9"):
+    # retained as-of: v1 opens and is exactly the first rebuild
+    h1 = open_managed_ivfpq(spark, root, version=1)
+    assert h1["version"] == 1 and h1["generation"] == rebuilt["generation"]
+    with pytest.raises(ValueError, match="no index version 9"):
         open_managed_ivfpq(spark, root, version=9)
 
     removed = vacuum_index_generations(spark, root, retain_last=2)
-    assert removed == [gen1]
-    # the record is retained as a tombstone marker...
-    assert hfs.exists(spark, hfs.join(root, "_manifest", "v1"))
+    assert removed == [0]
+    assert not hfs.exists(spark, hfs.join(root, "data", gen0))
+    # the log record is retained...
+    assert hfs.exists(spark, hfs.join(root, "_log", "v0.commit"))
     # ...but opening below the horizon fails loudly at open
     with pytest.raises(IndexRetentionError, match="vacuumed"):
-        open_managed_ivfpq(spark, root, version=1)
+        open_managed_ivfpq(spark, root, version=0)
     # re-running vacuum is idempotent (exists-checked deletes only)
     assert vacuum_index_generations(spark, root, retain_last=2) == []
 
@@ -763,13 +771,15 @@ def test_as_of_open_and_retention_error_after_vacuum(spark, tmp_path):
 def test_stale_rebuild_after_vacuum_cannot_resurrect_a_version(
     spark, tmp_path, monkeypatch
 ):
-    """The round-9 ADVICE medium scenario end-to-end: v1..v3 exist, a
-    handle is opened at v1, vacuum reclaims v1's generation. The stale
+    """The round-9 ADVICE medium scenario end-to-end: v0..v2 exist, a
+    handle is opened at v0, vacuum reclaims v0's generation. The stale
     handle's rebuild must fail — and must STILL fail even with the
-    staleness pre-check disabled, because vacuum retains manifest
-    records as tombstone markers, so the stale writer's v2 slot write
-    collides with the retained record instead of resurrecting a
-    below-current version over a freed slot."""
+    staleness pre-check disabled, because log records are never
+    deleted, so the stale writer's publish at v1 collides with the
+    retained record instead of resurrecting a below-current version
+    over a freed slot."""
+    import os
+
     import hdfs_mapreduce_spark.operators.ann_index as ann_mod
     from hdfs_mapreduce_spark.operators.ann_index import (
         create_managed_ivfpq,
@@ -778,33 +788,35 @@ def test_stale_rebuild_after_vacuum_cannot_resurrect_a_version(
         rebuild_ivfpq_index,
         vacuum_index_generations,
     )
+    from hdfs_mapreduce_spark.streaming.logtable import ConcurrentCommitError
 
     root = str(tmp_path / "resurrect")
     emb = load_table(spark, SF, "embeddings")
     stale = create_managed_ivfpq(
         emb.filter(F.col("vec_id") % 5 != 0), root
-    )  # v1 — held across the upgrades below
-    rebuild_ivfpq_index(open_managed_ivfpq(spark, root), emb)        # v2
-    rebuild_ivfpq_index(open_managed_ivfpq(spark, root), emb)        # v3
-    assert vacuum_index_generations(spark, root, retain_last=2) == [
-        stale["generation"]
-    ]
+    )  # v0 — held across the upgrades below
+    rebuild_ivfpq_index(open_managed_ivfpq(spark, root), emb)        # v1
+    newest = rebuild_ivfpq_index(open_managed_ivfpq(spark, root), emb)  # v2
+    assert vacuum_index_generations(spark, root, retain_last=2) == [0]
+    on_disk = sorted(os.listdir(os.path.join(root, "data")))
 
     # (a) with the pre-check: fails before any build work
     with pytest.raises(RuntimeError, match="stale index handle"):
         rebuild_ivfpq_index(stale, emb)
 
-    # (b) pre-check blinded (the TOCTOU-equivalent): the v2 manifest
-    # write must collide with the RETAINED record — loser raises, the
-    # current pointer is untouched, no below-current version appears
-    real = ann_mod.current_index_version
+    # (b) pre-check blinded (the TOCTOU-equivalent): the rebuild sees
+    # the log as the stale handle saw it, so its publish targets slot
+    # v1 — which must collide with the RETAINED record: the loser
+    # raises, its attempt dir is deleted, the newest version is
+    # untouched and no below-current version appears
+    real = ann_mod._log_versions
 
     def blind(spark_, root_):
-        return (stale["version"], stale["generation"])
+        return [e for e in real(spark_, root_) if e[0] <= stale["version"]]
 
-    monkeypatch.setattr(ann_mod, "current_index_version", blind)
-    with pytest.raises(RuntimeError, match="manifest race"):
+    monkeypatch.setattr(ann_mod, "_log_versions", blind)
+    with pytest.raises(ConcurrentCommitError, match="took slot v1"):
         rebuild_ivfpq_index(stale, emb)
-    monkeypatch.setattr(ann_mod, "current_index_version", real)
-    v, gen = current_index_version(spark, root)
-    assert v == 3 and gen.startswith("gen-000003-")
+    monkeypatch.setattr(ann_mod, "_log_versions", real)
+    assert current_index_version(spark, root) == (2, newest["generation"])
+    assert sorted(os.listdir(os.path.join(root, "data"))) == on_disk

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from hdfs_mapreduce_spark.streaming.logtable import (
@@ -601,6 +602,64 @@ def test_replace_batch_is_a_replay_detectable_full_state(spark, tmp_path):
     assert {
         r["k"]: r["v"] for r in snapshot(spark, root, "k", as_of=0).collect()
     } == {1: "a", 2: "b"}
+
+
+@pytest.mark.parametrize("replace", ["compact", "replace_batch"])
+def test_replace_commit_that_loses_its_slot_raises_and_keeps_winner_rows(
+    spark, tmp_path, monkeypatch, replace
+):
+    """A full-state replace (keyed compact(), replace_batch) is built
+    from one log read, so it may publish only at the slot after that
+    read. Here writer w2 lands an upsert in that slot just before the
+    replace's first put: the replace must raise ConcurrentCommitError,
+    w2's rows must stay in the table, and no orphan attempt dir may
+    remain. Moving on to the next slot would replace w2's dir with
+    rows that never saw it — the lost update this pins."""
+    from hdfs_mapreduce_spark.streaming import logtable as lt
+
+    root = str(tmp_path / "t")
+    assert upsert_batch(
+        _batch(spark, [(1, "a"), (2, "b")]), 0, root, "k", writer="w1"
+    )
+    assert upsert_batch(_batch(spark, [(3, "c")]), 1, root, "k", writer="w1")
+    rename = lt.RenameCommitBackend()
+    fired = []
+
+    class CompetitorFirst(lt.CommitBackend):
+        def put_if_absent(self, spark_, path, payload):
+            if not fired:
+                fired.append(path)
+                assert upsert_batch(
+                    _batch(spark, [(4, "d"), (1, "a2")]), 0, root, "k",
+                    writer="w2", backend=rename,
+                )
+            return rename.put_if_absent(spark_, path, payload)
+
+    monkeypatch.setattr(lt, "DEFAULT_BACKEND", CompetitorFirst())
+    with pytest.raises(lt.ConcurrentCommitError, match="took slot v2"):
+        if replace == "compact":
+            compact(spark, root, "k")
+        else:
+            lt.replace_batch(
+                _batch(spark, [(1, "a"), (2, "b"), (3, "c")]), 2, root,
+                writer="w1",
+            )
+    entries = _log_versions(spark, root)
+    assert [(e[0], e[2], e[4]) for e in entries] == [
+        (0, "upsert", "w1"),
+        (1, "upsert", "w1"),
+        (2, "upsert", "w2"),
+    ]
+    latest = lt.latest_state(spark, root)
+    assert {r["k"]: r["v"] for r in latest.collect()} == {4: "d", 1: "a2"}
+    assert {r["k"]: r["v"] for r in snapshot(spark, root, "k").collect()} == {
+        1: "a2",
+        2: "b",
+        3: "c",
+        4: "d",
+    }
+    committed = {e[3] for e in entries}
+    assert set(os.listdir(os.path.join(root, "data"))) == committed
 
 
 def test_unreadable_checkpoint_falls_back_to_older_checkpoint(

@@ -299,7 +299,7 @@ def test_four_pooled_writers_land_every_batch_without_livelock(
     print(f"pooled writers: 12 commits in {commit_s:.2f}s")
 
 
-# ---- ANN manifest contention (round 10): the index publication seam --------
+# ---- ANN index log contention (round 10): the index publication seam -------
 
 ANN_REBUILD_WORKER = """
 import os, sys, time
@@ -310,24 +310,25 @@ from hdfs_mapreduce_spark.operators.ann_index import (
     open_managed_ivfpq, rebuild_ivfpq_index,
 )
 from hdfs_mapreduce_spark.sources.catalog import load_table
+from hdfs_mapreduce_spark.streaming.logtable import ConcurrentCommitError
 
 root, writer, barrier = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark(f"ann-rebuild-{{writer}}")
 spark.sparkContext.setLogLevel("ERROR")
 emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-handle = open_managed_ivfpq(spark, root)   # every contender opens v1
-assert handle["version"] == 1
+handle = open_managed_ivfpq(spark, root)   # every contender opens v0
+assert handle["version"] == 0
 open(os.path.join(barrier, f"ready_{{writer}}"), "w").close()
 while not os.path.exists(os.path.join(barrier, "go")):
     time.sleep(0.02)
 try:
     out = rebuild_ivfpq_index(handle, emb)
     print("WIN", out["version"], out["generation"])
+except ConcurrentCommitError:
+    print("LOSE race")
 except RuntimeError as e:
     msg = str(e)
-    if "manifest race" in msg:
-        print("LOSE race")
-    elif "stale index handle" in msg:
+    if "stale index handle" in msg:
         print("LOSE stale")
     else:
         print("LOSE other", msg[:200])
@@ -337,13 +338,14 @@ except RuntimeError as e:
 
 def test_three_real_processes_race_one_rebuild_slot(spark, tmp_path):
     """The index publication seam under REAL cross-JVM contention (the
-    logtable 4-writer discipline applied to the manifest): three
-    processes each open the same managed index at v1 and rebuild
-    concurrently. Exactly one may publish v2; every loser must raise
-    (manifest-race at the slot write, or stale-handle if it observed
-    the winner's flip first) and leave NO orphan generation dir and NO
-    manifest record beyond the winner's — a silent double-publish or a
-    resurrected version here would corrupt every downstream probe."""
+    logtable 4-writer discipline applied to the index log): three
+    processes each open the same managed index at v0 and rebuild
+    concurrently. Exactly one may publish v1; every loser must raise
+    (ConcurrentCommitError at the slot publish, or stale-handle if it
+    observed the winner's flip first) and leave NO orphan generation
+    dir and NO log record beyond the winner's — a silent double-publish
+    or a resurrected version here would corrupt every downstream
+    probe."""
     import time
 
     from pyspark.sql import functions as F
@@ -361,7 +363,7 @@ def test_three_real_processes_race_one_rebuild_slot(spark, tmp_path):
     created = create_managed_ivfpq(
         emb.filter(F.col("vec_id") % 5 != 0), root
     )
-    gen1 = created["generation"]
+    gen0 = created["generation"]
 
     barrier = str(tmp_path / "barrier")
     os.makedirs(barrier)
@@ -395,15 +397,15 @@ def test_three_real_processes_race_one_rebuild_slot(spark, tmp_path):
     assert len(wins) == 1 and len(losses) == 2, results
     assert all(r.split()[1] in ("race", "stale") for r in losses), results
     win_gen = wins[0].split()[2]
-    assert current_index_version(spark, root) == (2, win_gen)
-    # no orphan generation dirs, no manifest records beyond v1/v2
-    gens = sorted(n for n in os.listdir(root) if n.startswith("gen-"))
-    assert gens == sorted([gen1, win_gen]), gens
+    assert current_index_version(spark, root) == (1, win_gen)
+    # no orphan generation dirs, no log records beyond v0/v1
+    gens = sorted(os.listdir(os.path.join(root, "data")))
+    assert gens == sorted([gen0, win_gen]), gens
     records = sorted(
-        n for n in os.listdir(os.path.join(root, "_manifest"))
+        n for n in os.listdir(os.path.join(root, "_log"))
         if not n.startswith(".")  # Hadoop local-FS .crc sidecars
     )
-    assert records == ["v1", "v2"], records
+    assert records == ["v0.commit", "v1.commit"], records
     # the published generation serves probes
     handle = open_managed_ivfpq(spark, root)
     queries = emb.filter(F.col("vec_id").isin([0, 1]))

@@ -1088,6 +1088,7 @@ def test_resketch_interrupted_swap_guards_and_recovers(
     from pyspark.sql import functions as F
 
     import hdfs_mapreduce_spark.operators.dedup as dd
+    import hdfs_mapreduce_spark.streaming.dedup as sd
     import hdfs_mapreduce_spark.streaming.logtable as lt
     from hdfs_mapreduce_spark.sources.catalog import load_table
     from hdfs_mapreduce_spark.streaming.dedup import (
@@ -1102,7 +1103,9 @@ def test_resketch_interrupted_swap_guards_and_recovers(
     def crash(*a, **k):
         raise RuntimeError("injected crash before the resketch record")
 
-    monkeypatch.setattr(lt, "_publish", crash)
+    # resketch_state publishes its record through the _publish that
+    # streaming/dedup.py imports
+    monkeypatch.setattr(sd, "_publish", crash)
     with pytest.raises(RuntimeError, match="injected"):
         resketch_state(spark, state, dd.WIDE_PERM, dd.WIDE_BANDS)
     monkeypatch.undo()

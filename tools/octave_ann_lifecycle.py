@@ -11,9 +11,9 @@ extrapolations:
   2. probe cost is FLAT across a flip (post-rebuild probes pay the
      same as pre-rebuild probes at the same corpus size — the flip is
      a pointer swap, not a data reorganization visible to readers);
-  3. the epoch fence is invisible: a fenced commit costs one O(1)
-     manifest small-file read over the plain logtable commit,
-     independent of SF.
+  3. the epoch fence is invisible: a fenced commit costs one read of
+     the index log (a listing plus one small-file read per version)
+     over the plain logtable commit, independent of SF.
 
 Protocol: bench.octave — one session per SF under bench.configure,
 plan shapes pre-warmed by a full lifecycle pass in bench.warm, min-of-2
@@ -87,7 +87,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     def fresh_root(tag):
         return f"{scratch}/octave_{tag}_{uuid.uuid4().hex[:8]}"
 
-    # -- create (build v1 on day-1) --
+    # -- create (build v0 on day-1) --
     roots = []
 
     def do_create():
@@ -113,7 +113,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     timed("ingest_fenced_3batches_sec", do_fenced)
 
     # -- same 3 commits, plain (unfenced) logtable upserts: the fence
-    #    overhead is the difference (one manifest read per commit) --
+    #    overhead is the difference (one index-log read per commit) --
     def do_plain():
         table = fresh_root("codes_plain")
         t0 = time.monotonic()
@@ -127,7 +127,8 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     timed("ingest_plain_3batches_sec", do_plain)
 
     # -- the fence itself, measured directly: per-commit overhead is ONE
-    #    current_index_version read (listStatus + small-file read);
+    #    current_index_version read (the index log's listStatus + one
+    #    small-file read per version);
     #    the end-to-end fenced-vs-plain diff above is dominated by
     #    session ordering noise, so report the primitive too --
     from hdfs_mapreduce_spark.operators.ann_index import (
@@ -142,7 +143,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
         (time.monotonic() - t0) / reps, 5
     )
 
-    # -- probe pre-flip (v1 codes + streamed snapshot, the declared
+    # -- probe pre-flip (v0 codes + streamed snapshot, the declared
     #    composition) --
     table = fresh_root("codes_probe")
     sink = fenced_codes_sink(index, table)
@@ -158,9 +159,9 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
 
     timed("probe_preflip_sec", do_probe_pre)
 
-    # -- rebuild on the full corpus (flip v1 -> v2) --
+    # -- rebuild on the full corpus (flip v0 -> v1) --
     def do_rebuild():
-        # each rep needs its own v1 index to flip
+        # each rep needs its own v0 index to flip
         r = fresh_root("rb")
         h = create_managed_ivfpq(day1, r, nlist=IVF_NLIST)
         t0 = time.monotonic()
@@ -180,7 +181,7 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
 
     # -- probe post-flip through a fresh handle --
     handle = open_managed_ivfpq(spark, root)
-    assert handle["version"] == 2, handle["version"]
+    assert handle["version"] == 1, handle["version"]
 
     def do_probe_post():
         return bench.force(
@@ -189,9 +190,9 @@ def run_lifecycle(spark, sf_dir: str) -> dict[str, float]:
 
     timed("probe_postflip_sec", do_probe_post)
 
-    # -- vacuum the dead v1 generation --
+    # -- vacuum the dead v0 generation --
     def do_vacuum():
-        # rep 1 reclaims gen-1; rep 2 is the idempotent nothing-to-do
+        # rep 1 reclaims v0's generation; rep 2 is the idempotent nothing-to-do
         # pass — report rep 1 (reclaim) by timing only the first
         t0 = time.monotonic()
         vacuum_index_generations(spark, root, retain_last=1)
