@@ -441,7 +441,7 @@ def current_index_version(spark: SparkSession, root: str):
     read: a listing plus one small-file read per record since the
     newest checkpoint, whatever the corpus size."""
     entries = _log_versions(spark, root)
-    return (entries[-1][0], entries[-1][3]) if entries else None
+    return (entries[-1].version, entries[-1].data) if entries else None
 
 
 class IndexRetentionError(RuntimeError):
@@ -466,10 +466,10 @@ def open_managed_ivfpq(
 
     entries = _log_versions(spark, root)
     if version is not None:
-        entries = [e for e in entries if e[0] <= version]
+        entries = [e for e in entries if e.version <= version]
     if not entries:
         raise ValueError(f"no published index generation under {root}")
-    v, gen = entries[-1][0], entries[-1][3]
+    v, gen = entries[-1].version, entries[-1].data
     if version is not None and v != version:
         raise ValueError(f"no index version {version} under {root}")
     gen_dir = hfs.join(root, "data", gen)
@@ -587,10 +587,10 @@ def rebuild_ivfpq_index(
             "(create_managed_ivfpq / open_managed_ivfpq)"
         )
     entries = _log_versions(spark, root)
-    if not entries or entries[-1][0] != index["version"]:
+    if not entries or entries[-1].version != index["version"]:
         raise RuntimeError(
             f"stale index handle: opened v{index['version']} but the "
-            f"log is at v{entries[-1][0] if entries else '<empty>'} — "
+            f"log is at v{entries[-1].version if entries else '<empty>'} — "
             "reopen the index and re-evaluate the rebuild trigger"
         )
     meta = index["meta"]

@@ -392,21 +392,15 @@ def incremental_minhash_pairs(
     corpus, not the batch, is what sets the candidate economics).
     """
     n_perm, n_bands = _resolve_band_config(corpus_df, n_perm, n_bands)
-    # validate_shape=False: the corpus sketch is built HERE with exactly
-    # the resolved values, so the probe's stored-shape validation would
-    # be tautological — and on this unmaterialized lineage its eager
-    # limit(1) sample would run part of the corpus groupBy at
-    # plan-construction time (the round-9 ADVICE note) for nothing.
-    return incremental_pairs_against_sketch(
+    # Both sketches are built HERE with the resolved values, so there is
+    # no stored shape to validate (and on this unmaterialized lineage a
+    # limit(1) shape sample would run part of the corpus groupBy at
+    # plan-construction time for nothing).
+    return _probe_pairs_from_sketches(
         _banded_sketch(corpus_df, id_col, text_col, n_perm, n_bands),
-        new_df,
-        id_col,
-        text_col,
+        _banded_sketch(new_df, id_col, text_col, n_perm, n_bands),
         threshold,
-        n_perm=n_perm,
-        n_bands=n_bands,
-        validate_shape=False,
-    )
+    ).orderBy("new_doc", "dup_of")
 
 
 def resolve_sketch_shape(
@@ -427,10 +421,9 @@ def resolve_sketch_shape(
       when given, else ``None``: with no rows stored the lifetime shape
       is genuinely not fixed yet, and the CALLER chooses the fallback
       (``incremental_pairs_against_sketch`` raises — a batch probe of an
-      empty "corpus" is a caller bug; ``streaming.dedup
-      .dedup_ingest_batch`` falls back to the module defaults exactly
-      as it would for a true first batch, so an empty batch 0 can never
-      wedge the stream).
+      empty "corpus" is a caller bug). The online ingest state does not
+      sample at all: its sketch log records the shape
+      (streaming/dedup.py).
 
     Sketches written before round 10 (string band keys, no ``rpb``
     column) are detected by schema — metadata-only, no extra job — and
@@ -472,7 +465,6 @@ def incremental_pairs_against_sketch(
     threshold: float = 0.5,
     n_perm: int | None = None,
     n_bands: int | None = None,
-    validate_shape: bool = True,
 ) -> DataFrame:
     """The production form of ``incremental_minhash_pairs``: probe a
     PRE-BUILT corpus sketch (the relation ``_banded_sketch`` computes —
@@ -503,29 +495,15 @@ def incremental_pairs_against_sketch(
     from the same sampled row — the sketch is the source of truth for
     its own configuration, so an auto-built (count-probed) sketch never
     needs its chosen b/r point re-communicated to the probe side. An
-    empty sketch with no explicit shape raises (nothing to adopt).
-
-    ``validate_shape=False`` skips the 1-row sample entirely and
-    requires explicit ``n_perm``/``n_bands``: it is for callers that
-    have JUST resolved the stored shape themselves from the SAME sketch
-    via ``resolve_sketch_shape`` (streaming/dedup.dedup_ingest_batch —
-    one probe job per micro-batch instead of two, the round-10 verdict's
-    double-probe finding). Any other use forfeits the join-nothing
-    safety net that validation exists for."""
-    if validate_shape:
-        shape = resolve_sketch_shape(corpus_sketch, n_perm, n_bands)
-        if shape is None:
-            raise ValueError(
-                "cannot adopt a b/r shape from an EMPTY corpus sketch — "
-                "pass n_perm/n_bands explicitly (they are recorded with "
-                "the sketch)"
-            )
-        n_perm, n_bands = shape
-    elif n_perm is None or n_bands is None:
+    empty sketch with no explicit shape raises (nothing to adopt)."""
+    shape = resolve_sketch_shape(corpus_sketch, n_perm, n_bands)
+    if shape is None:
         raise ValueError(
-            "validate_shape=False requires explicit n_perm and n_bands "
-            "(resolved via resolve_sketch_shape on the same sketch)"
+            "cannot adopt a b/r shape from an EMPTY corpus sketch — "
+            "pass n_perm/n_bands explicitly (they are recorded with "
+            "the sketch)"
         )
+    n_perm, n_bands = shape
     nb = _banded_sketch(new_df, id_col, text_col, n_perm, n_bands)
     return _probe_pairs_from_sketches(corpus_sketch, nb, threshold).orderBy(
         "new_doc", "dup_of"

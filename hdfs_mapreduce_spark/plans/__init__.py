@@ -142,7 +142,7 @@ REVERIFY = {
     #     moved to the plain full-corpus closed form). And
     #     stream_dedup_admitted's per-batch state machinery changed:
     #     shape resolution collapsed to ONE probe job
-    #     (resolve_sketch_shape + validate_shape=False pass-down) with
+    #     (resolve_sketch_shape + a trusted probe pass-down) with
     #     the empty-state fallback — same relation, new executed loop.
     # r11 (second half): minhash_pairs' pair self-join factored into the
     #     shared _verified_pairs and incremental_pairs_against_sketch's
@@ -288,7 +288,6 @@ REVERIFY = {
     #     traced run reaches any of these (every one never-green). Same
     #     relations. Supersedes the r17 (ann_probe_vacuumed), r19 and r20
     #     entries of these keys.
-    "stream_dedup_admitted": 21,
     "stream_upsert_snapshot": 21,
     "stream_cdc_apply": 21,
     "logtable_cdf": 21,
@@ -310,14 +309,21 @@ REVERIFY = {
     #     kind='compact' publish (scratch probe over the whole registry
     #     at sf0.001), every one never-green. Same relations.
     #     Supersedes their r21 entries.
-    "stream_dedup_resketch": 22,
-    "stream_dedup_compacted": 22,
-    "stream_dedup_maintained": 22,
-    "stream_heavy_hitters_audit": 22,
     "stream_upsert_log_snapshot": 22,
     "stream_ann_ingest_fenced": 22,
     "ann_probe_rebuilt": 22,
     "ann_probe_vacuumed": 22,
+    # r23: the dedup sketch log records the state's b/r shape (a
+    #     record's meta), read instead of a limit(1) row sample and a
+    #     side file; the count-min and Misra-Gries sinks merge inside
+    #     replace_batch on its one log read. dedup_incremental (green
+    #     r11) is not listed: the window is full. Same relations.
+    #     Supersedes the r21/r22 entries of these keys.
+    "stream_dedup_admitted": 23,
+    "stream_dedup_resketch": 23,
+    "stream_dedup_compacted": 23,
+    "stream_dedup_maintained": 23,
+    "stream_heavy_hitters_audit": 23,
 }
 
 

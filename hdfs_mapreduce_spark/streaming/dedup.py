@@ -29,6 +29,14 @@ stays invisible. Compaction and resketch are log commits too: a
 ``kind='compact'`` record names the dirs it replaces, so no rename swap
 or marker file is needed.
 
+The state's lifetime b/r point is a log fact: every ingest sketch
+record and every resketch record carries ``meta={"n_perm", "n_bands"}``,
+and the shape is the ``meta`` of the newest sketch record that has one
+(compaction records carry none). The ingest learns it from the sketch
+log read it already makes, with no Spark job. An empty first batch
+still publishes its 0-row sketch record, so it pins the shape too; a
+resketch moves the shape in its one commit.
+
 At 100 TB the sketch table is the only state that grows, it is
 band-bucketed parquet (probe = scan of matching band rows), and the
 accepted table is the corpus itself — exactly the nightly-batch
@@ -50,10 +58,10 @@ from hdfs_mapreduce_spark.operators.dedup import (
     _banded_sketch,
     _probe_pairs_from_sketches,
     _verified_pairs,
-    resolve_sketch_shape,
 )
 from hdfs_mapreduce_spark.sources import fs as hfs
 from hdfs_mapreduce_spark.streaming.logtable import (
+    LogEntry,
     _is_replay,
     _live,
     _log_versions,
@@ -63,30 +71,14 @@ from hdfs_mapreduce_spark.streaming.logtable import (
     snapshot,
 )
 
-# Lifetime b/r point record ("n_perm n_bands"), written by the FIRST
-# ingest — even an empty one. Sketch rows remain the ground truth when
-# they exist; the meta file covers the r11-ADVICE hole where early
-# batches admit nothing: a restart that omits the explicit wide values
-# would otherwise fall back to the narrow default and the first
-# non-empty batch would pin that wrong lifetime shape silently.
-_SHAPE_META = "_shape_meta"
 
-def _read_shape_meta(
-    spark: SparkSession, state_dir: str
-) -> tuple[int, int] | None:
-    try:
-        parts = hfs.read_text(spark, hfs.join(state_dir, _SHAPE_META)).split()
-        return int(parts[0]), int(parts[1])
-    except Exception:
-        return None  # unreadable/corrupt meta: fall through to defaults
-
-
-def _write_shape_meta(
-    spark: SparkSession, state_dir: str, n_perm: int, n_bands: int
-) -> None:
-    hfs.write_text_atomic(
-        spark, hfs.join(state_dir, _SHAPE_META), f"{n_perm} {n_bands}"
-    )
+def _recorded_shape(sketch_log: list[LogEntry]) -> tuple[int, int] | None:
+    """The state's (n_perm, n_bands): the ``meta`` of the newest sketch
+    record that has one, or None before the first ingest."""
+    for e in reversed(sketch_log):
+        if e.meta is not None:
+            return e.meta["n_perm"], e.meta["n_bands"]
+    return None
 
 
 def dedup_ingest_batch(
@@ -106,9 +98,9 @@ def dedup_ingest_batch(
     a LIFETIME property of ``state_dir``, not a per-batch choice: every
     batch's sketch rows join against every earlier batch's, so mixed
     shapes under one state root would silently partition the candidate
-    space. The rule here makes that impossible: once state exists, its
-    stored shape is ADOPTED (an explicit mismatch raises via the probe
-    gate before anything commits); only the FIRST batch's caller picks
+    space. The rule here makes that impossible: once state exists, the
+    shape its sketch log records is ADOPTED (an explicit mismatch raises
+    before anything is written); only the FIRST batch's caller picks
     the point, defaulting to the module constants (16×8 — ingest
     batches are far below the auto-wide bound, so count-probing each
     batch would never choose wide; a billion-doc deployment passes
@@ -123,25 +115,12 @@ def dedup_ingest_batch(
     sketch_log = _log_versions(spark, sketch_root)
     if _is_replay(sketch_log, batch_id, None):
         return
-    corpus_sketch = _scan(spark, sketch_root, _live(sketch_log))
     if (n_perm is None) != (n_bands is None):
         raise ValueError("pass BOTH n_perm and n_bands or neither")
-    # Resolve the state's b/r shape ONCE (one limit(1) driver job per
-    # micro-batch — the round-10 verdict's double-probe finding): the
-    # same resolved values build the batch sketch that the corpus probe,
-    # the within-batch pair check, and this batch's state write share.
-    # Stored rows are the ground truth for the lifetime point; the
-    # _shape_meta record covers the rows-resolve-nothing window (no state
-    # yet, or every early batch admitted nothing — r11 ADVICE: a restart
-    # omitting the explicit wide values must not silently downgrade a
-    # pinned stream). Rows win over a stale meta record (a crash between
-    # a resketch commit and its meta rewrite), and an explicit caller
-    # shape that mismatches EITHER pin raises before anything commits.
-    pinned = None
-    if corpus_sketch is not None:
-        pinned = resolve_sketch_shape(corpus_sketch)
-    if pinned is None:
-        pinned = _read_shape_meta(spark, state_dir)
+    # The same log read gives the state's lifetime shape: the caller's
+    # choice (or the module default) only on the first ingest, and an
+    # explicit mismatch raises before anything is written.
+    pinned = _recorded_shape(sketch_log)
     if pinned is not None and n_perm is not None and (n_perm, n_bands) != pinned:
         raise ValueError(
             f"corpus sketch shape mismatch: state {state_dir} is pinned "
@@ -149,18 +128,16 @@ def dedup_ingest_batch(
             f"({n_perm}, {n_bands}) — probe with the state's "
             "configuration or resketch_state first"
         )
-    if pinned is not None:
-        shape = pinned
-    else:
-        # Truly unfixed lifetime point (first ingest ever): the caller's
-        # choice (or the module default) applies. Without this fallback
-        # an empty first micro-batch would wedge the stream permanently
-        # (adoption raises on every replay). The point is pinned now,
-        # even when this batch is empty; the happy path (stored rows
-        # resolve the shape) never touches the meta record.
-        shape = (n_perm, n_bands) if n_perm is not None else (N_PERM, N_BANDS)
-        _write_shape_meta(spark, state_dir, *shape)
-    n_perm, n_bands = shape
+    if pinned is None and sketch_log:
+        raise ValueError(
+            f"the sketch log of {state_dir} records no b/r shape (a state "
+            "written before sketch records carried one) — run "
+            "resketch_state once to record it"
+        )
+    n_perm, n_bands = pinned or (
+        (n_perm, n_bands) if n_perm is not None else (N_PERM, N_BANDS)
+    )
+    corpus_sketch = _scan(spark, sketch_root, _live(sketch_log))
     # The batch's banded sketch is built ONCE (round 11: the previous
     # shape ran the shingle scan + signature groupBy THREE times per
     # micro-batch), and — r13 — the three batch-bounded relations the
@@ -276,13 +253,15 @@ def dedup_ingest_batch(
     finally:
         janitor.free_all()
     # The accepted record lands first and the sketch record, the
-    # batch's commit point, last.
+    # batch's commit point, last; the sketch record carries the shape.
     accepted_log = _log_versions(spark, accepted_root)
-    for root, log in (
-        (accepted_root, accepted_log),
-        (sketch_root, sketch_log),
+    for root, log, meta in (
+        (accepted_root, accepted_log, None),
+        (sketch_root, sketch_log, {"n_perm": n_perm, "n_bands": n_bands}),
     ):
-        _publish(spark, root, attempt[root], log, batch_id, "append")
+        _publish(
+            spark, root, attempt[root], log, batch_id, "append", meta=meta
+        )
 
 
 def dedup_ingest_batch_maintained(
@@ -318,7 +297,7 @@ def dedup_ingest_batch_maintained(
     dir) runs on the same cadence and fires when the accumulated corpus
     has outgrown the state's b/r point — the advisory hook a deployment
     wires to its alerting; None skips the check entirely (its probe
-    costs one sampled row + one bounded count)."""
+    costs one sketch log read + one bounded count)."""
     dedup_ingest_batch(
         batch_df, batch_id, state_dir, id_col, text_col, threshold,
         n_perm=n_perm, n_bands=n_bands,
@@ -403,8 +382,9 @@ def resketch_state(
     the replace's slot: the resketch raises ``ConcurrentCommitError``
     and commits nothing, and a rerun sees that batch. A crash before
     the record lands leaves the old sketch live and an invisible
-    attempt dir, so the probe can never see a mixed-shape sketch (a
-    single-row shape sample cannot detect one).
+    attempt dir, so the probe can never see a mixed-shape sketch. The
+    record carries the new shape, so the migration moves the state's
+    recorded shape in the same commit.
 
     Returns the (n_perm, n_bands) now recorded in the state."""
     if n_perm % n_bands:
@@ -422,14 +402,8 @@ def resketch_state(
     bands = _banded_sketch(accepted, id_col, text_col, n_perm, n_bands)
     _publish(
         spark, sketch_root, _write_attempt(sketch_root, bands), entries,
-        None, "compact",
+        None, "compact", meta={"n_perm": n_perm, "n_bands": n_bands},
     )
-    # the migration changed the state's lifetime point — re-pin the
-    # first-ingest record so a later empty-state restart adopts the NEW
-    # shape (stored rows still win whenever they exist). The publish is
-    # put-if-absent, so the old record goes first.
-    hfs.delete(spark, hfs.join(state_dir, _SHAPE_META), recursive=False)
-    _write_shape_meta(spark, state_dir, n_perm, n_bands)
     return n_perm, n_bands
 
 
@@ -480,18 +454,18 @@ def compact_state(
         live = _live(entries)
         if max_batches_per_run is not None and len(live) > max_batches_per_run:
             size = {
-                e[3]: hfs.dir_size(spark, hfs.join(root, "data", e[3]))
+                e.data: hfs.dir_size(spark, hfs.join(root, "data", e.data))
                 for e in live
             }
             live = sorted(
-                sorted(live, key=lambda e: (size[e[3]], e[0]))[
+                sorted(live, key=lambda e: (size[e.data], e.version))[
                     :max_batches_per_run
                 ]
             )
         if len(live) < 2:
             continue
         attempt = _write_attempt(root, _scan(spark, root, live))
-        replaces = [e[3] for e in live]
+        replaces = [e.data for e in live]
         _publish(
             spark, root, attempt, entries, None, "compact", replaces=replaces
         )
@@ -500,15 +474,15 @@ def compact_state(
     return sorted(merged)
 
 
-def _batch_ids(entries: list) -> dict[str, set[int]]:
+def _batch_ids(entries: list[LogEntry]) -> dict[str, set[int]]:
     """Data dir name → the ids of the batches whose rows it holds: its
     own batch id, or for a compaction the ids of the dirs it replaced."""
     ids: dict[str, set[int]] = {}
     for e in entries:
-        if e[1] is not None:
-            ids[e[3]] = {e[1]}
+        if e.batch_id is not None:
+            ids[e.data] = {e.batch_id}
         else:
-            ids[e[3]] = set().union(*(ids[d] for d in e[6]))
+            ids[e.data] = set().union(*(ids[d] for d in e.replaces))
     return ids
 
 
@@ -522,15 +496,14 @@ def resketch_recommended(
     accepted corpus has crossed the auto-wide bound while the state
     sketch still sits at a narrower b/r point than the wide production
     config — i.e. exactly the deployment that should schedule
-    ``resketch_state(..., WIDE_PERM, WIDE_BANDS)``. Cost: one sampled
-    sketch row + a ``limit(bound + 1)`` count probe that stops as soon
-    as the bound is exceeded; run it on the ingest owner's maintenance
-    cadence, not per micro-batch."""
+    ``resketch_state(..., WIDE_PERM, WIDE_BANDS)``. Cost: one sketch log
+    read (the recorded shape) + a ``limit(bound + 1)`` count probe that
+    stops as soon as the bound is exceeded; run it on the ingest
+    owner's maintenance cadence, not per micro-batch."""
     bound = AUTO_WIDE_MIN_DOCS if wide_min_docs is None else wide_min_docs
-    sketch = snapshot(spark, hfs.join(state_dir, "sketch"), None)
-    if sketch is None:
-        return False
-    shape = resolve_sketch_shape(sketch)
+    shape = _recorded_shape(
+        _log_versions(spark, hfs.join(state_dir, "sketch"))
+    )
     if shape is None:
         return False
     n_perm, n_bands = shape

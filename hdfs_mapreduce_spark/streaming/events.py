@@ -32,7 +32,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from hdfs_mapreduce_spark.sources.catalog import _nanos_timestamp_cols, load_table
-from hdfs_mapreduce_spark.streaming.logtable import latest_state, replace_batch
+from hdfs_mapreduce_spark.streaming.logtable import replace_batch
 
 SESSION_GAP_MIN = 30
 
@@ -409,16 +409,13 @@ def cm_merge_batch_into_state(
     ``replace_batch``). Returns False on a skipped replay."""
     from hdfs_mapreduce_spark.operators.sketches import cm_merge, cm_sketch
 
-    merged = cm_sketch(
+    batch = cm_sketch(
         batch_df.select(F.col(col).cast("string").alias("item")),
         "item",
         depth,
         width,
     )
-    prev = latest_state(spark, state_dir)
-    if prev is not None:
-        merged = cm_merge(prev, merged)
-    return replace_batch(merged, batch_id, state_dir)
+    return replace_batch(batch, batch_id, state_dir, merge=cm_merge)
 
 
 def mg_merge_batch_into_state(
@@ -434,11 +431,12 @@ def mg_merge_batch_into_state(
     ``replace_batch``). Returns False on a skipped replay."""
     from hdfs_mapreduce_spark.operators.sketches import mg_merge, mg_summary
 
-    merged = mg_summary(batch_df, col, k=k)
-    prev = latest_state(spark, state_dir)
-    if prev is not None:
-        merged = mg_merge(prev, merged, k=k)
-    return replace_batch(merged, batch_id, state_dir)
+    return replace_batch(
+        mg_summary(batch_df, col, k=k),
+        batch_id,
+        state_dir,
+        merge=lambda prev, batch: mg_merge(prev, batch, k=k),
+    )
 
 
 def stream_heavy_hitters(

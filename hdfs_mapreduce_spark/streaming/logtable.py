@@ -13,12 +13,17 @@ Hadoop FS API (sources/fs.py), with the same layout ideas the real
 formats use:
 
     root/
-      _log/v{N}.commit  tiny JSON commit record: batch id, kind, and the
-                        unique data dir of commit N. The filename IS the
-                        version slot — concurrent writers collide on the
-                        atomic rename and exactly one wins. Reading the
-                        log is one listing + one ~100-byte read per
-                        commit.
+      _log/v{N}.commit  tiny JSON commit record: batch id, kind, the
+                        unique data dir of commit N, writer, ts, the
+                        dirs a compaction replaces, and an optional
+                        ``meta`` dict the writer records for its own
+                        readers (the log stores, returns and
+                        checkpoints it but never reads it; the dedup
+                        sketch records carry their b/r shape). The
+                        filename IS the version slot — concurrent
+                        writers collide on the atomic rename and
+                        exactly one wins. Reading the log is one
+                        listing + one ~100-byte read per commit.
       data/a{tok}/      immutable row files for one commit ATTEMPT (an
                         upsert batch, delete tombstones, or the full
                         compacted snapshot). The name is a version-free
@@ -61,11 +66,12 @@ formats use:
   replaces every live dir; the dedup state's merge replaces only the
   versions it read. Run it on whatever cadence bounds the live-version
   count (the real formats' OPTIMIZE).
-* **Full-state commits**: a summary sink (count-min, Misra-Gries) merges
-  each batch into its whole previous state, read with
-  ``latest_state``, and commits the result with ``replace_batch`` — a
-  ``kind='compact'`` commit that carries the batch id and replaces
-  every live dir. The batch id keeps the commit replay-detectable.
+* **Full-state commits**: a summary sink (count-min, Misra-Gries)
+  commits each batch with ``replace_batch(merge=…)``, which merges the
+  batch into the rows of the newest entry of the same log read its
+  replay check and publish use — a ``kind='compact'`` commit that
+  carries the batch id and replaces every live dir. The batch id keeps
+  the commit replay-detectable.
 * **The replace-commit rule**: every ``kind='compact'`` commit (keyed
   ``compact()``, ``replace_batch``, the dedup state's merge and
   resketch, a managed-index generation) holds rows derived from ONE
@@ -88,6 +94,7 @@ ranked as missing item 3.
 from __future__ import annotations
 
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -182,15 +189,23 @@ class ConcurrentCommitError(RuntimeError):
     when a full-state replace loses its one slot."""
 
 
-def _log_versions(
-    spark: SparkSession, root: str
-) -> list[
-    tuple[int, int | None, str, str, str | None, float | None, tuple[str, ...]]
-]:
-    """Committed log entries ascending by version:
-    ``(version, batch_id or None, kind, data_dir_name, writer or None,
-    commit wall-clock ts or None, replaced data dir names)`` — ts is None
-    for pre-r8 commits, and only a compaction replaces anything.
+class LogEntry(NamedTuple):
+    """One committed log record. ``ts`` is None for pre-r8 commits, only
+    a compaction ``replaces`` anything, and ``meta`` is whatever the
+    writer recorded (None when it recorded nothing)."""
+
+    version: int
+    batch_id: int | None
+    kind: str
+    data: str
+    writer: str | None
+    ts: float | None
+    replaces: tuple[str, ...]
+    meta: dict | None
+
+
+def _log_versions(spark: SparkSession, root: str) -> list[LogEntry]:
+    """Committed log entries (``LogEntry``) ascending by version.
 
     The grammar: one ``v{N}.commit`` file per version — the FILENAME
     is the version slot (so two concurrent writers of version N collide
@@ -274,14 +289,14 @@ def _log_versions(
                 f"{hfs.join(log_dir, name)}: {exc}"
             ) from exc
         out.append(entry)
-    return sorted(out, key=lambda e: e[0])
+    return sorted(out, key=lambda e: e.version)
 
 
-def _entry(version: int, rec: dict) -> tuple:
+def _entry(version: int, rec: dict) -> LogEntry:
     replaces = rec.get("replaces", [])
     if not isinstance(replaces, list):
         raise ValueError(f"bad replaces {replaces!r}")
-    return (
+    return LogEntry(
         version,
         rec.get("batch_id"),
         rec["kind"],
@@ -289,14 +304,15 @@ def _entry(version: int, rec: dict) -> tuple:
         rec.get("writer"),
         rec.get("ts"),
         tuple(replaces),
+        rec.get("meta"),
     )
 
 
 def _live(entries: list) -> list:
     """The entries whose data dir no compaction among ``entries``
     replaced, ascending: the versions a reader of the table reads."""
-    replaced = {d for e in entries for d in e[6]}
-    return [e for e in entries if e[3] not in replaced]
+    replaced = {d for e in entries for d in e.replaces}
+    return [e for e in entries if e.data not in replaced]
 
 
 def checkpoint_log(spark: SparkSession, root: str) -> int | None:
@@ -321,21 +337,8 @@ def checkpoint_log(spark: SparkSession, root: str) -> int | None:
     entries = _log_versions(spark, root)
     if not entries:
         return None
-    n = entries[-1][0]
-    payload = json.dumps(
-        [
-            {
-                "version": v,
-                "batch_id": b,
-                "kind": k,
-                "data": d,
-                "writer": w,
-                "ts": ts,
-                "replaces": list(r),
-            }
-            for v, b, k, d, w, ts, r in entries
-        ]
-    )
+    n = entries[-1].version
+    payload = json.dumps([e._asdict() for e in entries])
     # Losing the rename means a same-N checkpoint (identical content by
     # construction) already exists: success either way. The tmp name is
     # unique per attempt (write_text_atomic), so concurrent
@@ -391,10 +394,10 @@ def _is_replay(
     if batch_id is None:
         return False
     for e in reversed(entries):
-        if e[1] is None:
+        if e.batch_id is None:
             continue
-        if e[4] == writer:
-            return e[1] == batch_id
+        if e.writer == writer:
+            return e.batch_id == batch_id
     return False
 
 
@@ -448,6 +451,7 @@ def _publish(
     writer: str | None = None,
     backend: CommitBackend | None = None,
     replaces: list[str] | None = None,
+    meta: dict | None = None,
 ) -> int | None:
     """Publish the log record of a written attempt: pick the next
     version slot after ``entries`` (the caller's log read) and publish
@@ -466,7 +470,8 @@ def _publish(
     put, and it publishes only at the slot right after ``entries``.
     Losing that slot deletes the attempt and raises
     ``ConcurrentCommitError`` (after the replay no-op check): at a
-    later slot it would replace the winner's commit unseen. Every
+    later slot it would replace the winner's commit unseen. ``meta``
+    goes into the record as given. Every
     ``_CHECKPOINT_EVERY``-th slot also writes a log checkpoint, keeping
     the per-commit log read O(K) forever with no manual maintenance.
     Returns the committed version, or None on a skipped replay."""
@@ -477,7 +482,7 @@ def _publish(
     log_dir = hfs.join(root, "_log")
     hfs.mkdirs(spark, log_dir)
     if kind == "compact" and replaces is None:
-        replaces = [e[3] for e in _live(entries)]
+        replaces = [e.data for e in _live(entries)]
     for attempt in range(_COMMIT_RETRIES):
         if attempt:
             entries = _log_versions(spark, root)
@@ -491,7 +496,7 @@ def _publish(
                 "full-state replace built from the log before it is "
                 "stale and does not move to a later slot"
             )
-        next_v = entries[-1][0] + 1 if entries else 0
+        next_v = entries[-1].version + 1 if entries else 0
         record = {
             "version": next_v,
             "batch_id": batch_id,
@@ -506,6 +511,8 @@ def _publish(
         }
         if kind == "compact":
             record["replaces"] = replaces
+        if meta is not None:
+            record["meta"] = meta
         if backend.put_if_absent(
             spark,
             hfs.join(log_dir, f"v{next_v}.commit"),
@@ -591,18 +598,31 @@ def replace_batch(
     batch_id: int,
     root: str,
     writer: str | None = None,
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> bool:
     """Commit ``df`` as the table's FULL new state for one batch: a
     ``kind='compact'`` commit that carries the batch id, so readers need
     no version below it and a replayed batch no-ops (the summary sinks'
-    commit, whose merge of batch into state is not idempotent). The
-    commit replaces every live dir, so it publishes only at the slot
-    after its own log read: if another writer's record takes that slot
-    it raises ``ConcurrentCommitError`` instead of replacing that
+    commit, whose merge of batch into state is not idempotent). With
+    ``merge``, the committed state is ``merge(newest_rows, df)`` over
+    the rows of the newest entry (``df`` alone before the first
+    commit), read from the same log read as the replay check and the
+    publish. The commit replaces every live dir, so it publishes only
+    at the slot after that read: if another writer's record takes that
+    slot it raises ``ConcurrentCommitError`` instead of replacing that
     record's rows. Returns False on a skipped replay, True when a
     commit landed."""
+    spark = df.sparkSession
+    entries = _log_versions(spark, root)
+    if _is_replay(entries, batch_id, writer):
+        return False
+    if merge is not None and entries:
+        df = merge(_newest_rows(spark, root, entries), df)
     return (
-        _commit(df.sparkSession, root, df, batch_id, "compact", writer)
+        _publish(
+            spark, root, _write_attempt(root, df), entries, batch_id,
+            "compact", writer,
+        )
         is not None
     )
 
@@ -611,11 +631,17 @@ def latest_state(spark: SparkSession, root: str) -> DataFrame | None:
     """Rows of the newest committed version — the whole state of a table
     whose every commit is a ``replace_batch`` — or None before the first
     commit. Attempt dirs no log record names stay invisible."""
-    entries = _log_versions(spark, root)
+    return _newest_rows(spark, root, _log_versions(spark, root))
+
+
+def _newest_rows(
+    spark: SparkSession, root: str, entries: list[LogEntry]
+) -> DataFrame | None:
+    """Rows of the newest of ``entries``, or None when there is none."""
     if not entries:
         return None
     return spark.read.parquet(
-        hfs.join(hfs.glob_escape(root), "data", entries[-1][3])
+        hfs.join(hfs.glob_escape(root), "data", entries[-1].data)
     )
 
 
@@ -650,13 +676,13 @@ def snapshot(
     another) where a per-version union would have widened it."""
     entries = _log_versions(spark, root)
     if as_of is not None:
-        entries = [e for e in entries if e[0] <= as_of]
+        entries = [e for e in entries if e.version <= as_of]
     live = _live(entries)
     allrows = _scan(spark, root, live)
     if allrows is None or key_col is None:
         return allrows
     version_of = F.create_map(
-        *[F.lit(x) for e in live for x in (e[3], e[0])]
+        *[F.lit(x) for e in live for x in (e.data, e.version)]
     )
     parent = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
     allrows = allrows.withColumn("_v", version_of[parent])
@@ -680,7 +706,7 @@ def _scan(spark: SparkSession, root: str, live: list) -> DataFrame | None:
         return None
     data = hfs.join(hfs.glob_escape(root), "data")
     return spark.read.option("mergeSchema", "true").parquet(
-        *[hfs.join(data, e[3]) for e in live]
+        *[hfs.join(data, e.data) for e in live]
     )
 
 
@@ -729,32 +755,38 @@ def vacuum(
             f"retained), got {retain_last}"
         )
     entries = _log_versions(spark, root)
-    compactions = [e for e in entries if e[6]]
+    compactions = [e for e in entries if e.replaces]
     removed = []
     horizons = []
     if retain_last is not None:
         # Horizon = oldest version inside the retained window.
         horizons.append(
-            entries[-retain_last][0]
+            entries[-retain_last].version
             if len(entries) >= retain_last
-            else (entries[0][0] if entries else 0)
+            else (entries[0].version if entries else 0)
         )
     if older_than_s is not None:
         cutoff = time.time() - older_than_s
-        young = [e[0] for e in entries if e[5] is None or e[5] >= cutoff]
+        young = [
+            e.version for e in entries if e.ts is None or e.ts >= cutoff
+        ]
         horizons.append(
-            min(young) if young else (entries[-1][0] + 1 if entries else 0)
+            min(young)
+            if young
+            else (entries[-1].version + 1 if entries else 0)
         )
     if horizons:
         horizon = min(horizons)  # stricter policy wins
-        compactions = [c for c in compactions if c[0] <= horizon]
-    replaced = {d for c in compactions for d in c[6]}
+        compactions = [c for c in compactions if c.version <= horizon]
+    replaced = {d for c in compactions for d in c.replaces}
     data_dir = hfs.join(root, "data")
     for e in entries:
-        if e[3] in replaced and hfs.delete(spark, hfs.join(data_dir, e[3])):
-            removed.append(e[0])
+        if e.data in replaced and hfs.delete(
+            spark, hfs.join(data_dir, e.data)
+        ):
+            removed.append(e.version)
     if sweep_orphans:
-        referenced = {e[3] for e in entries}
+        referenced = {e.data for e in entries}
         for name in hfs.list_child_names(spark, data_dir):
             if name not in referenced:
                 hfs.delete(spark, hfs.join(data_dir, name))
@@ -794,7 +826,7 @@ def compact(
     entries = _log_versions(spark, root)
     if not entries:
         return None
-    snap = snapshot(spark, root, key_col, as_of=entries[-1][0])
+    snap = snapshot(spark, root, key_col, as_of=entries[-1].version)
     if snap is None:
         return None
     if cluster_by is not None:

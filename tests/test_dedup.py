@@ -825,12 +825,11 @@ def test_auto_band_config_switchover_and_shape_adoption(spark, monkeypatch):
 
 
 def test_resolve_sketch_shape_empty_legacy_and_trusted_probe(spark):
-    """resolve_sketch_shape contract (round-10 advice trio): an EMPTY
-    sketch yields None (omitted) or the explicit shape; a legacy v1
-    sketch (no rpb column) raises a targeted rebuild error instead of a
-    downstream missing-column AnalysisException; validate_shape=False
-    skips the stored-shape sample entirely (proven by a mismatched probe
-    that does NOT raise) and demands explicit values."""
+    """resolve_sketch_shape contract (round-10 advice): an EMPTY sketch
+    yields None (omitted) or the explicit shape, and the probe of an
+    empty sketch without one raises; a legacy v1 sketch (no rpb column)
+    raises a targeted rebuild error instead of a downstream
+    missing-column AnalysisException."""
     import pytest
 
     import hdfs_mapreduce_spark.operators.dedup as dd
@@ -856,17 +855,6 @@ def test_resolve_sketch_shape_empty_legacy_and_trusted_probe(spark):
         resolve_sketch_shape(legacy)
     with pytest.raises(ValueError, match="legacy"):
         incremental_pairs_against_sketch(legacy, batch, "doc_id", "text", 0.5)
-    # trusted probe: no sample job, so a (deliberately) mismatched shape
-    # builds a plan instead of raising — and explicit values are required
-    mis = incremental_pairs_against_sketch(
-        sketch, batch, "doc_id", "text", 0.5,
-        n_perm=dd.WIDE_PERM, n_bands=dd.WIDE_BANDS, validate_shape=False,
-    )
-    assert mis.count() == 0  # mismatched band keys join nothing
-    with pytest.raises(ValueError, match="explicit"):
-        incremental_pairs_against_sketch(
-            sketch, batch, "doc_id", "text", 0.5, validate_shape=False
-        )
 
 
 def test_auto_band_config_memoizes_per_plan(spark, monkeypatch):

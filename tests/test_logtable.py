@@ -438,13 +438,23 @@ def test_log_checkpoint_preserves_entries_and_bounds_reads(spark, tmp_path):
 
     from hdfs_mapreduce_spark.streaming.logtable import (
         _log_versions,
+        _publish,
+        _write_attempt,
         checkpoint_log,
     )
 
     root = str(tmp_path / "t")
     upsert_batch(_batch(spark, [(1, "a")]), 0, root, "k")
-    upsert_batch(_batch(spark, [(1, "b"), (2, "x")]), 1, root, "k")
+    # commit 1 carries a writer-recorded meta dict, which the checkpoint
+    # must copy like every other field
+    meta = {"n_perm": 16, "n_bands": 8}
+    attempt = _write_attempt(root, _batch(spark, [(1, "b"), (2, "x")]))
+    _publish(
+        spark, root, attempt, _log_versions(spark, root), 1, "upsert",
+        meta=meta,
+    )
     before = _log_versions(spark, root)
+    assert [e.meta for e in before] == [None, meta]
     assert checkpoint_log(spark, root) == 1
     assert _log_versions(spark, root) == before
     assert os.path.exists(os.path.join(root, "_log", "c1.checkpoint"))
@@ -602,6 +612,50 @@ def test_replace_batch_is_a_replay_detectable_full_state(spark, tmp_path):
     assert {
         r["k"]: r["v"] for r in snapshot(spark, root, "k", as_of=0).collect()
     } == {1: "a", 2: "b"}
+
+
+@pytest.mark.parametrize("sink", ["cm", "mg"])
+def test_summary_merge_that_loses_its_slot_raises_and_keeps_winner_rows(
+    spark, tmp_path, monkeypatch, sink
+):
+    """A summary sink merges each batch into the newest state and
+    commits the result with replace_batch. The state read, the replay
+    check and the publish share one log read, so a competing full-state
+    commit that lands after the state read (here: from inside the
+    sketch merge) takes the slot: the sink raises ConcurrentCommitError
+    and the competitor's rows stay the table's state. A second log read
+    before the publish would replace them unseen."""
+    from hdfs_mapreduce_spark.operators import sketches
+    from hdfs_mapreduce_spark.streaming import events
+    from hdfs_mapreduce_spark.streaming import logtable as lt
+
+    commit, merge_name = {
+        "cm": (events.cm_merge_batch_into_state, "cm_merge"),
+        "mg": (events.mg_merge_batch_into_state, "mg_merge"),
+    }[sink]
+    root = str(tmp_path / sink)
+    batch = spark.createDataFrame([("x",), ("x",), ("y",)], "user_id string")
+    assert commit(spark, batch, root, batch_id=0)
+    competitor = spark.createDataFrame(
+        [("y", 5)] if sink == "mg" else [(0, 1, 5)],
+        lt.latest_state(spark, root).schema,
+    )
+    real_merge = getattr(sketches, merge_name)
+
+    def merge_after_competitor(*a, **k):
+        # mg_summary merges its partition summaries through mg_merge too
+        # (one argument); the state merge is the two-argument call
+        if len(a) == 2:
+            assert lt.replace_batch(competitor, 7, root)
+        return real_merge(*a, **k)
+
+    monkeypatch.setattr(sketches, merge_name, merge_after_competitor)
+    with pytest.raises(lt.ConcurrentCommitError):
+        commit(spark, batch, root, batch_id=1)
+    assert sorted(tuple(r) for r in lt.latest_state(spark, root).collect()) == (
+        sorted(tuple(r) for r in competitor.collect())
+    )
+    assert [e.batch_id for e in _log_versions(spark, root)] == [0, 7]
 
 
 @pytest.mark.parametrize("replace", ["compact", "replace_batch"])

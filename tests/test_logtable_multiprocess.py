@@ -78,9 +78,9 @@ def _assert_contended_log(spark, root, writers, n_batches, attempts):
     # n commits, each in its own slot, no gaps, no double-landing
     assert [e[0] for e in entries] == list(range(n))
     by_writer = {}
-    for v, bid, kind, data, writer, _ts, _replaces in entries:
-        assert kind == "upsert"
-        by_writer.setdefault(writer, []).append(bid)
+    for e in entries:
+        assert e.kind == "upsert"
+        by_writer.setdefault(e.writer, []).append(e.batch_id)
     assert sorted(by_writer) == sorted(writers)
     for w in writers:
         assert sorted(by_writer[w]) == list(range(n_batches))
@@ -150,9 +150,9 @@ def test_two_real_writer_processes_never_collide(spark, tmp_path):
     assert len(entries) == 12
     assert versions == sorted(versions) and len(set(versions)) == 12
     by_writer = {}
-    for v, bid, kind, data, writer, _ts, _replaces in entries:
-        assert kind == "upsert"
-        by_writer.setdefault(writer, []).append(bid)
+    for e in entries:
+        assert e.kind == "upsert"
+        by_writer.setdefault(e.writer, []).append(e.batch_id)
     assert sorted(by_writer) == ["alpha", "beta"]
     assert sorted(by_writer["alpha"]) == list(range(6))
     assert sorted(by_writer["beta"]) == list(range(6))
