@@ -530,6 +530,67 @@ def _probe_pairs_from_sketches(
     )
 
 
+# --- posting-list self-join ------------------------------------------------------
+def posting_cap(
+    postings: DataFrame, keys: str | list[str], doc: str, max_df: int | None
+) -> DataFrame:
+    """``postings`` without the rows of keys that occur in more than
+    ``max_df`` DISTINCT ``doc`` values (``None`` keeps every row). A hot
+    key is boilerplate, and its pair expansion is quadratic in its
+    document frequency. The frequency is ``max(dense_rank())`` over a
+    window keyed on ``keys``: a doc repeated under one key counts once,
+    and the df is computed inside the key-keyed exchange that
+    ``posting_pairs`` reuses."""
+    if max_df is None:
+        return postings
+    from pyspark.sql.window import Window
+
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    w = Window.partitionBy(*keys)
+    return (
+        postings.withColumn("_rank", F.dense_rank().over(w.orderBy(doc)))
+        .withColumn("_df", F.max("_rank").over(w))
+        .where(F.col("_df") <= max_df)
+        .drop("_rank", "_df")
+    )
+
+
+def posting_pairs(
+    postings: DataFrame,
+    keys: str | list[str],
+    doc: str,
+    max_df: int | None = None,
+) -> DataFrame:
+    """The candidate join every near-duplicate blocking family shares: a
+    (key, doc) posting relation, capped by ``posting_cap``, self-joined on
+    ``keys`` with ``a.doc < b.doc``. Returns the joined rows under the
+    aliases ``a`` and ``b``; the family selects from them and verifies.
+
+    Both legs carry a ``shuffle_hash`` hint, so they are one subplan and
+    the exchange-reuse rule serves them from ONE shuffle write (asserted
+    in tests/test_plan_shape.py). Left to itself, AQE saw a small
+    signature table and broadcast one side, which computed SimHash's
+    token-explode + 56-sum aggregate twice (broadcast and probe sides
+    cannot share an exchange; measured 2x the query), and a corpus-wide
+    posting relation could never broadcast at 100 TB anyway.
+
+    The cap is a window inside that same key-keyed exchange, not an
+    aggregate joined back. The aggregate-then-join shape evaluated the
+    winnowing fingerprint subtree (shingle explode + window MIN +
+    distinct) once under the aggregate and again under the join, and its
+    exchange could not serve the self-join; with the window the posting
+    relation is derived once and shuffled once. For an opaque producer
+    the difference is larger: pHash's payload-decode kernel
+    (``mapInPandas``, which nothing dedups) ran THREE times under an
+    aggregate + self-join, once under each leg and once under the count."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    p = posting_cap(postings, keys, doc, max_df).hint("shuffle_hash")
+    on = F.col(f"a.{doc}") < F.col(f"b.{doc}")
+    for k in keys:
+        on = (F.col(f"a.{k}") == F.col(f"b.{k}")) & on
+    return p.alias("a").join(p.alias("b"), on)
+
+
 # --- SimHash ---------------------------------------------------------------------
 # 56-bit signatures (every good bit of h56) in 4 bands of 14 bits, hamming
 # budget 3 — the Manku/Jain/Sarma WWW'07 table layout. Band-key cardinality
@@ -606,15 +667,8 @@ def simhash_pairs(
     sf0.1 measured 1.93s vs 1.15s execution for identical output — the
     per-candidate array allocations ran on ~800k probe matches while the
     distinct handles ≤ 4x888 rows. Dropping the band array from the join
-    payload also narrows the shuffled rows to (doc, simhash, band).
-
-    The self-join carries a shuffle_hash hint: left to itself, AQE sees a
-    small signature table locally and broadcasts one side — which computes
-    the token-explode + 56-sum aggregate TWICE (broadcast and probe sides
-    can't share an exchange; measured 2x the query). Pinning both sides to
-    a shuffle join makes the subplans identical, so the exchange-reuse rule
-    serves both from one shuffle write (asserted in test_plan_shape), and
-    at 100 TB a corpus-wide sketch could never broadcast anyway."""
+    payload also narrows the shuffled rows to (doc, simhash, band). The
+    band self-join is ``posting_pairs`` on (band_idx, band_key), uncapped."""
     sigs = simhash_signatures(df, id_col, text_col)
     bands = sigs.select(
         "doc",
@@ -630,18 +684,12 @@ def simhash_pairs(
             )
         ).alias("band_idx", "band_key"),
     )
-    l, r = bands.hint("shuffle_hash").alias("l"), bands.hint("shuffle_hash").alias("r")
     return (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
+        posting_pairs(bands, ["band_idx", "band_key"], "doc")
         .select(
-            F.col("l.doc").alias("doc_a"),
-            F.col("r.doc").alias("doc_b"),
-            F.expr("bit_count(l.simhash ^ r.simhash)").alias("hamming"),
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
@@ -863,26 +911,17 @@ def ngram_jaccard_pairs(
             "ngram_jaccard_pairs with max_df (boilerplate-capped exact "
             "Jaccard) or minhash_pairs (banded LSH)",
         )
-    # distinct (doc, shingle-hash) pairs — feeds per-doc sizes and both
-    # sides of the inverted self-join; the subplans are identical, so
+    # distinct (doc, shingle-hash) pairs, capped — feeds per-doc sizes and
+    # both sides of the inverted self-join; the subplans are identical, so
     # Spark's ReusedExchange serves them from one shuffle write (asserted
     # in tests/test_plan_shape.py) with no persist to leak.
-    inv = shingle_relation(df, id_col, text_col).distinct()
-    if max_df is not None:
-        hot = (
-            inv.groupBy("x")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("x")
-        )
-        # Hot shingles are by definition few (df above the cap ⇒ heavy
-        # boilerplate), so the exclusion list broadcasts.
-        inv = inv.join(F.broadcast(hot), "x", "left_anti")
+    inv = posting_cap(
+        shingle_relation(df, id_col, text_col).distinct(), "x", "doc", max_df
+    )
     sizes = inv.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    l, r = inv.alias("l"), inv.alias("r")
     shared = (
-        l.join(r, (F.col("l.x") == F.col("r.x")) & (F.col("l.doc") < F.col("r.doc")))
-        .groupBy(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
+        posting_pairs(inv, "x", "doc")
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("shared"))
     )
     return (
@@ -970,30 +1009,13 @@ def edit_distance_pairs(
         f"explode(array_distinct({_deletion_variants(text_col, window_len)}))"
         " AS variant",
     )
-    if max_variant_df is not None:
-        # array_distinct above makes each (doc, variant) unique, so row
-        # count per variant == document frequency. Hot variants are by
-        # definition few (df above the cap ⇒ boilerplate prefix), so the
-        # exclusion list broadcasts — same shape as the jaccard max_df cap.
-        hot = (
-            k.groupBy("variant")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_variant_df)
-            .select("variant")
-        )
-        k = k.join(F.broadcast(hot), "variant", "left_anti")
-    a, b = k.alias("a"), k.alias("b")
     # Verify-then-distinct: levenshtein runs once per candidate ROW (a
     # pair sharing m variants is checked m ≤ window_len+1 times — cheap
     # JVM work), and only rows passing the ≤max_dist filter reach the
     # pair-distinct, whose shuffle rows are (doc, doc, int) instead of
     # two key_len-char keys per false-positive band collision.
     return (
-        a.join(
-            b,
-            (F.col("a.variant") == F.col("b.variant"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        posting_pairs(k, "variant", "doc", max_variant_df)
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),
@@ -1163,8 +1185,7 @@ RUN_MIN_TOKENS = 12
 # cap drops those grams BEFORE the join (runs flowing through a hot gram
 # split at it; a run shared by few docs is untouched because every one
 # of its grams has df <= its pair count). Same discipline as
-# EDIT_VARIANT_MAX_DF and the capped-Jaccard relation; the hot set is at
-# most total_grams/cap grams, so it broadcasts.
+# EDIT_VARIANT_MAX_DF and the capped-Jaccard relation (``posting_cap``).
 RUN_MAX_DF = 64
 
 
@@ -1196,12 +1217,11 @@ def exact_substring_runs(
     Returns (doc_a, doc_b, a_start, a_end, b_start, b_end, n_tokens),
     token-index bounds inclusive, ordered.
 
-    Scale shape: map-only shingling, one gram-keyed aggregation for the
-    boilerplate cap (``max_df``: grams in more distinct docs than this
-    are dropped before the join — the hot set is ≤ total_grams/max_df so
-    its anti-join broadcasts; ``None`` disables), ONE shuffle on the
-    exact gram text for the self-join (exact text, not a 64-bit hash —
-    same collision-exactness argument as duplicate_spans), one shuffle on
+    Scale shape: map-only shingling, ONE shuffle on the exact gram text
+    for the boilerplate cap and the self-join (``posting_pairs``;
+    ``max_df``: grams in more distinct docs than this are dropped before
+    the join, ``None`` disables; exact text, not a 64-bit hash — same
+    collision-exactness argument as duplicate_spans), one shuffle on
     (doc_a, doc_b, diag) for the island window. Diagonal groups are tiny
     (≤ doc length), so the window never sees a skewed partition."""
     from pyspark.sql.window import Window
@@ -1219,26 +1239,11 @@ def exact_substring_runs(
             )
         ).alias("pos", "sh"),
     )
-    if max_df is not None:
-        hot = (
-            grams.groupBy("sh")
-            .agg(F.count_distinct("doc").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh")
-        )
-        grams = grams.join(F.broadcast(hot), "sh", "left_anti")
-    m = (
-        grams.select(F.col("doc").alias("doc_a"), F.col("pos").alias("pa"), "sh")
-        .join(
-            grams.select(
-                F.col("doc").alias("doc_b"), F.col("pos").alias("pb"), "sh"
-            ),
-            "sh",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", "pa", (F.col("pa") - F.col("pb")).alias("diag")
-        )
+    m = posting_pairs(grams, "sh", "doc", max_df).select(
+        F.col("a.doc").alias("doc_a"),
+        F.col("b.doc").alias("doc_b"),
+        F.col("a.pos").alias("pa"),
+        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
     )
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
     flagged = m.select(
@@ -1417,34 +1422,14 @@ def winnowing_pairs(
     document frequency — the same cap discipline as the hot-shingle cap
     in ngram_jaccard_pairs). Output (doc_a, doc_b, n_shared).
 
-    Scale: the df-filter aggregate and the fingerprint self-join are both
-    keyed on fp with per-key expansion capped at max_df², so the pair
-    stage is linear in the fingerprint relation — never corpus-quadratic.
-
-    The df cap is a window COUNT over fp, not a groupBy + join-back: the
-    aggregate-then-join shape evaluated the fingerprint subtree (shingle
-    explode + window MIN + distinct) once under the aggregate and again
-    under the join, and its fp-keyed exchange could not serve the
-    self-join. The window form computes df in the SAME fp-keyed exchange
-    the self-join needs, so the fingerprint relation is derived once and
-    shuffled once (guide §2.4: operations keyed the same way share one
-    exchange)."""
-    from pyspark.sql.window import Window
-
+    Scale: the df cap and the fingerprint self-join (``posting_pairs``)
+    are both keyed on fp with per-key expansion capped at max_df², so the
+    pair stage is linear in the fingerprint relation — never
+    corpus-quadratic."""
     fps = winnowing_fingerprints(df, id_col, text_col)
-    gf = (
-        fps.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-        )
-        .where(F.col("df") <= max_df)
-        .select("fp", "doc")
-    )
-    left = gf.select("fp", F.col("doc").alias("doc_a"))
-    right = gf.select("fp", F.col("doc").alias("doc_b"))
     return (
-        left.join(right, "fp")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        posting_pairs(fps, "fp", "doc", max_df)
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )

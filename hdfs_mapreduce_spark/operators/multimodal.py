@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hdfs_mapreduce_spark.operators.dedup import posting_pairs
+
 PAYLOAD_SCHEMA = (
     "id long, payload binary, "
     "meta struct<mime: string, n_bytes: long, sha256: string>"
@@ -522,65 +524,30 @@ def phash_pairs(
     constant's comment — this is what keeps the join linear at scale;
     the declared relation is still fully deterministic because the cap
     is a pure function of the data, mirrored in the oracle). One
-    fingerprint pass, one band-keyed groupBy that both applies the hot
-    cap (group size > PHASH_BAND_MAX dropped) and generates the in-group
-    pairs, distinct via groupBy on the pair, THEN the exact bit_count
-    verify — the completion of the multimodal dedup family (exact
-    content md5 → perceptual near-dup).
-
-    The band groups are materialized as collect_list arrays rather than
-    via a key-count aggregate + band-keyed self-join: the former shape
-    ran the payload-decode fingerprint kernel THREE times in one plan
-    (once under each self-join leg, once under the count aggregate —
-    MapInPandas is opaque, so nothing dedups the subtree), i.e. two full
-    corpus decode passes of pure dead work at any scale. The arrays are
-    bounded by PHASH_BAND_MAX, so per-group state and the pair explode
-    stay O(cap²) regardless of corpus size, and the pair SET is
-    order-independent (unordered in-group pairs filtered id_a < id_b),
-    so collect_list's nondeterministic ordering cannot leak into the
-    result."""
-    hashes = perceptual_hash(df)
-    all_bands = hashes.select(
+    fingerprint pass feeds ``posting_pairs`` on (band, key) once; the
+    exact bit_count verify runs per candidate row, then a distinct over
+    the surviving pairs — the completion of the multimodal dedup family
+    (exact content md5 → perceptual near-dup)."""
+    bands = perceptual_hash(df).select(
         "id",
         "phash",
-        F.explode(
+        F.posexplode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("phash"), 8 * j)
-                        .bitwiseAND(F.lit(255))
-                        .alias("key"),
-                    )
+                    F.shiftright(F.col("phash"), 8 * j).bitwiseAND(F.lit(255))
                     for j in range(PHASH_BANDS)
                 ]
             )
-        ).alias("b"),
-    ).select("id", "phash", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    groups = (
-        all_bands.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("id", "phash")).alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= PHASH_BAND_MAX))
-    )
-    cand = (
-        groups.select(F.explode("ms").alias("a"), F.col("ms"))
-        .select("a", F.explode("ms").alias("b"))
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        )
-        .agg(
-            F.first(F.col("a.phash")).alias("ha"),
-            F.first(F.col("b.phash")).alias("hb"),
-        )
+        ).alias("band", "key"),
     )
     return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.expr("ha ^ hb")).cast("int").alias("hamming"),
+        posting_pairs(bands, ["band", "key"], "id", PHASH_BAND_MAX)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.bit_count(F.expr("a.phash ^ b.phash")).cast("int").alias("hamming"),
         )
         .where(F.col("hamming") <= ham_max)
+        .distinct()
         .orderBy("id_a", "id_b")
     )

@@ -1054,3 +1054,18 @@ def test_exact_substring_runs_boilerplate_cap(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in uncapped} == {
         (a, b) for a in range(1, 6) for b in range(a + 1, 6)
     }
+    # The cap counts DISTINCT docs: a gram repeated inside one doc has 5
+    # rows here but df 2, so it stays under max_df=4 and its runs survive.
+    rep = spark.createDataFrame(
+        [(6, " y ".join(["x0 x1 x2 x3"] * 4)), (7, "x0 x1 x2 x3")],
+        "doc_id long, text string",
+    )
+    runs = exact_substring_runs(
+        rep, "doc_id", "text", k=4, min_tokens=4, max_df=4
+    ).collect()
+    assert {(r["doc_a"], r["doc_b"]) for r in runs} == {(6, 7)}
+    assert sorted(runs) == sorted(
+        exact_substring_runs(
+            rep, "doc_id", "text", k=4, min_tokens=4, max_df=None
+        ).collect()
+    )

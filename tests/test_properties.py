@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 
 BASE = datetime(2024, 1, 1)
@@ -293,6 +293,74 @@ def test_span_scrub_matches_bruteforce(spark, texts):
         r["doc"]: (r["n_removed"], r["n_kept"], r["scrubbed_hash"])
         for r in span_scrub(docs, "doc_id", "text", k=k).collect()
     }
+    assert got == want
+
+
+# (k1, k2, doc) postings: a two-column key, few docs, so keys repeat a
+# (key, doc) row and cross every small document frequency.
+_postings = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=4),
+    ),
+    min_size=0,
+    max_size=14,
+)
+# key (0,0): 3 rows, df 2; key (0,1): df 3; key (1,0): df 2
+_BOUNDARY = [(0, 0, 1), (0, 0, 1), (0, 0, 2), (0, 1, 1), (0, 1, 2),
+             (0, 1, 3), (1, 0, 1), (1, 0, 2)]
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=_postings, max_df=st.sampled_from([None, 1, 2, 3]))
+@example(rows=[], max_df=2)
+@example(rows=_BOUNDARY, max_df=2)
+@example(rows=_BOUNDARY, max_df=None)
+def test_posting_pairs_matches_bruteforce(spark, rows, max_df):
+    """posting_cap keeps a key's rows iff its DISTINCT-doc count is at
+    most max_df (df == max_df kept, max_df + 1 dropped, a repeated
+    (key, doc) row counted once); posting_pairs then emits every pair of
+    kept rows that share the whole key with a.doc < b.doc."""
+    from collections import Counter, defaultdict
+
+    from pyspark.sql import functions as F
+
+    from hdfs_mapreduce_spark.operators.dedup import posting_cap, posting_pairs
+
+    docs = defaultdict(set)
+    for k1, k2, d in rows:
+        docs[(k1, k2)].add(d)
+    kept = [
+        (i, r)
+        for i, r in enumerate(rows)
+        if max_df is None or len(docs[r[:2]]) <= max_df
+    ]
+    want = Counter(
+        (ia, ib)
+        for ia, a in kept
+        for ib, b in kept
+        if a[:2] == b[:2] and a[2] < b[2]
+    )
+    postings = spark.createDataFrame(
+        [(k1, k2, d, i) for i, (k1, k2, d) in enumerate(rows)],
+        "k1 long, k2 long, doc long, rid long",
+    )
+    capped = posting_cap(postings, ["k1", "k2"], "doc", max_df)
+    assert capped.columns == postings.columns
+    assert sorted(r["rid"] for r in capped.collect()) == [i for i, _ in kept]
+    pairs = posting_pairs(postings, ["k1", "k2"], "doc", max_df)
+    assert len(pairs.columns) == 2 * len(postings.columns)
+    got = Counter(
+        (r["ra"], r["rb"])
+        for r in pairs.select(
+            F.col("a.rid").alias("ra"), F.col("b.rid").alias("rb")
+        ).collect()
+    )
     assert got == want
 
 
