@@ -16,19 +16,23 @@ Operator families:
   ``_model_sample`` (the seeded sample every centroid and codebook is
   fitted from), ``_cos_to_cents`` and ``_probe_cells`` (cell
   assignment and probe order), ``_pq_luts`` and ``_pq_codes`` (ADC
-  tables and first-min encoding, the only callers of the exact-fold
-  ``_pq_sub_dists``), ``_adc_probes`` (each query's probed cells with
-  their tables), ``_adc_scores`` (the cell-grouped ADC scorer) and
-  ``_topk`` (the per-query ranking tail, shared with LSH and IVF).
+  tables and first-min encoding), ``_adc_probes`` (each query's probed
+  cells with their tables), ``_adc_scores`` (the cell-grouped ADC
+  scorer) and ``_topk`` (the per-query ranking tail, shared with the
+  brute-force, LSH and IVF searches).
 * Clustering — ``kmeans_assign``, ``kmeans_fit``, ``kmeans_fit_summary``
   and SemDeDup's ``semantic_dedup``.
 * Text to vectors and diverse selection — ``hash_embed_cells`` /
   ``hash_embed_vectors`` (feature hashing) and ``mmr_select``.
 
 Float parity: the Python-boundary kernels (pandas UDFs, ``mapInPandas``)
-are Arrow-batched NumPy loops that keep the SQL oracle's sequential fold
-order (acc += term in dimension order, all float64), so Spark and the
-DuckDB twins in plans/similarity_plans.py agree bit-for-bit and 6-decimal
+are Arrow-batched NumPy over two exact-fold primitives, ``_fold_dot``
+(Σ a_d·b_d) and ``_fold_sq_l2`` (Σ (a_d − b_d)²). Both keep the SQL
+oracle's sequential fold order (acc = acc + term in dimension order from
+0.0, all float64) and broadcast over leading axes, so a row-paired
+cosine, a (rows × centroids) argmin and an ADC table all run the same
+additions in the same order. Spark and the DuckDB twins in
+plans/similarity_plans.py therefore agree bit-for-bit and 6-decimal
 rounding in the driver's hash is safe. Hyperplanes come from the shared
 h56 hash (functions/hashing.py) —
 `plane[p][d] = (h56(f"hp:{p}:{d}") % 2001 - 1000) / 1000` — so the oracle
@@ -69,6 +73,38 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _fold_dot(a, b):
+    """Σ_d a[..., d]·b[..., d] over the last axis, leading axes
+    broadcast: accumulated from 0.0 in index order on float64
+    (``acc = acc + a_d * b_d``), the left fold of the HOF ``dot`` and of
+    DuckDB's ``list_reduce(list_prepend(0.0, ...))``. Vectorized across
+    rows (and centroids, planes, ...), never across dimensions, so
+    every kernel built on it is bit-identical to its SQL twin; the
+    einsum/BLAS forms sum pairwise and drift ~1e-15 off it."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for d in range(a.shape[-1]):
+        acc = acc + a[..., d] * b[..., d]
+    return acc
+
+
+def _fold_sq_l2(a, b):
+    """Σ_d (a[..., d] − b[..., d])² with ``_fold_dot``'s fold order and
+    broadcasting: the squared L2 of the k-means and PQ kernels."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for d in range(a.shape[-1]):
+        diff = a[..., d] - b[..., d]
+        acc = acc + diff * diff
+    return acc
+
+
 def cosine_fast(
     a: Column, b: Column, nondeterministic: bool = False
 ) -> Column:
@@ -102,15 +138,10 @@ def cosine_fast(
             return pd.Series([], dtype="float64")
         ma = np.stack(x.values).astype(np.float64)
         mb = np.stack(y.values).astype(np.float64)
-        n = ma.shape[0]
-        dot = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for i in range(ma.shape[1]):  # sequential fold: bit-equal to oracle
-            dot = dot + ma[:, i] * mb[:, i]
-            na = na + ma[:, i] * ma[:, i]
-            nb = nb + mb[:, i] * mb[:, i]
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+        return pd.Series(
+            _fold_dot(ma, mb)
+            / (np.sqrt(_fold_dot(ma, ma)) * np.sqrt(_fold_dot(mb, mb)))
+        )
 
     if nondeterministic:
         _cos = _cos.asNondeterministic()
@@ -172,15 +203,7 @@ def ann_topk_bruteforce(
             cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(scored, k, "cos_sim", ascending=False)
 
 
 def _h56_py(s: str) -> int:
@@ -201,26 +224,14 @@ def hyperplanes(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
     ]
 
 
-def lsh_signature(vec: Column, dim: int, n_planes: int = N_PLANES) -> Column:
-    """Sign-of-projection bit signature: bit p = 1 iff vec · plane_p > 0.
-    Pure-expression twin of ``lsh_signature_fast`` — kept as the reference
-    semantics (and for engines where Python UDFs are unavailable)."""
-    planes = hyperplanes(dim, n_planes)
-    sig = F.lit(0)
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in planes[p]])
-        sig = sig + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig.cast("long")
-
-
 def lsh_signature_fast(dim: int, n_planes: int = N_PLANES):
-    """Arrow-batched signature with EXACT fold-order projections: per plane,
-    the dot product accumulates dimensions in index order (vectorized across
-    batch rows), so every sign bit — including projections exactly at zero —
-    is bit-identical to the HOF `lsh_signature` and to the DuckDB
-    ``list_reduce`` twin. ~10x the interpreted per-row fold at sf0.1
-    (n_planes x dim length-n numpy ops per batch). This exactness is what
-    lets ann_lsh carry a hash-checked SQL oracle."""
+    """Arrow-batched sign-of-projection signature: bit p = 1 iff
+    vec · plane_p > 0, each projection the exact-fold ``_fold_dot``
+    (every plane against every batch row), so every sign bit — including
+    projections exactly at zero — is bit-identical to the DuckDB
+    ``list_reduce`` twin. ~10x the interpreted per-row fold at sf0.1.
+    This exactness is what lets ann_lsh carry a hash-checked SQL
+    oracle."""
     import numpy as np
 
     planes = np.array(hyperplanes(dim, n_planes), dtype=np.float64)
@@ -231,13 +242,7 @@ def lsh_signature_fast(dim: int, n_planes: int = N_PLANES):
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
         m = np.stack(vecs.values).astype(np.float64)
-        n = m.shape[0]
-        proj = np.empty((n_planes, n))
-        for p in range(n_planes):
-            acc = np.zeros(n)
-            for d in range(m.shape[1]):  # sequential fold, oracle-exact
-                acc = acc + m[:, d] * planes[p, d]
-            proj[p] = acc
+        proj = _fold_dot(m[None, :, :], planes[:, None, :])  # (planes, n)
         return pd.Series(((proj > 0).T @ weights).astype(np.int64))
 
     return sig
@@ -608,30 +613,29 @@ def _assign_to_centroids(
     crossJoined in, no shuffle). Exact ties go to the lower cid, matching
     a ROW_NUMBER ORDER BY (dist, cid) oracle.
 
-    The kernel is an Arrow-batched NumPy loop that preserves the EXACT
-    sequential fold order of the expression/SQL twins — per dimension i,
-    ``acc += (x_i - c_i)²`` with acc starting at 0.0, i.e. the identical
-    left fold the HOF ``aggregate(zip_with(...))`` and DuckDB's
-    ``list_reduce(list_prepend(0.0, ...))`` compute — vectorized across
-    the rows of the batch instead of interpreted per element. Results
-    are bit-identical to the oracle (not merely close: same additions,
-    same order, all float64), ~3x faster than the interpreted HOF per
-    round, and the centroid matrix rides in the UDF closure so the
-    model is broadcast by value with no join. np.argmin returns the
-    FIRST minimum, and the centroid rows are sorted by cid, so exact
-    distance ties go to the lower cid — the ROW_NUMBER (dist, cid)
-    semantics. (Two rejected variants, measured: a fully-unrolled
-    literal expression tree re-triggers analysis+codegen on every
-    round's fresh literals, ~10x worse end-to-end; a broadcast-DataFrame
-    model with the HOF fold saves nothing because HOF interpretation,
-    not plan compilation, dominates.)
+    The kernel is the Arrow-batched ``_exact_fold_argmin``: per
+    dimension i, ``acc = acc + (x_i - c_i)²`` from 0.0 (``_fold_sq_l2``,
+    every batch row against every centroid), i.e. the identical left
+    fold the HOF ``aggregate(zip_with(...))`` and DuckDB's
+    ``list_reduce(list_prepend(0.0, ...))`` compute, vectorized instead
+    of interpreted per element. Results are bit-identical to the oracle
+    (not merely close: same additions, same order, all float64), ~3x
+    faster than the interpreted HOF per round, and the centroid matrix
+    rides in the UDF closure so the model is broadcast by value with no
+    join. The centroid rows are sorted by cid, so the first-minimum
+    rule gives exact distance ties to the lower cid — the ROW_NUMBER
+    (dist, cid) semantics. (Two rejected variants, measured: a
+    fully-unrolled literal expression tree re-triggers analysis+codegen
+    on every round's fresh literals, ~10x worse end-to-end; a
+    broadcast-DataFrame model with the HOF fold saves nothing because
+    HOF interpretation, not plan compilation, dominates.)
 
-    The per-centroid fold is O(k × dim) numpy dispatches per batch —
-    fine at the oracle-pinned k ≤ 8, a real cost once the adaptive
-    SemDeDup path scales k with the corpus (k ∝ N makes assignment the
-    superlinear term: measured 3.8× for 3× data at sf3). Above
-    KMEANS_K the kernel therefore switches to a single dgemm
-    (|x|² − 2xCᵀ + |c|², three BLAS calls per batch, same
+    The fold is O(k × dim) arithmetic per row with an (n × k)
+    temporary per dimension — fine at the oracle-pinned k ≤ 8, a real
+    cost once the adaptive SemDeDup path scales k with the corpus (k ∝
+    N makes assignment the superlinear term: measured 3.8× for 3× data
+    at sf3). Above KMEANS_K the kernel therefore switches to a single
+    dgemm (|x|² − 2xCᵀ + |c|², three BLAS calls per batch, same
     first-minimum→lowest-cid tie rule); its distances can differ from
     the fold by ~1 ulp, which is immaterial there — no oracle compares
     a k > 8 assignment (fixtures are all ≤ 8×target rows), and cluster
@@ -654,21 +658,11 @@ def _assign_to_centroids(
             if len(vecs) == 0:
                 return pd.DataFrame({"idx": [], "dist": []})
             m = np.stack(vecs.values).astype(np.float64)
-            n = m.shape[0]
-            dists = np.empty((cmat.shape[0], n))
-            for j in range(cmat.shape[0]):
-                acc = np.zeros(n)
-                for i in range(m.shape[1]):
-                    d = m[:, i] - cmat[j, i]
-                    # sequential fold: bit-equal to the oracle
-                    acc = acc + d * d
-                dists[j] = acc
-            # first min -> lowest cid on exact ties
-            best = dists.argmin(axis=0)
+            best, dists = _exact_fold_argmin(m, cmat)
             return pd.DataFrame(
                 {
                     "idx": best.astype("int32"),
-                    "dist": dists[best, np.arange(n)],
+                    "dist": dists[best, np.arange(m.shape[0])],
                 }
             )
 
@@ -978,7 +972,9 @@ def kmeans_fit(
                 F.lit(None).cast("double").alias("dist"),
             )
             return [], empty, 0
-        cents, n_iter = _lloyd_loop(cached, cents, max_iter, tol, vec_col)
+        cents, n_iter = _lloyd_loop(
+            _spark_runner(cached), cents, max_iter, tol, vec_col
+        )
         final = _assign_to_centroids(embeddings, cents, id_col, vec_col).select(
             "vid", "cluster", "dist"
         )
@@ -1009,21 +1005,36 @@ def _persist_projection(embeddings: DataFrame, id_col: str, vec_col: str):
     )
 
 
+def _spark_runner(cached: DataFrame):
+    """Batch runner over a cached projection: the partials generator runs
+    once per partition (``mapInPandas``) and its rows are collected."""
+    return lambda gen, schema: cached.mapInPandas(gen, schema).collect()
+
+
+def _local_runner(frame: pd.DataFrame):
+    """Batch runner over one driver-side frame: the same generator sees
+    the whole input as its only batch, and no Spark job runs."""
+    return lambda gen, schema: [
+        row for out in gen(iter([frame])) for row in out.to_dict("records")
+    ]
+
+
 def _lloyd_loop(
-    cached: DataFrame,
+    run,
     cents: list[tuple[object, list[float]]],
     max_iter: int,
     tol: float,
     vec_col: str,
 ) -> tuple[list[tuple[object, list[float]]], int]:
-    """The centroid-update rounds, ONE job each (r3 verdict item 3): an
-    Arrow kernel fuses the exact-fold argmin assignment with per-partition
-    partial sums, so nothing shuffles at all — each partition emits at
-    most k (idx, count, sum-vector) rows and the driver finishes the mean
-    over ~partitions x k tiny rows. The previous shape (assign kernel ->
-    posexplode -> groupBy(cluster, dim)) exchanged n x dim rows per round
-    and cost ~3x the wall clock at sf0.1 for identical results. Clusters
-    that lose every member drop out (k shrinks), as before."""
+    """The centroid-update rounds, ONE ``run`` each (a ``_spark_runner``
+    round is one job): an Arrow kernel fuses the exact-fold argmin
+    assignment with per-batch partial sums, so nothing shuffles at all —
+    each partition emits at most k (idx, count, sum-vector) rows and the
+    driver finishes the mean over ~partitions x k tiny rows. The previous
+    shape (assign kernel -> posexplode -> groupBy(cluster, dim))
+    exchanged n x dim rows per round and cost ~3x the wall clock at sf0.1
+    for identical results. Clusters that lose every member drop out (k
+    shrinks), as before."""
     import numpy as np
 
     n_iter = 0
@@ -1061,9 +1072,7 @@ def _lloyd_loop(
                     }
                 )
 
-        rows = cached.mapInPandas(
-            partials, "idx int, n long, s array<double>"
-        ).collect()
+        rows = run(partials, "idx int, n long, s array<double>")
         agg: dict[int, tuple[int, object]] = {}
         for r in rows:
             n_prev, s_prev = agg.get(r["idx"], (0, None))
@@ -1093,88 +1102,17 @@ def _lloyd_loop(
 
 
 def _exact_fold_argmin(m, cmat):
-    """(best, dists): per-row argmin cluster index and the full distance
-    matrix, with the oracle's exact sequential fold per dimension. First
+    """(best, dists): per-row argmin cluster index and the (k × n)
+    distance matrix, each distance the exact-fold ``_fold_sq_l2``. First
     minimum wins -> exact ties go to the lower centroid index, matching
     ROW_NUMBER (dist, cid)."""
-    import numpy as np
-
-    n = m.shape[0]
-    dists = np.empty((cmat.shape[0], n))
-    for j in range(cmat.shape[0]):
-        acc = np.zeros(n)
-        for i in range(m.shape[1]):
-            d = m[:, i] - cmat[j, i]
-            acc = acc + d * d
-        dists[j] = acc
+    dists = _fold_sq_l2(m[None, :, :], cmat[:, None, :])
     return dists.argmin(axis=0), dists
 
 
 # 128k rows x 64 dims x 8 B = ~67 MB — comfortably driver-side; above
 # this the fit stays fully distributed.
 KMEANS_LOCAL_FIT_MAX_ROWS = 1 << 17
-
-
-def _local_fit_summary(
-    rows, k: int, max_iter: int, tol: float
-) -> list[tuple]:
-    """Driver-side twin of seeds + _lloyd_loop + the summary pass, on a
-    collected (id, vector) list — identical kernel (_exact_fold_argmin),
-    identical seed/tie/drop rules; only the float-summation grouping of
-    the means differs (whole-array vs per-partition partials), which is
-    the same ~1-ulp freedom the distributed path already has vs the SQL
-    oracle. Returns [(cluster, n_members, first_member, wcss)] sorted."""
-    import numpy as np
-
-    if not rows:
-        return []
-    pairs = sorted((r[0], r[1]) for r in rows)
-    ids = [p[0] for p in pairs]
-    m = np.array([p[1] for p in pairs], dtype=np.float64)
-    cents = [(ids[i], m[i].tolist()) for i in range(min(k, len(ids)))]
-    for _ in range(max_iter):
-        cents_sorted = sorted(cents)
-        cmat = np.array([v for _, v in cents_sorted])
-        best, _ = _exact_fold_argmin(m, cmat)
-        new_cents = []
-        for j in range(cmat.shape[0]):
-            sel = best == j
-            if sel.any():
-                new_cents.append(
-                    (
-                        cents_sorted[j][0],
-                        [float(v) for v in m[sel].sum(axis=0) / sel.sum()],
-                    )
-                )
-        old = dict(cents)
-        movement = max(
-            (
-                sum((a - b) * (a - b) for a, b in zip(old[cid], vec))
-                if cid in old
-                else float("inf")
-            )
-            for cid, vec in new_cents
-        )
-        cents = new_cents
-        if movement <= tol:
-            break
-    cents_sorted = sorted(cents)
-    cmat = np.array([v for _, v in cents_sorted])
-    best, dists = _exact_fold_argmin(m, cmat)
-    out = []
-    id_arr = np.array(ids, dtype=object)
-    for j in range(cmat.shape[0]):
-        sel = best == j
-        if sel.any():
-            out.append(
-                (
-                    cents_sorted[j][0],
-                    int(sel.sum()),
-                    min(id_arr[sel]),
-                    float(dists[j][sel].sum()),
-                )
-            )
-    return sorted(out)
 
 
 def kmeans_fit_summary(
@@ -1191,8 +1129,9 @@ def kmeans_fit_summary(
     final centroids; the k-row summary is assembled driver-side as a
     LocalRelation. Versus aggregating ``kmeans_fit``'s returned plan
     this saves a full parquet re-scan, an assignment pass and a shuffle
-    — total jobs = seeds + rounds + 1, all but the first over the cached
-    projection. Numerically identical to summarizing the plan: same
+    — total jobs = probe + seeds + rounds + 1, all over the cached
+    projection; below ``KMEANS_LOCAL_FIT_MAX_ROWS`` the probe is the only
+    job. Numerically identical to summarizing the plan: same
     kernels, same fold order, and the driver-side merge adds the same
     per-partition partials a k-row groupBy would."""
     import numpy as np
@@ -1218,23 +1157,27 @@ def kmeans_fit_summary(
     try:
         # Small-input gate: each distributed round is a full Python-worker
         # round trip (~0.2s of pure job overhead locally) while the
-        # arithmetic is microseconds, so below the bound the whole fit
-        # runs driver-side on ONE collected projection — the same
-        # _exact_fold_argmin kernel, same seed rule, same empty-cluster
-        # drop, so results match the distributed path to float-summation
-        # order. Above the bound (the 100 TB regime) the distributed
-        # rounds are the only option that scales; the gate is an exact
-        # row bound probed by the SAME job that would fetch the data
-        # (limit bound+1: either we got everything, or we fall through).
+        # arithmetic is microseconds, so below the bound the rounds and
+        # the summary pass run their same generators driver-side over
+        # ONE id-ordered frame of the collected projection, seeded from
+        # its first k rows. Results match the distributed path to
+        # float-summation order (whole-frame vs per-partition partials).
+        # Above the bound (the 100 TB regime) the distributed rounds are
+        # the only option that scales; the gate is an exact row bound
+        # probed by the SAME job that would fetch the data (limit
+        # bound+1: either we got everything, or we fall through).
         probe = cached.limit(KMEANS_LOCAL_FIT_MAX_ROWS + 1).collect()
         if len(probe) <= KMEANS_LOCAL_FIT_MAX_ROWS:
-            out = _local_fit_summary(probe, k, max_iter, tol)
-            return spark.createDataFrame(out, schema)
-        del probe
-        cents = _collect_seed_centroids(cached, k, id_col, vec_col)
+            local = sorted(probe)
+            run = _local_runner(pd.DataFrame(local, columns=[id_col, vec_col]))
+            cents = [(r[0], [float(x) for x in r[1]]) for r in local[:k]]
+        else:
+            del probe
+            run = _spark_runner(cached)
+            cents = _collect_seed_centroids(cached, k, id_col, vec_col)
         if not cents:
             return spark.createDataFrame([], schema)
-        cents, _ = _lloyd_loop(cached, cents, max_iter, tol, vec_col)
+        cents, _ = _lloyd_loop(run, cents, max_iter, tol, vec_col)
         cents_sorted = sorted(cents)
         cmat = np.array([vec for _, vec in cents_sorted], dtype=np.float64)
 
@@ -1276,9 +1219,9 @@ def kmeans_fit_summary(
 
         # the id's own Spark type, not a long/string guess — an int id
         # table must behave identically above and below the local-fit gate
-        rows = cached.mapInPandas(
+        rows = run(
             summarize, f"idx int, n long, w double, f {id_type.simpleString()}"
-        ).collect()
+        )
         agg: dict[int, list] = {}
         for r in rows:
             cur = agg.setdefault(r["idx"], [0, 0.0, None])
@@ -1329,28 +1272,16 @@ def _model_sample(embeddings: DataFrame, n: int, id_col: str, vec_col: str):
 def _cos_to_cents(m, cmat):
     """(n_rows × nlist) cosine from every row of ``m`` to every centroid,
     with the oracle's exact expression shape: fold-dot / (fold-norm(vec)
-    * fold-norm(centroid)), each fold acc += term in index order like
-    _NORM. Every IVF path — ann_topk_ivf, the fused IVF-PQ kernels, the
-    persisted index's build and probe — assigns cells and orders probes
-    through it, so they stay bit-identical."""
+    * fold-norm(centroid)), each fold a ``_fold_dot`` like _NORM. Every
+    IVF path — ann_topk_ivf, the fused IVF-PQ kernels, the persisted
+    index's build and probe — assigns cells and orders probes through
+    it, and MMR's penalty is its row max, so they stay bit-identical."""
     import numpy as np
 
-    cnorm = np.zeros(cmat.shape[0])
-    for d in range(cmat.shape[1]):
-        cnorm = cnorm + cmat[:, d] * cmat[:, d]
-    cnorm = np.sqrt(cnorm)
-    n = m.shape[0]
-    nv = np.zeros(n)
-    for d in range(m.shape[1]):
-        nv = nv + m[:, d] * m[:, d]
-    nv = np.sqrt(nv)
-    cos = np.empty((n, cmat.shape[0]))
-    for j in range(cmat.shape[0]):
-        dot = np.zeros(n)
-        for d in range(m.shape[1]):
-            dot = dot + m[:, d] * cmat[j, d]
-        cos[:, j] = dot / (nv * cnorm[j])
-    return cos
+    nv = np.sqrt(_fold_dot(m, m))
+    cnorm = np.sqrt(_fold_dot(cmat, cmat))
+    dots = _fold_dot(m[:, None, :], cmat[None, :, :])
+    return dots / (nv[:, None] * cnorm[None, :])
 
 
 def _probe_cells(m, cmat, nprobe: int):
@@ -1374,23 +1305,6 @@ def _pq_codebook(src, m_sub: int):
     return src.reshape(src.shape[0], m_sub, dim // m_sub).transpose(1, 0, 2)
 
 
-def _pq_sub_dists(sub, cw_s):
-    """(ksub, n) squared L2 from every row of ``sub`` (n × dsub) to each
-    codeword of one subspace, with the oracle's exact sequential fold
-    over dimensions (acc += diff² in index order)."""
-    import numpy as np
-
-    n = sub.shape[0]
-    out = np.empty((cw_s.shape[0], n))
-    for j in range(cw_s.shape[0]):
-        acc = np.zeros(n)
-        for d in range(sub.shape[1]):
-            diff = sub[:, d] - cw_s[j, d]
-            acc = acc + diff * diff
-        out[j] = acc
-    return out
-
-
 def _pq_luts(mat, cbs):
     """(n_rows, m_sub, ksub) ADC tables: entry [i, s, j] is the exact-fold
     squared L2 from row i's s-th subvector to codeword (s, j). For a
@@ -1398,15 +1312,9 @@ def _pq_luts(mat, cbs):
     over j is its PQ code. Sized by the FITTED codebook, so a corpus
     smaller than ksub never folds uninitialized codeword rows. Rows fold
     independently, so stacking any rows into one call changes no bit."""
-    import numpy as np
-
-    m_sub, ksub, dsub = cbs.shape
-    out = np.empty((mat.shape[0], m_sub, ksub))
-    for s in range(m_sub):
-        out[:, s, :] = _pq_sub_dists(
-            mat[:, s * dsub : (s + 1) * dsub], cbs[s]
-        ).T
-    return out
+    m_sub, _, dsub = cbs.shape
+    subs = mat.reshape(mat.shape[0], m_sub, 1, dsub)
+    return _fold_sq_l2(subs, cbs[None, :, :, :])
 
 
 def _pq_codes(mat, cbs):
@@ -1854,7 +1762,7 @@ MMR_QUERY_ID = 0
 
 def _max_cos_fast(selected: list[list[float]]):
     """Arrow-batched max cosine against the <=k selected vectors. Each
-    cosine uses the exact sequential fold (bit-identical to ``_cos`` /
+    cosine is ``_cos_to_cents``' exact fold (bit-identical to ``_cos`` /
     the SQL list_reduce twin); max over selected is rounding-free, so
     the result equals SQL ``MAX()`` over the same cosines bit-for-bit."""
     import numpy as np
@@ -1866,19 +1774,7 @@ def _max_cos_fast(selected: list[list[float]]):
         if len(x) == 0:
             return pd.Series([], dtype="float64")
         m = np.stack(x.values).astype(np.float64)
-        n = m.shape[0]
-        nm = np.zeros(n)
-        for i in range(m.shape[1]):  # sequential fold = oracle's _NORM
-            nm = nm + m[:, i] * m[:, i]
-        best = np.full(n, -np.inf)
-        for s in smat:
-            dot = np.zeros(n)
-            ns = 0.0
-            for i in range(m.shape[1]):
-                dot = dot + m[:, i] * s[i]
-                ns = ns + s[i] * s[i]
-            best = np.maximum(best, dot / (np.sqrt(nm) * np.sqrt(ns)))
-        return pd.Series(best)
+        return pd.Series(_cos_to_cents(m, smat).max(axis=1))
 
     return _mc
 

@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis): the custom join operators must equal a
 brute-force reference on arbitrary small inputs — catches boundary/tie cases
-fixtures miss (equal times, duplicate keys, empty sides, bucket edges)."""
+fixtures miss (equal times, duplicate keys, empty sides, bucket edges) — and
+the vector kernels' exact-fold primitives must equal a plain-Python fold."""
 
 from __future__ import annotations
 
@@ -364,6 +365,76 @@ def test_posting_pairs_matches_bruteforce(spark, rows, max_df):
     assert got == want
 
 
+# Near-duplicate payloads: a few bases (some shorter than the 56 tiles,
+# so the fingerprint skips them), each with up to two copies carrying one
+# planted 4-byte local edit. At most 18 docs, below PHASH_BAND_MAX (64),
+# so the hot-band cap never binds and the banded join must find every
+# pair the brute force does.
+@st.composite
+def _edited_payloads(draw):
+    out = []
+    for base in draw(st.lists(st.binary(min_size=48, max_size=240), max_size=6)):
+        out.append(base)
+        for _ in range(draw(st.integers(min_value=0, max_value=2))):
+            off = draw(st.integers(min_value=0, max_value=len(base) - 4))
+            edit = draw(st.binary(min_size=4, max_size=4))
+            out.append(base[:off] + edit + base[off + 4 :])
+    return out
+
+
+# a byte ramp and two copies with 0xff planted at offsets 0 and 100: both
+# edits flip 2 fingerprint bits (a pair within PHASH_HAM_MAX that is not
+# an exact duplicate)
+_RAMP = bytes(i % 251 for i in range(224))
+_RAMP_EDITS = [
+    _RAMP,
+    b"\xff" * 4 + _RAMP[4:],
+    _RAMP[:100] + b"\xff" * 4 + _RAMP[104:],
+]
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payloads=_edited_payloads())
+@example(payloads=_RAMP_EDITS)
+@example(payloads=[])
+def test_phash_pairs_matches_bruteforce(spark, payloads):
+    """phash_pairs equals the all-pairs relation over the same
+    fingerprints: every (id_a < id_b) pair whose perceptual_hash values
+    are within PHASH_HAM_MAX bits, with that Hamming distance, once."""
+    from hdfs_mapreduce_spark.operators.multimodal import (
+        PHASH_BAND_MAX,
+        PHASH_HAM_MAX,
+        perceptual_hash,
+        phash_pairs,
+    )
+
+    assert len(payloads) < PHASH_BAND_MAX
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in enumerate(payloads)],
+        "id long, payload binary",
+    )
+    hashes = sorted(
+        (r["id"], r["phash"]) for r in perceptual_hash(df).collect()
+    )
+    want = [
+        (a, b, bin(ha ^ hb).count("1"))
+        for i, (a, ha) in enumerate(hashes)
+        for b, hb in hashes[i + 1 :]
+        if bin(ha ^ hb).count("1") <= PHASH_HAM_MAX
+    ]
+    if payloads == _RAMP_EDITS:
+        assert (0, 1, 2) in want and (0, 2, 2) in want
+    got = [
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in phash_pairs(df).collect()
+    ]
+    assert got == want
+
+
 _iv = st.tuples(
     st.integers(min_value=0, max_value=3),     # key
     st.integers(min_value=0, max_value=400),   # start sec
@@ -465,3 +536,93 @@ def test_pq_encode_picks_the_true_argmin(spark, vecs):
         best = min(range(len(dists)), key=lambda j: (dists[j], j))
         assert r["code"] == best
         assert r["sq_err"] == dists[best]
+
+
+def _left_fold(a, b, term):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + term(x, y)
+    return acc
+
+
+def _same_bits(x, y) -> bool:
+    import struct
+
+    return struct.pack("<d", float(x)) == struct.pack("<d", float(y))
+
+
+_coord = st.one_of(
+    st.just(0.0),
+    st.just(-0.0),
+    st.floats(
+        min_value=-8.0, max_value=8.0, allow_nan=False, allow_infinity=False,
+        width=32,
+    ),
+)
+
+
+@st.composite
+def _fold_case(draw):
+    """(rows, other, cents): n rows and k centroids drawn from a small
+    pool of dim-wide vectors (so rows and centroids repeat), plus n
+    paired rows."""
+    dim = draw(st.integers(min_value=1, max_value=20))
+    vec = st.lists(_coord, min_size=dim, max_size=dim)
+    pool = draw(st.lists(vec, min_size=1, max_size=4))
+    pick = st.sampled_from(pool)
+    n = draw(st.integers(min_value=1, max_value=6))
+    rows = draw(st.lists(pick, min_size=n, max_size=n))
+    other = draw(st.lists(vec, min_size=n, max_size=n))
+    cents = draw(st.lists(pick, min_size=1, max_size=5))
+    return rows, other, cents
+
+
+# 1 + fifteen 2**-53 terms: the left fold stays at 1.0, a pairwise or
+# BLAS sum does not; the two centroids tie exactly (0.0 vs -0.0)
+_FOLD_ORDER = (
+    [[1.0] + [2.0**-53] * 15],
+    [[1.0] * 16],
+    [[0.0] * 16, [-0.0] * 16],
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(case=_fold_case())
+@example(case=_FOLD_ORDER)
+def test_fold_primitives_match_python_left_fold(case):
+    """_fold_dot and _fold_sq_l2 are, bit for bit, the plain left fold
+    acc = acc + term over dimensions from 0.0 — row-paired and in the
+    (k, n) broadcast shape every centroid kernel uses — and
+    _exact_fold_argmin gives an exact distance tie to the first (lowest)
+    centroid."""
+    import numpy as np
+
+    from hdfs_mapreduce_spark.operators.similarity import (
+        _exact_fold_argmin,
+        _fold_dot,
+        _fold_sq_l2,
+    )
+
+    def mul(x, y):
+        return x * y
+
+    def sq(x, y):
+        return (x - y) * (x - y)
+
+    m, o, c = (np.array(v, dtype=np.float64) for v in case)
+    rows, other, cents = case
+    for fold, term in ((_fold_dot, mul), (_fold_sq_l2, sq)):
+        paired = fold(m, o)
+        assert paired.shape == (len(rows),)
+        for i, (r, q) in enumerate(zip(rows, other)):
+            assert _same_bits(paired[i], _left_fold(r, q, term))
+        grid = fold(m[None, :, :], c[:, None, :])
+        assert grid.shape == (len(cents), len(rows))
+        for j, cv in enumerate(cents):
+            for i, r in enumerate(rows):
+                assert _same_bits(grid[j, i], _left_fold(r, cv, term))
+    best, dists = _exact_fold_argmin(m, c)
+    for i, r in enumerate(rows):
+        d = [_left_fold(r, cv, sq) for cv in cents]
+        assert best[i] == d.index(min(d))
+        assert _same_bits(dists[best[i], i], min(d))

@@ -322,9 +322,9 @@ def test_ann_pq_recall_and_consistency(spark):
     import numpy as np
 
     from hdfs_mapreduce_spark.operators.similarity import (
+        _fold_sq_l2,
         _model_sample,
         _pq_codebook,
-        _pq_sub_dists,
         PQ_KSUB,
         PQ_M,
         ann_topk_pq,
@@ -350,10 +350,8 @@ def test_ann_pq_recall_and_consistency(spark):
         q = qvecs[r["query_id"]]
         acc = 0.0
         for s in range(PQ_M):
-            lut = _pq_sub_dists(
-                q[s * dsub : (s + 1) * dsub].reshape(1, -1), cbs[s]
-            )
-            acc = acc + float(lut[codes[(r["neighbor_id"], s)], 0])
+            lut = _fold_sq_l2(q[s * dsub : (s + 1) * dsub], cbs[s])
+            acc = acc + float(lut[codes[(r["neighbor_id"], s)]])
         assert acc == r["approx_dist"], (r, acc)
     brute10 = {
         q: {
