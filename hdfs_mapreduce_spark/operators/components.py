@@ -5,28 +5,26 @@ has no graph operator at all; a training-data pipeline cannot ship pair
 lists to a filter, it needs `doc → canonical doc`, which is exactly a
 connected-components labeling with min-id as the canonical choice.
 
-Algorithm: iterative min-label propagation —
+Two paths, one labeling (node, min id of its component):
 
-    label_0(v)   = v
-    label_i+1(v) = min(label_i(v), min over neighbors u of label_i(u))
-
-which converges in O(component diameter) rounds; near-dup graphs are
-overwhelmingly tiny cliques (diameter 1-2), so 2-4 rounds close them. Each
-round is one join + one min-aggregate: plain shuffles Catalyst plans well.
-(For adversarial long-chain graphs the published fix is hash-to-min /
-large-star-small-star [Rastogi et al., "Finding Connected Components in
-Map-Reduce in Logarithmic Rounds", ICDE'13] — same join/agg primitives,
-log rounds; not needed for dedup-shaped graphs.)
+- at or below ``LOCAL_EDGE_LIMIT`` edges, driver-side union-find over
+  one bounded collect (``_local_components``);
+- above it, alternating large-star/small-star contraction [Rastogi et
+  al., "Finding Connected Components in MapReduce in Logarithmic
+  Rounds", ICDE'13] (``connected_components_logrounds``): O(log n)
+  rounds on any graph shape, long paths included, each round one
+  groupBy over the symmetric edge list.
 
 Execution contract (the part that matters in a long-lived session): the
-convergence loop runs on eagerly localCheckpoint'ed iterates — truncated
-lineage, one tiny action per round — and once the round count k is known
-every checkpoint is unpersisted and the function returns a PURE
-k-round-unrolled plan: no cached state outlives the call (the r1 verdict's
-persist-leak rule), and Catalyst's ReusedExchange serves the repeated edge
-subplan from one shuffle write. At 100 TB prefer materializing the edge
-list as a table first so the probe and the final plan scan parquet instead
-of recomputing the pair pipeline.
+contraction loop runs on eagerly localCheckpoint'ed iterates — truncated
+lineage, one small fixpoint aggregate per round — and the converged
+relation lands in session scratch (operators/materialize.py), so the
+returned plan scans parquet at O(1) depth and no cached state outlives
+the call (the r1 verdict's persist-leak rule). A loop that reaches
+``max_iter`` without a fixpoint raises instead of returning a partial
+labeling. At 100 TB prefer materializing the edge list as a table first
+so the gate's collect and the first round scan parquet instead of
+recomputing the pair pipeline.
 """
 
 from __future__ import annotations
@@ -39,10 +37,11 @@ from pyspark.sql.types import StructField, StructType
 # The edge relation is the LSH-*reduced* pair graph — orders of magnitude
 # smaller than the corpus — so even petabyte corpora usually land under it;
 # 1M edges of two longs is ~30 MB on the driver, and union-find closes them
-# in one pass where the distributed loop pays O(diameter) Spark jobs. The
-# same small-model-locally reasoning as the IVF centroid collect
-# (operators/similarity.py). Above the limit, the distributed min-label
-# loop takes over; tests assert the two paths agree on random graphs.
+# in one pass where the star contraction pays a few Spark jobs per round.
+# The same small-model-locally reasoning as the IVF centroid collect
+# (operators/similarity.py). Above the limit the star contraction takes
+# over; tests monkeypatch this constant to 0 to force it and assert the two
+# paths agree.
 LOCAL_EDGE_LIMIT = 1_000_000
 
 
@@ -53,28 +52,10 @@ def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def _initial_labels(sym: DataFrame) -> DataFrame:
-    return sym.select("src").distinct().select(
-        F.col("src").alias("node"), F.col("src").alias("label")
-    )
-
-
-def _propagate(labels: DataFrame, sym: DataFrame) -> DataFrame:
-    """One min-label round: every node takes the min of its own label and
-    its neighbors' labels. Join on src + min-groupBy on node — two plain
-    hash shuffles, AQE-splittable."""
-    nbr = sym.join(labels, sym["src"] == labels["node"]).select(
-        F.col("dst").alias("node"), F.col("label")
-    )
-    return (
-        labels.unionByName(nbr).groupBy("node").agg(F.min("label").alias("label"))
-    )
-
-
 def _local_components(edges: DataFrame, src: str, dst: str, rows) -> DataFrame:
     """Driver-side union-find over a collected edge list. Union-by-min-root
     keeps every root the minimum id of its component, so ``find`` yields the
-    same labeling the distributed min-propagation converges to."""
+    same labeling the star contraction converges to."""
     parent: dict = {}
 
     def find(x):
@@ -110,54 +91,20 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    local_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """(node, label) for every node in ``edges``, where label is the
     smallest node id in the node's connected component. Nodes absent from
     ``edges`` are absent from the result (singletons label themselves —
     callers coalesce on join, see dedup_components).
 
-    Edge lists that fit the driver (``local_limit``) are closed with
-    union-find in one collect; larger graphs run the distributed probe +
-    unroll described in the module docstring. Both paths return the same
-    labeling (property-tested); the distributed result is an uncached pure
-    plan."""
-    if local_limit > 0:
-        head = edges.select(src, dst).limit(local_limit + 1).collect()
-        if len(head) <= local_limit:
-            return _local_components(edges, src, dst, head)
-
-    from hdfs_mapreduce_spark.functions.checkpoints import CheckpointJanitor
-
-    janitor = CheckpointJanitor(edges.sparkSession)
-    try:
-        sym_probe = _symmetric(edges, src, dst).localCheckpoint(eager=True)
-        labels = _initial_labels(sym_probe).localCheckpoint(eager=True)
-        # Labels only ever decrease, so the fixpoint test is "sum of labels
-        # unchanged" — one small aggregate per round instead of a self-join.
-        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-        k = 0
-        converged = False
-        while k < max_iter:
-            nxt = _propagate(labels, sym_probe).localCheckpoint(eager=True)
-            k += 1
-            cur_sum = nxt.agg(F.sum("label")).collect()[0][0]
-            labels = nxt
-            if cur_sum == prev_sum:
-                # Round k changed nothing — the fixpoint was already reached
-                # after k-1 rounds, so the pure unrolled plan needs one round
-                # fewer than the probe ran.
-                converged = True
-                break
-            prev_sum = cur_sum
-    finally:
-        janitor.free_all()
-
-    sym = _symmetric(edges, src, dst)
-    out = _initial_labels(sym)
-    for _ in range(k - 1 if converged else k):
-        out = _propagate(out, sym)
-    return out
+    Edge lists within ``LOCAL_EDGE_LIMIT`` are closed with union-find in
+    one collect; larger graphs run ``connected_components_logrounds``
+    with ``max_iter`` rounds. Both paths return the same labeling
+    (property-tested)."""
+    head = edges.select(src, dst).limit(LOCAL_EDGE_LIMIT + 1).collect()
+    if len(head) <= LOCAL_EDGE_LIMIT:
+        return _local_components(edges, src, dst, head)
+    return connected_components_logrounds(edges, src, dst, max_iter)
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -209,24 +156,22 @@ def connected_components_logrounds(
     max_iter: int = 50,
 ) -> DataFrame:
     """(node, label) via alternating large-star/small-star — the
-    O(log n)-round algorithm for graphs where min-label propagation's
-    O(diameter) rounds would be the bottleneck (adversarial chains,
-    social graphs). Near-dup graphs are tiny cliques, so the default
-    ``connected_components`` keeps min-label + the union-find gate;
-    this variant exists for the long-chain regime and is property-tested
-    to produce the identical labeling. Same no-cache-outlives-the-call
-    contract as ``connected_components``, met differently: min-label can
-    re-derive its result as a pure unrolled plan because each round
-    references the shared edge relation once, but a star round
-    references ITS OWN previous output twice (the small-star input is
-    big ∪ swap(big)), so an unrolled star plan doubles per round —
-    2^rounds analysis blowup, measured as a driver OOM on long-chain
-    graphs. Instead the converged relation lands in session scratch via
-    the materialize-then-probe API and the returned plan reads the
-    parquet: O(1) plan depth at any round count, every checkpoint freed
-    before return (the r8 ordering-sensitive pytest caught the old
-    returned-live-checkpoint form leaking one persistent RDD into every
-    later workload in the session)."""
+    distributed path of ``connected_components`` above its union-find
+    gate: O(log n) rounds on any graph shape, long chains included.
+    Returns the identical labeling as union-find (property-tested).
+
+    No cache outlives the call. A star round references ITS OWN previous
+    output twice (the small-star input is big ∪ swap(big)), so an
+    unrolled star plan doubles per round — 2^rounds analysis blowup,
+    measured as a driver OOM on long-chain graphs. Instead the loop runs
+    on eager localCheckpoints, the converged relation lands in session
+    scratch via the materialize-then-probe API and the returned plan
+    reads the parquet: O(1) plan depth at any round count, every
+    checkpoint freed before return (the r8 ordering-sensitive pytest
+    caught the old returned-live-checkpoint form leaking one persistent
+    RDD into every later workload in the session). Raises
+    ``RuntimeError`` when ``max_iter`` rounds end without a fixpoint: a
+    partial contraction is a wrong labeling, not an approximation."""
     import uuid
 
     from hdfs_mapreduce_spark.functions.checkpoints import CheckpointJanitor
@@ -267,6 +212,11 @@ def connected_components_logrounds(
             if sig == prev_sig:
                 break
             prev_sig = sig
+        else:
+            raise RuntimeError(
+                "connected_components_logrounds: no fixpoint within "
+                f"max_iter={max_iter} star rounds"
+            )
         cur = materialize(cur, f"logrounds_{uuid.uuid4().hex[:12]}")
     finally:
         janitor.free_all()
@@ -335,7 +285,8 @@ def pagerank(
     components-operator contract — which Catalyst serves with a
     ReusedExchange for the repeated edge scan; for deep iteration counts
     switch to the localCheckpoint loop-driver pattern
-    (connected_components above) or materialize ranks per round.
+    (connected_components_logrounds above) or materialize ranks per
+    round.
     Dangling nodes (no out-edges) keep their mass out of circulation —
     acceptable for symmetric similarity graphs, where they cannot occur
     (every edge is bidirectional, so every node has out-degree ≥ 1).

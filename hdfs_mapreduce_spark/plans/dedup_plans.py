@@ -260,7 +260,7 @@ def _canonical_over_minhash(
     pair relation is materialized first via the materialize-then-probe
     API (the components module's documented 100 TB pattern: the edge
     list is orders of magnitude smaller than the corpus, so the
-    convergence probe and the k unrolled propagation rounds scan that
+    union-find gate — or, above it, the star contraction — scans that
     tiny table instead of re-running the LSH pipeline — measured ~2.5x
     faster at sf0.1, same result). The write lands under the session's
     applicationId-keyed scratch dir, so concurrent sessions on the same
@@ -407,12 +407,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_components_logrounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The O(log n)-round star-contraction variant of dedup_components
-    (operators/components.py connected_components_logrounds — alternating
-    large-star/small-star, the algorithm for long-chain graphs where
-    min-label propagation's O(diameter) rounds would bottleneck). Same
-    MinHash edge relation, same (doc_id, canonical_id) output contract,
-    and the labeling is provably identical to min-label components — so
+    """dedup_components with the union-find gate skipped: the star
+    contraction (operators/components.py connected_components_logrounds —
+    alternating large-star/small-star, O(log n) rounds on any graph
+    shape) runs on the edge list whatever its size. It is the path
+    ``connected_components`` takes above ``LOCAL_EDGE_LIMIT``, declared
+    so it is hash-verified at fixture scale where the gate never opens.
+    Same MinHash edge relation, same (doc_id, canonical_id) output
+    contract, and the labeling is provably the min-id components — so
     it shares the dedup_components recursive-CTE oracle verbatim.
     Declared in round 4 (was pytest-only: tests/test_dedup.py
     test_logrounds_components_match_union_find)."""
@@ -1284,7 +1286,7 @@ ORACLE_SQL["dataset_split_safe"] = f"""
     FROM b GROUP BY 1 ORDER BY split
 """
 
-# Star contraction provably yields the same min-label components, so the
+# Star contraction provably yields the same min-id components, so the
 # logrounds variant reuses the recursive-CTE oracle verbatim.
 ORACLE_SQL["dedup_components_logrounds"] = ORACLE_SQL["dedup_components"]
 

@@ -160,29 +160,30 @@ def test_connected_components_chain_and_singleton(spark):
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
 
 
-def test_components_local_and_distributed_agree(spark):
-    """The driver-side union-find and the distributed min-label loop return
-    the same labeling on a pseudo-random graph with chains, cliques and
-    singleton pairs."""
+def test_components_local_and_distributed_agree(spark, monkeypatch):
+    """The driver-side union-find and the distributed star contraction
+    return the same labeling on a pseudo-random graph with chains, a
+    clique, stray pairs and one 40-edge path."""
+    from hdfs_mapreduce_spark.operators import components
     from hdfs_mapreduce_spark.operators.components import connected_components
 
     # Deterministic edge soup: chains of length 5, a clique, stray pairs.
-    edges_py = [(i, i + 1) for i in range(0, 50, 5) for i in (i,)]
     edges_py = [(i + j, i + j + 1) for i in range(0, 50, 10) for j in range(4)]
     edges_py += [(100, 103), (101, 103), (102, 100)]  # clique-ish
     edges_py += [(200, 201), (300, 301)]
+    edges_py += [(i + 1, i) for i in range(1000, 1040)]  # long path
     edges = spark.createDataFrame(edges_py, "src long, dst long")
     local = {
         r["node"]: r["label"]
         for r in connected_components(edges, "src", "dst").collect()
     }
+    monkeypatch.setattr(components, "LOCAL_EDGE_LIMIT", 0)
     dist = {
         r["node"]: r["label"]
-        for r in connected_components(
-            edges, "src", "dst", local_limit=0
-        ).collect()
+        for r in connected_components(edges, "src", "dst").collect()
     }
     assert local == dist
+    assert local[1040] == 1000
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
 
 
@@ -416,10 +417,13 @@ def test_span_scrub_keeps_first_occurrence(spark):
 
 def test_logrounds_components_match_union_find(spark):
     """Large-star/small-star must produce the identical min-id labeling
-    as union-find on every graph shape — including the long chains that
-    are min-label propagation's worst case (O(diameter) rounds vs
-    O(log n) here)."""
+    as union-find on every graph shape — including long chains, closed
+    in O(log n) rounds where label propagation needs O(diameter) — and
+    must raise, not return a partial labeling, when ``max_iter`` runs
+    out."""
     import random
+
+    import pytest
 
     from hdfs_mapreduce_spark.operators.components import (
         connected_components_logrounds,
@@ -474,6 +478,13 @@ def test_logrounds_components_match_union_find(spark):
     }
     want = union_find_labels(sids)
     assert got == want
+
+    # a round budget too small for the graph raises instead of returning
+    # the partial contraction's wrong labels
+    df = spark.createDataFrame(cases["long_path"][:120], "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components_logrounds(df, max_iter=2)
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
 
 
 def test_pagerank_matches_hand_computation_and_conserves_mass(spark):
@@ -691,10 +702,10 @@ def test_minhash_wider_bands_cut_candidates_keep_high_j_pairs(spark):
 
 
 def test_logrounds_leaves_no_persistent_rdds(spark):
-    """The execution contract the min-label variant always had, now
-    pinned for star contraction too: the probe loop's checkpoints are
-    all freed and the returned relation is a PURE unrolled plan — the
-    old returned-live-checkpoint form leaked one persistent RDD into
+    """The star contraction agrees with the union-find gate on a small
+    graph and leaves nothing cached: the loop's checkpoints are all
+    freed and the returned relation scans the materialized parquet —
+    the old returned-live-checkpoint form leaked one persistent RDD into
     every later workload in the session (caught only when tests ran
     after the query sweep; file ordering had masked it)."""
     from hdfs_mapreduce_spark.operators.components import (
